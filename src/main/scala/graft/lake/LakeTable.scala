@@ -2,6 +2,9 @@ package graft.lake
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, LessThan}
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -782,10 +785,29 @@ final class LakeTable private (
         d.partition.forall { case (k, v) => f.partition.get(k).forall(_ == v) })
     }
 
+  /** THE merge-on-read shape, the only way any read applies equality
+    * deletes (Iceberg v2 semantics, https://iceberg.apache.org/spec/#equality-delete-files):
+    *
+    * {{{ rows ⋉̸ keys ON pk = pk ∧ rows._graft_seq < keys._graft_dseq }}}
+    *
+    * A row version survives unless a delete of its key committed after
+    * it. `rows` must expose the pk columns and [[LakeTable.SeqCol]],
+    * `keys` the pk columns and [[LakeTable.DseqCol]]. No join hint: AQE
+    * picks a broadcast or a shuffled join from the real size of the key
+    * side. Built by [[morMerged]] (imperative scan, compaction) and by
+    * [[graft.plans.LakeMorRewrite]] (every DSv2 and SQL read). */
+  private[graft] def morFold(rows: LogicalPlan, keys: LogicalPlan): LogicalPlan = {
+    def attr(p: LogicalPlan, name: String) = p.output.find(_.name.equalsIgnoreCase(name))
+      .getOrElse(throw new IllegalArgumentException(s"${meta.name}: MoR side lacks $name"))
+    val cond = (meta.primaryKey.map(k => EqualTo(attr(rows, k), attr(keys, k)): Expression) :+
+      LessThan(attr(rows, SeqCol), attr(keys, DseqCol))).reduce(And(_, _))
+    Join(rows, keys, LeftAnti, Some(cond), JoinHint.NONE)
+  }
+
   /** Merge-on-read content of a FILE SUBSET of `snap` (user columns +
-    * [[LakeTable.SeqCol]]): base rows anti-joined against the delete keys
-    * whose partition scope can reach those files. Shared by [[scan]] and
-    * partition-scoped compaction. */
+    * [[LakeTable.SeqCol]]): base rows folded by [[morFold]] against the
+    * delete keys whose partition scope can reach those files. Shared by
+    * [[scan]] and partition-scoped compaction. */
   private[lake] def morMerged(snap: Snapshot, files: Seq[DataFile]): DataFrame = {
     val userSchema = schema(snap.schemaVersion)
     val storage = StructType(userSchema.fields :+ StructField(SeqCol, LongType, nullable = false))
@@ -796,12 +818,9 @@ final class LakeTable private (
         readKnownFiles(storage, files.map(f => abs(f.path) -> f.bytes))
     val delFiles = deleteFilesFor(snap, files)
     if (delFiles.isEmpty) base
-    else {
-      val dels = deleteKeysDf(snap, delFiles)
-      val cond = meta.primaryKey.map(k => base(k) === dels(k)).reduce(_ && _) &&
-        base(SeqCol) < dels(DseqCol)
-      base.join(dels, cond, "left_anti")
-    }
+    else org.apache.spark.sql.graft.SqlInternals.ofRows(spark, morFold(
+      base.queryExecution.analyzed,
+      readDeleteKeys(delFiles, snap.schemaVersion).queryExecution.analyzed))
   }
 
   /** Multi-path parquet read with ZERO listing or stat calls, driver or
@@ -883,24 +902,13 @@ final class LakeTable private (
           options = Map.empty)(spark))
     }
 
-  /** Delete keys of the given delete files (pk columns + [[LakeTable.DseqCol]]),
-    * broadcast while small, AQE-planned otherwise. Files are read with the
-    * pk types OF THEIR OWN ERA and widened to the snapshot's schema — a
-    * type promotion of a pk column inside the history leaves older delete
-    * files physically narrow, and reading them under the wide schema would
-    * lean on the parquet reader's widening instead of the explicit
-    * promotion path every other read uses. */
-  private def deleteKeysDf(snap: Snapshot, delFiles: Seq[DeleteFile]): DataFrame = {
-    val raw = readDeleteKeys(delFiles, snap.schemaVersion)
-    if (delFiles.map(_.bytes).sum <= (64L << 20)) broadcast(raw) else raw
-  }
-
-  /** Read delete-key files grouped by the pk types of the schema era each
-    * was committed under, each group cast to the target era's pk types.
+  /** Delete keys (pk columns + [[LakeTable.DseqCol]]) of the given delete
+    * files, grouped by the pk types of the schema era each was committed
+    * under, each group cast to the target era's pk types.
     * A delete file whose snapshot header has been expired falls back to
     * the target era (the pre-fix behavior — correct whenever no pk column
     * was promoted in the expired range). */
-  private[graft] def readDeleteKeys(delFiles: Seq[DeleteFile], toVersion: Int): DataFrame = {
+  private def readDeleteKeys(delFiles: Seq[DeleteFile], toVersion: Int): DataFrame = {
     val target = schema(toVersion)
     val pk = meta.primaryKey
     val targetPk = StructType(
@@ -1004,7 +1012,7 @@ final class LakeTable private (
       meta.primaryKey.map(k => userSchema(k)) :+ StructField(SeqCol, LongType, nullable = false))
     val base = readKnownFiles(readSchema, snap.dataFiles.map(f => abs(f.path) -> f.bytes))
       .withColumn("_graft_file", input_file_name())
-    val dels = deleteKeysDf(snap, snap.deleteFiles)
+    val dels = readDeleteKeys(snap.deleteFiles, snap.schemaVersion)
     val cond = meta.primaryKey.map(k => base(k) === dels(k)).reduce(_ && _) &&
       base(SeqCol) < dels(DseqCol)
     val dirtyNames: Set[String] = base.join(dels, cond, "left_semi")
@@ -1641,7 +1649,7 @@ final class LakeTable private (
           // torn-read-window CREATE_NEW path; a transient errno on a
           // capable mount must surface to the caller's retry logic.
           if (LakeTable.dirSupportsHardLinks(local.getParent)) throw e
-          System.err.println(
+          warn(
             s"graft-lake: ${local.getParent} does not support hard links; publishing " +
               s"${local.getFileName} via O_EXCL create (exclusive, but a concurrent reader " +
               "may observe a partially-written file on this mount)")
@@ -1712,7 +1720,10 @@ final class LakeTable private (
   }
 }
 
-object LakeTable {
+object LakeTable extends org.apache.spark.internal.Logging {
+  /** Degraded-path notices go to Spark's log, not stderr. */
+  private def warn(msg: String): Unit = logWarning(msg)
+
   /** TEST-ONLY crash-injection hook, invoked with a site label at the
     * commit protocol's vulnerable windows (after staging, before the
     * snapshot publish). A fault-injection test process installs a handler
@@ -1820,7 +1831,7 @@ object LakeTable {
     verdict match {
       case Some(v) => linkCapableDirs.putIfAbsent(key, java.lang.Boolean.valueOf(v)); v
       case None =>
-        System.err.println(
+        warn(
           s"graft-lake: hard-link capability probe for $key inconclusive " +
             "(transient filesystem fault); treating as link-capable without caching")
         true

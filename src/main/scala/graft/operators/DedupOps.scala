@@ -245,10 +245,11 @@ object DedupOps {
   // bigram Jaccard >= 0.9. Exact integer set sizes divided once in double,
   // so the value is engine-identical; the oracle recomputes the same pairs
   // from scratch (all-pairs is fine for DuckDB at verification scale).
-  val NeardupThreshold = 0.9
-  /** [[NeardupThreshold]] as the exact rational 9/10 — the verify filter
-    * runs in integer arithmetic (see below). */
+  /** The threshold as the exact rational 9/10: the verify filter runs in
+    * integer arithmetic (see below), and [[NeardupThreshold]] derives
+    * from it, so the two cannot drift apart. */
   private val NeardupNum = 9; private val NeardupDen = 10
+  val NeardupThreshold: Double = NeardupNum.toDouble / NeardupDen
   val minhashNeardupPairs: (SparkSession, String) => DataFrame = (s, dir) => {
     val sh = shingledShared(s, dir) // one materialization feeds all three uses
     val cand = lshCandidatesOf(s, sh)

@@ -129,8 +129,10 @@ object MultimodalOps {
       w.write(img)
     } catch { case e: Throwable =>
       // a failed encode must not leave the pooled per-thread writer bound
-      // to a dead stream (ADVICE r21): reset it so the next call starts
-      // from a registry-fresh state
+      // to a dead stream (ADVICE r21): release its native state, then reset
+      // the pool so the next call starts from a registry-fresh writer. A
+      // dispose failure must not mask the encode error.
+      try w.dispose() catch { case scala.util.control.NonFatal(_) => () }
       pngWriter.remove()
       throw e
     } finally mos.close() // close implies flushBefore(length); disposes the cache

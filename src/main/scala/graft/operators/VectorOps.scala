@@ -386,8 +386,6 @@ object VectorOps {
       rerank: Int = 150, dim: Int = 64): DataFrame =
     pqTopKOn(s, emb(s, dir).select(col("vec_id"), col("embedding")), m, ksub, rerank, dim)
 
-  /** [[pqTopK]] over any (vec_id, embedding) corpus — split out so the
-    * planted-duplicate oracle query (q93) and specs can supply corpora. */
   /** Diagnostic construct-phase timing (stderr), enabled by
     * SPARK_GRAFT_PROBE_TIMING — never part of the driver contract. */
   private def timed[A](label: String)(body: => A): A =
@@ -398,6 +396,8 @@ object VectorOps {
       r
     } else body
 
+  /** [[pqTopK]] over any (vec_id, embedding) corpus — split out so the
+    * planted-duplicate oracle query (q93) and specs can supply corpora. */
   def pqTopKOn(s: SparkSession, raw: DataFrame, m: Int = 8, ksub: Int = 32,
       rerank: Int = 150, dim: Int = 64): DataFrame = {
     // one fused collect for the bounded sample + probes (see

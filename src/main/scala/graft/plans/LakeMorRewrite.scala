@@ -1,86 +1,85 @@
 package graft.plans
 
 import graft.lake.LakeTable
-import graft.sources.GraftLakeV2Table
+import graft.sources.{GraftLakeDeleteKeys, GraftLakeRowLevelOperation, GraftLakeV2Table}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, EqualTo, Expression, LessThan, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.LeftAnti
-import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.graft.SqlInternals.RowLevelRead
+import org.apache.spark.sql.types.LongType
 
-/** Plans the merge-on-read anti-join DISTRIBUTED when a lake table's live
-  * delete set is too large to collect to the driver.
-  *
-  * The DSv2 read path normally ships tombstones to readers as a small
-  * driver-collected map (delete files are keys-only and fold away at
-  * compaction). But a CDC-heavy table between compactions can accumulate
-  * 10⁸–10⁹ tombstoned keys; collecting those would OOM the driver and fatten
-  * every task closure. Above `spark.graft.lake.tombstoneCollectMaxBytes`
-  * (64 MB default) this rule rewrites the logical scan
+/** Plans merge-on-read for every DSv2 / SQL read of a lake snapshot with
+  * live delete files. It rewrites the logical scan
   *
   * {{{ Relation(graftlake T) }}}
   *
-  * into the same distributed shape the imperative `LakeTable.scan` uses
-  * (`LakeTable.scala` MoR join):
+  * into the one shape every lake read folds deletes with,
+  * [[LakeTable.morFold]]:
   *
   * {{{
-  *   Project(userCols aliased to the original output ids,
-  *     Join(LeftAnti, on pk equality && row._graft_seq < del._graft_dseq,
-  *       Relation(graftlake T, raw = no tombstones + _graft_seq exposed),
-  *       ParquetRelation(delete files: pk + _graft_dseq)))
+  *   Project(the relation's output,
+  *     Join(LeftAnti, pk equality && row._graft_seq < key._graft_dseq,
+  *       Relation(graftlake T, mor=deferred: raw rows + _graft_seq),
+  *       Relation(T's delete keys: pk + _graft_dseq)))
   * }}}
   *
-  * so the MoR merge becomes an ordinary shuffled anti-join that AQE can
-  * plan (shuffled-hash/sort-merge, skew-aware) — O(rows + keys) across the
-  * cluster, nothing driver-side. Runs in the operator-optimization batch,
-  * BEFORE V2 pushdown, so filter/column pushdown then applies to the raw
-  * relation as usual. Idempotent: the rewritten relation is `raw` and never
-  * matches again.
+  * AQE picks a broadcast or a shuffled join from the real size of the key
+  * side; nothing is collected to the driver. Runs in the
+  * operator-optimization batch, BEFORE V2 pushdown, so filter and column
+  * pushdown then apply to both sides as usual: predicates on pk columns
+  * are inferred onto the key side across the equi-join, and its scan
+  * prunes partition-scoped delete files with them ([[GraftLakeDeleteKeys]]).
+  *
+  * Row-level commands (SQL UPDATE / MERGE INTO / DELETE, as ReplaceData or
+  * WriteDelta) keep their target relation out of `children`, so only the
+  * reads inside their query are rewritten. The operation's own scan is
+  * folded in place — same RowLevelOperationTable instance, so Spark's
+  * runtime group filtering and the group replace still see it — and the
+  * operation is marked so that scan reads raw rows. A scan this rule never
+  * reached fails loudly when its reader factory is built.
   */
 class LakeMorRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
-    // row-level command plans (DELETE FROM, and the ReplaceData that
-    // UPDATE/MERGE rewrite into) pattern-match on their target relation —
-    // rewriting it would unresolve the command exactly on the tables whose
-    // tombstones most need trimming. Their scans instead hit the reader's
-    // loud tombstone gate (compact first / explicit driver opt-in).
-    case _: org.apache.spark.sql.catalyst.plans.logical.DeleteFromTable => plan
-    case _: org.apache.spark.sql.catalyst.plans.logical.ReplaceData => plan
-    case _: org.apache.spark.sql.catalyst.plans.logical.WriteDelta => plan
-    case _ => plan.transform {
-      case rel: DataSourceV2Relation
-          if rel.table.isInstanceOf[GraftLakeV2Table] &&
-            rel.table.asInstanceOf[GraftLakeV2Table].morJoinNeeded &&
-            // the reader injects _graft_file; the join rewrite cannot — a
-            // projection of it falls back to the in-reader merge (which
-            // requires the explicit driver-tombstone opt-in above the gate)
-            !rel.output.exists(_.name == graft.sources.GraftLakeSource.FileCol) =>
-        rewrite(rel, rel.table.asInstanceOf[GraftLakeV2Table])
-    }
+    // metadata-only DELETE FROM: its child IS the target relation, and the
+    // delete reads through the imperative scan (LakeTable.morMerged)
+    case _: DeleteFromTable => plan
+    case _ =>
+      // operation scans already folded on an earlier pass (this rule runs
+      // to a fixed point; plain reads become `raw` and never match again)
+      val folded = plan.collect {
+        case Join(rows, keys, LeftAnti, _, _) if keys.collectLeaves().exists(isKeySide) =>
+          rows.collectLeaves()
+      }.flatten
+      plan.transformUp {
+        case rel: DataSourceV2Relation => rel.table match {
+          case tbl: GraftLakeV2Table if tbl.morPending =>
+            fold(rel, tbl, rel.copy(table = tbl.rawTable))
+          case RowLevelRead(tbl: GraftLakeV2Table, op: GraftLakeRowLevelOperation)
+              if tbl.morPending && !folded.exists(_ eq rel) =>
+            op.markMorFolded()
+            fold(rel, tbl, rel)
+          case _ => rel
+        }
+      }
   }
 
-  private def rewrite(rel: DataSourceV2Relation, tbl: GraftLakeV2Table): LogicalPlan = {
-    val t = tbl.t
-    val raw = DataSourceV2Relation.create(
-      tbl.rawTable, None, None, CaseInsensitiveStringMap.empty())
-    val rawOut = raw.output.map(a => a.name -> a).toMap
+  private def isKeySide(p: LogicalPlan): Boolean = p match {
+    case r: DataSourceV2Relation => r.table.isInstanceOf[GraftLakeDeleteKeys]
+    case _ => false
+  }
 
-    val pk = t.meta.primaryKey
-    // era-aware read (a pk promotion in history leaves old delete files
-    // physically narrow; each era reads with its own types, cast wide)
-    val dels = t.readDeleteKeys(tbl.snap.deleteFiles, tbl.snap.schemaVersion)
-      .queryExecution.analyzed
-    val delOut = dels.output.map(a => a.name -> a).toMap
-
-    val cond = (pk.map(k => EqualTo(rawOut(k), delOut(k)): Expression) :+
-      LessThan(rawOut(LakeTable.SeqCol), delOut(LakeTable.DseqCol))).reduce(And(_, _))
-    val joined = Join(raw, dels, LeftAnti, Some(cond), JoinHint.NONE)
-    // keep the original output attribute ids so upstream references resolve
-    val project: Seq[NamedExpression] =
-      rel.output.map(a => Alias(rawOut(a.name), a.name)(exprId = a.exprId))
-    Project(project, joined)
+  /** `rows` keeps the relation's attributes, so upstream references
+    * resolve unchanged, plus the commit seq the fold compares. */
+  private def fold(
+      rel: DataSourceV2Relation, tbl: GraftLakeV2Table, rows: DataSourceV2Relation): LogicalPlan = {
+    val rowsOut =
+      if (rel.output.exists(_.name.equalsIgnoreCase(LakeTable.SeqCol))) rel.output
+      else rel.output :+ AttributeReference(LakeTable.SeqCol, LongType, nullable = false)()
+    val keys = DataSourceV2Relation.create(tbl.deleteKeys, None, None)
+    Project(rel.output, tbl.t.morFold(rows.copy(output = rowsOut), keys))
   }
 }

@@ -117,7 +117,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.simhashDescriptor)
     ext.injectFunction(GraftExtensions.maxRunDescriptor)
     ext.injectFunction(GraftExtensions.spanHashesDescriptor)
-    // distributed MoR anti-join for DSv2 lake scans with large delete sets
+    // the merge-on-read anti-join for every DSv2/SQL lake read with live deletes
     ext.injectOptimizerRule(new LakeMorRewrite(_))
     // metadata-answered GROUP BY over partition transforms (month/day/...)
     ext.injectOptimizerRule(new LakeMetaAggregate(_))

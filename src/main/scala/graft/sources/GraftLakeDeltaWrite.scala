@@ -35,8 +35,8 @@ import scala.collection.mutable
   *  - writers stage the re-inserted rows as ordinary data files and the
   *    displaced identities as delete-key sidecars stamped with the commit
   *    sequence — the SAME shape the CDC upsert path commits, so the MoR
-  *    read path (tombstone map / distributed anti-join / compaction)
-  *    applies unchanged;
+  *    read path (the planned anti-join, or compaction) applies
+  *    unchanged;
   *  - the driver commits both file sets in one snapshot
   *    ([[LakeTable.commitStagedDelta]]); NO pre-existing data file is
   *    rewritten. A sparse UPDATE on a 100 TB table costs O(changed rows),
@@ -57,9 +57,8 @@ import scala.collection.mutable
 private[sources] class GraftLakeDeltaOperation(
     t: LakeTable,
     snap: Snapshot,
-    info: RowLevelOperationInfo,
-    gateBytes: Long)
-    extends RowLevelOperation with SupportsDelta {
+    info: RowLevelOperationInfo)
+    extends GraftLakeRowLevelOperation with SupportsDelta {
 
   private[sources] val opName: String = info.command() match {
     case RowLevelOperation.Command.UPDATE => "update-mor"
@@ -75,7 +74,7 @@ private[sources] class GraftLakeDeltaOperation(
     * the command condition can match are ever read. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftLakeScanBuilder(t, snap.seq, t.schema(snap.schemaVersion),
-      skipDeletes = false, gateBytes)
+      skipDeletes = morFolded)
 
   /** Row identity = the table's primary key (equality deletes, like the
     * CDC upsert path — not positional). */

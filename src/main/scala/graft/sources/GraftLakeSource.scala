@@ -3,11 +3,6 @@ package graft.sources
 import graft.lake.{LakeTable, PruneFilter}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -46,20 +41,23 @@ import scala.jdk.CollectionConverters._
   *    answered from recorded row counts + exact column bounds — zero I/O.
   *  - `SupportsPushDownLimit`: unfiltered LIMIT plans only enough files to
   *    cover it (partial pushdown; Spark re-applies the limit).
-  *  - merge-on-read: the (small, compaction-bounded) delete-key set is
-  *    loaded once at planning and shipped to readers as a tombstone map —
+  *  - merge-on-read: a read of a snapshot with live delete files is
+  *    planned by [[graft.plans.LakeMorRewrite]] as one anti-join,
+  *    [[LakeTable.morFold]]: this scan in `mor=deferred` mode (raw rows,
+  *    `_graft_seq` exposed) ⋉̸ the delete keys ([[GraftLakeDeleteKeys]]) —
   *    a row is dropped iff its commit seq precedes a delete of its key.
+  *    AQE picks a broadcast or a shuffled join from the real key-side
+  *    size; nothing is collected to the driver. A scan the rewrite did not
+  *    reach (no `graft.plans.GraftExtensions`) fails loudly.
   *  - time travel: `asOf` pins the snapshot like `scan(asOf = …)`.
   *
   * One InputPartition per parquet ROW GROUP: split byte ranges come from
   * the snapshot metadata (recorded at commit — Iceberg's `split_offsets`),
   * so a 512 MB file fans out across tasks without the driver reopening
   * footers; files from pre-splits snapshots fall back to a parallelized
-  * footer read. Tombstone-free scans decode through Spark's VECTORIZED
-  * parquet reader into ColumnarBatches; merge-on-read scans with live
-  * tombstones use the row-at-a-time Group API — flat scalar schemas only,
-  * which is exactly what lake tables hold (SURVEY §1.3: no nesting
-  * anywhere).
+  * footer read. Every split decodes through Spark's VECTORIZED parquet
+  * reader into ColumnarBatches; `_graft_file` and synthesized changelog
+  * columns are per-split constant columns of the same batches.
   */
 class GraftLakeSource extends TableProvider with org.apache.spark.sql.sources.DataSourceRegister {
 
@@ -105,6 +103,12 @@ object GraftLakeSource {
   /** Changelog-read label column: insert | update | delete. */
   val ChangeTypeCol = "_change_type"
 
+  /** The session's hadoop conf (filesystem impls, credentials) as shipped
+    * to readers — a bare `new Configuration()` only reaches the default
+    * local fs. */
+  private[sources] def hadoopConfOf(t: LakeTable): Map[String, String] =
+    t.spark.sparkContext.hadoopConfiguration.asScala.map(e => e.getKey -> e.getValue).toMap
+
   /** Data files → one InputPartition per row group: recorded split offsets
     * are pure metadata; files from pre-splits snapshots fall back to a
     * parallelized footer read. Shared by the batch and streaming planners. */
@@ -127,23 +131,6 @@ object GraftLakeSource {
       val p = new Path(t.abs(f.path)).toString
       legacySplits(new Path(p)).map { case (st, len) => split(f, p, st, len) }
     }).toArray
-  }
-
-  /** Driver-side tombstone key rendering, normalized to the SAME primitive
-    * representation the parquet reader extracts (micros for timestamps,
-    * epoch days for dates) — external java.sql types stringify differently
-    * and would never match. */
-  private[sources] def canonicalKey(v: Any): String = v match {
-    case null => "null"
-    case t: java.sql.Timestamp =>
-      (t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L).toString
-    case i: java.time.Instant =>
-      (i.getEpochSecond * 1000000L + i.getNano / 1000L).toString
-    case d: java.time.LocalDateTime =>
-      (d.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + d.getNano / 1000L).toString
-    case d: java.sql.Date => d.toLocalDate.toEpochDay.toString
-    case d: java.time.LocalDate => d.toEpochDay.toString
-    case other => String.valueOf(other)
   }
 }
 
@@ -333,11 +320,10 @@ private[sources] object ParquetPushdown {
   }
 }
 
-/** @param raw expose the table WITHOUT merge-on-read tombstone filtering
+/** @param raw expose the table WITHOUT merge-on-read delete filtering
   *            and WITH the `_graft_seq` commit-seq column appended — the
-  *            building block [[graft.plans.LakeMorRewrite]] uses to plan
-  *            the MoR anti-join as a distributed join when the delete set
-  *            is too large to collect to the driver. */
+  *            row side [[graft.plans.LakeMorRewrite]] folds deletes over
+  *            with [[LakeTable.morFold]]. */
 private[graft] class GraftLakeV2Table(
     private[graft] val t: LakeTable,
     private[graft] val asOf: Option[Long],
@@ -427,25 +413,18 @@ private[graft] class GraftLakeV2Table(
     m
   }
 
-  /** Above this many bytes of live delete files, the driver-side tombstone
-    * collect is refused and the MoR merge is planned as a distributed
-    * anti-join instead ([[graft.plans.LakeMorRewrite]]). A CDC-heavy table
-    * between compactions can hold 10⁸–10⁹ tombstoned keys — collecting
-    * those would OOM the driver and fatten every reader task. */
-  private[graft] val tombstoneGateBytes: Long =
-    t.spark.conf.getOption("spark.graft.lake.tombstoneCollectMaxBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-  private[graft] def tombstoneBytes: Long = snap.deleteFiles.map(_.bytes).sum
-  private[graft] def morJoinNeeded: Boolean =
-    !raw && snap.deleteFiles.nonEmpty && tombstoneBytes > tombstoneGateBytes
+  /** True when reads of this table must fold live delete files — what
+    * [[graft.plans.LakeMorRewrite]] plans for every such relation. */
+  private[graft] def morPending: Boolean = !raw && !changelog && snap.deleteFiles.nonEmpty
   private[graft] def rawTable: GraftLakeV2Table =
     new GraftLakeV2Table(t, Some(snap.seq), raw = true)
+  private[graft] def deleteKeys: GraftLakeDeleteKeys =
+    new GraftLakeDeleteKeys(t, snap.seq, userSchema)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     if (changelog) new GraftLakeChangelogScanBuilder(t, schema(),
       Option(options.get("maxSnapshotsPerTrigger")).map(_.toInt))
     else new GraftLakeScanBuilder(t, snap.seq, schema(), skipDeletes = raw,
-      gateBytes = tombstoneGateBytes,
       streamMaxSnapshots = Option(options.get("maxSnapshotsPerTrigger")).map(_.toInt))
 
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -491,8 +470,8 @@ private[graft] class GraftLakeV2Table(
     require(asOf.isEmpty && !raw && !changelog,
       "cannot mutate a time-travel, raw, or changelog view")
     if (rowLevelMode == "merge-on-read" && t.meta.primaryKey.nonEmpty)
-      return () => new GraftLakeDeltaOperation(t, snap, info, tombstoneGateBytes)
-    () => new org.apache.spark.sql.connector.write.RowLevelOperation {
+      return () => new GraftLakeDeltaOperation(t, snap, info)
+    () => new GraftLakeRowLevelOperation {
       // shared between the operation's scan and write: the write's commit
       // replaces exactly the files the (runtime-filtered) scan planned
       @volatile private var scanBuilder: Option[GraftLakeScanBuilder] = None
@@ -514,8 +493,8 @@ private[graft] class GraftLakeV2Table(
       // comes from the runtime _graft_file whitelist, whose granularity is
       // exactly the replace granularity.
       override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-        val b = new GraftLakeScanBuilder(t, snap.seq, schema(), skipDeletes = false,
-          tombstoneGateBytes, acceptFilters = false)
+        val b = new GraftLakeScanBuilder(t, snap.seq, schema(), skipDeletes = morFolded,
+          acceptFilters = false)
         scanBuilder = Some(b)
         b
       }
@@ -555,6 +534,21 @@ private[graft] class GraftLakeV2Table(
   }
 }
 
+/** A row-level operation (SQL UPDATE / MERGE INTO / DELETE) whose scan
+  * reads the table. When the snapshot has live delete files,
+  * [[graft.plans.LakeMorRewrite]] folds them with [[LakeTable.morFold]]
+  * over the operation's scan inside the command's query, and marks the
+  * operation so the scan reads raw rows (`mor=deferred`). Spark's runtime
+  * group filtering and the group replace still see the operation's own
+  * scan. An unmarked operation's scan keeps the loud missing-rewrite
+  * failure of [[GraftLakeScan]]. */
+private[graft] trait GraftLakeRowLevelOperation
+    extends org.apache.spark.sql.connector.write.RowLevelOperation {
+  @volatile private var folded = false
+  private[graft] def markMorFolded(): Unit = folded = true
+  protected def morFolded: Boolean = folded
+}
+
 private[graft] object GraftLakeV2Table {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions.{col, lit}
@@ -584,7 +578,7 @@ private[graft] object GraftLakeV2Table {
 }
 
 private[sources] class GraftLakeScanBuilder(
-    t: LakeTable, seq: Long, tableSchema: StructType, skipDeletes: Boolean, gateBytes: Long,
+    t: LakeTable, seq: Long, tableSchema: StructType, skipDeletes: Boolean,
     acceptFilters: Boolean = true,
     streamMaxSnapshots: Option[Int] = None)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
@@ -926,7 +920,7 @@ private[sources] class GraftLakeScanBuilder(
     case Some((schema, values)) => new GraftLakeMetaScan(t.meta.name, seq, schema, values)
     case None =>
       val s = new GraftLakeScan(t, seq, tableSchema, required, pruneFilters, skipDeletes,
-        gateBytes, dataFilters, limit, streamMaxSnapshots,
+        dataFilters, limit, streamMaxSnapshots,
         rowLevelScan = !acceptFilters)
       builtScan = Some(s)
       s
@@ -977,6 +971,67 @@ private[sources] class GraftLakeMetaScan(
       schema.fieldNames.mkString(", ")
 }
 
+/** The key side of the merge-on-read fold ([[LakeTable.morFold]]): the
+  * live delete keys of one snapshot (pk columns + `_graft_dseq`) as a DSv2
+  * table. Its scan takes pushed pk filters — Spark infers them across the
+  * LeftAnti equi-join from the row side's predicates
+  * (`InferFiltersFromConstraints`) — and reads only the delete files whose
+  * partition scope reaches a data file those filters keep: the same
+  * `snapshotPruned` / `planFiles` / `deleteFilesFor` pruning the row side
+  * plans with, so a partition-pruned read of a pk-partitioned table loads
+  * only its scoped delete files. Every pushed filter is re-applied post
+  * scan. Delete files written before a pk type promotion decode wide
+  * through the vectorized reader, like old-era data files. */
+private[graft] class GraftLakeDeleteKeys(t: LakeTable, seq: Long, userSchema: StructType)
+    extends Table with SupportsRead {
+  override def name(): String = s"${t.meta.name} (delete keys)"
+  override def schema(): StructType = StructType(
+    t.meta.primaryKey.map(k => userSchema(k)) :+
+      StructField(LakeTable.DseqCol, LongType, nullable = false))
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new ScanBuilder with SupportsPushDownFilters {
+      private var pushed: Array[(PruneFilter, Filter)] = Array.empty
+      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+        pushed = filters.flatMap(f => GraftLakeScanBuilder.toPruneFilter(f).map(_ -> f))
+        filters
+      }
+      override def pushedFilters(): Array[Filter] = pushed.map(_._2)
+      override def build(): Scan = new GraftLakeDeleteKeysScan(t, seq, schema(), pushed.map(_._1))
+    }
+}
+
+private[sources] class GraftLakeDeleteKeysScan(
+    t: LakeTable, seq: Long, keySchema: StructType, filters: Seq[PruneFilter])
+    extends Scan with Batch with SupportsReportStatistics {
+  private lazy val deleteFiles: Seq[graft.lake.DeleteFile] = {
+    val snap = t.snapshotPruned(seq, filters)
+    t.deleteFilesFor(snap, t.planFiles(snap, filters)._1)
+  }
+
+  override def readSchema(): StructType = keySchema
+  override def toBatch: Batch = this
+  override def description(): String =
+    s"GraftLakeDeleteKeys ${t.meta.name} snapshot=$seq deleteFiles=${deleteFiles.size}/" +
+      s"${t.snapshot(seq).deleteFiles.size} PrunedBy: ${filters.mkString(", ")}"
+
+  /** Key-side size for the join choice: AQE broadcasts it while small. */
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def sizeInBytes(): java.util.OptionalLong =
+      java.util.OptionalLong.of(deleteFiles.map(_.bytes).sum)
+    override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
+  }
+
+  override def planInputPartitions(): Array[InputPartition] =
+    deleteFiles.map(d => GraftLakeInputPartition(t.abs(d.path), 0L, d.bytes): InputPartition)
+      .toArray
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    GraftLakeReaderFactory(keySchema, GraftLakeSource.hadoopConfOf(t))
+}
+
 private[sources] class GraftLakeScan(
     t: LakeTable,
     seq: Long,
@@ -984,7 +1039,6 @@ private[sources] class GraftLakeScan(
     required: StructType,
     filters: Seq[PruneFilter],
     skipDeletes: Boolean,
-    gateBytes: Long,
     dataFilters: Seq[Filter] = Nil,
     limit: Option[Int] = None,
     streamMaxSnapshots: Option[Int] = None,
@@ -1217,77 +1271,22 @@ private[sources] class GraftLakeScan(
     GraftLakeSource.planFileSplits(t, kept, keyOf = spjKeyOf)
   }
 
-  /** Memo for [[createReaderFactory]], keyed on the runtime-filter state
-    * its result depends on: Spark resolves the factory more than once per
-    * execution (each BatchScanExec instantiation — e.g. AQE's initial and
-    * final plans — holds its own lazy readerFactory over this one Scan),
-    * and the tombstone key read inside is a whole Spark JOB — QueryProbe
-    * (r22) measured two identical collect jobs per MoR serve (q80/q81/
-    * q82). Same inputs ⇒ same factory; the memo lives on this Scan
-    * instance, so a rebuilt plan (every bench run) still recomputes. */
-  @volatile private var factoryMemo: Option[(Seq[PruneFilter], PartitionReaderFactory)] = None
-
   override def createReaderFactory(): PartitionReaderFactory = {
-    val key = allFilters
-    factoryMemo match {
-      case Some((k, f)) if k == key => f
-      case _ =>
-        val f = buildReaderFactory()
-        factoryMemo = Some((key, f))
-        f
-    }
-  }
-
-  private def buildReaderFactory(): PartitionReaderFactory = {
-    // the PRUNED snapshot serves both sides: delete manifests whose
-    // partition summaries cannot match the scan filters are never parsed
-    // (sound because Spark re-applies every pushed filter as residual —
-    // see LakeTable.snapshotPruned), and partition-scoped tombstone files
-    // are then narrowed further to the ones reaching a PLANNED data file
-    // (Iceberg's partition-scoped delete files)
+    // the PRUNED snapshot, as in planning: delete manifests whose partition
+    // summaries cannot match the scan filters are never parsed (sound
+    // because Spark re-applies every pushed filter as residual — see
+    // LakeTable.snapshotPruned), and partition-scoped delete files are
+    // narrowed further to the ones reaching a PLANNED data file. Any that
+    // remain must be folded by the plan above this scan (LakeMorRewrite);
+    // a scan no rewrite reached would silently serve deleted rows.
     val snap = t.snapshotPruned(seq, allFilters)
-    val scopedDels =
-      if (skipDeletes || snap.deleteFiles.isEmpty) Nil
-      else t.deleteFilesFor(snap, t.planFiles(snap, allFilters)._1)
-    // tombstones: key (rendered pk values) -> latest delete seq. Collected
-    // to the driver ONLY while small (delete files are keys-only and fold
-    // away at compaction); above the gate, LakeMorRewrite plans the MoR
-    // merge as a distributed anti-join over the raw scan instead, and this
-    // path refuses to run (reachable without the graft extensions, or when
-    // the _graft_file projection forces the in-reader merge): collecting
-    // 10^8+ keys would OOM the driver silently, so fail actionably unless
-    // explicitly allowed.
-    if (!skipDeletes && scopedDels.nonEmpty) {
-      // the gate LakeMorRewrite's morJoinNeeded checks is the table-level
-      // byte sum; the scoped sum here is <= that, so this check can only
-      // be more permissive than planning, never stricter mid-query
-      val bytes = scopedDels.map(_.bytes).sum
-      val allow = t.spark.conf.getOption("spark.graft.lake.allowDriverTombstones")
-        .exists(_.toBoolean)
-      require(bytes <= gateBytes || allow,
-        s"${t.meta.name}: $bytes bytes of delete files exceed the driver-collect gate " +
-          s"($gateBytes). Register graft.plans.GraftExtensions (spark.sql.extensions) so the " +
-          "merge plans as a distributed anti-join, compact the table, or set " +
-          "spark.graft.lake.allowDriverTombstones=true to accept the driver cost.")
-    }
-    val tombstones: Map[Seq[String], Long] =
-      if (scopedDels.isEmpty) Map.empty
-      else {
-        val pk = t.meta.primaryKey
-        val rows = t.readDeleteKeys(scopedDels, snap.schemaVersion).collect()
-        rows.groupBy(r =>
-            pk.indices.map(i => GraftLakeSource.canonicalKey(r.get(i))).toList: Seq[String])
-          .map { case (k, rs) => k -> rs.map(_.getLong(pk.size)).max }
-      }
-    val types: Map[String, DataType] =
-      t.schema(snap.schemaVersion).fields.map(f => f.name -> f.dataType).toMap +
-        (LakeTable.SeqCol -> LongType) + (GraftLakeSource.FileCol -> StringType)
-    // ship the session's hadoop conf (filesystem impls, credentials) to the
-    // readers — a bare `new Configuration()` only reaches the default
-    // local fs
-    val hadoopConf: Map[String, String] =
-      t.spark.sparkContext.hadoopConfiguration.asScala
-        .map(e => e.getKey -> e.getValue).toMap
+    if (!skipDeletes && snap.deleteFiles.nonEmpty &&
+        t.deleteFilesFor(snap, t.planFiles(snap, allFilters)._1).nonEmpty)
+      throw new IllegalStateException(
+        s"${t.meta.name}: snapshot $seq has live merge-on-read delete files, but no " +
+          "delete fold was planned over this scan. Start the session with " +
+          "spark.sql.extensions=graft.plans.GraftExtensions (and keep " +
+          "graft.plans.LakeMorRewrite out of spark.sql.optimizer.excludedRules).")
     // a column is row-group-filterable only if its physical parquet type
     // is the same in EVERY schema version up to this snapshot's — a file
     // written before a type promotion would otherwise fail the whole read
@@ -1305,7 +1304,7 @@ private[sources] class GraftLakeScan(
           .map(f => ParquetPushdown.physicalKey(f.dataType)))
       keys.distinct.size <= 1
     }
-    GraftLakeReaderFactory(required, t.meta.primaryKey, tombstones, types, hadoopConf,
+    GraftLakeReaderFactory(required, GraftLakeSource.hadoopConfOf(t),
       ParquetPushdown.build(tableSchema, dataFilters, physicallyStable))
   }
 }
@@ -1416,17 +1415,9 @@ private[sources] class GraftLakeMicroBatchStream(
     GraftLakeSource.planFileSplits(t, newFiles)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val snap = t.currentSnapshot
-    val types: Map[String, DataType] =
-      t.schema(snap.schemaVersion).fields.map(f => f.name -> f.dataType).toMap +
-        (LakeTable.SeqCol -> LongType) + (GraftLakeSource.FileCol -> StringType)
-    val hadoopConf: Map[String, String] =
-      t.spark.sparkContext.hadoopConfiguration.asScala
-        .map(e => e.getKey -> e.getValue).toMap
-    // append-only ranges carry no tombstones by construction
-    GraftLakeReaderFactory(required, t.meta.primaryKey, Map.empty, types, hadoopConf)
-  }
+  // append-only ranges carry no delete files by construction
+  override def createReaderFactory(): PartitionReaderFactory =
+    GraftLakeReaderFactory(required, GraftLakeSource.hadoopConfOf(t))
 }
 
 private[sources] class GraftLakeChangelogScanBuilder(
@@ -1578,20 +1569,13 @@ private[sources] class GraftLakeChangelogMicroBatchStream(
     GraftLakeSource.planFileSplits(t, files)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val types: Map[String, DataType] =
-      outSchema.fields.map(f => f.name -> f.dataType).toMap
-    val hadoopConf: Map[String, String] =
-      t.spark.sparkContext.hadoopConfiguration.asScala
-        .map(e => e.getKey -> e.getValue).toMap
-    // direct (append fast path) splits read RAW data files, which lack
-    // the _change_type column — the reader synthesizes the constant for
-    // exactly those splits (the split type carries the decision); staged
-    // splits carry the real column and keep the vectorized reader
-    GraftLakeReaderFactory(outSchema, Nil, Map.empty, types, hadoopConf,
-      missingDefaults =
-        Map(GraftLakeSource.ChangeTypeCol -> UTF8String.fromString("insert")))
-  }
+  // direct (append fast path) splits read RAW data files, which lack the
+  // _change_type column — the reader serves the constant for exactly
+  // those splits (the split type carries the decision); staged splits
+  // carry the real column
+  override def createReaderFactory(): PartitionReaderFactory =
+    GraftLakeReaderFactory(outSchema, GraftLakeSource.hadoopConfOf(t),
+      missingDefaults = Map(GraftLakeSource.ChangeTypeCol -> UTF8String.fromString("insert")))
 
   override def commit(end: Offset): Unit = {
     val e = end.asInstanceOf[GraftLakeOffset].seq
@@ -1644,68 +1628,63 @@ private[sources] case class GraftLakeKeyedInputPartition(
 
 private[sources] case class GraftLakeReaderFactory(
     required: StructType,
-    primaryKey: Seq[String],
-    tombstones: Map[Seq[String], Long],
-    types: Map[String, DataType],
     hadoopConf: Map[String, String],
     filter: Option[org.apache.parquet.filter2.predicate.FilterPredicate] = None,
-    /** Catalyst values substituted for columns a FILE does not carry
-      * (instead of the null-fill evolution default) — the changelog
-      * stream's append fast path reads raw data files and synthesizes
-      * `_change_type = insert` this way. Applied ONLY to
-      * [[GraftLakeDirectChangeSplit]] partitions (which it forces onto
-      * the row reader); other splits in the same scan stay vectorized. */
+    /** Values of columns a [[GraftLakeDirectChangeSplit]]'s file does not
+      * carry — the changelog stream's append fast path reads raw data
+      * files and serves `_change_type = insert` this way. Other splits in
+      * the same scan read the real column. */
     missingDefaults: Map[String, Any] = Map.empty)
     extends PartitionReaderFactory {
 
-  private def defaultsFor(p: InputPartition): Map[String, Any] =
-    if (p.isInstanceOf[GraftLakeDirectChangeSplit]) missingDefaults else Map.empty
+  /** Per-split constant columns: the serving file's path as `_graft_file`,
+    * plus the synthesized defaults of a direct changelog split. */
+  private def constantsFor(p: GraftSplit): Map[String, Any] = {
+    val file: Map[String, Any] =
+      if (required.fieldNames.contains(GraftLakeSource.FileCol))
+        Map(GraftLakeSource.FileCol -> UTF8String.fromString(p.file))
+      else Map.empty
+    if (p.isInstanceOf[GraftLakeDirectChangeSplit]) missingDefaults ++ file else file
+  }
 
   private def confOf(): Configuration = {
     val conf = new Configuration(false)
     hadoopConf.foreach { case (k, v) => conf.set(k, v) }
     // row-group statistics skipping: HadoopReadOptions picks this up in
-    // BOTH readers below (vectorized via SpecificParquetRecordReaderBase,
-    // Group API via the explicit builder) — a row group whose stats refute
-    // the predicate is never decoded. Tombstone merging is unaffected:
-    // skipping only removes rows the query filter would drop anyway.
+    // the vectorized reader (via SpecificParquetRecordReaderBase) — a row
+    // group whose stats refute the predicate is never decoded
     filter.foreach(p =>
       org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(conf, p))
     conf
   }
 
-  /** Tombstone-free scans decode through Spark's VECTORIZED parquet reader
-    * straight into ColumnarBatches (dictionary-aware, null-filling evolved
-    * columns); merge-on-read scans with live tombstones (per-row survive
-    * check) and projections of the reader-injected `_graft_file` metadata
-    * column fall back to the row-at-a-time Group reader. */
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    tombstones.isEmpty && defaultsFor(p).isEmpty &&
-      !required.fieldNames.contains(GraftLakeSource.FileCol)
+  /** Every split decodes columnar; there is no row-at-a-time reader. */
+  override def supportColumnarReads(p: InputPartition): Boolean = true
 
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val gp = p.asInstanceOf[GraftSplit]
-    new GraftLakeVectorizedReader(gp.file, gp.start, gp.length, required, confOf())
+    new GraftLakeVectorizedReader(gp.file, gp.start, gp.length, required, constantsFor(gp),
+      confOf())
   }
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val gp = p.asInstanceOf[GraftSplit]
-    new GraftLakePartitionReader(
-      gp.file, gp.start, gp.length, required, primaryKey, tombstones, types, confOf(),
-      defaultsFor(p))
-  }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graft lake splits are read columnar only")
 }
 
 /** Columnar decode of one row group via Spark's vectorized parquet reader —
   * the same machinery `spark.read.parquet` uses, so the DSv2 path gets
-  * dictionary decoding, batch null-filling of evolved columns, and
-  * ColumnarToRow codegen for free. */
+  * dictionary decoding, batch null-filling of evolved columns, INT32/FLOAT
+  * pages widened to promoted LONG/DOUBLE columns, and ColumnarToRow codegen
+  * for free. `constants` columns are not decoded: the reader serves them as
+  * Spark serves partition values (`initBatch`), and each batch's vectors
+  * are reordered to match `required`. */
 private[sources] class GraftLakeVectorizedReader(
     file: String,
     start: Long,
     length: Long,
     required: StructType,
+    constants: Map[String, Any],
     conf: Configuration)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   // the old mapred FileSplit extends the mapreduce one AND is what
@@ -1714,9 +1693,12 @@ private[sources] class GraftLakeVectorizedReader(
   import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
   import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
   import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
+  import org.apache.spark.sql.vectorized.ColumnarBatch
+
+  private val (constFields, dataFields) = required.fields.partition(f => constants.contains(f.name))
 
   private val reader = {
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, required.json)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, StructType(dataFields).json)
     conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[ParquetReadSupport].getName)
     // the conf keys ParquetFileFormat/ParquetToSparkSchemaConverter expect
@@ -1733,133 +1715,24 @@ private[sources] class GraftLakeVectorizedReader(
     val split = new FileSplit(new Path(file), start, length, Array.empty[String])
     val attempt = new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)
     r.initialize(split, new TaskAttemptContextImpl(conf, attempt))
-    r.initBatch(new StructType(), InternalRow.empty)
+    r.initBatch(StructType(constFields),
+      InternalRow.fromSeq(constFields.map(f => constants(f.name)).toSeq))
     r.enableReturningBatches()
     r
   }
 
+  /** Batch column i = reader vector order(i); the reader lays out the
+    * decoded columns first, then the constants. None = already in order. */
+  private val order: Option[Array[Int]] = {
+    val laid = (dataFields ++ constFields).map(_.name)
+    val o = required.fieldNames.map(n => laid.indexOf(n))
+    if (o.sameElements(o.indices)) None else Some(o)
+  }
+
   override def next(): Boolean = reader.nextBatch()
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = reader.resultBatch()
-  override def close(): Unit = reader.close()
-}
-
-/** Decodes one parquet data file through the parquet-column Group API:
-  * projects to the needed columns (required ∪ pk+seq when tombstones are
-  * live), null-fills columns the file predates (schema evolution), and
-  * drops tombstoned row versions. */
-private[sources] class GraftLakePartitionReader(
-    file: String,
-    start: Long,
-    length: Long,
-    required: StructType,
-    primaryKey: Seq[String],
-    tombstones: Map[Seq[String], Long],
-    types: Map[String, DataType],
-    conf: Configuration,
-    missingDefaults: Map[String, Any] = Map.empty) extends PartitionReader[InternalRow] {
-
-  private val reader = ParquetFileReader.open(
-    HadoopInputFile.fromPath(new Path(file), conf),
-    org.apache.parquet.HadoopReadOptions.builder(conf)
-      .withRange(start, start + length).build())
-  private val fileSchema: MessageType = reader.getFooter.getFileMetaData.getSchema
-
-  // columns to decode: the projection, plus pk + commit seq for MoR checks
-  private val extraCols =
-    if (tombstones.isEmpty) Seq.empty
-    else (primaryKey :+ LakeTable.SeqCol).filterNot(required.fieldNames.contains)
-  private val decodeNames: Seq[String] = required.fieldNames.toSeq ++ extraCols
-  private val present: Seq[String] = decodeNames.filter(fileSchema.containsField)
-  private val projection: MessageType =
-    if (present.isEmpty) fileSchema // degenerate; rows counted, fields unused
-    else new MessageType(fileSchema.getName,
-      present.map(n => fileSchema.getType(fileSchema.getFieldIndex(n))): _*)
-  private val columnIO = new ColumnIOFactory().getColumnIO(projection, fileSchema)
-
-  private var pages = reader.readNextRowGroup()
-  private var recordReader =
-    if (pages == null) null
-    else columnIO.getRecordReader(pages, new GroupRecordConverter(projection))
-  private var remaining: Long = if (pages == null) 0L else pages.getRowCount
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (true) {
-      if (remaining == 0) {
-        pages = reader.readNextRowGroup()
-        if (pages == null) return false
-        recordReader = columnIO.getRecordReader(pages, new GroupRecordConverter(projection))
-        remaining = pages.getRowCount
-      }
-      val g = recordReader.read()
-      remaining -= 1
-      val values = decodeNames.map(n => extract(g, n)).toArray
-      if (survives(values)) {
-        current = new GenericInternalRow(values.take(required.length))
-        return true
-      }
-    }
-    false
+  override def get(): ColumnarBatch = {
+    val b = reader.resultBatch()
+    order.fold(b)(o => new ColumnarBatch(o.map(b.column), b.numRows()))
   }
-
-  private val nameIdx: Map[String, Int] = decodeNames.zipWithIndex.toMap
-  // only resolved when MoR tombstones are live (decodeNames then includes them)
-  private val pkIdx: Array[Int] =
-    if (tombstones.isEmpty) Array.empty else primaryKey.map(nameIdx).toArray
-  private val seqIdx: Int = nameIdx.getOrElse(LakeTable.SeqCol, -1)
-
-  private def survives(values: Array[Any]): Boolean = {
-    if (tombstones.isEmpty) return true
-    val key: Seq[String] = pkIdx.toSeq.map { i =>
-      values(i) match {
-        case s: UTF8String => s.toString
-        case other => String.valueOf(other)
-      }
-    }
-    tombstones.get(key) match {
-      case Some(dseq) => values(seqIdx).asInstanceOf[Long] >= dseq
-      case None => true
-    }
-  }
-
-  private val fieldIndex: Map[String, Int] =
-    present.zipWithIndex.map { case (n, _) => n -> projection.getFieldIndex(n) }.toMap
-
-  // physical parquet type per projected column — a file written before a
-  // type promotion still stores the NARROW encoding (INT32 under a LONG
-  // column, FLOAT under a DOUBLE), so decode must follow the file, then
-  // widen to the requested logical type
-  private val physical: Map[String, org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName] =
-    present.map(n => n -> projection.getType(projection.getFieldIndex(n))
-      .asPrimitiveType().getPrimitiveTypeName).toMap
-
-  private def extract(g: org.apache.parquet.example.data.Group, name: String): Any = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    if (name == GraftLakeSource.FileCol) return UTF8String.fromString(file)
-    fieldIndex.get(name) match {
-      case None =>
-        // evolved column the file predates: null-fill, unless the scan
-        // declared a synthesized default (changelog append fast path)
-        missingDefaults.getOrElse(name, null)
-      case Some(i) =>
-        if (g.getFieldRepetitionCount(i) == 0) null
-        else types(name) match {
-          case LongType if physical(name) == INT32 => g.getInteger(i, 0).toLong
-          case LongType => g.getLong(i, 0)
-          case IntegerType => g.getInteger(i, 0)
-          case DoubleType if physical(name) == FLOAT => g.getFloat(i, 0).toDouble
-          case DoubleType => g.getDouble(i, 0)
-          case FloatType => g.getFloat(i, 0)
-          case BooleanType => g.getBoolean(i, 0)
-          case StringType => UTF8String.fromBytes(g.getBinary(i, 0).getBytes)
-          case TimestampType | TimestampNTZType => g.getLong(i, 0) // micros
-          case DateType => g.getInteger(i, 0)
-          case other => throw new UnsupportedOperationException(
-            s"graft lake DSv2 reader supports flat scalar columns; got $other for $name")
-        }
-    }
-  }
-
-  override def get(): InternalRow = current
   override def close(): Unit = reader.close()
 }

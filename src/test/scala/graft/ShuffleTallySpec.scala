@@ -4,14 +4,13 @@ package graft
   * exchange: a shuffling query tallies nonzero shuffle-write bytes, a
   * map-only scan tallies zero — so a `shuffle_mb` growth law read off
   * `SCALE_r*.json` reflects actual exchanged bytes, not a dead counter
-  * (the listener bus is async; the spec drains it the same way the
-  * harness does before reading). */
+  * (the listener bus is async; the spec drains it before reading). */
 class ShuffleTallySpec extends SparkSpec {
 
   private def tallied(work: => Unit): (Long, Long) = {
     val tally = new ShuffleTally
     spark.sparkContext.addSparkListener(tally)
-    try { work; Thread.sleep(600) } finally
+    try { work; org.apache.spark.ListenerDrain(spark.sparkContext) } finally
       spark.sparkContext.removeSparkListener(tally)
     (tally.write.get, tally.spill.get)
   }

@@ -758,14 +758,15 @@ class LakeSpec extends SparkSpec {
           s"appender never parked on the commit lock (state=${appender.getState})\n" +
             appender.getStackTrace.take(12).mkString("\n"))
         assert(t.currentSeq == 0L, "commit must not publish while the lock is held")
-        Thread.sleep(500) // let the async listener bus drain job-start events
+        // deliver every job-start event posted so far
+        org.apache.spark.ListenerDrain(spark.sparkContext)
         jobsDuring = jobCount.get()
         assert(jobsDuring > jobsBaseline,
           "staging ran no Spark jobs while the lock was held externally")
       }
       appender.join(120000)
       assert(!appender.isAlive, "append did not complete after the lock was released")
-      Thread.sleep(500)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
       // NO Spark job between lock acquisition and snapshot publish: the
       // lock-held tail is a pure metadata swap
       assert(jobCount.get() == jobsDuring,
@@ -1162,6 +1163,17 @@ class LakeSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq == Seq((1L, "A")))
     assert(t.scan().as[(Long, String)].collect().toSet ==
       Set((1L, "A"), (2L, "b"), (101L, "C"), (102L, "D")))
+    // DSv2 arm: a partition-pruned SQL read reads only the scoped sidecars
+    // too — the pk filter is inferred onto the fold's key side, whose scan
+    // prunes delete files with the same planFiles/deleteFilesFor logic
+    spark.read.format("graftlake").option("path", t.location).load()
+      .createOrReplaceTempView("scoped_sidecars")
+    val sqlRead = spark.sql("SELECT k, s FROM scoped_sidecars WHERE k = 1")
+    assert(sqlRead.as[(Long, String)].collect().toSeq == Seq((1L, "A")))
+    val keySide = """GraftLakeDeleteKeys t snapshot=\d+ deleteFiles=(\d+)/(\d+)""".r
+      .findAllMatchIn(sqlRead.queryExecution.executedPlan.toString).toSeq
+    assert(keySide.map(m => (m.group(1).toInt, m.group(2).toInt)) ==
+      Seq((needed.size, snap.deleteFiles.size)), s"key side not scoped: $keySide")
 
     // a spec whose source is NOT part of the pk writes GLOBAL sidecars —
     // the old row's partition is unknowable from the key alone
@@ -1601,7 +1613,7 @@ class LakeSpec extends SparkSpec {
     try {
       val df = t.scan()
       df.queryExecution.executedPlan // force analysis + full physical planning
-      Thread.sleep(500) // drain the async listener bus
+      org.apache.spark.ListenerDrain(spark.sparkContext)
       assert(jobCount.get() == 0,
         s"relation construction launched ${jobCount.get()} Spark job(s); " +
           "the manifest FileIndex must launch none at any file count")
@@ -1614,7 +1626,7 @@ class LakeSpec extends SparkSpec {
       try {
         val before = jobCount.get()
         val viaListing = t.scan()
-        Thread.sleep(500)
+        org.apache.spark.ListenerDrain(spark.sparkContext)
         assert(jobCount.get() > before,
           "listingJobThreshold=32 should re-enable the distributed listing job")
         assert(viaListing.schema == df.schema,

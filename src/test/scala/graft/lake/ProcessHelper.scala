@@ -44,6 +44,9 @@ object ProcessHelper {
     val spark = SparkSession.builder()
       .master("local[2]")
       .appName(s"graft-process-helper-$mode")
+      // the SQL writers read tables with live delete files, which needs the
+      // merge-on-read fold the extensions plan
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -45,19 +45,19 @@ class GraftLakeSourceSpec extends SparkSpec {
     t.promoteColumn("ratio", "double")
     t.append(Seq((3L, 5000000000L, 3.25)).toDF("id", "qty", "ratio"))
     val expected = Seq((1L, 10L, 1.5), (2L, 20L, 2.5), (3L, 5000000000L, 3.25))
-    // tombstone-free: Spark's VECTORIZED parquet reader widens INT32/FLOAT pages
+    // plain read: Spark's VECTORIZED parquet reader widens INT32/FLOAT pages
     val vec = readLake(t.location)
     assert(vec.schema("qty").dataType == org.apache.spark.sql.types.LongType)
     assert(vec.as[(Long, Long, Double)].collect().sortBy(_._1).toSeq == expected)
-    // _graft_file projection forces the row-at-a-time Group reader, which
-    // must follow each FILE's physical type and widen per value
+    // a _graft_file projection adds a per-split constant column; the
+    // decoded columns still follow each FILE's physical type and widen
     val viaGroup = readLake(t.location)
       .select(col("id"), col("qty"), col("ratio"), col("_graft_file"))
       .as[(Long, Long, Double, String)].collect().sortBy(_._1)
     assert(viaGroup.map(r => (r._1, r._2, r._3)).toSeq == expected)
     assert(viaGroup.map(_._4).distinct.length >= 2, "expected files from both eras")
-    // live tombstones (MoR survive check) also run the Group reader; the
-    // promoted pk-adjacent columns must merge across encodings
+    // live deletes plan the anti-join over the deferred scan; the promoted
+    // pk-adjacent columns must merge across encodings
     t.deleteKeys(Seq(Tuple1(2L)).toDF("id"))
     assert(readLake(t.location).as[(Long, Long, Double)].collect().sortBy(_._1).toSeq ==
       expected.filterNot(_._1 == 2L))
@@ -113,19 +113,92 @@ class GraftLakeSourceSpec extends SparkSpec {
     val t = graft.lake.LakeTable.create(spark, s"$dir/t", "t", df.schema, primaryKey = Seq("id"))
     t.append(df)
     t.deleteKeys(spark.range(0, n, 2).select(col("id")))
-    spark.conf.set("spark.graft.lake.tombstoneCollectMaxBytes", "1024")
+    val v2 = readLake(t.location)
+    val plan = v2.queryExecution.executedPlan.toString
+    assert(plan.contains("mor=deferred"), s"no deferred MoR scan:\n$plan")
+    assert(plan.contains("LeftAnti"), s"no anti-join in deferred MoR plan:\n$plan")
+    assert(v2.count() == n / 2)
+    assert(v2.agg(sum("id")).head.getLong(0) == t.scan().agg(sum("id")).head.getLong(0))
+  }
+
+  /** A pk table with two data files and one small live delete file. */
+  private def smallMorTable(name: String): graft.lake.LakeTable = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+    val t = graft.lake.LakeTable.create(spark, s"$dir/t", name,
+      Seq((0L, 0.0)).toDF("id", "v").schema, primaryKey = Seq("id"))
+    t.append(Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("id", "v"))
+    t.append(Seq((4L, 4.0), (5L, 5.0)).toDF("id", "v"))
+    t.deleteKeys(Seq(Tuple1(2L), Tuple1(5L)).toDF("id"))
+    assert(t.currentSnapshot.deleteFiles.map(_.bytes).sum < 4096)
+    t
+  }
+
+  test("a few bytes of live deletes still plan LeftAnti over a columnar mor=deferred scan") {
+    val t = smallMorTable("mor_small")
+    val viaSql = { readLake(t.location).createOrReplaceTempView("mor_small_v")
+      spark.sql("SELECT id, v FROM mor_small_v WHERE v > 0") }
+    Seq(readLake(t.location), viaSql).foreach { df =>
+      assert(df.collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq ==
+        Seq((1L, 1.0), (3L, 3.0), (4L, 4.0)))
+      val plan = df.queryExecution.executedPlan.toString // AQE's final plan, post-execution
+      assert(plan.contains("LeftAnti") && plan.contains("mor=deferred") &&
+        plan.contains("GraftLakeDeleteKeys"), s"delete fold not planned:\n$plan")
+      assert(plan.contains("ColumnarToRow"), s"MoR scan not columnar:\n$plan")
+    }
+  }
+
+  test("building a MoR read's plan and reader factories starts zero Spark jobs") {
+    val t = smallMorTable("mor_nojobs")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.sparkContext.addSparkListener(listener)
     try {
-      val v2 = readLake(t.location)
-      val plan = v2.queryExecution.executedPlan.toString
-      assert(plan.contains("mor=deferred"), s"driver collect path taken:\n$plan")
-      assert(plan.contains("LeftAnti"), s"no anti-join in deferred MoR plan:\n$plan")
-      assert(v2.count() == n / 2)
-      assert(v2.agg(sum("id")).head.getLong(0) == t.scan().agg(sum("id")).head.getLong(0))
-    } finally spark.conf.unset("spark.graft.lake.tombstoneCollectMaxBytes")
-    // below the gate (default 64 MB) the in-reader tombstone path still runs
-    val v2small = readLake(t.location)
-    assert(!v2small.queryExecution.executedPlan.toString.contains("mor=deferred"))
-    assert(v2small.count() == n / 2)
+      val df = readLake(t.location).filter(col("v") > 0)
+      val scans = df.queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      }
+      assert(scans.size == 2, s"expected row and key scans: $scans")
+      scans.foreach(_.readerFactory)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      assert(jobs.get() == 0, s"MoR planning started ${jobs.get()} Spark job(s)")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.unset("spark.sql.adaptive.enabled")
+    }
+  }
+
+  test("_graft_file over live deletes serves exactly the merged rows, no opt-in") {
+    val t = smallMorTable("mor_file")
+    val rows = readLake(t.location).select(col("id"), col("_graft_file")).collect()
+    assert(rows.map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L, 4L))
+    val files = t.currentSnapshot.dataFiles.map(f => t.abs(f.path)).toSet
+    assert(rows.forall(r => files.contains(r.getString(1))), rows.mkString(", "))
+    // each row names the file that holds it
+    rows.foreach { r =>
+      assert(spark.read.parquet(r.getString(1)).filter(col("id") === r.getLong(0)).count() == 1,
+        s"row ${r.getLong(0)} is not in ${r.getString(1)}")
+    }
+  }
+
+  test("a MoR read with the delete fold excluded fails naming spark.sql.extensions") {
+    val t = smallMorTable("mor_norule")
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.LakeMorRewrite")
+    try {
+      val e = intercept[Exception](readLake(t.location).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("\n")
+      assert(msgs.contains("spark.sql.extensions=graft.plans.GraftExtensions"), msgs)
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+    // tables without live deletes need no rule
+    graft.lake.Maintenance.compact(t)
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.LakeMorRewrite")
+    try assert(readLake(t.location).count() == 3)
+    finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   test("multi-row-group files split into multiple partitions; tombstone-free reads are columnar") {
@@ -177,12 +250,11 @@ class GraftLakeSourceSpec extends SparkSpec {
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
       import scala.jdk.CollectionConverters._
       val required = StructType(Seq(StructField("id", LongType)))
-      val types = Map("id" -> (LongType: org.apache.spark.sql.types.DataType))
       val hcMap = hc.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
       val lastSplit = file.splits.last // holds only the largest ids
 
       def readerFor(filter: Option[org.apache.parquet.filter2.predicate.FilterPredicate]) =
-        GraftLakeReaderFactory(required, Nil, Map.empty, types, hcMap, filter)
+        GraftLakeReaderFactory(required, hcMap, filter)
           .createColumnarReader(
             GraftLakeInputPartition(t.abs(file.path), lastSplit._1, lastSplit._2))
 
@@ -230,12 +302,11 @@ class GraftLakeSourceSpec extends SparkSpec {
       import scala.jdk.CollectionConverters._
       val required = StructType(Seq(
         StructField("id", LongType), StructField("m", DecimalType(12, 2))))
-      val types = required.fields.map(f => f.name -> f.dataType).toMap
       val hcMap = hc.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
       val lastSplit = file.splits.last // holds only the largest amounts
 
       def readerFor(filter: Option[org.apache.parquet.filter2.predicate.FilterPredicate]) =
-        GraftLakeReaderFactory(required, Nil, Map.empty, types, hcMap, filter)
+        GraftLakeReaderFactory(required, hcMap, filter)
           .createColumnarReader(
             GraftLakeInputPartition(t.abs(file.path), lastSplit._1, lastSplit._2))
 
@@ -552,7 +623,7 @@ class GraftLakeSourceSpec extends SparkSpec {
     val t = LakePipelines.ordersLake(spark, sfDir)
     val snap = t.currentSnapshot
     val stats = new GraftLakeScanBuilder(t, snap.seq, t.currentSchema,
-      skipDeletes = false, gateBytes = 64L << 20)
+      skipDeletes = false)
       .build().asInstanceOf[SupportsReportStatistics].estimateStatistics()
     assert(stats.sizeInBytes().getAsLong == snap.dataFiles.map(_.bytes).sum)
     assert(stats.numRows().getAsLong == t.scan().count())
@@ -573,7 +644,7 @@ class GraftLakeSourceSpec extends SparkSpec {
     val snap = t.currentSnapshot
     // a pruned scan only advertises surviving columns for runtime filtering
     val b = new GraftLakeScanBuilder(t, snap.seq, t.currentSchema,
-      skipDeletes = false, gateBytes = 64L << 20)
+      skipDeletes = false)
     b.pruneColumns(org.apache.spark.sql.types.StructType(
       t.currentSchema.fields.filter(f => f.name == "o_orderkey" || f.name == "o_totalprice")))
     val pruned = b.build().asInstanceOf[GraftLakeScan]
@@ -597,7 +668,7 @@ class GraftLakeSourceSpec extends SparkSpec {
     val snap = t.currentSnapshot
     def statsFor(fs: Array[org.apache.spark.sql.sources.Filter]) = {
       val b = new GraftLakeScanBuilder(t, snap.seq, t.currentSchema,
-        skipDeletes = false, gateBytes = 64L << 20)
+        skipDeletes = false)
       b.pushFilters(fs)
       b.build().asInstanceOf[SupportsReportStatistics].estimateStatistics()
     }
@@ -612,7 +683,7 @@ class GraftLakeSourceSpec extends SparkSpec {
     val t = LakePipelines.ordersLake(spark, sfDir)
     val snap = t.currentSnapshot
     val scan = new GraftLakeScanBuilder(t, snap.seq, t.currentSchema,
-      skipDeletes = false, gateBytes = 64L << 20).build().asInstanceOf[GraftLakeScan]
+      skipDeletes = false).build().asInstanceOf[GraftLakeScan]
     // partition sources + cluster keys are advertised for runtime filtering
     val attrs = scan.filterAttributes().map(_.fieldNames().mkString("."))
     assert(attrs.toSet == Set("o_orderdate", "o_orderstatus", "o_orderkey"))
@@ -1067,7 +1138,7 @@ class GraftLakeSourceSpec extends SparkSpec {
     assert(snap.dataFiles.size >= 5)
     def scanWithLimit(n: Option[Int]): GraftLakeScan = {
       val b = new GraftLakeScanBuilder(t, snap.seq, t.currentSchema,
-        skipDeletes = false, gateBytes = 64L << 20)
+        skipDeletes = false)
       n.foreach(l => assert(b.pushLimit(l), "limit not accepted"))
       b.build().asInstanceOf[GraftLakeScan]
     }
@@ -1080,7 +1151,7 @@ class GraftLakeSourceSpec extends SparkSpec {
     // tombstones refuse limit pushdown (kept files could under-deliver)
     t.deleteKeys(spark.range(0, 1000, 2).select(col("id")))
     val b2 = new GraftLakeScanBuilder(t, t.currentSeq, t.currentSchema,
-      skipDeletes = false, gateBytes = 64L << 20)
+      skipDeletes = false)
     assert(!b2.pushLimit(10))
     assert(readLake(t.location).limit(10).count() == 10)
   }

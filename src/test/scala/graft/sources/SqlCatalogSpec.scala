@@ -482,23 +482,62 @@ class SqlCatalogSpec extends SparkSpec {
     assert(spark.sql("SELECT * FROM graft.tow VERSION AS OF 1").count() == 2)
   }
 
-  test("SQL DELETE still works on a table above the tombstone-collect gate") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-sqldel-gate").toString
+  test("SQL DELETE/UPDATE/MERGE over live delete files stay exact, MoR and COW") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-sql-live-dels").toString
     register(wh)
+    def ids(table: String): Set[(Long, Double)] =
+      spark.sql(s"SELECT id, v FROM graft.$table").as[(Long, Double)].collect().toSet
+    // merge-on-read (default mode): every row-level command reads through
+    // the planned fold, its own operation scan included
     spark.sql(
-      """CREATE TABLE graft.tdg (id BIGINT, s STRING)
+      """CREATE TABLE graft.tdl (id BIGINT, v DOUBLE)
         |TBLPROPERTIES ('primary_key'='id')""".stripMargin)
-    spark.sql("INSERT INTO graft.tdg VALUES (1,'a'), (2,'b'), (3,'c'), (4,'d')")
-    spark.sql("DELETE FROM graft.tdg WHERE id = 1") // creates delete files
-    spark.conf.set("spark.graft.lake.tombstoneCollectMaxBytes", "0")
-    try {
-      // the MoR plan rewrite must NOT fire under the DELETE command itself
-      spark.sql("DELETE FROM graft.tdg WHERE id = 2")
-      assert(spark.sql("SELECT id FROM graft.tdg").as[Long].collect().toSet == Set(3L, 4L))
-      // and reads above the gate go through the distributed anti-join
-      val plan = spark.sql("SELECT * FROM graft.tdg").queryExecution.executedPlan.toString
-      assert(plan.contains("mor=deferred"))
-    } finally spark.conf.unset("spark.graft.lake.tombstoneCollectMaxBytes")
+    spark.sql("INSERT INTO graft.tdl VALUES (1, 1.0), (2, 2.0), (3, 3.0), (4, 4.0)")
+    spark.sql("INSERT INTO graft.tdl VALUES (5, 5.0), (6, 6.0), (7, 7.0), (8, 8.0)")
+    spark.sql("DELETE FROM graft.tdl WHERE id = 1") // metadata-only: a live delete file
+    val tdl = graft.lake.LakeTable.load(spark, s"$wh/tdl")
+    assert(tdl.currentSnapshot.deleteFiles.nonEmpty)
+    spark.sql("DELETE FROM graft.tdl WHERE id % 4 = 2") // unpushable: a delta write
+    spark.sql("UPDATE graft.tdl SET v = v * 10 WHERE id >= 5")
+    Seq((3L, 33.0), (9L, 9.0)).toDF("id", "v").createOrReplaceTempView("tdl_src")
+    spark.sql(
+      """MERGE INTO graft.tdl t USING tdl_src s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET t.v = s.v
+        |WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)""".stripMargin)
+    assert(ids("tdl") ==
+      Set((3L, 33.0), (4L, 4.0), (5L, 50.0), (7L, 70.0), (8L, 80.0), (9L, 9.0)))
+    assert(tdl.currentSnapshot.operation == "merge-mor")
+    val plan = spark.sql("SELECT * FROM graft.tdl").queryExecution.executedPlan.toString
+    assert(plan.contains("mor=deferred") && plan.contains("LeftAnti"), plan)
+
+    // copy-on-write: the runtime group filter computes its file set over the
+    // FOLDED rows, so a deleted row version matching the condition does not
+    // pull its file into the rewrite, and the rewrite never resurrects it
+    withRowLevelMode("copy-on-write") {
+      spark.sql(
+        """CREATE TABLE graft.tdc (id BIGINT, d TIMESTAMP, v DOUBLE)
+          |PARTITIONED BY (months(d)) TBLPROPERTIES ('primary_key'='id')""".stripMargin)
+      spark.sql("INSERT INTO graft.tdc VALUES (1, TIMESTAMP '2024-01-15 00:00:00', 1.0), " +
+        "(12, TIMESTAMP '2024-01-20 00:00:00', 12.0)")
+      spark.sql("INSERT INTO graft.tdc VALUES (2, TIMESTAMP '2024-02-15 00:00:00', 2.0)")
+      spark.sql("INSERT INTO graft.tdc VALUES (3, TIMESTAMP '2024-03-15 00:00:00', 3.0)")
+      spark.sql("DELETE FROM graft.tdc WHERE id = 12")
+      val tdc = graft.lake.LakeTable.load(spark, s"$wh/tdc")
+      val before = tdc.currentSnapshot
+      assert(before.deleteFiles.nonEmpty && before.dataFiles.size == 3)
+      // matches live id=2 (February) and the deleted id=12 (January)
+      spark.sql("UPDATE graft.tdc SET v = v * 10 WHERE id % 10 = 2")
+      val after = tdc.currentSnapshot
+      assert(after.operation == "rewrite-dsv2", s"got ${after.operation}")
+      val beforePaths = before.dataFiles.map(_.path).toSet
+      assert(after.dataFiles.count(f => beforePaths.contains(f.path)) == 2,
+        s"expected only the February file replaced: ${after.dataFiles.map(_.path)}")
+      assert(ids("tdc") == Set((1L, 1.0), (2L, 20.0), (3L, 3.0)))
+      Seq((3L, 99.0)).toDF("id", "nv").createOrReplaceTempView("tdc_src")
+      spark.sql("MERGE INTO graft.tdc t USING tdc_src s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET v = s.nv")
+      assert(ids("tdc") == Set((1L, 1.0), (2L, 20.0), (3L, 99.0)))
+    }
   }
 
   test("SQL CTAS-equivalent medallion flow: INSERT INTO ... SELECT from a raw view") {
