@@ -625,6 +625,11 @@ final class LakeTable private (
     * @param filters raw-column predicates; used to prune data files via the
     *                partition spec, then re-applied as Catalyst filters (and
     *                pushed into the parquet scan for row-group skipping)
+    *
+    * Files are read from their manifest entries without a filesystem
+    * stat, so the file-source metadata column
+    * `_metadata.file_modification_time` reads 0 (1970-01-01) on lake
+    * scans (the commit that added a file is its manifest entry's `seq`).
     */
   def scan(asOf: Option[Long] = None, filters: Seq[PruneFilter] = Nil): DataFrame = {
     // manifest-level pruning first: whole manifests whose partition
@@ -837,70 +842,54 @@ final class LakeTable private (
     * length, which is exact by construction (recorded from the staged
     * file at commit; [[RowParquet]] and the spec suite read through this
     * path everywhere, so a drifting length fails loudly, not silently).
-    *
-    * `spark.graft.lake.listingJobThreshold` restores the `spark.read`
-    * route (threshold scoped to that value, so Spark re-stats and may
-    * distribute the listing) for deployments that want the filesystem
-    * re-verified; that fallback serializes on a lock so the conf
-    * set/restore can no longer race concurrent builds. */
-  private def readKnownFiles(storage: StructType, files: Seq[(String, Long)]): DataFrame =
-    spark.conf.getOption("spark.graft.lake.listingJobThreshold") match {
-      case Some(threshold) => LakeTable.listingConfLock.synchronized {
-        val k = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-        val prev = spark.conf.getOption(k)
-        try {
-          spark.conf.set(k, threshold)
-          spark.read.schema(storage).parquet(files.map(_._1): _*)
-        } finally prev match {
-          case Some(v) => spark.conf.set(k, v)
-          case None => spark.conf.unset(k)
-        }
-      }
-      case None =>
-        import org.apache.spark.sql.execution.datasources.{
-          FileIndex, HadoopFsRelation, PartitionDirectory}
-        // spark.read forces a user-specified file-source schema NULLABLE;
-        // mirror that here so the relation schema (and every downstream
-        // plan and output schema) is identical to the fallback route's —
-        // caught by LakeSpec's schema-equality assertion
-        def asNullable(dt: org.apache.spark.sql.types.DataType)
-            : org.apache.spark.sql.types.DataType = dt match {
-          case s: StructType => StructType(s.fields.map(f =>
-            f.copy(dataType = asNullable(f.dataType), nullable = true)))
-          case a: org.apache.spark.sql.types.ArrayType =>
-            a.copy(elementType = asNullable(a.elementType), containsNull = true)
-          case m: org.apache.spark.sql.types.MapType =>
-            m.copy(keyType = asNullable(m.keyType),
-              valueType = asNullable(m.valueType), valueContainsNull = true)
-          case other => other
-        }
-        val statuses = files.map { case (p, len) =>
-          // blockSize/mtime 0: split planning uses maxPartitionBytes, not
-          // the block size, and nothing here reads _metadata.file_* columns
-          new org.apache.hadoop.fs.FileStatus(len, false, 1, 0L, 0L, new Path(p))
-        }.toArray
-        val index = new FileIndex {
-          override def rootPaths: Seq[Path] = statuses.map(_.getPath).toSeq
-          override def listFiles(
-              partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-              dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-              : Seq[PartitionDirectory] =
-            Seq(PartitionDirectory(
-              org.apache.spark.sql.catalyst.InternalRow.empty, statuses))
-          override def inputFiles: Array[String] = statuses.map(_.getPath.toString)
-          override def refresh(): Unit = ()
-          override def sizeInBytes: Long = files.iterator.map(_._2).sum
-          override def partitionSchema: StructType = new StructType()
-        }
-        spark.baseRelationToDataFrame(HadoopFsRelation(
-          location = index,
-          partitionSchema = new StructType(),
-          dataSchema = asNullable(storage).asInstanceOf[StructType],
-          bucketSpec = None,
-          fileFormat =
-            new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-          options = Map.empty)(spark))
+    * Every file stat is synthesized with modification time 0, so
+    * `_metadata.file_modification_time` reads 1970-01-01 on lake scans. */
+  private def readKnownFiles(storage: StructType, files: Seq[(String, Long)]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{
+      FileIndex, HadoopFsRelation, PartitionDirectory}
+    // spark.read forces a user-specified file-source schema NULLABLE;
+    // mirror that here so the relation schema (and every downstream
+    // plan and output schema) is identical to a plain
+    // `spark.read.schema(...).parquet(...)` of the same files — caught
+    // by LakeSpec's schema-equality assertion
+    def asNullable(dt: org.apache.spark.sql.types.DataType)
+        : org.apache.spark.sql.types.DataType = dt match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = asNullable(f.dataType), nullable = true)))
+      case a: org.apache.spark.sql.types.ArrayType =>
+        a.copy(elementType = asNullable(a.elementType), containsNull = true)
+      case m: org.apache.spark.sql.types.MapType =>
+        m.copy(keyType = asNullable(m.keyType),
+          valueType = asNullable(m.valueType), valueContainsNull = true)
+      case other => other
     }
+    val statuses = files.map { case (p, len) =>
+      // blockSize/mtime 0: split planning uses maxPartitionBytes, not
+      // the block size; `_metadata.file_modification_time` reads 0
+      new org.apache.hadoop.fs.FileStatus(len, false, 1, 0L, 0L, new Path(p))
+    }.toArray
+    val index = new FileIndex {
+      override def rootPaths: Seq[Path] = statuses.map(_.getPath).toSeq
+      override def listFiles(
+          partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+          dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+          : Seq[PartitionDirectory] =
+        Seq(PartitionDirectory(
+          org.apache.spark.sql.catalyst.InternalRow.empty, statuses))
+      override def inputFiles: Array[String] = statuses.map(_.getPath.toString)
+      override def refresh(): Unit = ()
+      override def sizeInBytes: Long = files.iterator.map(_._2).sum
+      override def partitionSchema: StructType = new StructType()
+    }
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      location = index,
+      partitionSchema = new StructType(),
+      dataSchema = asNullable(storage).asInstanceOf[StructType],
+      bucketSpec = None,
+      fileFormat =
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+      options = Map.empty)(spark))
+  }
 
   /** Delete keys (pk columns + [[LakeTable.DseqCol]]) of the given delete
     * files, grouped by the pk types of the schema era each was committed
@@ -1340,7 +1329,7 @@ final class LakeTable private (
       // loss and spills to disk; unpersisted after the staging write below.
       val src = derived.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       unpersistAfterWrite = Some(src)
-      val z = ZOrder.zvalue(src, meta.clusterBy, ZOrder.bits(spark))
+      val z = ZOrder.zvalue(src, meta.clusterBy)
       val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
       val keys = partCols.map(col) :+ col(ZOrderCol)
       src.withColumn(ZOrderCol, z)
@@ -1731,11 +1720,6 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * production never touches it (the default is a no-op and nothing in
     * the library sets it). */
   @volatile private[graft] var failpoint: String => Unit = _ => ()
-
-  /** Serializes the `listingJobThreshold` fallback's conf set/restore in
-    * [[LakeTable.readKnownFiles]] — the default manifest-FileIndex path
-    * mutates nothing and never takes this lock. */
-  private val listingConfLock = new Object
 
   /** Process-wide manifest cache. Manifest files are IMMUTABLE (uuid
     * names, write-once), so caching by absolute path is always coherent —

@@ -34,8 +34,7 @@ object ZOrder {
 
   /** Bits per dimension (2^bits quantile buckets). 8 → 255 splits; with c
     * cluster columns the z-value spans c·bits ≤ 63 bits. */
-  def bits(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.getOption("spark.graft.lake.zorderBits").map(_.toInt).getOrElse(8)
+  val Bits = 8
 
   /** Column types a z-order key may have (orderable as doubles). */
   def supported(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
@@ -48,11 +47,11 @@ object ZOrder {
   /** The z-value column for `df`'s rows over `keys`: per-key quantile
     * bucket (one array fold against the broadcast split literals), bits
     * interleaved key-major. Deterministic given the batch. */
-  def zvalue(df: DataFrame, keys: Seq[String], bits: Int): Column = {
-    require(keys.nonEmpty && keys.size * bits <= 63,
-      s"z-order supports up to ${63 / bits} keys at $bits bits: $keys")
-    val nSplits = (1 << bits) - 1
-    val probs = (1 to nSplits).map(_.toDouble / (1 << bits))
+  def zvalue(df: DataFrame, keys: Seq[String]): Column = {
+    require(keys.nonEmpty && keys.size * Bits <= 63,
+      s"z-order supports up to ${63 / Bits} keys at $Bits bits: $keys")
+    val nSplits = (1 << Bits) - 1
+    val probs = (1 to nSplits).map(_.toDouble / (1 << Bits))
     // one aggregation computes every column's split points
     val aggs = keys.map(k =>
       percentile_approx(col(k).cast("double"), typedLit(probs), lit(10000)).as(k))
@@ -69,7 +68,7 @@ object ZOrder {
     }
     // interleave: bit i of key j lands at position i·c + j (key-major)
     val c = keys.size
-    (0 until bits).flatMap(i => buckets.zipWithIndex.map { case (b, j) =>
+    (0 until Bits).flatMap(i => buckets.zipWithIndex.map { case (b, j) =>
       shiftright(b, i).bitwiseAND(lit(1)).cast("long") * lit(1L << (i * c + j))
     }).reduce(_ + _)
   }

@@ -315,6 +315,10 @@ object DedupOps {
     * rarest class, which is where prefix tokens want to be. */
   val DefaultPrefixDictSize = 1 << 16
 
+  /** The prefix dictionary's document frequencies come from the 1/8 of
+    * documents whose `xxhash64(doc_id)` is divisible by this. */
+  val PrefixDictSampleMod = 8
+
   def jaccardPrefixCandidates(shingles: DataFrame,
       tNum: Int = 4, tDen: Int = 5): DataFrame = {
     val s = shingles.sparkSession
@@ -333,11 +337,7 @@ object DedupOps {
     // (the same bounded-training pattern as the PQ codebook). Tiny
     // corpora (sample could even be empty) stay correct: unseen tokens
     // order as df = 1, ties break on the token itself.
-    val sampleMod = s.conf.getOption("spark.graft.dedup.prefixDictSampleMod")
-      .map(_.toInt).getOrElse(8).max(1)
-    val dictSrc =
-      if (sampleMod > 1) sh.filter(pmod(xxhash64(col("doc_id")), lit(sampleMod)) === 0)
-      else sh
+    val dictSrc = sh.filter(pmod(xxhash64(col("doc_id")), lit(PrefixDictSampleMod)) === 0)
     val dict: Map[String, Long] = dictSrc
       .select(explode(col("sh")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("df"))
@@ -402,7 +402,7 @@ object DedupOps {
       .filter(size(col("ids")) > 1)
       .select(explode(filteredPairs(col("ids"))).as("p"))
       .select(col("p.doc_i"), col("p.doc_j"))
-    // NO distinct BY DEFAULT: a pair sharing k prefix tokens appears k
+    // NO pre-verify distinct: a pair sharing k prefix tokens appears k
     // times, but deduplicating 100% of candidates pre-verification costs
     // a full exchange + hash-agg of the candidate stream (skew-prone: one
     // giant bucket's output lands in one task's partial agg), while the
@@ -415,14 +415,8 @@ object DedupOps {
     // distinct measured same-to-worse across windows, and re-measured at
     // the 100x scale point via ScaleBench's q68_distinct_candidates
     // variant — see SCALE_r13 — so the crossover would need a far higher
-    // duplication rate.) The conf below exists for that A/B measurement.
-    // equalsIgnoreCase, not .toBoolean: a malformed value ("1") must read
-    // as unset, not throw an opaque IllegalArgumentException from deep
-    // inside candidate generation
-    if (shingles.sparkSession.conf
-        .getOption("spark.graft.dedup.jaccardCandidatesDistinct")
-        .exists(_.equalsIgnoreCase("true"))) cands.distinct()
-    else cands
+    // duplication rate.)
+    cands
   }
 
   // q68 — exact Jaccard similarity join at threshold 0.8: prefix-filter

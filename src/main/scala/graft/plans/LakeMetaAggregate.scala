@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.lake.{ColBound, PartitionValues, Transform}
-import graft.sources.{GraftLakeScanBuilder, GraftLakeV2Table}
+import graft.sources.GraftLakeV2Table
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
@@ -12,18 +12,18 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Answers GROUP BY aggregates over lake tables from SNAPSHOT METADATA
-  * when the grouping is derivable from recorded partition tuples — the
-  * per-partition rollup then plans as a driver LocalRelation: zero tasks,
-  * zero data I/O at any table size (the Iceberg metadata-count idea
-  * extended to grouped aggregates over partition TRANSFORMS).
-  *
-  * The DSv2 aggregate-pushdown API already serves `GROUP BY <identity
-  * partition source>` (GraftLakeScanBuilder.answerGroupedFromMetadata),
-  * but Spark cannot translate `month(ts)` / `year(ts)` / `date_format`
-  * into connector expressions, so q2-shaped per-month rollups never reach
-  * that path. This optimizer rule (injected via [[GraftExtensions]], runs
-  * BEFORE V2 pushdown) recognizes the shapes directly in the logical plan:
+/** THE metadata-aggregate path: answers aggregates over lake tables from
+  * SNAPSHOT METADATA — ungrouped, or grouped by keys derivable from
+  * recorded partition tuples — so the query plans as a driver
+  * LocalRelation: zero tasks, zero data I/O at any table size (Iceberg's
+  * metadata-count idea, extended to grouped aggregates over partition
+  * TRANSFORMS). The reference's `COUNT(*)` after every pipeline stage and
+  * the gold rollups are served here; the DSv2 scan implements no
+  * aggregate pushdown. Spark cannot translate `month(ts)` / `year(ts)` /
+  * `date_format` into connector expressions, so this is an optimizer rule
+  * (injected via [[GraftExtensions]], runs BEFORE V2 pushdown) that
+  * recognizes the shapes directly in the logical plan. A session without
+  * the extensions runs the real scan — same answer, more I/O.
   *
   *   Aggregate(groupings, results, [alias-only Project,] Relation(lake T))
   *
@@ -39,7 +39,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * MIN/MAX of a column with exact recorded bounds, COUNT(col) (recorded
   * non-null counts), or SUM/AVG of an integral/decimal column with exact
   * recorded per-file sums ([[graft.lake.ColumnSums]] — AVG only in the
-  * provably exact double regime).
+  * provably exact double regime) — or a deterministic expression over
+  * those (e.g. a post-aggregate cast), computed by a Project above the
+  * served LocalRelation.
   *
   * A WHERE clause is admitted when every conjunct classifies every file
   * as wholly-in or wholly-out (per-file tri-state; any undecidable file
@@ -108,10 +110,6 @@ class LakeMetaAggregate(spark: SparkSession) extends Rule[LogicalPlan]
         case _ => ok = false
       }
     }
-    val hasDistinctCount = agg.aggregateExpressions.exists(_.exists {
-      case AggregateExpression(_: Count, _, true, _, _) => true
-      case _ => false
-    })
     val rel = relOpt.getOrElse(return None)
     val tbl = rel.table match {
       case v: GraftLakeV2Table if !v.raw && !v.changelog => v
@@ -142,15 +140,6 @@ class LakeMetaAggregate(spark: SparkSession) extends Rule[LogicalPlan]
     // the memo survives neighboring rewrites of the same query.
     if (distributed && agg.getTagValue(LakeMetaAggregate.DeclinedTag)
         .contains((t.location, snap.seq))) return None
-    // ungrouped-AND-unfiltered aggregates already fold through the V2
-    // aggregate-pushdown API (answerFromMetadata) BELOW the valve; this
-    // rule adds the grouped shapes, the filtered ungrouped ones the API
-    // declines, any query carrying a DISTINCT count (never pushed to
-    // connectors) — and, ABOVE the valve, every shape (the pushdown's own
-    // driver fold declines there, so the distributed fold serves it)
-    if (!distributed && agg.groupingExpressions.isEmpty && conjuncts.isEmpty &&
-        !hasDistinctCount)
-      return None
     if (!distributed && !snap.dataFiles.forall(_.rows >= 0)) return None
     // zero-row committed files (legal, e.g. an overwrite that emptied a
     // partition) contribute NOTHING a real scan would produce — keeping
@@ -212,7 +201,7 @@ class LakeMetaAggregate(spark: SparkSession) extends Rule[LogicalPlan]
       case a: AttributeReference if rel.outputSet.contains(a) => // identity source
         val field = schema.fields.find(_.name.equalsIgnoreCase(a.name)).getOrElse(return None)
         val pname = recordedField(a.name, _ == Transform.Identity).getOrElse(return None)
-        val parse = GraftLakeScanBuilder.identityValueParser(field.dataType).getOrElse(return None)
+        val parse = LakeMetaAggregate.identityValueParser(field.dataType).getOrElse(return None)
         if (field.dataType == StringType) {
           if (distributed) sentinelPnames += pname // task-side check
           else if (files.exists(_.partition(pname) == S))
@@ -399,8 +388,8 @@ class LakeMetaAggregate(spark: SparkSession) extends Rule[LogicalPlan]
     import LakeMetaAggregate.{Out, Key, CountStar, Bound, SumCol, CountCol, AvgCol, DistinctKey}
     def fieldOf(a: AttributeReference): Option[StructField] =
       schema.fields.find(_.name.equalsIgnoreCase(a.name))
-    def resolveResult(e: NamedExpression): Option[Out] = {
-      val in = inline(e match { case Alias(c, _) => c; case other => other })
+    // one served value: a grouping key or an aggregate function
+    def resolveLeaf(in: Expression): Option[Out] = {
       // a reference to an in-place grouping alias (DataFrame-API shape)
       val byAliasId = in match {
         case a: AttributeReference =>
@@ -445,29 +434,52 @@ class LakeMetaAggregate(spark: SparkSession) extends Rule[LogicalPlan]
         case _ => None
       })
     }
-    val outs = agg.aggregateExpressions.map(resolveResult)
-    if (outs.exists(_.isEmpty)) return None
+    // every result is a served value, or an expression over served values
+    // (a collapsed post-aggregate cast, arithmetic) that a Project above
+    // the LocalRelation computes; any other reference declines
+    val leaves = scala.collection.mutable.ArrayBuffer.empty[(Out, Attribute)]
+    def serve(x: Expression, attr: => Attribute): Option[Attribute] =
+      resolveLeaf(x).map { out => val a = attr; leaves += (out -> a); a }
+    val projectList = agg.aggregateExpressions.map { e =>
+      val in = inline(e match { case Alias(c, _) => c; case other => other })
+      serve(in, e.toAttribute).getOrElse {
+        val al = e match { case al: Alias => al; case _ => return None }
+        val computed = in.transformDown {
+          case x if x.isInstanceOf[AggregateExpression] || x.isInstanceOf[AttributeReference] ||
+              groupIn.exists(_.semanticEquals(x)) =>
+            serve(x, AttributeReference(s"_meta${leaves.size}", x.dataType)())
+              .getOrElse(return None)
+        }
+        if (!computed.deterministic) return None
+        Alias(computed, al.name)(al.exprId, al.qualifier, al.explicitMetadata)
+      }
+    }
+    val outs = leaves.map(_._1).toSeq
+    val leafAttrs = leaves.map(_._2).toSeq
     // served value types must equal the Aggregate's own result types (a
     // precision/type mismatch would corrupt the LocalRelation) — decline
     // on any divergence
-    val outTypes = agg.aggregateExpressions.map(_.dataType)
+    val outTypes = leafAttrs.map(_.dataType)
+    def project(served: LogicalPlan): LogicalPlan =
+      if (projectList.forall(_.isInstanceOf[Attribute])) served
+      else Project(projectList, served)
 
     if (distributed) {
       val served = LakeMetaAggregate.distributedServe(spark, snap.dataFiles,
         filterFns.map(_.get), keyFns, needPnames, sentinelPnames,
-        outs.map(_.get), outTypes, agg.output)
+        outs, outTypes, leafAttrs)
       if (served.isEmpty) // the fold job runs at most once per compilation
         agg.setTagValue(LakeMetaAggregate.DeclinedTag, (t.location, snap.seq))
-      return served
+      return served.map(project)
     }
 
-    // ungrouped (filtered): exactly ONE row, even over zero kept files
+    // ungrouped: exactly ONE row, even over zero kept files
     // (count = 0, bounds = NULL), matching a global Aggregate's semantics
     val grouped =
       if (groupIn.isEmpty) Seq(Seq.empty[Any] -> keptFiles)
       else keptFiles.groupBy(f => keyFns.map(_(f))).toSeq
     val rows = grouped.map { case (keys, fs) =>
-      val values = outs.map(_.get).zip(outTypes).map {
+      val values = outs.zip(outTypes).map {
         case (Key(i), _) => keys(i)
         case (CountStar, _) => fs.map(_.rows).sum: Any
         case (Bound(field, isMin), _) =>
@@ -487,19 +499,32 @@ class LakeMetaAggregate(spark: SparkSession) extends Rule[LogicalPlan]
       }
       InternalRow.fromSeq(values)
     }
-    Some(LocalRelation(agg.output, rows))
+    Some(project(LocalRelation(leafAttrs, rows)))
   }
 }
 
 object LakeMetaAggregate {
-  /** Default `spark.graft.lake.metaAggMaxFiles`: the driver-fold serve
-    * path hands off to [[distributedServe]] above this many data-file
-    * entries (shared with the DSv2 ungrouped pushdown — see
-    * GraftLakeSource.answerFromMetadata, which simply declines there and
-    * lets this rule's distributed fold serve the shape). 200k entries
-    * fold in ~10² ms on the driver; a 10⁶-file neglected table folds its
-    * manifest entries in executors instead of stalling the planner. */
+  /** Default `spark.graft.lake.metaAggMaxFiles`: the driver fold hands
+    * off to [[distributedServe]] above this many data-file entries, for
+    * every served shape. 200k entries fold in ~10² ms on the driver; a
+    * 10⁶-file neglected table folds its manifest entries in executors
+    * instead of stalling the planner. */
   val DefaultMaxFiles = 200000
+
+  /** Directory-rendered identity partition value → catalyst internal
+    * value of the source type; None = type not renderable round-trip
+    * (identity on temporals is never pruned or grouped for the same
+    * reason — the writer's rendering is not reproducible). */
+  private[plans] def identityValueParser(dt: DataType): Option[String => Any] = dt match {
+    case StringType  => Some(s => UTF8String.fromString(s))
+    case LongType    => Some(_.toLong)
+    case IntegerType => Some(_.toInt)
+    case ShortType   => Some(_.toShort)
+    case ByteType    => Some(_.toByte)
+    case BooleanType => Some(_.toBoolean)
+    case DateType    => Some(s => java.time.LocalDate.parse(s).toEpochDay.toInt)
+    case _ => None
+  }
 
   // each result column: a grouping key, COUNT(*), exact MIN/MAX, or an
   // additive aggregate over recorded per-file sums/non-null counts
@@ -781,7 +806,7 @@ object LakeMetaAggregate {
 
   /** Exact min/max of `field` across `files` from recorded bounds, as a
     * Catalyst value (None = not answerable — missing bounds, rounded
-    * float bounds, unbounded types). Mirrors the scan builder's boundOf. */
+    * float bounds, unbounded types). */
   private[plans] def boundValue(
       field: StructField, files: Seq[graft.lake.DataFile], isMin: Boolean): Option[Any] = {
     if (files.isEmpty) return Some(null)

@@ -2,8 +2,9 @@ package graft.sources
 
 import graft.lake.{LakeCatalog, LakeTable, Maintenance, PartitionField, Transform => LTransform}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
-import org.apache.spark.sql.connector.read.Scan
+import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,8 +25,8 @@ import java.util.{Collections, Iterator => JIterator}
   *   CALL graft.system.evolve_partition_spec('orders', 'months(o_orderdate), identity(o_orderstatus)')
   * }}}
   *
-  * Every procedure returns one summary row (a [[GraftLakeMetaScan]] local
-  * scan — zero tasks). All are non-deterministic: they mutate table state.
+  * Every procedure returns one summary row (a `LocalScan` — zero tasks).
+  * All are non-deterministic: they mutate table state.
   */
 private[sources] object GraftProcedures {
 
@@ -55,8 +56,11 @@ private[sources] object GraftProcedures {
     ProcedureParameter.in(name, dt).defaultValue(sql).build()
 
   private def result(name: String, schema: StructType, values: Array[Any]): JIterator[Scan] =
-    Collections.singletonList[Scan](
-      new GraftLakeMetaScan(name, -1L, schema, Seq(values))).iterator()
+    Collections.singletonList[Scan](new LocalScan {
+      override def readSchema(): StructType = schema
+      override def rows(): Array[InternalRow] = Array(new GenericInternalRow(values))
+      override def description(): String = s"graft procedure $name"
+    }).iterator()
 
   /** One-row result helper: (names, types, values) with strings encoded. */
   private def row(cols: (String, DataType, Any)*): (StructType, Array[Any]) = {

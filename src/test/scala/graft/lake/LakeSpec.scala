@@ -1620,18 +1620,11 @@ class LakeSpec extends SparkSpec {
       // the relation serves real reads from manifest (path, length) entries:
       // every linked file holds the template's one pk=0 row
       assert(df.count() == n, "manifest-FileIndex scan returned the wrong row count")
-      // fallback knob: listingJobThreshold routes back through spark.read,
-      // which re-stats the files (a listing JOB above the scoped threshold)
-      spark.conf.set("spark.graft.lake.listingJobThreshold", "32")
-      try {
-        val before = jobCount.get()
-        val viaListing = t.scan()
-        org.apache.spark.ListenerDrain(spark.sparkContext)
-        assert(jobCount.get() > before,
-          "listingJobThreshold=32 should re-enable the distributed listing job")
-        assert(viaListing.schema == df.schema,
-          "fallback route must produce the identical relation schema")
-      } finally spark.conf.unset("spark.graft.lake.listingJobThreshold")
     } finally spark.sparkContext.removeSparkListener(listener)
+    // the relation schema equals a plain file-source read of the same files
+    val plain = spark.read.schema(t.currentSchema)
+      .parquet(t.currentSnapshot.dataFiles.map(f => t.abs(f.path)): _*)
+    assert(t.scan().schema == plain.schema,
+      "manifest FileIndex must produce the same relation schema as spark.read")
   }
 }

@@ -711,12 +711,18 @@ class GraftLakeSourceSpec extends SparkSpec {
     // a metadata-served aggregate plans as a LocalTableScan of the answer
     // row — no BatchScan, no tasks against data files
     val plan = agg.queryExecution.executedPlan.toString
-    assert(plan.contains("LocalTableScan") && plan.contains("count_star"),
+    assert(plan.contains("LocalTableScan") && !plan.contains("BatchScan"),
       s"aggregate not metadata-served:\n$plan")
-    assert(!plan.contains("BatchScan"), s"data scan still present:\n$plan")
     val r = agg.head
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3), r.getString(4)) ==
       ((5L, 1L, 10L, "apple", "zucchini")))
+    // an expression over served values runs in a Project above the answer
+    val doubled = readLake(t.location).agg(count(lit(1)).as("n"))
+      .select((col("n") * 2).as("n2"))
+    val dplan = doubled.queryExecution.executedPlan.toString
+    assert(dplan.contains("LocalTableScan") && !dplan.contains("BatchScan"),
+      s"expression over a served count not metadata-served:\n$dplan")
+    assert(doubled.head.getLong(0) == 10L)
 
     // a WHERE clause keeps the real scan (results must stay exact)
     val filtered = readLake(t.location).filter(col("id") > 2L).agg(count(lit(1)))
@@ -736,6 +742,38 @@ class GraftLakeSourceSpec extends SparkSpec {
     val dagg = readLake(td.location).agg(min("d"), max("d"))
     assert(dagg.queryExecution.executedPlan.toString.contains("BatchScan"))
     assert(dagg.head.getDouble(0) == 1.5 && dagg.head.getDouble(1) == 2.5)
+  }
+
+  test("LakeMetaAggregate is the only metadata-aggregate path: excluded, ungrouped and " +
+      "identity-grouped aggregates scan and return the same answers") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-metaone-spec").toString
+    val df = Seq((1L, "A", 10L), (2L, "A", 20L), (3L, "B", 30L), (4L, "C", 40L))
+      .toDF("id", "cat", "v")
+    val t = graft.lake.LakeTable.create(spark, s"$dir/t", "t", df.schema,
+      partitionSpec = Seq(graft.lake.PartitionField("cat", graft.lake.Transform.Identity, "p_cat")))
+    t.append(df)
+    t.append(Seq((5L, "B", 50L)).toDF("id", "cat", "v"))
+    def ungrouped = readLake(t.location)
+      .agg(count(lit(1)).as("n"), min("id").as("mn"), max("id").as("mx"), sum("v").as("sv"))
+    def rollup = readLake(t.location).groupBy("cat")
+      .agg(count(lit(1)).as("n"), min("id").as("mn"), max("id").as("mx"), sum("v").as("sv"))
+    def plan(d: DataFrame) = d.queryExecution.executedPlan.toString
+    val served = Seq(ungrouped, rollup).map { d =>
+      assert(plan(d).contains("LocalTableScan") && !plan(d).contains("BatchScan"),
+        s"aggregate not metadata-served:\n${plan(d)}")
+      sortedRows(d)
+    }
+    assert(served == Seq(Seq("[5,1,5,150]"),
+      Seq("[A,2,1,2,30]", "[B,2,3,5,80]", "[C,1,4,4,40]")))
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.LakeMetaAggregate")
+    try {
+      Seq(ungrouped, rollup).zip(served).foreach { case (d, want) =>
+        assert(plan(d).contains("BatchScan"),
+          s"without the rule the aggregate must run the real scan:\n${plan(d)}")
+        assert(sortedRows(d) == want)
+      }
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   test("GROUP BY an identity-partition source answers from metadata (zero scan tasks)") {
@@ -762,6 +800,26 @@ class GraftLakeSourceSpec extends SparkSpec {
     val viaScan = t.scan()
       .groupBy("cat").agg(count(lit(1)).as("n"), min("id").as("mn"), max("id").as("mx"))
     assert(viaScan.as[(String, Long, Long, Long)].collect().toSet == got)
+
+    // post-aggregate casts, arithmetic over aggregates and expressions of
+    // the key run in a Project above the served answer
+    def shaped(rel: DataFrame) = rel.groupBy("cat")
+      .agg(sum("v").as("sv"), (max("id") - min("id")).as("span"))
+      .withColumn("sv", col("sv").cast("double"))
+      .withColumn("label", concat(col("cat"), lit("!")))
+    val splan = shaped(readLake(t.location)).queryExecution.executedPlan.toString
+    assert(splan.contains("LocalTableScan") && !splan.contains("BatchScan"),
+      s"post-aggregate expressions not metadata-served:\n$splan")
+    val sgot = shaped(readLake(t.location)).as[(String, Double, Long, String)].collect().toSet
+    assert(sgot == Set(("A", 90.0, 5L, "A!"), ("B", 70.0, 1L, "B!"), ("C", 120.0, 2L, "C!")),
+      s"metadata answer wrong: $sgot")
+    assert(shaped(t.scan()).as[(String, Double, Long, String)].collect().toSet == sgot)
+    // ...but an expression over an aggregate metadata cannot answer (a
+    // SUM of a derived value) declines the whole rewrite
+    val derived = readLake(t.location).groupBy("cat")
+      .agg((sum(col("v") * 2) + count(lit(1))).as("x"))
+    assert(derived.queryExecution.executedPlan.toString.contains("BatchScan"))
+    assert(derived.as[(String, Long)].collect().toMap == Map("A" -> 183L, "B" -> 142L, "C" -> 242L))
 
     // grouping by a NON-partition column keeps the real scan
     val byV = readLake(t.location).groupBy("v").agg(count(lit(1)))
@@ -854,8 +912,7 @@ class GraftLakeSourceSpec extends SparkSpec {
     assert(unaligned.as[(Option[Int], Long)].collect().toMap ==
       Map(Some(2) -> 2L, Some(1) -> 1L)) // via the real scan, same rows
 
-    // ungrouped + filtered: one metadata row (the V2 pushdown API
-    // declines filtered aggregates; the rule serves them)
+    // ungrouped + filtered: one metadata row
     val cnt = readLake(t.location)
       .filter(col("d") >= lit(java.sql.Date.valueOf("2024-02-01")))
       .agg(count(lit(1)).as("n"), min(col("id")).as("mn"))
@@ -915,12 +972,12 @@ class GraftLakeSourceSpec extends SparkSpec {
     assert(dsum.queryExecution.executedPlan.toString.contains("BatchScan"),
       "double SUM must not be metadata-served")
 
-    // ungrouped + unfiltered goes through the V2 aggregate-pushdown API
+    // ungrouped + unfiltered: the same rule's driver fold
     val global = readLake(t.location)
       .agg(sum(col("v")).as("sv"), count(col("v")).as("nv"), avg(col("v")).as("av"))
     val gplan = global.queryExecution.executedPlan.toString
-    assert(gplan.contains("LocalTableScan") && gplan.contains("sum_v"),
-      s"ungrouped sum not pushed to metadata:\n$gplan")
+    assert(gplan.contains("LocalTableScan") && !gplan.contains("BatchScan"),
+      s"ungrouped sum not metadata-served:\n$gplan")
     assert(global.as[(Option[Long], Long, Option[Double])].collect().toSeq ==
       Seq((Some(120L), 4L, Some(30.0))))
 
@@ -1179,9 +1236,8 @@ class GraftLakeSourceSpec extends SparkSpec {
     // hundreds of files), proves the driver fold serves and is EXACT at
     // this width, then lowers spark.graft.lake.metaAggMaxFiles and proves
     // the SAME LocalRelation plan comes back — via the executor fold
-    // (distributedServes counter) — with identical results, for the
-    // grouped rule path AND the ungrouped shape the DSv2 pushdown
-    // declines above the valve.
+    // (distributedServes counter) — with identical results, for grouped,
+    // ungrouped and filtered-DISTINCT shapes alike.
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-metavalve-spec").toString
     val df = spark.range(4000).select(
@@ -1226,7 +1282,7 @@ class GraftLakeSourceSpec extends SparkSpec {
       assert(folds > pre, "above-valve serve did not take the executor-fold path")
       assert(sortedRows(grouped) == servedRows,
         "distributed manifest fold disagrees with the driver fold")
-      // ungrouped: the pushdown declines above the valve, the rule serves
+      // ungrouped: the same executor fold serves
       val fallUng = ungrouped.queryExecution.executedPlan.toString
       assert(fallUng.contains("LocalTableScan") && !fallUng.contains("BatchScan"),
         s"ungrouped rollup not served by the distributed fold above the valve:\n$fallUng")
