@@ -672,22 +672,21 @@ object QueryGen {
     t.toString
   }
 
-  /** Maintenance trailing draw for the lake arms (r18): compaction,
-    * manifest stats rewrite, and the orphan sweep are content-PRESERVING
-    * lifecycle mutations — running a drawn one right before the read must
-    * never change any query's rows (the expiry draw caught real bugs two
-    * rounds running; compaction × MoR × evolution is the analogous
-    * interaction surface). Drawn LAST in each arm so every pre-r18
-    * instance's SQL and plan stay byte-identical per seed; the modulus
-    * stays off powers of two (documented java.util.Random pathology).
-    * 0 = none, 1 = compactDirty (folds MoR tombstones, bin-packs, era-
-    * aligns rewritten files to the current schema), 2 = rewriteManifests
-    * (stats-only restatement snapshot), 3 = compactDirty + an aggressive
-    * zero-age orphan sweep (referenced files must all survive it). */
+  /** Maintenance trailing draw for the lake arms (r18): compaction and
+    * the orphan sweep are content-PRESERVING lifecycle mutations —
+    * running a drawn one right before the read must never change any
+    * query's rows (the expiry draw caught real bugs two rounds running;
+    * compaction × MoR × evolution is the analogous interaction surface).
+    * Drawn LAST in each arm so every pre-r18 instance's SQL and plan stay
+    * byte-identical per seed; the modulus stays off powers of two
+    * (documented java.util.Random pathology). 0 and 2 = none (the modulus
+    * stays 4 so pinned seeds keep their draws), 1 = compactDirty (folds
+    * MoR tombstones, bin-packs, era-aligns rewritten files to the current
+    * schema), 3 = compactDirty + an aggressive zero-age orphan sweep
+    * (referenced files must all survive it). */
   private def maintDraw(rng: Random): Int = rng.nextInt(27720) % 4
   private def applyMaintenance(lake: graft.lake.LakeTable, draw: Int): Unit = draw match {
     case 1 => lake.compactDirty()
-    case 2 => lake.rewriteManifests()
     case 3 =>
       lake.compactDirty()
       graft.lake.Maintenance.removeOrphans(lake, olderThanMs = 0L)

@@ -16,17 +16,15 @@ import java.nio.charset.StandardCharsets
   * ([[LakeTable]] sorts on the cluster keys) makes these ranges tight
   * exactly where queries filter.
   *
-  * `kind` partitions the value domain: "n" = numeric (integers, exact
-  * decimal expansions of floats, DATE epoch days, TIMESTAMP epoch micros),
-  * "d" = DECIMAL recorded SCALED by the column's parquet decimal
-  * annotation (the post-fix format — the kind doubles as the
-  * bounds-format version marker for decimal columns: bounds written
-  * before the scaled-stats fix live under "n" in possibly-UNSCALED form
-  * and are never compared against a decimal literal nor exact-served),
-  * "s" = UTF-8 string. A bound only ever compares against a literal of
-  * its own domain; any mismatch or unparseable shape keeps the file
-  * (pruning is conservative by construction — the raw predicate is always
-  * re-applied at scan). */
+  * `kind` names the value domain: "n" = numeric (integers, exact decimal
+  * expansions of floats, DATE epoch days, TIMESTAMP epoch micros), "d" =
+  * DECIMAL recorded SCALED by the column's parquet decimal annotation,
+  * "s" = UTF-8 string. "n" and "d" both hold plain numeric values, so any
+  * numeric literal compares exactly against either; "d" tells metadata
+  * serving the column is decimal. A bound only ever compares against a
+  * literal of its own domain; any mismatch or unparseable shape keeps the
+  * file (pruning is conservative by construction — the raw predicate is
+  * always re-applied at scan). */
 final case class ColBound(kind: String, min: String, max: String)
 
 object ColumnBounds {
@@ -86,9 +84,8 @@ object ColumnBounds {
     // decimal(10,2) → 15000, INT32/INT64 for precision ≤ 18 and
     // two's-complement big-endian bytes for FIXED_LEN_BYTE_ARRAY/BINARY
     // beyond); the pushed literal arrives SCALED, so record bounds
-    // re-scaled by the column's decimal annotation — under kind "d", which
-    // also marks them as post-fix scaled format — or the comparison in
-    // `cmp` silently prunes matching files.
+    // re-scaled by the column's decimal annotation — under kind "d" — or
+    // the comparison in `cmp` silently prunes matching files.
     def decimalAnnotation(
         col: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData)
         : Option[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation] =
@@ -180,35 +177,10 @@ object ColumnBounds {
   // -------------------------------------------------------------- pruning
 
   /** sign(bound - literal) in the bound's domain, None when incomparable
-    * (→ caller keeps the file). A DECIMAL literal compares against
-    * kind-"n" bounds only when the caller proves the COLUMN is not
-    * decimal: bounds a pre-scaled-stats-fix writer recorded for decimal
-    * columns live under "n" in the UNSCALED integer domain, where a
-    * scaled comparison would prune matching files.
-    *
-    * QUARANTINE: those legacy kind-"n" decimal bounds are permanently
-    * declined — value-correct (every file is kept and scanned) but with
-    * decimal pruning and metadata MIN/MAX serving lost for the affected
-    * snapshots. There is no in-place migration (manifests are immutable);
-    * the rewrite path is [[LakeTable.compactDirty]], whose rewritten files
-    * get fresh footer stats recorded under the current kind-"d" format —
-    * after a compaction touching the affected partitions, pruning returns.
-    * `$files.metrics` exposes the per-bound kind (`"k"`) so a metadata
-    * consumer can tell scaled from quarantined-unscaled at a glance. */
-  private def cmp(b: ColBound, bound: String, literal: Any,
-      colKnownNonDecimal: Boolean): Option[Int] = {
-    // The kind-"n" decline applies to decimal literals only because a
-    // DECIMAL COLUMN's legacy bounds are unscaled; when the caller proves
-    // the column's schema type is NOT decimal (int/long/double bounds in
-    // the plain value domain), a decimal-typed literal compares
-    // numerically like any other number.
-    val decimalLit = (literal.isInstanceOf[java.math.BigDecimal] ||
-      literal.isInstanceOf[BigDecimal]) && !colKnownNonDecimal
+    * (→ caller keeps the file). */
+  private def cmp(b: ColBound, bound: String, literal: Any): Option[Int] =
     (b.kind, canon(literal)) match {
-      case ("n", Some(Left(lit))) if !decimalLit =>
-        try Some(BigDecimal(bound).compare(lit).sign)
-        catch { case _: NumberFormatException => None }
-      case ("d", Some(Left(lit))) =>
+      case ("n" | "d", Some(Left(lit))) =>
         try Some(BigDecimal(bound).compare(lit).sign)
         catch { case _: NumberFormatException => None }
       case ("s", Some(Right(lit))) =>
@@ -216,7 +188,6 @@ object ColumnBounds {
           bound.getBytes(StandardCharsets.UTF_8), lit).sign)
       case _ => None
     }
-  }
 
   /** Literal → its comparison domain. Temporal types canonicalize to the
     * same integers parquet stores (DATE → epoch days, TIMESTAMP → epoch
@@ -244,21 +215,14 @@ object ColumnBounds {
   /** Conservative file-survival test against recorded column bounds:
     * false ONLY when no value in [min, max] can satisfy the filter.
     * Bounds cover non-null values; null rows never satisfy a comparison
-    * predicate, so their presence cannot invalidate a prune.
-    * `nonDecimalCols` (lower-cased names) are columns the caller proves
-    * are NOT DecimalType in the schema — for those, a decimal literal
-    * still prunes against kind-"n" bounds (the quarantine only protects
-    * decimal columns' legacy unscaled bounds); default empty keeps the
-    * fully conservative behavior. */
-  def mayMatch(bounds: Map[String, ColBound], f: PruneFilter,
-      nonDecimalCols: Set[String] = Set.empty): Boolean =
+    * predicate, so their presence cannot invalidate a prune. */
+  def mayMatch(bounds: Map[String, ColBound], f: PruneFilter): Boolean =
     bounds.get(f.column) match {
       case None => true // no bounds recorded: cannot prune
       case Some(b) =>
         import PruneFilter._
-        val nonDec = nonDecimalCols(f.column.toLowerCase(java.util.Locale.ROOT))
-        def geMin(v: Any) = cmp(b, b.min, v, nonDec) // sign(min - v)
-        def geMax(v: Any) = cmp(b, b.max, v, nonDec) // sign(max - v)
+        def geMin(v: Any) = cmp(b, b.min, v) // sign(min - v)
+        def geMax(v: Any) = cmp(b, b.max, v) // sign(max - v)
         f match {
           case Eq(_, v) => geMin(v).forall(_ <= 0) && geMax(v).forall(_ >= 0)
           case In(_, vs) =>

@@ -19,7 +19,8 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Layout under `location/`:
   * {{{
-  *   meta/table.json            immutable definition (spec, clustering, pk)
+  *   meta/table.json            immutable definition (format version, spec,
+  *                              clustering, pk)
   *   meta/schema-v{N}.json      one StructType per schema version
   *   meta/snap-{seq}.json       commit header + manifest references
   *   meta/man-{seq}-{uuid}.json immutable manifest: data/delete file list
@@ -291,9 +292,6 @@ final class LakeTable private (
       filters.forall(f => PruneFilter.mayMatch(spec, tuple, f))))
 
   private def assemble(sf: SnapshotFile, pruneTo: Option[Seq[PruneFilter]]): Snapshot = {
-    if (sf.legacy)
-      return Snapshot(sf.seq, sf.parent, sf.timestampMs, sf.operation, sf.schemaVersion,
-        sf.legacyData, sf.legacyDeletes, specVersion = sf.specVersion)
     val dataRefs = sf.manifests.filter(_.isData)
     val delRefs  = sf.manifests.filterNot(_.isData)
     val (keptData, keptDel) = pruneTo match {
@@ -950,47 +948,6 @@ final class LakeTable private (
       dataFiles = keepFiles ++ newFiles, deleteFiles = Nil, specVersion = cur.specVersion)))
   }
 
-  /** MANIFEST-ONLY stats re-record (the spirit of Iceberg's
-    * `rewrite_manifests`): re-reads every current data file's FOOTER and
-    * re-runs the [[ColumnSums]] read-back, then commits a snapshot whose
-    * file entries carry stats in the CURRENT recording format — same data
-    * files, same rows, zero data writes.
-    *
-    * THE migration recipe for quarantined legacy decimal bounds (see the
-    * quarantine note on [[ColumnBounds]]): manifests written by a
-    * pre-scaled-stats-fix writer hold decimal bounds under kind "n" in
-    * the unscaled-integer domain, which pruning and metadata MIN/MAX
-    * serving permanently decline (value-correct, pruning-dead). Manifests
-    * are immutable, so the fix is a new snapshot: after this call the
-    * affected columns' bounds are kind-"d" scaled decimals and pruning /
-    * metadata serving return. Cost is footer opens (parallel, distributed
-    * past [[statsDistributeMinFiles]]) plus one column-pruned scan for
-    * sums — at 100 TB that is metadata-scale work, where
-    * `rewrite_data_files` would be a full-table rewrite with write
-    * amplification ~1.
-    *
-    * Like compaction, this is a content RESTATEMENT snapshot ("no new
-    * rows" is not expressible to the changelog): streaming reads and
-    * `changes()` ranges refuse to cross it — consume up to it, then
-    * re-baseline (same contract as `rewrite_data_files`). */
-  def rewriteManifests(): Snapshot = synchronized {
-    val cur = currentSnapshot
-    if (cur.dataFiles.isEmpty) return cur
-    val conf = spark.sparkContext.hadoopConfiguration
-    val paths = cur.dataFiles.map(f => new Path(abs(f.path)))
-    val metas = LakeTable.fileMetaAll(paths, conf, withLen = false, spark = Some(spark))
-    val sums = ColumnSums.compute(spark, schema(cur.schemaVersion), paths)
-    val updated = cur.dataFiles.map { f =>
-      val m = metas(new Path(abs(f.path)))
-      f.copy(splits = m.splits, bounds = m.bounds, rows = m.rows, nonNull = m.nonNull,
-        sums = sums.getOrElse(new Path(f.path).getName, Map.empty))
-    }
-    commitRestateRaceChecked(cur.seq + 1, "rewrite-manifests")(commitSnapshot(Snapshot(
-      seq = cur.seq + 1, parent = Some(cur.seq), timestampMs = System.currentTimeMillis(),
-      operation = "rewrite-manifests", schemaVersion = cur.schemaVersion,
-      dataFiles = updated, deleteFiles = cur.deleteFiles, specVersion = cur.specVersion)))
-  }
-
   /** Data files containing at least one row version a live tombstone
     * deletes — one distributed semi-join over (pk, seq, input_file_name)
     * per compaction, reading only the pk + seq columns. */
@@ -1017,40 +974,12 @@ final class LakeTable private (
   def planFiles(snap: Snapshot, filters: Seq[PruneFilter]): (Seq[DataFile], Int) = {
     val total = snap.dataFiles.size
     val spec = specFieldsThrough(snap.specVersion)
-    val nonDec = nonDecimalColumns(snap.schemaVersion)
     val kept = snap.dataFiles.filter { f =>
       filters.forall(fl =>
-        PruneFilter.mayMatch(spec, f.partition, fl) &&
-          ColumnBounds.mayMatch(f.bounds, fl, nonDec))
+        PruneFilter.mayMatch(spec, f.partition, fl) && ColumnBounds.mayMatch(f.bounds, fl))
     }
     (kept, total)
   }
-
-  /** Lower-cased names of columns that were NEVER DecimalType in ANY
-    * schema version up to `schemaVersion` — lets bounds pruning compare
-    * decimal-typed literals against kind-"n" bounds for provably
-    * non-decimal columns (the legacy-unscaled quarantine only concerns
-    * decimal columns). The whole HISTORY must be clean, not just the
-    * latest schema: manifest entries (and their recorded bounds) survive
-    * a drop/re-add-as-long cycle, so a file written while the name was
-    * decimal may still carry unscaled kind-"n" bounds under a
-    * latest-schema-non-decimal name — pruning against those would
-    * silently drop matching files. */
-  private[graft] def nonDecimalColumns(schemaVersion: Int): Set[String] =
-    // memoized per version (ADVICE r10): schemas are immutable once
-    // written, and this is re-derived on EVERY planFiles call and every
-    // streaming micro-batch planning cycle — a many-schema-version table
-    // would otherwise re-walk its whole schema history per scan
-    nonDecimalCache.computeIfAbsent(schemaVersion, v => {
-      val history = (1 to v).map(schema)
-      val lower = (f: StructField) => f.name.toLowerCase(java.util.Locale.ROOT)
-      val everDecimal = history.flatMap(_.fields).collect {
-        case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType] => lower(f)
-      }.toSet
-      history.flatMap(_.fields).map(lower).toSet -- everDecimal
-    })
-  private val nonDecimalCache =
-    new java.util.concurrent.ConcurrentHashMap[Int, Set[String]]()
 
   // ------------------------------------------------------------ internals
 
@@ -1540,9 +1469,7 @@ final class LakeTable private (
   private def planManifests(s: Snapshot): Seq[ManifestRef] = {
     val parentRefs: Seq[ManifestRef] = s.parent
       .filter(p => fs.exists(snapPath(p)))
-      .map(p => snapshotFile(p))
-      .filterNot(_.legacy)
-      .map(_.manifests)
+      .map(p => snapshotFile(p).manifests)
       .getOrElse(Nil)
 
     def diff[F](
@@ -1729,8 +1656,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
   private[lake] val manifestCache = new ManifestCache(4096)
 
   /** Snapshot operations the row-level changelog can REPLAY. Everything
-    * else ("compact", "rewrite-manifests", "rollback", ...) is a content
-    * RESTATEMENT: same or restated rows with no row-level delta, so
+    * else ("compact", "rollback", ...) is a content RESTATEMENT: same or
+    * restated rows with no row-level delta, so
     * [[LakeTable.changes]] and the streaming changelog refuse ranges that
     * cross one — the consumer re-baselines (see the
     * `rebaseline_changelog` procedure, which derives its barrier scan
@@ -1917,11 +1844,20 @@ object LakeTable extends org.apache.spark.internal.Logging {
     t
   }
 
-  /** Open an existing table. */
+  /** Open an existing table. A table whose table.json records a format
+    * version other than [[MetaJson.FormatVersion]] (or none) is refused
+    * by name: this build carries no decoders for earlier layouts. */
   def load(spark: SparkSession, location: String): LakeTable = {
     val t = new LakeTable(spark, location)
-    if (!t.fs.exists(new Path(new Path(location), "meta/table.json")))
+    val tableJson = new Path(new Path(location), "meta/table.json")
+    if (!t.fs.exists(tableJson))
       throw new IllegalArgumentException(s"no lake table at $location")
+    val found = MetaJson.readFormatVersion(t.readString(tableJson))
+    if (!found.contains(MetaJson.FormatVersion))
+      throw new IllegalStateException(
+        s"lake table at $location has format version ${found.getOrElse("none")}, but " +
+          s"this build reads only format version ${MetaJson.FormatVersion}; re-create " +
+          "the table with this build (CREATE TABLE, then re-load its rows from the source)")
     t
   }
 
@@ -1951,19 +1887,6 @@ object LakeTable extends org.apache.spark.internal.Logging {
     } finally rd.close()
   }
 
-  private[graft] def rowGroupSplits(
-      p: Path, conf: org.apache.hadoop.conf.Configuration): Seq[(Long, Long)] =
-    readFooterMeta(p, conf)._1
-
-  /** Footer reads for a batch of files, parallelized — a big append can
-    * publish thousands of files and a serial loop would stretch the commit
-    * critical section (or read planning) by O(files) round-trips. */
-  private[graft] def rowGroupSplitsAll(
-      paths: Seq[Path],
-      conf: org.apache.hadoop.conf.Configuration,
-      spark: Option[SparkSession] = None): Map[Path, Seq[(Long, Long)]] =
-    fileMetaAll(paths, conf, withLen = false, spark = spark).view.mapValues(_.splits).toMap
-
   /** Below this many files, footer stats are read on the driver (pooled);
     * at or above it — a 10^5-file append from a big cluster write — the
     * reads run as a Spark job so the commit critical section stays
@@ -1975,8 +1898,11 @@ object LakeTable extends org.apache.spark.internal.Logging {
   /** Observable for specs: number of DISTRIBUTED footer-stat jobs run. */
   private[graft] val distributedStatJobs = new java.util.concurrent.atomic.AtomicLong
 
-  /** Parallel FileMeta per file — the single footer/stat reader shared by
-    * commit paths and legacy read planning. Small batches use a driver
+  /** Parallel FileMeta per file — the single footer/stat reader of the
+    * commit paths and the changelog stream's staged files (footer reads
+    * for a batch of files, parallelized: a big append can publish
+    * thousands of files and a serial loop would stretch the commit
+    * critical section by O(files) round-trips). Small batches use a driver
     * thread pool; batches of `statsDistributeMinFiles`+ files distribute
     * as a Spark job over the executors (when a session is supplied). */
   private[graft] def fileMetaAll(

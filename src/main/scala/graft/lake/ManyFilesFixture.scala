@@ -12,11 +12,10 @@ import org.apache.spark.sql.functions._
   * per curve point; the METADATA paths under test don't care how the
   * bytes landed).
   *
-  * The table is doctored in exactly one, contained way (the BoundsSpec
-  * doctored-fixture idiom): every data file is a hard link to one
-  * physical one-row parquet (pk = 0), while the per-file METADATA —
-  * partition tuple, pk bounds, row count, non-null counts — is
-  * rewritten per link, so planning, manifest pruning, commit
+  * The table is doctored in exactly one, contained way: every data file
+  * is a hard link to one physical one-row parquet (pk = 0), while the
+  * per-file METADATA — partition tuple, pk bounds, row count, non-null
+  * counts — is rewritten per link, so planning, manifest pruning, commit
   * re-recording, and metadata serving all see a fully consistent
   * 10⁵-entry table. Content and metadata agree only for partition
   * p_pk=0 (the template's own file), which is therefore the only file
@@ -29,14 +28,24 @@ private[graft] object ManyFilesFixture {
   /** Stay safely under ext4's 65000-hard-links-per-inode cap. */
   private val MaxLinksPerInode = 50000L
 
+  /** The `_FIXTURE_DONE` marker records the format version the fixture
+    * was built with; a fixture from any other version (or from before the
+    * marker recorded one) is rebuilt — [[LakeTable.load]] would refuse it. */
+  private def markerFor(location: String) = java.nio.file.Paths.get(location, "_FIXTURE_DONE")
+  private val formatTag = s"format=${MetaJson.FormatVersion}"
+  private def reusable(marker: java.nio.file.Path): Boolean =
+    java.nio.file.Files.exists(marker) &&
+      java.nio.file.Files.readString(marker).split("\\s+").contains(formatTag)
+
   /** Create (or reopen, via the `_FIXTURE_DONE` marker) an N-file table
     * at `location`: identity-partitioned on `pk` with N distinct
     * partition values, one one-row file each. */
   def build(spark: SparkSession, location: String, name: String, n: Long): LakeTable = {
-    val marker = java.nio.file.Paths.get(location, "_FIXTURE_DONE")
-    if (java.nio.file.Files.exists(marker)) return LakeTable.load(spark, location)
+    val marker = markerFor(location)
+    if (reusable(marker)) return LakeTable.load(spark, location)
     // a crashed earlier build (e.g. the filesystem's EMLINK cap mid-link)
-    // leaves a markerless table — the fixture is disposable, rebuild
+    // leaves a markerless table, an older build a stale-format one — the
+    // fixture is disposable, rebuild
     val locPath = java.nio.file.Paths.get(location)
     if (java.nio.file.Files.exists(locPath)) graft.TempDirs.deleteRecursively(locPath)
     val df = spark.range(1).select(lit(0L).as("pk"), lit(0L).as("v"))
@@ -76,7 +85,7 @@ private[graft] object ManyFilesFixture {
       timestampMs = System.currentTimeMillis(),
       operation = "append-fixture", schemaVersion = snap.schemaVersion,
       dataFiles = entries, deleteFiles = Nil, specVersion = snap.specVersion))
-    java.nio.file.Files.writeString(marker, s"n=$n\n")
+    java.nio.file.Files.writeString(marker, s"n=$n $formatTag\n")
     t
   }
 
@@ -92,8 +101,8 @@ private[graft] object ManyFilesFixture {
       partitions: Int, filesPerPartition: Int): LakeTable = {
     require(filesPerPartition <= MaxLinksPerInode,
       s"filesPerPartition $filesPerPartition exceeds the per-inode link cap")
-    val marker = java.nio.file.Paths.get(location, "_FIXTURE_DONE")
-    if (java.nio.file.Files.exists(marker)) return LakeTable.load(spark, location)
+    val marker = markerFor(location)
+    if (reusable(marker)) return LakeTable.load(spark, location)
     val locPath = java.nio.file.Paths.get(location)
     if (java.nio.file.Files.exists(locPath)) graft.TempDirs.deleteRecursively(locPath)
     val df = spark.range(partitions.toLong)
@@ -121,7 +130,7 @@ private[graft] object ManyFilesFixture {
       timestampMs = System.currentTimeMillis(),
       operation = "append-fixture", schemaVersion = snap.schemaVersion,
       dataFiles = entries, deleteFiles = Nil, specVersion = snap.specVersion))
-    java.nio.file.Files.writeString(marker, s"p=$partitions f=$filesPerPartition\n")
+    java.nio.file.Files.writeString(marker, s"p=$partitions f=$filesPerPartition $formatTag\n")
     t
   }
 }

@@ -19,31 +19,31 @@ import scala.jdk.CollectionConverters._
   * merge-on-read delete/update/merge modes,
   * olake-config/destination.json:80-94).
   *
+  * `rows` is the row count (Iceberg's `record_count`), captured from the
+  * footer at commit and recorded for every file. Feeds scan statistics
+  * (broadcast planning), LIMIT planning and metadata-only COUNT(*).
+  *
   * `splits` records the parquet row-group byte ranges (start, length) —
   * Iceberg's `split_offsets` — captured once at commit time so read
-  * planning can fan a file out across tasks WITHOUT reopening footers on
-  * the driver. Empty on metadata written before this field existed;
-  * readers fall back to a footer read.
+  * planning fans a file out across tasks WITHOUT reopening footers on the
+  * driver. Empty only for a file with no row groups.
   */
 final case class DataFile(
     path: String,
     seq: Long,
     partition: Map[String, String],
     bytes: Long,
+    rows: Long,
     splits: Seq[(Long, Long)] = Nil,
     /** Per-column value bounds (Iceberg's lower/upper_bounds), captured
-      * from footer stats at commit; empty on metadata written before this
-      * field existed — readers simply cannot stats-skip those files. */
+      * from footer stats at commit; a column whose footer carries no usable
+      * statistics is absent and cannot stats-skip. */
     bounds: Map[String, ColBound] = Map.empty,
-    /** Row count (Iceberg's `record_count`), captured from the footer at
-      * commit. Feeds scan statistics (broadcast planning) and metadata-only
-      * COUNT(*) serving; -1 on metadata written before this field existed. */
-    rows: Long = -1L,
     /** Per-column NON-NULL value counts (Iceberg's `value_counts` minus
       * `null_value_counts`), captured from footer statistics at commit —
       * zero extra I/O. Serves metadata-only COUNT(col); a column absent
-      * from the map has unknown counts (stats dropped, or metadata written
-      * before this field existed) and declines. */
+      * from the map has unknown counts (its footer dropped the null
+      * count) and declines. */
     nonNull: Map[String, Long] = Map.empty,
     /** Per-column EXACT value sums as plain decimal strings, computed by
       * one column-pruned read-back job at commit time ([[ColumnSums]]) for
@@ -135,9 +135,7 @@ object ManifestRef {
   }
 }
 
-/** The decoded content of one snapshot file: header + manifest refs for
-  * the current format, or the inline listings of the pre-manifest layout
-  * (kept readable so tables written by earlier versions still open). */
+/** The decoded content of one snapshot file: header + manifest refs. */
 final case class SnapshotFile(
     seq: Long,
     parent: Option[Long],
@@ -145,9 +143,6 @@ final case class SnapshotFile(
     operation: String,
     schemaVersion: Int,
     manifests: Seq[ManifestRef],
-    legacyData: Seq[DataFile],
-    legacyDeletes: Seq[DeleteFile],
-    legacy: Boolean,
     specVersion: Int = 0)
 
 /** Immutable table definition, written once at CREATE TABLE time. Schema
@@ -170,10 +165,18 @@ final case class TableMeta(
 object MetaJson {
   private val M = new ObjectMapper()
 
+  /** The one on-disk layout this build writes and reads, recorded in
+    * table.json (Iceberg's `format-version`). Like Iceberg, a reader
+    * refuses any other version ([[LakeTable.load]]) instead of carrying
+    * decoders for past layouts. Version 2: manifest-based snapshots, and
+    * every data file records its row count, split offsets and
+    * scaled kind-"d" decimal bounds. */
+  val FormatVersion = 2
+
   def writeTableMeta(t: TableMeta): String = {
     val root = M.createObjectNode()
     root.put("name", t.name)
-    root.put("formatVersion", 1)
+    root.put("formatVersion", FormatVersion)
     val spec = root.putArray("partitionSpec")
     t.partitionSpec.foreach { pf =>
       val f = spec.addObject()
@@ -198,7 +201,11 @@ object MetaJson {
     )
   }
 
-  /** Snapshot file, manifest format: header + manifest references. */
+  /** The format version a table.json records; None when it records none. */
+  def readFormatVersion(s: String): Option[Int] =
+    Option(M.readTree(s).get("formatVersion")).map(_.asInt())
+
+  /** Snapshot file: header + manifest references. */
   def writeSnapshotFile(s: Snapshot, manifests: Seq[ManifestRef]): String = {
     val root = M.createObjectNode()
     root.put("seq", s.seq)
@@ -225,7 +232,6 @@ object MetaJson {
 
   def readSnapshotFile(s: String): SnapshotFile = {
     val root = M.readTree(s)
-    val legacy = root.has("dataFiles")
     SnapshotFile(
       seq = root.get("seq").asLong(),
       parent = Option(root.get("parent")).map(_.asLong()),
@@ -245,9 +251,6 @@ object MetaJson {
             else None,
         )
       },
-      legacyData = arr(root, "dataFiles").map(readDataFile),
-      legacyDeletes = arr(root, "deleteFiles").map(readDeleteFile),
-      legacy = legacy,
       specVersion = Option(root.get("specVersion")).map(_.asInt()).getOrElse(0),
     )
   }
@@ -279,7 +282,7 @@ object MetaJson {
       data.foreach { df =>
         val f = dfs.addObject()
         f.put("path", df.path); f.put("seq", df.seq); f.put("bytes", df.bytes)
-        if (df.rows >= 0) f.put("rows", df.rows)
+        f.put("rows", df.rows)
         val p = f.putObject("partition")
         df.partition.foreach { case (k, v) => p.put(k, v) }
         if (df.splits.nonEmpty) {
@@ -340,6 +343,7 @@ object MetaJson {
         p.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
       }.getOrElse(Map.empty),
       bytes = f.get("bytes").asLong(),
+      rows = f.get("rows").asLong(),
       splits = arr(f, "splits").map(pair =>
         (pair.get(0).asLong(), pair.get(1).asLong())),
       bounds = Option(f.get("bounds")).map { b =>
@@ -348,7 +352,6 @@ object MetaJson {
           e.getKey -> ColBound(a.get(0).asText(), a.get(1).asText(), a.get(2).asText())
         }.toMap
       }.getOrElse(Map.empty),
-      rows = Option(f.get("rows")).map(_.asLong()).getOrElse(-1L),
       nonNull = Option(f.get("nn")).map { n =>
         n.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
       }.getOrElse(Map.empty),

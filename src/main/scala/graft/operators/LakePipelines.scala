@@ -45,12 +45,13 @@ object LakePipelines {
   /** Bump whenever any fixture BUILD logic in this file (or the lake write
     * path) changes semantics: the completion markers under the warehouse
     * would otherwise let a later run silently reuse a stale build.
+    * v8: tables record format version 2 ([[graft.lake.MetaJson.FormatVersion]])
+    * and a v7 warehouse's tables are refused on load;
     * v7: decimal footer bounds (including FIXED_LEN_BYTE_ARRAY) recorded
-    * under the scaled kind-"d" format — a v6 warehouse carries kind-"n"
-    * bounds that the migration guard rightly declines, losing pruning;
+    * under the scaled kind-"d" format;
     * v6: orders_decimal gains an identity status partition (q90 groups by
     * it from metadata); v5: decimal footer bounds recorded scaled. */
-  val LayoutVersion = 7
+  val LayoutVersion = 8
 
   def warehouse(sfDir: String): String = {
     val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")

@@ -140,11 +140,10 @@ class LakeMetaAggregate(spark: SparkSession) extends Rule[LogicalPlan]
     // the memo survives neighboring rewrites of the same query.
     if (distributed && agg.getTagValue(LakeMetaAggregate.DeclinedTag)
         .contains((t.location, snap.seq))) return None
-    if (!distributed && !snap.dataFiles.forall(_.rows >= 0)) return None
     // zero-row committed files (legal, e.g. an overwrite that emptied a
     // partition) contribute NOTHING a real scan would produce — keeping
     // them would surface phantom group tuples / distinct values. In the
-    // distributed regime both checks run task-side instead.
+    // distributed regime the check runs task-side instead.
     val files = if (distributed) Nil else snap.dataFiles.filter(_.rows > 0)
     val spec = t.specFieldsThrough(snap.specVersion)
     val schema = t.schema(snap.schemaVersion)
@@ -712,8 +711,7 @@ object LakeMetaAggregate {
       while (it.hasNext && !poisoned) {
         val f = it.next()
         try {
-          if (f.rows < 0L) poisoned = true
-          else if (f.rows > 0L) { // zero-row committed files contribute nothing
+          if (f.rows > 0L) { // zero-row committed files contribute nothing
             if (needPnames.exists(p => !f.partition.contains(p))) poisoned = true
             else if (sentinelPnames.exists(p => f.partition(p) == S)) poisoned = true
             else {
@@ -837,8 +835,8 @@ object LakeMetaAggregate {
       // EXACT (scaled by the parquet decimal annotation, under kind "d" —
       // INT32/INT64-backed for precision <= 18, two's-complement
       // FIXED_LEN_BYTE_ARRAY beyond); precision > 30 could have been
-      // floor/ceil-rounded, decline. Kind "n" on a decimal column means
-      // PRE-scaled-fix bounds in the unscaled domain: never serve those.
+      // floor/ceil-rounded, decline. Any other kind is not a decimal
+      // column's bound: decline, like every type above.
       case dt: DecimalType if dt.precision <= 30 =>
         if (bs.exists(_.kind != "d")) None
         else {

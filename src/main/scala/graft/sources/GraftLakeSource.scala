@@ -56,8 +56,7 @@ import scala.jdk.CollectionConverters._
   * One InputPartition per parquet ROW GROUP: split byte ranges come from
   * the snapshot metadata (recorded at commit — Iceberg's `split_offsets`),
   * so a 512 MB file fans out across tasks without the driver reopening
-  * footers; files from pre-splits snapshots fall back to a parallelized
-  * footer read. Every split decodes through Spark's VECTORIZED parquet
+  * footers. Every split decodes through Spark's VECTORIZED parquet
   * reader into ColumnarBatches; `_graft_file` and synthesized changelog
   * columns are per-split constant columns of the same batches.
   */
@@ -111,29 +110,21 @@ object GraftLakeSource {
   private[sources] def hadoopConfOf(t: LakeTable): Map[String, String] =
     t.spark.sparkContext.hadoopConfiguration.asScala.map(e => e.getKey -> e.getValue).toMap
 
-  /** Data files → one InputPartition per row group: recorded split offsets
-    * are pure metadata; files from pre-splits snapshots fall back to a
-    * parallelized footer read. Shared by the batch and streaming planners. */
+  /** Data files → one InputPartition per row group, from the recorded
+    * split offsets alone (pure metadata). Shared by the batch and
+    * streaming planners. */
   private[sources] def planFileSplits(
       t: LakeTable, files: Seq[graft.lake.DataFile],
-      keyOf: Option[graft.lake.DataFile => Array[Any]] = None): Array[InputPartition] = {
-    val (recorded, legacy) = files.partition(_.splits.nonEmpty)
-    val legacySplits = LakeTable.rowGroupSplitsAll(
-      legacy.map(f => new Path(t.abs(f.path))), t.spark.sparkContext.hadoopConfiguration,
-      spark = Some(t.spark))
-    def split(f: graft.lake.DataFile, abs: String, st: Long, len: Long): InputPartition =
-      keyOf match {
-        case Some(k) => GraftLakeKeyedInputPartition(abs, st, len, k(f))
-        case None    => GraftLakeInputPartition(abs, st, len)
-      }
-    (recorded.flatMap { f =>
+      keyOf: Option[graft.lake.DataFile => Array[Any]] = None): Array[InputPartition] =
+    files.flatMap { f =>
       val abs = t.abs(f.path)
-      f.splits.map { case (st, len) => split(f, abs, st, len) }
-    } ++ legacy.flatMap { f =>
-      val p = new Path(t.abs(f.path)).toString
-      legacySplits(new Path(p)).map { case (st, len) => split(f, p, st, len) }
-    }).toArray
-  }
+      f.splits.map { case (st, len) =>
+        keyOf match {
+          case Some(k) => GraftLakeKeyedInputPartition(abs, st, len, k(f))
+          case None    => GraftLakeInputPartition(abs, st, len)
+        }
+      }
+    }.toArray
 }
 
 /** Translates pushed v1 filters into a parquet [[FilterPredicate]] so the
@@ -598,8 +589,7 @@ private[sources] class GraftLakeScanBuilder(
     * from scheduling a task per row group of a 10^5-file table. */
   override def pushLimit(n: Int): Boolean = {
     val snap = t.snapshot(seq)
-    val ok = acceptFilters && dataFilters.isEmpty && n >= 0 &&
-      snap.deleteFiles.isEmpty && snap.dataFiles.forall(_.rows >= 0)
+    val ok = acceptFilters && dataFilters.isEmpty && n >= 0 && snap.deleteFiles.isEmpty
     if (ok) limit = Some(n)
     ok
   }
@@ -895,9 +885,9 @@ private[sources] class GraftLakeScan(
     * auto-broadcasts small lake tables in joins (a DSv2 relation without
     * stats defaults to "infinitely large" and never broadcasts). Bytes are
     * the compressed parquet sum of planned files — the same estimate
-    * Iceberg reports; rows only when every file records a count and no
-    * merge-on-read tombstone is live (tombstones only shrink the result,
-    * so the byte figure stays a safe overestimate). */
+    * Iceberg reports; rows only when no merge-on-read tombstone is live
+    * (tombstones only shrink the result, so the byte figure stays a safe
+    * overestimate). */
   override def estimateStatistics(): Statistics = {
     val snap = t.snapshotPruned(seq, allFilters)
     val (files, _) = t.planFiles(snap, allFilters)
@@ -906,7 +896,7 @@ private[sources] class GraftLakeScan(
     // delete sidecar can reach still reports exact rows (better broadcast
     // decisions on MoR tables whose churn lives in other partitions)
     val rows: java.util.OptionalLong =
-      if ((skipDeletes || t.deleteFilesFor(snap, files).isEmpty) && files.forall(_.rows >= 0))
+      if (skipDeletes || t.deleteFilesFor(snap, files).isEmpty)
         java.util.OptionalLong.of(files.map(_.rows).sum)
       else java.util.OptionalLong.empty()
     new Statistics {
@@ -931,8 +921,7 @@ private[sources] class GraftLakeScan(
   /** One InputPartition per parquet ROW GROUP, so a 512 MB file with 4 row
     * groups fans out to 4 readers instead of serializing in one. Split
     * byte ranges come from the SNAPSHOT metadata (recorded at commit —
-    * Iceberg's `split_offsets`), so planning is pure metadata; files from
-    * pre-splits snapshots fall back to a parallelized driver footer read. */
+    * Iceberg's `split_offsets`), so planning is pure metadata. */
   override def planInputPartitions(): Array[InputPartition] = {
     // manifest-level pruning first (skips whole metadata files via their
     // partition summaries), then file-level pruning within what loaded
@@ -1092,13 +1081,12 @@ private[sources] class GraftLakeMicroBatchStream(
         s"streaming bootstrap snapshot $s carries merge-on-read deletes; " +
           "compact the table before streaming it")
     val spec = t.specFieldsThrough(snap.specVersion)
-    val nonDec = t.nonDecimalColumns(snap.schemaVersion)
     val newFiles = snap.dataFiles
       // bootstrap batch = the WHOLE earliest snapshot, then strict increments
       .filter(f => (if (s0 == Bootstrap) f.seq <= s else false) || (f.seq > s && f.seq <= e))
       .filter(f => filters.forall(fl =>
         PruneFilter.mayMatch(spec, f.partition, fl) &&
-          graft.lake.ColumnBounds.mayMatch(f.bounds, fl, nonDec)))
+          graft.lake.ColumnBounds.mayMatch(f.bounds, fl)))
     GraftLakeSource.planFileSplits(t, newFiles)
   }
 
@@ -1249,10 +1237,17 @@ private[sources] class GraftLakeChangelogMicroBatchStream(
       delta.select(outSchema.fieldNames.map(col).toIndexedSeq: _*)
         .write.mode("overwrite").parquet(out)
     staged.put((s0, e), rel)
-    val files = fs.listStatus(new Path(out)).toSeq
+    // staged files are planned like committed ones: one footer pass
+    // records their split offsets and row counts
+    val parts = fs.listStatus(new Path(out)).toSeq
       .filter(st => st.getPath.getName.endsWith(".parquet") && st.getLen > 0)
-      .map(st => graft.lake.DataFile(
-        s"$rel/${st.getPath.getName}", e, Map.empty, st.getLen))
+    val metas = LakeTable.fileMetaAll(parts.map(_.getPath),
+      t.spark.sparkContext.hadoopConfiguration, withLen = false, spark = Some(t.spark))
+    val files = parts.map { st =>
+      val fm = metas(st.getPath)
+      graft.lake.DataFile(s"$rel/${st.getPath.getName}", e, Map.empty, st.getLen,
+        rows = fm.rows, splits = fm.splits)
+    }
     GraftLakeSource.planFileSplits(t, files)
   }
 

@@ -70,12 +70,8 @@ private[sources] object GraftLakeMetaTable {
 
   /** Per-file column metrics as one deterministic JSON document:
     * `{"col":{"k":…,"lo":…,"hi":…,"nn":…,"sum":…}}`, column names sorted,
-    * absent stats omitted (empty document for pre-stats metadata). `k` is
-    * the bound kind the commit recorded — load-bearing for decimal
-    * columns, where kind-"d" lo/hi are SCALED decimals but legacy kind-"n"
-    * bounds (written before the scaled-stats fix) are raw UNSCALED
-    * integers: without the kind a consumer could read 15000 as 15000.00
-    * when it means 150.00. */
+    * absent stats omitted. `k` is the bound kind the commit recorded
+    * ("n" numeric, "d" scaled decimal, "s" string — see [[graft.lake.ColBound]]). */
   private def renderMetrics(f: graft.lake.DataFile): UTF8String = {
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = m.createObjectNode()
@@ -116,8 +112,7 @@ private[sources] object GraftLakeMetaTable {
         .sortBy(_._1.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("/"))
         .map { case (p, fs) =>
           new GenericInternalRow(Array[Any](
-            renderPartition(p), fs.size,
-            if (fs.exists(_.rows < 0)) -1L else fs.map(_.rows).sum,
+            renderPartition(p), fs.size, fs.map(_.rows).sum,
             fs.map(_.bytes).sum)): InternalRow
         }.toArray
     case other => throw new IllegalArgumentException(s"unknown metadata table: $$$other")

@@ -32,8 +32,7 @@ private[sources] object GraftProcedures {
 
   val Names: Seq[String] = Seq(
     "rollback_to_snapshot", "expire_snapshots", "rewrite_data_files",
-    "rewrite_manifests", "remove_orphan_files", "evolve_partition_spec",
-    "rebaseline_changelog")
+    "remove_orphan_files", "evolve_partition_spec", "rebaseline_changelog")
 
   def load(name: String, cat: () => LakeCatalog,
       catalogName: String = "graft"): Option[UnboundProcedure] =
@@ -41,7 +40,6 @@ private[sources] object GraftProcedures {
       case "rollback_to_snapshot"  => Some(rollback(cat))
       case "expire_snapshots"      => Some(expire(cat))
       case "rewrite_data_files"    => Some(rewrite(cat))
-      case "rewrite_manifests"     => Some(rewriteManifests(cat))
       case "remove_orphan_files"   => Some(removeOrphans(cat))
       case "evolve_partition_spec" => Some(evolveSpec(cat))
       case "rebaseline_changelog"  => Some(rebaselineChangelog(cat, catalogName))
@@ -134,22 +132,6 @@ private[sources] object GraftProcedures {
       }
     }
 
-  /** Manifest-only stats re-record ([[LakeTable.rewriteManifests]]) — the
-    * migration procedure for quarantined legacy kind-"n" decimal bounds:
-    * re-reads footers + per-file sums and commits a metadata-only
-    * snapshot in the current recording format; no data is rewritten. */
-  private def rewriteManifests(cat: () => LakeCatalog): UnboundProcedure =
-    new GraftProcedure("rewrite_manifests", Seq(in("table", StringType)), cat) {
-      override def call(input: InternalRow): JIterator[Scan] = {
-        val t = table(input)
-        val snap = t.rewriteManifests()
-        val (schema, values) = row(
-          ("snapshot_seq", LongType, snap.seq),
-          ("data_files", IntegerType, snap.dataFiles.size))
-        result(name(), schema, values)
-      }
-    }
-
   private def removeOrphans(cat: () => LakeCatalog): UnboundProcedure =
     new GraftProcedure("remove_orphan_files",
       Seq(in("table", StringType),
@@ -178,7 +160,7 @@ private[sources] object GraftProcedures {
 
   /** The changelog consumer's RECOVERY recipe, computed server-side
     * (VERDICT r17 #4): `changes()` and the changelog stream refuse on
-    * content restatements (compact / rewrite-manifests / rollback) and
+    * content restatements (compact / rollback) and
     * on expired history — correctly, but until now the only recovery was
     * manual. Given the consumer's last-committed offset `from_seq`, this
     * emits the full epoch arithmetic in one summary row:

@@ -113,7 +113,7 @@ class BoundsSpec extends SparkSpec {
     assert(t.planFiles(snap, Seq(Lt("m", dec("150.00"))))._1.size == 1)
   }
 
-  test("kind-'d' bound logic: scaled decimal pruning; legacy 'n' bounds never prune decimals") {
+  test("kind-'d' bound logic; kind 'n' bounds prune decimal literals numerically") {
     import PruneFilter._
     def dec(s: String) = new java.math.BigDecimal(s)
     // kind "d": lo/hi are SCALED decimals, compared in the decimal domain
@@ -130,20 +130,17 @@ class BoundsSpec extends SparkSpec {
     // non-decimal literals still compare against "d" bounds numerically
     assert(ColumnBounds.mayMatch(d, Eq("m", 150L)))
     assert(!ColumnBounds.mayMatch(d, Eq("m", 99L)))
-    // QUARANTINE: a decimal literal vs a legacy kind-"n" bound NEVER
-    // prunes — those bounds are unscaled integers (150.00 stored as
-    // 15000) and a scaled comparison would drop matching files
+    // kind "n" bounds hold plain values too (decimal columns only ever
+    // record kind "d"), so a decimal-typed literal prunes them numerically
     val n = Map("m" -> ColBound("n", "10000", "20000"))
-    assert(ColumnBounds.mayMatch(n, Eq("m", dec("150.00"))))
-    assert(ColumnBounds.mayMatch(n, Lt("m", dec("100.00")))) // would prune if trusted
-    assert(ColumnBounds.mayMatch(n, Gt("m", dec("200.00"))))
-    // ... but when the caller proves the column is NOT decimal (long
-    // bounds in the plain value domain), a decimal-typed literal prunes
-    // numerically — the quarantine only protects decimal columns
-    val longCol = Set("m")
-    assert(!ColumnBounds.mayMatch(n, Eq("m", dec("9999")), longCol))
-    assert(ColumnBounds.mayMatch(n, Eq("m", dec("15000")), longCol))
-    assert(!ColumnBounds.mayMatch(n, Gt("m", dec("20000")), longCol))
+    assert(!ColumnBounds.mayMatch(n, Eq("m", dec("9999"))))
+    assert(!ColumnBounds.mayMatch(n, Eq("m", dec("150.00"))))
+    assert(ColumnBounds.mayMatch(n, Eq("m", dec("15000"))))
+    assert(ColumnBounds.mayMatch(n, Eq("m", dec("15000.50"))))
+    assert(!ColumnBounds.mayMatch(n, Gt("m", dec("20000"))))
+    assert(ColumnBounds.mayMatch(n, Gt("m", dec("19999.99"))))
+    assert(!ColumnBounds.mayMatch(n, Lt("m", dec("10000.00"))))
+    assert(ColumnBounds.mayMatch(n, Le("m", dec("10000.00"))))
   }
 
   test("precision>18 decimals (FLBA-encoded) round-trip scaled kind-'d' footer bounds") {
@@ -170,91 +167,6 @@ class BoundsSpec extends SparkSpec {
     assert(t.planFiles(snap2, Seq(Gt("m", dec("200.00"))))._1.isEmpty)
     assert(t.planFiles(snap2, Seq(Lt("m", dec("150.00"))))._1.size == 1)
     assert(t.scan(filters = Seq(Lt("m", dec("150.00")))).count() == 1)
-  }
-
-  test("rewrite_manifests migrates quarantined legacy decimal bounds back to pruning") {
-    // Simulate a table whose manifests were written by the
-    // pre-scaled-stats-fix era: decimal bounds recorded under kind "n" in
-    // the UNSCALED integer domain (and no per-file sums). Those manifests
-    // are immutable and correctly pruning-dead (quarantine); the
-    // manifest-only rewrite must re-record footer stats in the current
-    // format and restore pruning + metadata serving WITHOUT rewriting
-    // any data file.
-    val dir = Files.createTempDirectory("graft-bounds-migrate").toString
-    val df = Seq((1L, "100.00"), (2L, "150.00"), (3L, "200.00"))
-      .toDF("id", "ms")
-      .select($"id", $"ms".cast("decimal(10,2)").as("m"))
-      .coalesce(1)
-    val t = LakeTable.create(spark, s"$dir/t", "t", df.schema)
-    t.append(df)
-    val cur = t.currentSnapshot
-    // doctor: unscaled kind-"n" decimal bounds, the legacy on-disk shape
-    val legacyFiles = cur.dataFiles.map(f => f.copy(
-      bounds = f.bounds.map {
-        case ("m", b) => "m" -> ColBound("n",
-          BigDecimal(b.min).underlying.unscaledValue.toString,
-          BigDecimal(b.max).underlying.unscaledValue.toString)
-        case kv => kv
-      },
-      sums = Map.empty))
-    t.commitSnapshot(Snapshot(cur.seq + 1, Some(cur.seq), System.currentTimeMillis(),
-      "append", cur.schemaVersion, legacyFiles, cur.deleteFiles, cur.specVersion))
-    LakeTable.manifestCache.clear()
-    def dec(s: String) = new java.math.BigDecimal(s)
-    import PruneFilter._
-    // quarantine active: value-correct (file kept, scan right) but the
-    // pruning and the metadata MIN/MAX path are dead
-    val legacy = t.currentSnapshot
-    assert(legacy.dataFiles.head.bounds("m").kind == "n")
-    assert(t.planFiles(legacy, Seq(Gt("m", dec("200.00"))))._1.size == 1,
-      "quarantined bounds must keep the file (conservative), not prune on unscaled values")
-    assert(t.scan(filters = Seq(Gt("m", dec("200.00")))).count() == 0)
-    // THE migration recipe: one manifest-only rewrite, zero data writes
-    val dataPathsBefore = legacy.dataFiles.map(_.path).toSet
-    val migrated = t.rewriteManifests()
-    assert(migrated.operation == "rewrite-manifests")
-    assert(migrated.dataFiles.map(_.path).toSet == dataPathsBefore,
-      "rewrite_manifests must not move or rewrite data files")
-    val mb = migrated.dataFiles.head.bounds("m")
-    assert(mb.kind == "d", s"bounds still ${mb.kind} after rewrite_manifests")
-    assert(BigDecimal(mb.min) == BigDecimal("100.00") && BigDecimal(mb.max) == BigDecimal("200.00"))
-    LakeTable.manifestCache.clear()
-    assert(t.planFiles(t.currentSnapshot, Seq(Gt("m", dec("200.00"))))._1.isEmpty,
-      "decimal pruning did not return after rewrite_manifests")
-    assert(t.planFiles(t.currentSnapshot, Seq(Lt("m", dec("150.00"))))._1.size == 1)
-    // metadata sums re-recorded too (ColumnSums read-back ran)
-    assert(migrated.dataFiles.head.sums.get("m").exists(s => BigDecimal(s) == BigDecimal("450.00")),
-      s"sums not re-recorded: ${migrated.dataFiles.head.sums}")
-    // idempotent on a healthy table: stats unchanged by a second pass
-    val again = t.rewriteManifests()
-    assert(again.dataFiles.head.bounds == migrated.dataFiles.head.bounds)
-    assert(again.dataFiles.head.sums == migrated.dataFiles.head.sums)
-  }
-
-  test("nonDecimalColumns walks the WHOLE schema history, not just the latest version") {
-    // a file written while a name was decimal may carry legacy unscaled
-    // kind-"n" bounds in immutable manifests; the set must exclude any
-    // name that was EVER decimal up to the snapshot's version. Today the
-    // only route to a decimal→non-decimal transition — drop + re-add —
-    // is refused by addColumn (resurrection guard, asserted below), so
-    // the walk is defense-in-depth for any future evolution path.
-    val dir = Files.createTempDirectory("graft-bounds-hist").toString
-    val df = Seq((1L, "1.25")).toDF("id", "s")
-      .select($"id", $"s".cast("decimal(10,2)").as("m"))
-    val t = LakeTable.create(spark, s"$dir/t", "t", df.schema)
-    t.append(df)
-    t.dropColumn("m") // schema v2 no longer carries m at all...
-    val nonDec = t.nonDecimalColumns(t.currentSnapshot.schemaVersion)
-    assert(nonDec("id"), s"never-decimal column missing from $nonDec")
-    // ...but v1 had it as decimal, so the walk keeps it quarantined
-    assert(!nonDec("m"), s"historically-decimal column wrongly cleared: $nonDec")
-    // the engine refuses to resurrect the name with a new type
-    intercept[IllegalArgumentException](t.addColumn("m", "bigint"))
-    // and the quarantine holds through mayMatch: a decimal literal vs a
-    // legacy unscaled bound keeps the file under this set
-    val legacy = Map("m" -> ColBound("n", "125", "125"))
-    assert(ColumnBounds.mayMatch(legacy, PruneFilter.Lt("m", new java.math.BigDecimal("1.00")),
-      nonDec))
   }
 
   test("upsert tombstones still apply when the data files are bounds-pruned") {

@@ -641,16 +641,13 @@ class LakeSpec extends SparkSpec {
           // round 2: upsert own keys 0..9 (non-rebaseable: retry on loss)
           record(retrying(s"w$i upsert")(w.upsert(
             (0L to 9L).map(k => (base + k, s"u-$i-1")).toDF("id", "s"))))
-          // round 3: writer-specific maintenance interleaves with writes.
-          // Both return the CURRENT snapshot unchanged when there is
-          // nothing to do — only record seqs these calls actually minted
+          // round 3: writer 0's compaction (a content restatement)
+          // interleaves with the other writers. It returns the CURRENT
+          // snapshot unchanged when there is nothing to do — only record
+          // a seq the call actually minted
           if (i == 0) {
             val s = retrying("w0 compact")(w.compactDirty())
             if (s.operation == "compact") record(s)
-          }
-          if (i == 1) {
-            val s = retrying("w1 rewriteManifests")(w.rewriteManifests())
-            if (s.operation == "rewrite-manifests") record(s)
           }
           // round 4: delete own keys 40..49
           record(retrying(s"w$i delete")(w.deleteKeys(
@@ -1293,18 +1290,12 @@ class LakeSpec extends SparkSpec {
   }
 
   /** Spark jobs launched by `body` (attributed via a job group; the status
-    * store updates asynchronously, so poll until the count is stable). */
+    * store updates from the listener bus, so drain it before one read). */
   private def jobsLaunched(group: String)(body: => Unit): Int = {
     spark.sparkContext.setJobGroup(group, group)
     try body finally spark.sparkContext.clearJobGroup()
-    var last = -1
-    var stable = 0
-    while (stable < 5) {
-      val n = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-      if (n == last) stable += 1 else { stable = 0; last = n }
-      Thread.sleep(40)
-    }
-    last
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
   }
 
   test("per-file sums fold in the write tasks: recording costs zero extra jobs") {

@@ -179,34 +179,73 @@ class ManifestSpec extends SparkSpec {
       rows = 10L,
       nonNull = Map("id" -> 10L, "v" -> 7L, "s" -> 0L),
       sums = Map("id" -> "55", "v" -> "12.50"))
-    val bare = DataFile("data/g.parquet", 4L, Map.empty, 5L)
+    val bare = DataFile("data/g.parquet", 4L, Map.empty, 5L, rows = 2L)
     val json = MetaJson.writeManifest("data", Seq(df, bare), Nil)
     val (kind, data, dels) = MetaJson.readManifest(json)
     assert(kind == "data" && dels.isEmpty)
     assert(data == Seq(df, bare))
   }
 
-  test("pre-manifest (inline) snapshot files still open") {
-    val dir = Files.createTempDirectory("graft-man-legacy").toString
-    val df = Seq((1L, "x")).toDF("id", "s")
-    val t = LakeTable.create(spark, s"$dir/t", "t", df.schema)
-    t.append(df)
-    // rewrite snap 1 in the legacy inline layout
-    val cur = t.currentSnapshot
-    val legacyJson = {
-      val f = cur.dataFiles.head
-      s"""{"seq":1,"parent":0,"timestampMs":${cur.timestampMs},"operation":"append",
-         |"schemaVersion":1,
-         |"dataFiles":[{"path":"${f.path}","seq":${f.seq},"bytes":${f.bytes},
-         |"partition":{}}],
-         |"deleteFiles":[]}""".stripMargin
+  test("tables of another format version are refused by name") {
+    val dir = Files.createTempDirectory("graft-man-format").toString
+    val df = (1L to 4L).map(i => (i, s"v$i")).toDF("id", "s")
+    val prevCatalog = spark.conf.getOption("spark.sql.catalog.graft")
+    val prevWarehouse = spark.conf.getOption("spark.graft.catalog.warehouse")
+    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.graft.catalog.warehouse", dir)
+    try {
+      // control: a table this build writes reopens through its whole
+      // lifecycle, from the manifest JSON (cache cleared), by both routes
+      val cur = LakeTable.create(spark, s"$dir/t_cur", "t_cur", df.schema,
+        primaryKey = Seq("id"))
+      cur.append(df)                                           // seq 1
+      cur.upsert(Seq((2L, "w2"), (5L, "w5")).toDF("id", "s"))  // seq 2
+      cur.compactDirty()                                       // seq 3
+      LakeTable.manifestCache.clear()
+      val back = LakeTable.load(spark, cur.location)
+      assert(back.currentSnapshot.dataFiles.forall(f => f.rows > 0 && f.splits.nonEmpty))
+      def rows(asOf: Option[Long]) = back.scan(asOf = asOf).as[(Long, String)].collect().toMap
+      assert(rows(None) == Map(1L -> "v1", 2L -> "w2", 3L -> "v3", 4L -> "v4", 5L -> "w5"))
+      assert(rows(Some(1L)) == Map(1L -> "v1", 2L -> "v2", 3L -> "v3", 4L -> "v4"))
+      assert(spark.sql("SELECT * FROM graft.t_cur VERSION AS OF 1").count() == 4)
+
+      // an older recorded version, and a table.json that records none
+      Seq("t_v1" -> Some(1), "t_unversioned" -> None).foreach { case (name, version) =>
+        val t = LakeTable.create(spark, s"$dir/$name", name, df.schema)
+        t.append(df)
+        val tableJson = new Path(new Path(t.location), "meta/table.json")
+        val in = t.fs.open(tableJson)
+        val root = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+            .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+          finally in.close()
+        version match {
+          case Some(v) => root.put("formatVersion", v)
+          case None => root.remove("formatVersion")
+        }
+        val out = t.fs.create(tableJson, true)
+        out.write(root.toPrettyString.getBytes("UTF-8")); out.close()
+
+        val found = version.map(_.toString).getOrElse("none")
+        def namesVersions(msg: String): Boolean =
+          msg.contains(s"format version $found") &&
+            msg.contains(s"reads only format version ${MetaJson.FormatVersion}") &&
+            msg.contains("re-create the table")
+        val e = intercept[IllegalStateException](LakeTable.load(spark, t.location))
+        assert(namesVersions(e.getMessage) && e.getMessage.contains(t.location), e.getMessage)
+        val se = intercept[Exception](spark.sql(s"SELECT * FROM graft.$name").collect())
+        val chain = Iterator.iterate[Throwable](se)(_.getCause).takeWhile(_ != null).toSeq
+        assert(chain.exists(c => c.getMessage != null && namesVersions(c.getMessage)),
+          s"SQL read did not surface the refusal: $se")
+      }
+    } finally {
+      prevCatalog match {
+        case Some(v) => spark.conf.set("spark.sql.catalog.graft", v)
+        case None => spark.conf.unset("spark.sql.catalog.graft")
+      }
+      prevWarehouse match {
+        case Some(v) => spark.conf.set("spark.graft.catalog.warehouse", v)
+        case None => spark.conf.unset("spark.graft.catalog.warehouse")
+      }
     }
-    val snapPath = new Path(new Path(t.location), "meta/snap-00001.json")
-    t.fs.delete(snapPath, false)
-    val out = t.fs.create(snapPath, true)
-    out.write(legacyJson.getBytes("UTF-8")); out.close()
-    val reopened = LakeTable.load(spark, t.location)
-    assert(reopened.currentSnapshot.dataFiles.map(_.path) == cur.dataFiles.map(_.path))
-    assert(reopened.scan().count() == 1)
   }
 }

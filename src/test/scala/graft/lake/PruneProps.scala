@@ -166,8 +166,8 @@ class PruneProps extends AnyFunSuite {
     // value that satisfies the filter must survive, across the exact
     // recording pipeline's shapes — 30-significant-digit FLOOR/CEILING
     // bound rounding (monster decimals included), cross-domain literals,
-    // UTF-8 byte-ordered strings, and the kind-"n"-vs-decimal-literal
-    // quarantine.
+    // UTF-8 byte-ordered strings, and decimal literals against kind-"n"
+    // (plain-value) bounds.
     val FloorMc = new java.math.MathContext(30, java.math.RoundingMode.FLOOR)
     val CeilMc  = new java.math.MathContext(30, java.math.RoundingMode.CEILING)
     def numBound(kind: String, vals: Seq[BigDecimal]): Map[String, ColBound] =
@@ -176,10 +176,10 @@ class PruneProps extends AnyFunSuite {
         vals.max.round(CeilMc).underlying.toPlainString))
     import PruneFilter._
     def checkKept(b: Map[String, ColBound], vals: Seq[BigDecimal], lit: Any,
-        litBd: BigDecimal, nonDec: Set[String]): Unit = {
+        litBd: BigDecimal): Unit = {
       def kept(f: PruneFilter, sat: BigDecimal => Boolean): Unit =
         if (vals.exists(sat))
-          assert(ColumnBounds.mayMatch(b, f, nonDec),
+          assert(ColumnBounds.mayMatch(b, f),
             s"false negative: $f pruned bounds $b holding ${vals.filter(sat).take(3)}")
       kept(Eq("c", lit), _.compare(litBd) == 0)
       kept(In("c", Seq(lit)), _.compare(litBd) == 0)
@@ -189,13 +189,12 @@ class PruneProps extends AnyFunSuite {
       kept(Le("c", lit), _ <= litBd)
     }
     (1 to 500).foreach { _ =>
-      // LONG values, kind "n" — literals as Long AND as decimal-with-proof
+      // LONG values, kind "n" — literals as Long AND as decimal
       val longs = Seq.fill(rng.between(1, 6))(rng.nextLong())
       val lvals = longs.map(BigDecimal(_))
       val llit = if (rng.nextBoolean()) longs(rng.nextInt(longs.size)) else rng.nextLong()
-      checkKept(numBound("n", lvals), lvals, llit, BigDecimal(llit), Set.empty)
-      checkKept(numBound("n", lvals), lvals,
-        new java.math.BigDecimal(llit), BigDecimal(llit), Set("c")) // proven non-decimal
+      checkKept(numBound("n", lvals), lvals, llit, BigDecimal(llit))
+      checkKept(numBound("n", lvals), lvals, new java.math.BigDecimal(llit), BigDecimal(llit))
       // DOUBLE values (huge / tiny / negative / subnormal), kind "n"
       val doubles = Seq.fill(rng.between(1, 6))(rng.nextInt(6) match {
         case 0 => rng.nextDouble() * Double.MaxValue * (if (rng.nextBoolean()) 1 else -1)
@@ -205,7 +204,7 @@ class PruneProps extends AnyFunSuite {
       val dvals = doubles.map(d => BigDecimal(new java.math.BigDecimal(d)))
       val dlit = if (rng.nextBoolean()) doubles(rng.nextInt(doubles.size))
         else (rng.nextDouble() - 0.5) * 1e6
-      checkKept(numBound("n", dvals), dvals, dlit, BigDecimal(new java.math.BigDecimal(dlit)), Set.empty)
+      checkKept(numBound("n", dvals), dvals, dlit, BigDecimal(new java.math.BigDecimal(dlit)))
       // DECIMAL values incl. > 30 significant digits (exercises the bound
       // rounding), kind "d" — decimal literals prune on scaled values
       val decs = Seq.fill(rng.between(1, 6))(
@@ -215,7 +214,7 @@ class PruneProps extends AnyFunSuite {
         .map(d => if (rng.nextBoolean()) -d else d)
       val dlit2 = (if (rng.nextBoolean()) decs(rng.nextInt(decs.size))
         else BigDecimal(rng.nextLong()) / 100).underlying
-      checkKept(numBound("d", decs), decs, dlit2, BigDecimal(dlit2), Set.empty)
+      checkKept(numBound("d", decs), decs, dlit2, BigDecimal(dlit2))
       // STRING values, kind "s" — UTF-8 BYTE order (multi-byte included)
       val pool = Seq("", "a", "zz", "é", "日本", "x", "Ab", "bÿ", "0", "~~")
       val strs = Seq.fill(rng.between(1, 6))(
@@ -235,14 +234,12 @@ class PruneProps extends AnyFunSuite {
       skept(Ge("c", slit), byteOrd.gteq(_, slit))
       skept(Lt("c", slit), byteOrd.lt(_, slit))
       skept(Le("c", slit), byteOrd.lteq(_, slit))
-      // QUARANTINE: kind-"n" bounds + decimal literal + column NOT proven
-      // non-decimal => NEVER prune, for every filter shape, any values
-      val qb = numBound("n", lvals)
-      val qlit = new java.math.BigDecimal(rng.nextLong()).movePointLeft(2)
-      Seq[PruneFilter](Eq("c", qlit), In("c", Seq(qlit)), Gt("c", qlit),
-        Ge("c", qlit), Lt("c", qlit), Le("c", qlit)).foreach(f =>
-        assert(ColumnBounds.mayMatch(qb, f),
-          s"quarantine violated: $f pruned kind-n bounds $qb on a decimal literal"))
+      // DECIMAL literals (scale 0-2) vs kind-"n" bounds (long and double
+      // values): never a false negative, for every filter shape
+      val qlit = (if (rng.nextBoolean()) new java.math.BigDecimal(longs(rng.nextInt(longs.size)))
+        else new java.math.BigDecimal(rng.nextLong())).movePointLeft(rng.nextInt(3))
+      checkKept(numBound("n", lvals), lvals, qlit, BigDecimal(qlit))
+      checkKept(numBound("n", dvals), dvals, qlit, BigDecimal(qlit))
       // NaN literal: incomparable => conservatively kept, every shape
       Seq[PruneFilter](Eq("c", Double.NaN), Gt("c", Double.NaN), Le("c", Double.NaN))
         .foreach(f => assert(ColumnBounds.mayMatch(numBound("n", dvals), f)))

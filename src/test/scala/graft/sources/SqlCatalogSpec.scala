@@ -676,18 +676,6 @@ class SqlCatalogSpec extends SparkSpec {
     assert(rw.getLong(0) == t.currentSeq + 0 || rw.getLong(0) >= 5L)
     assert(spark.sql("SELECT * FROM graft.pt").count() == 3)
 
-    // manifest-only stats re-record: same data files, fresh footer stats,
-    // one summary row (the quarantined-decimal migration path — semantics
-    // proven in BoundsSpec; here the SQL route)
-    val filesBefore = graft.lake.LakeTable.load(spark, s"$wh/pt")
-      .currentSnapshot.dataFiles.map(_.path).toSet
-    val rm = spark.sql("CALL graft.system.rewrite_manifests('pt')").head()
-    assert(rm.getInt(1) == filesBefore.size, s"rewrite_manifests row: $rm")
-    val filesAfter = graft.lake.LakeTable.load(spark, s"$wh/pt")
-      .currentSnapshot.dataFiles.map(_.path).toSet
-    assert(filesAfter == filesBefore, "rewrite_manifests must not rewrite data files")
-    assert(spark.sql("SELECT * FROM graft.pt").count() == 3)
-
     // expiry keeps the head only; history shrinks to 1 snapshot
     val ex = spark.sql("CALL graft.system.expire_snapshots('pt', 1)").head()
     assert(ex.getInt(1) == 1, s"retained ${ex.getInt(1)} snapshots")
