@@ -1,7 +1,7 @@
 package graft.lake
 
 import org.apache.parquet.column.statistics._
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.schema.LogicalTypeAnnotation
 
 import java.math.{MathContext, RoundingMode}
@@ -10,8 +10,8 @@ import java.nio.charset.StandardCharsets
 /** Per-file column bounds — Iceberg's `lower_bounds`/`upper_bounds`
   * (reference tables record per-column min/max metrics:
   * olake-config/destination.json:84-87 `write.metadata.metrics.default`)
-  * — captured from parquet footer statistics at commit time and stored in
-  * the manifest entry, so a filtered scan can skip whole FILES from
+  * — taken from the writer's own parquet footer statistics when the file
+  * closes ([[LakeFileWriter]]) and stored in the manifest entry, so a filtered scan can skip whole FILES from
   * metadata alone, before any task launches. Clustering at write
   * ([[LakeTable]] sorts on the cluster keys) makes these ranges tight
   * exactly where queries filter.
@@ -41,21 +41,18 @@ object ColumnBounds {
 
   // ------------------------------------------------------------- extraction
 
-  /** Bounds of one parquet file from an OPEN reader's footer: a column
-    * contributes iff every row group carries usable statistics for it
-    * (all-null row groups contribute nothing — null rows can never satisfy
-    * a comparison predicate, so they do not widen the value interval). */
-  def fromFooter(rd: ParquetFileReader): Map[String, ColBound] =
-    statsFromFooter(rd)._1
-
-  /** Bounds PLUS per-column non-null value counts from the same footer
-    * pass (total rows minus the chunks' recorded `num_nulls`). A column
-    * whose null count is unset in any chunk is absent from the count map;
-    * the two maps drop columns independently (an all-NaN double column
-    * has no usable bounds but an exact non-null count). */
-  def statsFromFooter(rd: ParquetFileReader): (Map[String, ColBound], Map[String, Long]) = {
+  /** Bounds of one parquet file from its footer — a column contributes
+    * iff every row group carries usable statistics for it (all-null row
+    * groups contribute nothing: null rows can never satisfy a comparison
+    * predicate, so they do not widen the value interval) — PLUS per-column
+    * non-null value counts from the same pass (total rows minus the
+    * chunks' recorded `num_nulls`). A column whose null count is unset in
+    * any chunk is absent from the count map; the two maps drop columns
+    * independently (an all-NaN double column has no usable bounds but an
+    * exact non-null count). */
+  def statsFromFooter(footer: ParquetMetadata): (Map[String, ColBound], Map[String, Long]) = {
     import scala.jdk.CollectionConverters._
-    val blocks = rd.getFooter.getBlocks.asScala.toSeq
+    val blocks = footer.getBlocks.asScala.toSeq
     if (blocks.isEmpty) return (Map.empty, Map.empty)
     var acc = Map.empty[String, (String, BigDecimal, BigDecimal, Array[Byte], Array[Byte])]
     var dropped = Set.empty[String]

@@ -1,8 +1,6 @@
 package graft.lake
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Per-file EXACT column sums, recorded in the manifest entry at commit
@@ -12,69 +10,22 @@ import org.apache.spark.sql.types._
   * the reference's gold-tier rollups, scripts/iceberg-setup.sql:80-101,
   * are exactly this shape).
   *
-  * Sums are normally folded IN THE WRITE TASKS as rows pass
-  * ([[RowParquet.FileSums]] — zero extra I/O, carried through the commit);
-  * [[compute]] below is the FALLBACK for commits staged through Spark's
-  * DataFrame writer (nested/binary schemas, bucket[n] partitioning, which
-  * the row writer cannot reproduce): parquet footers carry
-  * min/max/null-count but no sums, so the fallback costs one COLUMN-PRUNED
-  * read-back job over the freshly committed files — only integral/decimal
-  * columns are read (a few % of the file bytes), the aggregation is
-  * map-side partial per file, and the job is skipped when the table has no
-  * summable column or `spark.graft.lake.recordSums` is false (the knob for
-  * write-latency-sensitive tables on the fallback path).
-  * Only EXACT domains are recorded: integral sums accumulate in
-  * decimal(38,0) (cannot overflow: < 2^63 × 2^31 rows < 10^38) and
-  * decimal(p,s) sums in decimal(38,s); double/float sums are
+  * Sums are folded IN THE WRITE TASKS as rows pass
+  * ([[LakeFileWriter.FileSums]] — zero extra I/O, carried through the
+  * commit) on every write route; `spark.graft.lake.recordSums` = false
+  * skips recording them. Only EXACT domains are recorded: integral and
+  * decimal sums accumulate in unbounded BigDecimal; double/float sums are
   * order-dependent and never recorded, so a metadata-served result can
   * never differ from the scan it replaces. */
 object ColumnSums {
 
   /** Columns whose sums are exact and order-independent. Decimals cap at
-    * precision 28 so a per-file sum in decimal(38,s) cannot overflow even
-    * at 2^31 rows (10^28 × 2^31 < 10^38) — an overflow would return null
-    * in default mode but THROW inside the commit under ANSI. */
+    * precision 28 so a sum in decimal(38,s) cannot overflow even at 2^31
+    * rows (10^28 × 2^31 < 10^38). */
   def summable(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType => true
     case d: DecimalType => d.precision <= 28
     case _ => false
-  }
-
-  private def sumCast(dt: DataType): DataType = dt match {
-    case d: DecimalType => DecimalType(38, d.scale)
-    case _ => DecimalType(38, 0)
-  }
-
-  /** One Spark job over the staged files: exact per-file sums of every
-    * summable schema column, keyed by FILE NAME (unique within a commit).
-    * A column whose decimal(38,s) accumulation overflows (sum = null with
-    * non-null rows present) is omitted — readers decline it. */
-  def compute(
-      spark: SparkSession,
-      schema: StructType,
-      files: Seq[Path]): Map[String, Map[String, String]] = {
-    val cols = schema.fields.filter(f => f.name != LakeTable.SeqCol && summable(f.dataType))
-    if (cols.isEmpty || files.isEmpty) return Map.empty
-    if (!recordSums(spark)) return Map.empty
-    // explicit schema: no footer-merge pass, and evolved columns missing
-    // from older files read as null (they contribute nothing, matching
-    // the evolved scan's semantics)
-    val readSchema = StructType(cols.toSeq)
-    val aggs = cols.toSeq.map(f =>
-      sum(col(f.name).cast(sumCast(f.dataType))).as(f.name))
-    spark.read.schema(readSchema).parquet(files.map(_.toString): _*)
-      .groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { row =>
-        val name = new Path(row.getString(0)).getName
-        val sums = cols.toSeq.zipWithIndex.flatMap { case (f, i) =>
-          val v = row.get(i + 1)
-          if (v == null) None
-          else Some(f.name -> v.asInstanceOf[java.math.BigDecimal].stripTrailingZeros.toPlainString)
-        }.toMap
-        name -> sums
-      }.toMap
   }
 
   def recordSums(spark: SparkSession): Boolean =

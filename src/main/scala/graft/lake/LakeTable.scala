@@ -523,6 +523,7 @@ final class LakeTable private (
       require(!LakeTable.isReservedName(lc(pf.name)),
         s"${meta.name}: partition field ${pf.name} is reserved (_graft namespace)")
     }
+    requireTransformTypes(meta.name, sch, newSpec)
     // the name check and the new version number both span EVERY existing
     // spec file, not just 0..current: after a rollback parks the current
     // snapshot on an old spec, later spec files still exist, are still
@@ -837,30 +838,15 @@ final class LakeTable private (
     * 10–100 ms per stat — and mutated the shared session conf
     * (set/restore), which two concurrent relation builds could interleave
     * (ADVICE r21). Split planning and footer reads use the manifest
-    * length, which is exact by construction (recorded from the staged
-    * file at commit; [[RowParquet]] and the spec suite read through this
-    * path everywhere, so a drifting length fails loudly, not silently).
+    * length, which is exact by construction (stat'ed by the write task
+    * right after [[LakeFileWriter]] closes the file; the spec suite reads
+    * through this path everywhere, so a drifting length fails loudly, not
+    * silently).
     * Every file stat is synthesized with modification time 0, so
     * `_metadata.file_modification_time` reads 1970-01-01 on lake scans. */
   private def readKnownFiles(storage: StructType, files: Seq[(String, Long)]): DataFrame = {
     import org.apache.spark.sql.execution.datasources.{
       FileIndex, HadoopFsRelation, PartitionDirectory}
-    // spark.read forces a user-specified file-source schema NULLABLE;
-    // mirror that here so the relation schema (and every downstream
-    // plan and output schema) is identical to a plain
-    // `spark.read.schema(...).parquet(...)` of the same files — caught
-    // by LakeSpec's schema-equality assertion
-    def asNullable(dt: org.apache.spark.sql.types.DataType)
-        : org.apache.spark.sql.types.DataType = dt match {
-      case s: StructType => StructType(s.fields.map(f =>
-        f.copy(dataType = asNullable(f.dataType), nullable = true)))
-      case a: org.apache.spark.sql.types.ArrayType =>
-        a.copy(elementType = asNullable(a.elementType), containsNull = true)
-      case m: org.apache.spark.sql.types.MapType =>
-        m.copy(keyType = asNullable(m.keyType),
-          valueType = asNullable(m.valueType), valueContainsNull = true)
-      case other => other
-    }
     val statuses = files.map { case (p, len) =>
       // blockSize/mtime 0: split planning uses maxPartitionBytes, not
       // the block size; `_metadata.file_modification_time` reads 0
@@ -882,7 +868,12 @@ final class LakeTable private (
     spark.baseRelationToDataFrame(HadoopFsRelation(
       location = index,
       partitionSchema = new StructType(),
-      dataSchema = asNullable(storage).asInstanceOf[StructType],
+      // spark.read forces a user-specified file-source schema NULLABLE;
+      // mirror that here so the relation schema (and every downstream
+      // plan and output schema) is identical to a plain
+      // `spark.read.schema(...).parquet(...)` of the same files — caught
+      // by LakeSpec's schema-equality assertion
+      dataSchema = nullableSchema(storage),
       bucketSpec = None,
       fileFormat =
         new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
@@ -997,11 +988,10 @@ final class LakeTable private (
       .drop(RnCol)
   }
 
-  /** Stage OUTSIDE the lock, publish under it. Staging runs Spark jobs
-    * (the write itself, plus the ColumnSums read-back on schemas the task
-    * writer can't reproduce) — minutes at scale; holding the table lock
-    * across them would serialize every concurrent writer behind I/O
-    * instead of behind the metadata swap. The staged files are immutable
+  /** Stage OUTSIDE the lock, publish under it. Staging runs the write's
+    * Spark jobs — minutes at scale; holding the table lock across them
+    * would serialize every concurrent writer behind I/O instead of behind
+    * the metadata swap. The staged files are immutable
     * once written, so the only lock-held work is the snapshot JSON swap.
     * Seq skew is benign in both branches: appends blind-rebase (staged
     * rows embed a seq <= the final commit seq — only ever OLDER relative
@@ -1203,8 +1193,9 @@ final class LakeTable private (
       }
     }
 
-  /** Write `df` as partitioned + clustered parquet under a staging dir,
-    * then move the files into `data/` and return their entries.
+  /** Write `df` as partitioned + clustered parquet through
+    * [[LakeFileWriter]] tasks under a staging dir, then publish the files
+    * into `data/` and return their entries.
     * Partitioning/clustering per the reference's per-table specs
     * (destination.json:37-73 transforms, :115-118 clustering). */
   private def stageDataFiles(
@@ -1231,7 +1222,7 @@ final class LakeTable private (
 
     val spec = partitionSpec(specVersion)
     val partCols = spec.map(_.name)
-    val derived = spec.foldLeft(aligned.withColumn(SeqCol, lit(seq)))(
+    val derived = spec.foldLeft(aligned)(
       (d, pf) => d.withColumn(pf.name, pf.transform(col(pf.source))))
 
     // one shuffle: co-locate rows of a partition value, clustering sort
@@ -1295,111 +1286,17 @@ final class LakeTable private (
       if (sortCols.nonEmpty) repart.sortWithinPartitions(sortCols.map(col): _*) else repart
     }
 
-    val staging = new Path(root, s"_staging/${UUID.randomUUID()}")
-    // Task-side write (the default): each task streams its arranged rows
-    // straight into staged parquet via RowParquet, folding per-file sums
-    // AS THE ROWS PASS — the commit needs no read-back job for sums (the
-    // Iceberg writer discipline: metrics are a by-product of the write).
-    // Falls back to Spark's DataFrame writer + the column-pruned
-    // ColumnSums read-back for schemas/transforms the row writer cannot
-    // reproduce (nested/binary columns, non-renderable transform/type
-    // pairs — bucket[n] is task-writable since r18).
-    val taskWritable = RowParquet.supports(userSchema) &&
-      spec.forall(pf => RowParquet.renderSupported(
-        pf.transform, userSchema(userSchema.fieldIndex(pf.source)).dataType))
-
-    val moved = ArrayBuffer.empty[(String, Path, Map[String, String], Long)]
-    var taskSums = Map.empty[String, Map[String, String]]
-    if (taskWritable) {
-      val specIdx = spec.map(pf =>
-        (userSchema.fieldIndex(pf.source), pf.transform, pf.name)).toSeq
-      // partition columns were only needed to ARRANGE the rows; the task
-      // writer renders them per row from the sources, same as DSv2
-      val projected = arranged.select(userSchema.fieldNames.map(col).toIndexedSeq: _*)
-      val confEntries = {
-        val it = spark.sparkContext.hadoopConfiguration.iterator()
-        val m = Map.newBuilder[String, String]
-        while (it.hasNext) { val e = it.next(); m += e.getKey -> e.getValue }
-        m.result()
-      }
-      val stagingStr = staging.toString
-      val schemaB = userSchema
-      val rs = ColumnSums.recordSums(spark)
-      val descs =
-        try projected.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-          // attempt id in the name: a lost speculative attempt's files are
-          // never referenced by a descriptor and vanish with staging
-          val uid = s"p$pid-a${org.apache.spark.TaskContext.get().taskAttemptId()}"
-          RowParquet.writeTask(stagingStr, confEntries, schemaB, seq, specIdx, uid, rows, rs)
-        }.collect()
-        finally unpersistAfterWrite.foreach(_.unpersist(false))
-      descs.zipWithIndex.foreach { case (d, i) =>
-        val src = new Path(staging, d.rel)
-        val partDirs = spec.map { pf =>
-          val v = d.partition(pf.name)
-          s"${pf.name}=${org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)}"
-        }
-        // the staging dir's UUID rides into the published name: task
-        // attempt ids restart per SparkContext, so two PROCESSES staging
-        // against the same observed seq would otherwise render identical
-        // destination paths — on local fs the loser's rename fails the
-        // whole commit; on an object store it could overwrite the
-        // winner's data (caught by ProcessSafetySpec's cross-JVM race)
-        val destRel = (Seq("data") ++ partDirs :+
-          s"s$seq-${staging.getName}-$i-${src.getName}").mkString("/")
-        val dest = new Path(root, destRel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(src, dest))
-          throw new IllegalStateException(s"commit failed moving ${d.rel}")
-        moved += ((destRel, dest, d.partition, -1L))
-        taskSums += dest.getName -> d.sums
-      }
-      fs.delete(staging, true)
-    } else {
-      val writer = arranged.write.mode("overwrite")
-      try (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer).parquet(staging.toString)
+    // partition columns were only needed to ARRANGE the rows; the writer
+    // renders them per row from the sources
+    val rows = arranged.select(userSchema.fieldNames.map(col).toIndexedSeq: _*).queryExecution.toRdd
+    val stagingRel = s"_staging/${UUID.randomUUID()}"
+    val writeSpec = LakeWriteSpec(location, stagingRel, seq, hadoopConfEntries, userSchema,
+      dataParts = spec.map(pf => (userSchema.fieldIndex(pf.source), pf.transform, pf.name)),
+      recordSums = ColumnSums.recordSums(spark))
+    val staged =
+      try LakeFileWriter.stage(rows, writeSpec)
       finally unpersistAfterWrite.foreach(_.unpersist(false))
-      val it = fs.listFiles(staging, true)
-      var i = 0
-      while (it.hasNext) {
-        val st = it.next()
-        val name = st.getPath.getName
-        if (name.endsWith(".parquet")) {
-          val rel = relativize(staging, st.getPath)
-          val dirs = rel.split('/').dropRight(1)
-          val partition = dirs.map { d =>
-            val Array(k, v) = d.split("=", 2)
-            // Hive-style %XX unescaping — the codec Spark's own writer used
-            // to produce the directory name. (java.net.URLDecoder is NOT
-            // that codec: it maps a literal '+' in a partition value to a
-            // space, recording a wrong value in the snapshot and letting
-            // PruneFilter.mayMatch falsely prune the file.)
-            k -> org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(v)
-          }.toMap
-          val destRel = (Seq("data") ++ dirs :+ s"s$seq-$i-$name").mkString("/")
-          val dest = new Path(root, destRel)
-          fs.mkdirs(dest.getParent)
-          if (!fs.rename(st.getPath, dest))
-            throw new IllegalStateException(s"commit failed moving $rel")
-          moved += ((destRel, dest, partition, st.getLen))
-          i += 1
-        }
-      }
-      fs.delete(staging, true)
-    }
-    val metaByPath = LakeTable.fileMetaAll(
-      moved.map(_._2).toSeq, spark.sparkContext.hadoopConfiguration, withLen = taskWritable,
-      spark = Some(spark))
-    val sumsByName =
-      if (taskWritable) taskSums
-      else ColumnSums.compute(spark, userSchema, moved.map(_._2).toSeq)
-    moved.map { case (destRel, dest, partition, len) =>
-      val fm = metaByPath(dest)
-      DataFile(destRel, seq, partition, if (len >= 0) len else fm.len,
-        splits = fm.splits, bounds = fm.bounds,
-        rows = fm.rows, nonNull = fm.nonNull,
-        sums = sumsByName.getOrElse(dest.getName, Map.empty))
-    }.toSeq
+    publishStaged(staged, stagingRel)._1
   }
 
   /** Stage + publish a commit's delete-key files. Typical CDC batches are
@@ -1421,44 +1318,78 @@ final class LakeTable private (
     * keep writing one global file — the old row's partition is unknowable
     * without reading the table. */
   private def writeDeleteFiles(keys: DataFrame, seq: Long, specVersion: Int): Seq[DeleteFile] = {
-    val staging = new Path(root, s"_staging/${UUID.randomUUID()}")
     val splits = spark.conf.getOption("spark.graft.lake.deleteSplits")
       .map(_.toInt).getOrElse(1).max(1)
+    val deduped = keys.distinct()
+    val arranged =
+      if (splits == 1) deduped.coalesce(1)
+      else deduped.repartition(splits, meta.primaryKey.map(col): _*)
     val spec = partitionSpec(specVersion)
     val scoped = spec.nonEmpty && spec.forall(pf => meta.primaryKey.contains(pf.source))
-    val deduped = keys.distinct().withColumn(DseqCol, lit(seq))
-    val derived =
-      if (scoped) spec.foldLeft(deduped)((d, pf) => d.withColumn(pf.name, pf.transform(col(pf.source))))
-      else deduped
-    val arranged =
-      if (splits == 1) derived.coalesce(1)
-      else derived.repartition(splits, meta.primaryKey.map(col): _*)
-    val writer = arranged.write.mode("overwrite")
-    (if (scoped) writer.partitionBy(spec.map(_.name): _*) else writer).parquet(staging.toString)
-    val out = ArrayBuffer.empty[DeleteFile]
-    val it = fs.listFiles(staging, true)
-    var i = 0
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet") && st.getLen > 0) {
-        val partition: Map[String, String] =
-          if (!scoped) Map.empty
-          else relativize(staging, st.getPath).split('/').dropRight(1).map { d =>
-            val Array(k, v) = d.split("=", 2)
-            k -> org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(v)
-          }.toMap
-        val destRel = s"deletes/d-$seq-$i-${st.getPath.getName}"
+    val stagingRel = s"_staging/${UUID.randomUUID()}"
+    val writeSpec = LakeWriteSpec(location, stagingRel, seq, hadoopConfEntries, new StructType(),
+      keySchema = arranged.schema,
+      keyParts = if (scoped) LakeFileWriter.bind(spec, arranged.schema).getOrElse(Nil) else Nil)
+    publishStaged(LakeFileWriter.stage(arranged.queryExecution.toRdd, writeSpec, deletes = true),
+      stagingRel)._2
+  }
+
+  /** Publish one staging job's files: move each into `data/` (under its
+    * partition directories, spec order) or `deletes/`, drop the staging
+    * dir, and return the manifest entries built from the stats the writer
+    * recorded. Published names are `s{seq}-{tag}-{i}-{staged name}` and
+    * `d-{seq}-{tag}-{i}-{staged name}`, `tag` being the staging dir's own
+    * fresh name: task attempt ids restart per SparkContext, so two
+    * PROCESSES staging against the same observed seq would otherwise
+    * render identical destination paths — on local fs the loser's rename
+    * fails the whole commit; on an object store it could overwrite the
+    * winner's data (caught by ProcessSafetySpec's cross-JVM race).
+    * `dataRel` relocates the data files (the changelog stream keeps its
+    * batch files inside its own staging namespace). A failed move rolls
+    * back the files this call already placed. */
+  private[graft] def publishStaged(
+      staged: Seq[StagedFile], stagingRel: String, dataRel: String = "data")
+      : (Seq[DataFile], Seq[DeleteFile]) = {
+    val tag = new Path(stagingRel).getName
+    val placed = ArrayBuffer.empty[String]
+    try {
+      val entries = staged.zipWithIndex.map { case (f, i) =>
+        val name = s"${f.seq}-$tag-$i-${new Path(f.rel).getName}"
+        val destRel =
+          if (f.isDelete) s"deletes/d-$name"
+          else (dataRel +: f.partition.map { case (k, v) =>
+            s"$k=${org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)}"
+          } :+ s"s$name").mkString("/")
         val dest = new Path(root, destRel)
         fs.mkdirs(dest.getParent)
-        if (!fs.rename(st.getPath, dest))
-          throw new IllegalStateException("commit failed moving delete file")
-        out += DeleteFile(destRel, seq, fs.getFileStatus(dest).getLen, partition)
-        i += 1
+        if (!fs.rename(new Path(root, f.rel), dest))
+          throw new IllegalStateException(s"${meta.name}: commit failed moving ${f.rel}")
+        placed += destRel
+        if (f.isDelete) Right(DeleteFile(destRel, f.seq, f.meta.len, f.partition.toMap))
+        else Left(DataFile(destRel, f.seq, f.partition.toMap, f.meta.len, rows = f.meta.rows,
+          splits = f.meta.splits, bounds = f.meta.bounds, nonNull = f.meta.nonNull, sums = f.sums))
       }
+      fs.delete(new Path(root, stagingRel), true)
+      (entries.collect { case Left(d) => d }, entries.collect { case Right(d) => d })
+    } catch {
+      case e: Throwable =>
+        discardPublished(placed.toSeq)
+        throw e
     }
-    fs.delete(staging, true)
-    if (out.isEmpty) throw new IllegalStateException("delete write produced no file")
-    out.toSeq
+  }
+
+  /** Best-effort delete of published files no snapshot references — a
+    * commit that failed after [[publishStaged]] rolls its files back. */
+  private[graft] def discardPublished(rels: Seq[String]): Unit =
+    rels.foreach(r => try fs.delete(new Path(root, r), false) catch { case _: Exception => })
+
+  /** The session's Hadoop conf (filesystem impls, credentials) as entries
+    * — the Configuration object itself is not serializable, and a bare
+    * `new Configuration()` in a task only reaches the default local fs.
+    * Shipped to every write and read task. */
+  private[graft] def hadoopConfEntries: Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    spark.sparkContext.hadoopConfiguration.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
   }
 
   /** Persist `s`: write manifests for what changed vs the parent, reuse
@@ -1618,7 +1549,6 @@ final class LakeTable private (
   /** Absolute path of a snapshot-relative file (used by the DSv2 source). */
   def abs(rel: String): String = new Path(root, rel).toString
 
-  private def relativize(base: Path, p: Path): String = LakeTable.relativize(base, p)
 
   private def readString(p: Path): String = {
     val in = fs.open(p)
@@ -1805,6 +1735,20 @@ object LakeTable extends org.apache.spark.internal.Logging {
   private val RnCol = "_graft_rn"
   private val RowIdCol = "_graft_rowid"
 
+  /** Refuse transform/source-type pairs outside the Iceberg transform
+    * table ([[Transform.accepts]]): year/month/day need a date/timestamp
+    * source, truncate a string, identity an atomic type. */
+  private def requireTransformTypes(
+      table: String, schema: StructType, spec: Seq[PartitionField]): Unit =
+    spec.foreach { pf =>
+      schema.fields.find(_.name == pf.source).foreach { f =>
+        if (!pf.transform.accepts(f.dataType))
+          throw new IllegalArgumentException(
+            s"$table: partition transform ${pf.transform.name} does not apply to column " +
+              s"${f.name} of type ${f.dataType.sql}")
+      }
+    }
+
   /** CREATE TABLE: writes the immutable definition, schema v1, and an empty
     * snapshot 0 (S12). */
   def create(
@@ -1822,6 +1766,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     (schema.fieldNames ++ partitionSpec.map(_.name)).foreach(n =>
       require(!isReservedName(n.toLowerCase(java.util.Locale.ROOT)),
         s"$name: $n is reserved — the _graft namespace belongs to derived storage columns"))
+    requireTransformTypes(name, schema, partitionSpec)
     if (clusterStrategy == "range") {
       require(clusterBy.nonEmpty, "range clustering needs cluster_by columns")
       clusterBy.foreach(c => require(schema.fieldNames.contains(c),
@@ -1861,102 +1806,19 @@ object LakeTable extends org.apache.spark.internal.Logging {
     t
   }
 
-  /** Per-file footer metadata recorded once at commit: length, row-group
-    * byte ranges (Iceberg's `split_offsets`), column bounds (Iceberg's
-    * lower/upper_bounds) and row count (Iceberg's `record_count`) — read
-    * planning never reopens footers. */
-  private[graft] final case class FileMeta(
-      len: Long, splits: Seq[(Long, Long)], bounds: Map[String, ColBound], rows: Long,
-      nonNull: Map[String, Long] = Map.empty)
-
-  /** One footer open serving splits, bounds, non-null counts AND the row
-    * count. */
-  private[graft] def readFooterMeta(
-      p: Path, conf: org.apache.hadoop.conf.Configuration)
-      : (Seq[(Long, Long)], Map[String, ColBound], Long, Map[String, Long]) = {
-    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-    try {
-      import scala.jdk.CollectionConverters._
-      val groups = rd.getRowGroups.asScala.toSeq
-      val (bounds, nonNull) = ColumnBounds.statsFromFooter(rd)
-      (groups.map(b => (b.getStartingPos, b.getCompressedSize)),
-        bounds,
-        groups.map(_.getRowCount).sum,
-        nonNull)
-    } finally rd.close()
-  }
-
-  /** Below this many files, footer stats are read on the driver (pooled);
-    * at or above it — a 10^5-file append from a big cluster write — the
-    * reads run as a Spark job so the commit critical section stays
-    * O(files / executors), not O(files / 8 driver threads). */
-  private[graft] def statsDistributeMinFiles(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.lake.statsDistributeMinFiles")
-      .map(_.toInt).getOrElse(512)
-
-  /** Observable for specs: number of DISTRIBUTED footer-stat jobs run. */
-  private[graft] val distributedStatJobs = new java.util.concurrent.atomic.AtomicLong
-
-  /** Parallel FileMeta per file — the single footer/stat reader of the
-    * commit paths and the changelog stream's staged files (footer reads
-    * for a batch of files, parallelized: a big append can publish
-    * thousands of files and a serial loop would stretch the commit
-    * critical section by O(files) round-trips). Small batches use a driver
-    * thread pool; batches of `statsDistributeMinFiles`+ files distribute
-    * as a Spark job over the executors (when a session is supplied). */
-  private[graft] def fileMetaAll(
-      paths: Seq[Path],
-      conf: org.apache.hadoop.conf.Configuration,
-      withLen: Boolean = true,
-      spark: Option[SparkSession] = None): Map[Path, FileMeta] = {
-    if (paths.isEmpty) return Map.empty
-    spark match {
-      case Some(s) if paths.size >= statsDistributeMinFiles(s) =>
-        fileMetaDistributed(s, paths, conf, withLen)
-      case _ =>
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(8, paths.size))
-        try {
-          paths.map { p =>
-            p -> pool.submit(new java.util.concurrent.Callable[FileMeta] {
-              def call(): FileMeta = {
-                val len = if (withLen) p.getFileSystem(conf).getFileStatus(p).getLen else -1L
-                val (splits, bounds, rows, nonNull) = readFooterMeta(p, conf)
-                FileMeta(len, splits, bounds, rows, nonNull)
-              }
-            })
-          }.map { case (p, f) => p -> f.get() }.toMap
-        } finally pool.shutdown()
+  /** `s` with every field, array element and map value nullable — the
+    * shape `spark.read` forces on a user-specified file-source schema and
+    * the shape the lake writer stores. */
+  private[graft] def nullableSchema(s: StructType): StructType = {
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType}
+    def loose(dt: DataType): DataType = dt match {
+      case st: StructType => nullableSchema(st)
+      case a: ArrayType => a.copy(elementType = loose(a.elementType), containsNull = true)
+      case m: MapType =>
+        m.copy(keyType = loose(m.keyType), valueType = loose(m.valueType), valueContainsNull = true)
+      case other => other
     }
-  }
-
-  /** Footer stats as a Spark job: ship the hadoop conf as entries (the
-    * Configuration object itself is not serializable), one task per slice
-    * of files, each opening only its own footers. */
-  private def fileMetaDistributed(
-      spark: SparkSession,
-      paths: Seq[Path],
-      conf: org.apache.hadoop.conf.Configuration,
-      withLen: Boolean): Map[Path, FileMeta] = {
-    import scala.jdk.CollectionConverters._
-    distributedStatJobs.incrementAndGet()
-    val confEntries: Array[(String, String)] =
-      conf.iterator().asScala.map(e => e.getKey -> e.getValue).toArray
-    val strs = paths.map(_.toString)
-    val slices = math.max(1, math.min(strs.size,
-      spark.sparkContext.defaultParallelism * 2))
-    spark.sparkContext.parallelize(strs, slices)
-      .mapPartitions { it =>
-        val c = new org.apache.hadoop.conf.Configuration(false)
-        confEntries.foreach { case (k, v) => c.set(k, v) }
-        it.map { s =>
-          val p = new Path(s)
-          val len = if (withLen) p.getFileSystem(c).getFileStatus(p).getLen else -1L
-          val (splits, bounds, rows, nonNull) = readFooterMeta(p, c)
-          s -> FileMeta(len, splits, bounds, rows, nonNull)
-        }
-      }
-      .collect().iterator.map { case (s, fm) => new Path(s) -> fm }.toMap
+    StructType(s.fields.map(f => f.copy(dataType = loose(f.dataType), nullable = true)))
   }
 
   private[lake] def relativize(base: Path, p: Path): String = {

@@ -35,20 +35,20 @@ final case class DataFile(
     bytes: Long,
     rows: Long,
     splits: Seq[(Long, Long)] = Nil,
-    /** Per-column value bounds (Iceberg's lower/upper_bounds), captured
-      * from footer stats at commit; a column whose footer carries no usable
-      * statistics is absent and cannot stats-skip. */
+    /** Per-column value bounds (Iceberg's lower/upper_bounds), taken from
+      * the writer's own footer stats ([[FileMeta]]); a column whose footer
+      * carries no usable statistics is absent and cannot stats-skip. */
     bounds: Map[String, ColBound] = Map.empty,
     /** Per-column NON-NULL value counts (Iceberg's `value_counts` minus
-      * `null_value_counts`), captured from footer statistics at commit —
-      * zero extra I/O. Serves metadata-only COUNT(col); a column absent
+      * `null_value_counts`), taken from the writer's own footer
+      * statistics — zero extra I/O. Serves metadata-only COUNT(col); a column absent
       * from the map has unknown counts (its footer dropped the null
       * count) and declines. */
     nonNull: Map[String, Long] = Map.empty,
-    /** Per-column EXACT value sums as plain decimal strings, computed by
-      * one column-pruned read-back job at commit time ([[ColumnSums]]) for
-      * integral and decimal columns only (double sums are order-dependent
-      * and never recorded). A column with `nonNull > 0` but no sum entry
+    /** Per-column EXACT value sums as plain decimal strings, folded by the
+      * write task as rows pass ([[LakeFileWriter.FileSums]]) for integral
+      * and decimal columns only (double sums are order-dependent and never
+      * recorded; see [[ColumnSums]]). A column with `nonNull > 0` but no sum entry
       * declines; `nonNull == 0` needs no entry (an all-null column sums to
       * NULL). Serves metadata-only SUM/AVG. */
     sums: Map[String, String] = Map.empty)

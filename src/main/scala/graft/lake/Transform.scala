@@ -2,6 +2,7 @@ package graft.lake
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
@@ -27,6 +28,12 @@ sealed trait Transform {
 
   /** Derive the partition column from the source column. */
   def apply(source: Column): Column
+
+  /** Whether this transform applies to a source column of type `dt` — the
+    * Iceberg transform table (https://iceberg.apache.org/spec/#partition-transforms)
+    * as far as this format implements it. Table creation and spec
+    * evolution refuse any other pair. */
+  def accepts(dt: DataType): Boolean
 
   /** Render a raw-column literal as the partition-value string, or None if
     * this transform cannot map the literal (then no pruning happens). */
@@ -62,6 +69,12 @@ object Transform {
   case object Identity extends Transform {
     val name = "identity"
     def apply(source: Column): Column = source
+    def accepts(dt: DataType): Boolean = dt match {
+      case BooleanType | ByteType | ShortType | IntegerType | LongType | FloatType |
+           DoubleType | _: DecimalType | _: StringType | BinaryType | DateType |
+           TimestampType | TimestampNTZType => true
+      case _ => false
+    }
     // Temporal literals are NOT rendered: the writer's partition directory
     // uses Spark's cast-to-string form ("yyyy-MM-dd HH:mm:ss[.S]"), which
     // this side cannot reproduce exactly across fractional-second shapes —
@@ -72,6 +85,10 @@ object Transform {
       case null => Some(PartitionValues.NullSentinel)
       case _: java.sql.Timestamp | _: java.sql.Date | _: Instant |
            _: LocalDate | _: LocalDateTime => None
+      // binary has no stable string form; a decimal literal's scale need
+      // not be the column's ("1.5" vs the rendered "1.50") — rangeCompare
+      // still compares decimals numerically
+      case _: Array[Byte] | _: java.math.BigDecimal | _: BigDecimal => None
       case other => Some(other.toString)
     }
     // identity over numbers renders without fixed width, so lexicographic
@@ -108,6 +125,7 @@ object Transform {
   case object Year extends Transform {
     val name = "year"
     def apply(source: Column): Column = date_format(source, "yyyy")
+    def accepts(dt: DataType): Boolean = temporalType(dt)
     def valueOf(literal: Any): Option[String] = temporal(literal).map(_.format(Y))
     val orderPreserving = true
   }
@@ -117,6 +135,7 @@ object Transform {
   case object Month extends Transform {
     val name = "month"
     def apply(source: Column): Column = date_format(source, "yyyy-MM")
+    def accepts(dt: DataType): Boolean = temporalType(dt)
     def valueOf(literal: Any): Option[String] = temporal(literal).map(_.format(YM))
     val orderPreserving = true
   }
@@ -125,6 +144,7 @@ object Transform {
   case object Day extends Transform {
     val name = "day"
     def apply(source: Column): Column = date_format(source, "yyyy-MM-dd")
+    def accepts(dt: DataType): Boolean = temporalType(dt)
     def valueOf(literal: Any): Option[String] = temporal(literal).map(_.format(YMD))
     val orderPreserving = true
   }
@@ -134,6 +154,7 @@ object Transform {
   final case class Bucket(n: Int) extends Transform {
     val name = s"bucket[$n]"
     def apply(source: Column): Column = pmod(hash(source), lit(n)).cast("string")
+    def accepts(dt: DataType): Boolean = true
     // Literal bucketing needs the source column's exact Catalyst TYPE to
     // hash (Murmur3 is type-dependent) and PruneFilter literals arrive
     // type-erased, so metadata pruning stays off; the residual filter
@@ -152,7 +173,7 @@ object Transform {
     * partitioned-join key-grouping derive the same bucket for the same
     * key. `value` is the Catalyst-internal representation (UTF8String for
     * strings, micros for timestamps). */
-  def bucketOf(n: Int, value: Any, dt: org.apache.spark.sql.types.DataType): Int = {
+  def bucketOf(n: Int, value: Any, dt: DataType): Int = {
     val h: Long =
       if (value == null) 42L
       else org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction.hash(value, dt, 42L)
@@ -163,6 +184,8 @@ object Transform {
   final case class Truncate(w: Int) extends Transform {
     val name = s"truncate[$w]"
     def apply(source: Column): Column = substring(source, 1, w)
+    def accepts(dt: DataType): Boolean =
+      dt.isInstanceOf[StringType]
     // truncate by CODE POINTS, matching Spark's substring (UTF8String
     // counts code points) — String.take counts UTF-16 units and would
     // render a different prefix for supplementary characters (splitting a
@@ -186,6 +209,9 @@ object Transform {
     case t if t.startsWith("truncate[") => Truncate(t.stripPrefix("truncate[").stripSuffix("]").toInt)
     case other => throw new IllegalArgumentException(s"unknown transform: $other")
   }
+
+  private def temporalType(dt: DataType): Boolean =
+    dt == DateType || dt == TimestampType || dt == TimestampNTZType
 
   private val Y   = DateTimeFormatter.ofPattern("yyyy")
   private val YM  = DateTimeFormatter.ofPattern("yyyy-MM")

@@ -1,23 +1,13 @@
 package graft.sources
 
-import graft.lake.{DataFile, DeleteFile, LakeTable, Snapshot, Transform}
-import org.apache.hadoop.conf.Configuration
+import graft.lake.{ColumnSums, LakeFileWriter, LakeTable, LakeWriteSpec, Snapshot}
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.schema.MessageType
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.util.UUID
-import scala.collection.mutable
 
 /** MERGE-ON-READ SQL UPDATE / MERGE INTO / DELETE — Spark's DELTA-based
   * row-level framework ([[SupportsDelta]]), matching the reference's
@@ -163,98 +153,26 @@ private[sources] class GraftLakeDeltaBatchWrite(
     val rowIdSchema = winfo.rowIdSchema().orElseThrow(() =>
       new IllegalStateException("delta write without a rowId schema"))
     val spec = t.partitionSpec(snap.specVersion)
-    val dataSpec: Seq[(Int, graft.lake.Transform, String)] =
+    val dataParts =
       if (rowSchema.isEmpty) Nil
-      else spec.map { pf =>
-        val idx = rowSchema.fields.indexWhere(_.name.equalsIgnoreCase(pf.source))
-        require(idx >= 0, s"partition source ${pf.source} missing from delta write schema")
-        (idx, pf.transform, pf.name)
-      }
-    // delete-sidecar partition scoping: every source must be a rowId
-    // column; else sidecars are global (bucket renders JVM-side via
-    // Transform.bucketOf, same as every other transform)
-    val deleteSpec: Option[Seq[(Int, graft.lake.Transform, String)]] = {
-      val resolved = spec.map { pf =>
-        val idx = rowIdSchema.fields.indexWhere(_.name.equalsIgnoreCase(pf.source))
-        if (idx < 0) None
-        else Some((idx, pf.transform, pf.name))
-      }
-      if (spec.nonEmpty && resolved.forall(_.isDefined)) Some(resolved.flatten) else None
-    }
-    val hadoopConf: Map[String, String] = {
-      val it = t.spark.sparkContext.hadoopConfiguration.iterator()
-      val b = Map.newBuilder[String, String]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
-      b.result()
-    }
-    GraftLakeDeltaWriterFactory(
-      location = t.location,
-      stagingRel = stagingRel,
-      rowSchema = rowSchema,
-      rowIdSchema = rowIdSchema,
-      writeSeq = snap.seq + 1,
-      dataSpec = dataSpec,
-      deleteSpec = deleteSpec,
-      hadoopConf = hadoopConf,
-      recordSums = graft.lake.ColumnSums.recordSums(t.spark))
+      else LakeFileWriter.bind(spec, rowSchema).getOrElse(throw new IllegalArgumentException(
+        s"partition sources ${spec.map(_.source).mkString(", ")} missing from delta write schema"))
+    // delete-key partition scoping: every source must be a rowId column,
+    // else one global delete file per task
+    val keyParts = LakeFileWriter.bind(spec, rowIdSchema).getOrElse(Nil)
+    GraftLakeWriterFactory(LakeWriteSpec(t.location, stagingRel, snap.seq + 1,
+      t.hadoopConfEntries, rowSchema, dataParts, ColumnSums.recordSums(t.spark),
+      keySchema = rowIdSchema, keyParts = keyParts))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val msgs = messages.map(_.asInstanceOf[GraftLakeDeltaCommitMessage])
-    val stagedData = msgs.flatMap(_.data)
-    val stagedDels = msgs.flatMap(_.deletes)
-    if (stagedData.isEmpty && stagedDels.isEmpty) return // matched nothing: no-op
-    val conf = t.spark.sparkContext.hadoopConfiguration
-    val root = new Path(t.location)
-    val fs = root.getFileSystem(conf)
-    val moved = mutable.ListBuffer.empty[Path]
-    val commitTag = stagingRel.stripPrefix("_staging/")
-    try {
-      val placedData = stagedData.zipWithIndex.map { case (f, i) =>
-        val src = new Path(root, f.stagedRel)
-        val partDirs = f.partition.toSeq.sortBy(_._1).map { case (k, v) =>
-          s"$k=${org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)}"
-        }
-        // staging UUID in the published name: task ids restart per
-        // SparkContext, so two PROCESSES staging deltas against the same
-        // observed seq would otherwise render identical destination paths
-        // (ProcessSafetySpec's cross-JVM finding, applied to all writers)
-        val destRel = (Seq("data") ++ partDirs :+
-          s"s${f.seq}-${commitTag}-$i-${src.getName}").mkString("/")
-        val dest = new Path(root, destRel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(src, dest))
-          throw new IllegalStateException(s"delta commit failed moving ${f.stagedRel}")
-        moved += dest
-        (f, destRel, dest)
-      }
-      val placedDels = stagedDels.zipWithIndex.map { case (f, i) =>
-        val src = new Path(root, f.stagedRel)
-        val destRel = s"deletes/d-${f.seq}-${commitTag}-$i-${src.getName}"
-        val dest = new Path(root, destRel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(src, dest))
-          throw new IllegalStateException(s"delta commit failed moving ${f.stagedRel}")
-        moved += dest
-        (f, destRel, dest)
-      }
-      fs.delete(new Path(root, stagingRel), true)
-      // sums arrived IN the commit messages — folded by the write tasks
-      // as rows passed, zero read-back I/O
-      val metaByPath = LakeTable.fileMetaAll(placedData.map(_._3).toSeq, conf,
-        spark = Some(t.spark))
-      val dataEntries = placedData.map { case (f, destRel, dest) =>
-        val fm = metaByPath(dest)
-        DataFile(destRel, f.seq, f.partition, fm.len, splits = fm.splits, bounds = fm.bounds,
-          rows = fm.rows, nonNull = fm.nonNull, sums = f.sums)
-      }
-      val delEntries = placedDels.map { case (f, destRel, dest) =>
-        DeleteFile(destRel, f.seq, fs.getFileStatus(dest).getLen, f.partition)
-      }
-      t.commitStagedDelta(dataEntries.toSeq, delEntries.toSeq, opName, expectedBase = snap.seq)
-    } catch {
+    val staged = messages.toSeq.flatMap(_.asInstanceOf[GraftLakeCommitMessage].files)
+    if (staged.isEmpty) return // matched nothing: no-op
+    val (dataEntries, delEntries) = t.publishStaged(staged, stagingRel)
+    try t.commitStagedDelta(dataEntries, delEntries, opName, expectedBase = snap.seq)
+    catch {
       case e: Throwable =>
-        moved.foreach(p => try fs.delete(p, false) catch { case _: Exception => })
+        t.discardPublished(dataEntries.map(_.path) ++ delEntries.map(_.path))
         throw e
     }
   }
@@ -264,95 +182,4 @@ private[sources] class GraftLakeDeltaBatchWrite(
     val fs = root.getFileSystem(t.spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(root, stagingRel), true)
   }
-}
-
-private[sources] case class StagedDeleteFile(
-    stagedRel: String, seq: Long, partition: Map[String, String])
-
-private[sources] case class GraftLakeDeltaCommitMessage(
-    data: Seq[StagedFile], deletes: Seq[StagedDeleteFile])
-    extends WriterCommitMessage
-
-private[sources] case class GraftLakeDeltaWriterFactory(
-    location: String,
-    stagingRel: String,
-    rowSchema: StructType,
-    rowIdSchema: StructType,
-    writeSeq: Long,
-    dataSpec: Seq[(Int, graft.lake.Transform, String)],
-    deleteSpec: Option[Seq[(Int, graft.lake.Transform, String)]],
-    hadoopConf: Map[String, String],
-    recordSums: Boolean = true) extends DeltaWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new GraftLakeDeltaWriterImpl(this, partitionId, taskId)
-}
-
-/** One delta writer per task: re-inserted rows go through the standard
-  * staged data-file writer; deleted identities go to one delete-key
-  * sidecar per (scoped) partition tuple, stamped `_graft_dseq = writeSeq`. */
-private[sources] class GraftLakeDeltaWriterImpl(
-    f: GraftLakeDeltaWriterFactory, partitionId: Int, taskId: Long)
-    extends DeltaWriter[InternalRow] {
-
-  private val conf = {
-    val c = new Configuration(false)
-    f.hadoopConf.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-
-  // insert side: the standard data writer (rows arrive as clean
-  // projections of rowSchema — no marker-column offset)
-  private lazy val dataWriter = new GraftLakeDataWriter(
-    GraftLakeWriterFactory(f.location, s"${f.stagingRel}/ins", f.rowSchema, f.writeSeq,
-      f.dataSpec, f.hadoopConf, f.recordSums),
-    partitionId, taskId)
-  private var wroteData = false
-
-  // delete side: pk columns + _graft_dseq, one sidecar per partition tuple
-  private val delParquetSchema: MessageType =
-    GraftLakeWrite.toParquetSchema(f.rowIdSchema, LakeTable.DseqCol)
-  private val delGroupFactory = new SimpleGroupFactory(delParquetSchema)
-  private val delWriters =
-    mutable.Map.empty[Map[String, String], ParquetWriter[Group]]
-  private val delStaged = mutable.ListBuffer.empty[StagedDeleteFile]
-
-  override def insert(row: InternalRow): Unit = { wroteData = true; dataWriter.write(row) }
-
-  override def delete(meta: InternalRow, id: InternalRow): Unit = {
-    val partition: Map[String, String] = f.deleteSpec match {
-      case Some(spec) => spec.map { case (srcIdx, tr, name) =>
-        name -> GraftLakeWrite.renderPartition(
-          tr, id, srcIdx, f.rowIdSchema.fields(srcIdx).dataType)
-      }.toMap
-      case None => Map.empty
-    }
-    val w = delWriters.getOrElseUpdate(partition, {
-      val rel = s"${f.stagingRel}/del/p$partitionId-t$taskId-${delWriters.size}.parquet"
-      val path = new Path(new Path(f.location), rel)
-      delStaged += StagedDeleteFile(rel, f.writeSeq, partition)
-      graft.lake.RowParquet.openWriter(path, conf, delParquetSchema)
-    })
-    w.write(GraftLakeWrite.toGroup(
-      delGroupFactory, f.rowIdSchema, id, f.writeSeq, 0, LakeTable.DseqCol))
-  }
-
-  override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit =
-    throw new IllegalStateException(
-      "updates are represented as delete + insert (representUpdateAsDeleteAndInsert)")
-
-  override def commit(): WriterCommitMessage = {
-    val dataMsg =
-      if (wroteData) dataWriter.commit().asInstanceOf[GraftLakeCommitMessage].files
-      else Nil
-    delWriters.values.foreach(_.close())
-    GraftLakeDeltaCommitMessage(dataMsg, delStaged.toList)
-  }
-
-  override def abort(): Unit = {
-    if (wroteData) dataWriter.abort()
-    delWriters.values.foreach(w => try w.close() catch { case _: Exception => })
-  }
-
-  override def close(): Unit = ()
 }

@@ -104,12 +104,6 @@ object GraftLakeSource {
   /** Changelog-read label column: insert | update | delete. */
   val ChangeTypeCol = "_change_type"
 
-  /** The session's hadoop conf (filesystem impls, credentials) as shipped
-    * to readers — a bare `new Configuration()` only reaches the default
-    * local fs. */
-  private[sources] def hadoopConfOf(t: LakeTable): Map[String, String] =
-    t.spark.sparkContext.hadoopConfiguration.asScala.map(e => e.getKey -> e.getValue).toMap
-
   /** Data files → one InputPartition per row group, from the recorded
     * split offsets alone (pure metadata). Shared by the batch and
     * streaming planners. */
@@ -706,7 +700,7 @@ private[sources] class GraftLakeDeleteKeysScan(
       .toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftLakeReaderFactory(keySchema, GraftLakeSource.hadoopConfOf(t))
+    GraftLakeReaderFactory(keySchema, t.hadoopConfEntries)
 }
 
 private[sources] class GraftLakeScan(
@@ -980,7 +974,7 @@ private[sources] class GraftLakeScan(
           .map(f => ParquetPushdown.physicalKey(f.dataType)))
       keys.distinct.size <= 1
     }
-    GraftLakeReaderFactory(required, GraftLakeSource.hadoopConfOf(t),
+    GraftLakeReaderFactory(required, t.hadoopConfEntries,
       ParquetPushdown.build(tableSchema, dataFilters, physicallyStable))
   }
 }
@@ -1092,7 +1086,7 @@ private[sources] class GraftLakeMicroBatchStream(
 
   // append-only ranges carry no delete files by construction
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftLakeReaderFactory(required, GraftLakeSource.hadoopConfOf(t))
+    GraftLakeReaderFactory(required, t.hadoopConfEntries)
 }
 
 private[sources] class GraftLakeChangelogScanBuilder(
@@ -1127,11 +1121,13 @@ private[sources] class GraftLakeChangelogScan(
   * inserts against the pre-range base), and a DSv2 stream must hand Spark
   * InputPartitions — so each batch materializes its delta set once to a
   * staging directory under the table (`_staging/changelog-*`, the
-  * orphan-swept namespace) as a DISTRIBUTED write, then plans ordinary
-  * parquet splits over it. Per batch that costs one extra write+read of
-  * the delta rows — O(changed rows), never O(table) — on top of the join
-  * `changes` itself plans; committed batches delete their staging
-  * eagerly, crashes leave them to [[graft.lake.Maintenance.removeOrphans]].
+  * orphan-swept namespace) as a DISTRIBUTED write through
+  * [[graft.lake.LakeFileWriter]], then plans ordinary parquet splits over
+  * it from the stats the writer recorded. Per batch that costs one extra
+  * write+read of the delta rows — O(changed rows), never O(table) — on
+  * top of the join `changes` itself plans; committed batches delete their
+  * staging eagerly, crashes leave them to
+  * [[graft.lake.Maintenance.removeOrphans]].
   *
   * APPEND-ONLY ranges skip the staging round-trip entirely: when every
   * snapshot in the range is append-shaped the delta IS the range's new
@@ -1156,13 +1152,12 @@ private[sources] class GraftLakeChangelogMicroBatchStream(
 
   private val Bootstrap = -1L
   @volatile private var pinnedEnd: Option[Long] = None
-  /** Per-stream staging root; batch dirs underneath are DETERMINISTIC in
-    * (start, end) — planInputPartitions can be invoked more than once per
-    * micro-batch, and a re-stage must overwrite, not leak. */
+  /** Per-stream staging root; one batch dir underneath per (start, end). */
   private val streamStagingRel = s"_staging/changelog-${java.util.UUID.randomUUID()}"
-  /** Staged delta dirs by batch (start, end), for eager cleanup. */
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Long), String]()
+  /** Staged delta dir and files by batch (start, end), for re-plans and
+    * eager cleanup. */
+  private val staged = new java.util.concurrent.ConcurrentHashMap[
+    (Long, Long), (String, Seq[graft.lake.DataFile])]()
 
   override def prepareForTriggerAvailableNow(): Unit = { pinnedEnd = Some(t.currentSeq) }
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
@@ -1226,28 +1221,21 @@ private[sources] class GraftLakeChangelogMicroBatchStream(
         t.scan(asOf = Some(e)).withColumn(GraftLakeSource.ChangeTypeCol, lit("insert"))
       else
         t.changes(s0, e) // validates that the range is replayable
-    val rel = s"$streamStagingRel/b$s0-$e"
-    val out = t.abs(rel)
-    val fs = new Path(out).getFileSystem(t.spark.sparkContext.hadoopConfiguration)
     // idempotent re-plan: Spark may call planInputPartitions more than
-    // once per micro-batch — a completed staging (its _SUCCESS marker) is
-    // REUSED, because a rewrite would rename the part files out from under
-    // splits the earlier call already handed to the scheduler
-    if (!fs.exists(new Path(new Path(out), "_SUCCESS")))
-      delta.select(outSchema.fieldNames.map(col).toIndexedSeq: _*)
-        .write.mode("overwrite").parquet(out)
-    staged.put((s0, e), rel)
-    // staged files are planned like committed ones: one footer pass
-    // records their split offsets and row counts
-    val parts = fs.listStatus(new Path(out)).toSeq
-      .filter(st => st.getPath.getName.endsWith(".parquet") && st.getLen > 0)
-    val metas = LakeTable.fileMetaAll(parts.map(_.getPath),
-      t.spark.sparkContext.hadoopConfiguration, withLen = false, spark = Some(t.spark))
-    val files = parts.map { st =>
-      val fm = metas(st.getPath)
-      graft.lake.DataFile(s"$rel/${st.getPath.getName}", e, Map.empty, st.getLen,
-        rows = fm.rows, splits = fm.splits)
-    }
+    // once per micro-batch — a staged batch is REUSED, because a rewrite
+    // would replace the files under splits the earlier call already handed
+    // to the scheduler
+    val (_, files) = staged.computeIfAbsent((s0, e), _ => {
+      val rel = s"$streamStagingRel/b$s0-$e"
+      val out = delta.select(outSchema.fieldNames.map(col).toIndexedSeq: _*)
+      val stagingRel = s"$rel/${java.util.UUID.randomUUID()}"
+      val spec = graft.lake.LakeWriteSpec(t.location, stagingRel, e, t.hadoopConfEntries,
+        out.schema, recordSums = false)
+      // staged files are planned like committed ones, from the split
+      // offsets and row counts their writer recorded
+      (rel, t.publishStaged(graft.lake.LakeFileWriter.stage(out.queryExecution.toRdd, spec),
+        stagingRel, dataRel = rel)._1)
+    })
     GraftLakeSource.planFileSplits(t, files)
   }
 
@@ -1256,14 +1244,15 @@ private[sources] class GraftLakeChangelogMicroBatchStream(
   // those splits (the split type carries the decision); staged splits
   // carry the real column
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftLakeReaderFactory(outSchema, GraftLakeSource.hadoopConfOf(t),
+    GraftLakeReaderFactory(outSchema, t.hadoopConfEntries,
       missingDefaults = Map(GraftLakeSource.ChangeTypeCol -> UTF8String.fromString("insert")))
 
   override def commit(end: Offset): Unit = {
     val e = end.asInstanceOf[GraftLakeOffset].seq
     val fs = new Path(t.location).getFileSystem(t.spark.sparkContext.hadoopConfiguration)
-    staged.forEach { (k, rel) =>
+    staged.forEach { (k, v) =>
       if (k._2 <= e) {
+        val rel = v._1
         try fs.delete(new Path(t.abs(rel)), true) catch { case _: Exception => () }
         staged.remove(k)
       }

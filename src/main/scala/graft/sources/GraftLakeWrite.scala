@@ -1,42 +1,28 @@
 package graft.sources
 
-import graft.lake.{DataFile, LakeTable, Transform}
-import org.apache.hadoop.conf.Configuration
+import graft.lake.{ColumnSums, LakeFileWriter, LakeTable, LakeWriteSpec, StagedFile}
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
-import java.time.{Instant, LocalDateTime, ZoneOffset}
 import java.util.UUID
-import scala.collection.mutable
 
 /** DataSourceV2 WRITE path (append) for graft lake tables — the
   * distributed two-phase commit: each task writes its rows as staged
-  * parquet files (one per partition value it sees, via the public
-  * parquet-column Group API), reports them in its commit message, and the
-  * driver moves the staged files into `data/` and commits one snapshot
-  * through the same optimistic-retry protocol the DataFrame-API writer
-  * uses. Rows embed the planning-time `currentSeq + 1` as their commit
-  * seq — a rebase can only RAISE the final seq, which keeps appended rows
-  * conservatively old relative to tombstones (see
-  * `LakeTable.commitAppendWithRetry`).
+  * parquet files through the lake's one [[graft.lake.LakeFileWriter]] (one
+  * file per partition tuple it sees, stats from the writer's own footer),
+  * reports them in its commit message, and the driver publishes them
+  * ([[LakeTable.publishStaged]]) and commits one snapshot through the same
+  * optimistic-retry protocol the imperative writer uses. Rows embed the
+  * planning-time `currentSeq + 1` as their commit seq — a rebase can only
+  * RAISE the final seq, which keeps appended rows conservatively old
+  * relative to tombstones (see `LakeTable.commitAppendWithRetry`).
   *
-  * Partition transforms are rendered per row on the executor from the raw
-  * primitive values (month/day/year from epoch micros, identity/truncate
-  * from the value, `bucket[n]` via the shared Murmur3 derivation
-  * [[graft.lake.Transform.bucketOf]] — bit-identical to the engine-side
-  * `pmod(hash(col), n)` since r18, so every write route may partition on
-  * buckets). The parsed [[graft.lake.Transform]] ships in the factory —
-  * the per-row work never re-parses a transform name.
+  * Partition transforms are rendered per row on the executor by the
+  * writer (identity through Catalyst's cast to string, month/day/year
+  * from the raw value, `bucket[n]` via the shared Murmur3 derivation
+  * [[graft.lake.Transform.bucketOf]]), identically on every write route.
   */
 /** Append by default; `INSERT OVERWRITE` / truncate arrive through
   * SupportsOverwrite with the always-true filter and commit a full
@@ -153,68 +139,19 @@ private[sources] class GraftLakeBatchWrite(
     require(t.schemaEraOf(schema, snap.schemaVersion).isDefined,
       s"write schema ${schema.simpleString} does not match table " +
         s"${tableSchema.simpleString} or any earlier schema era")
-    val spec = t.partitionSpec(snap.specVersion).map { pf =>
-      val idx = schema.fields.indexWhere(_.name.equalsIgnoreCase(pf.source))
-      require(idx >= 0, s"partition source ${pf.source} missing from write schema")
-      (idx, pf.transform, pf.name)
-    }
-    val hadoopConf = t.spark.sparkContext.hadoopConfiguration
-      .asScala.map(e => e.getKey -> e.getValue).toMap
-    GraftLakeWriterFactory(
-      location = t.location,
-      stagingRel = stagingRel,
-      schema = schema,
-      writeSeq = snap.seq + 1,
-      partitionSpec = spec,
-      hadoopConf = hadoopConf,
-      recordSums = graft.lake.ColumnSums.recordSums(t.spark))
+    val spec = t.partitionSpec(snap.specVersion)
+    val parts = LakeFileWriter.bind(spec, schema).getOrElse(throw new IllegalArgumentException(
+      s"partition sources ${spec.map(_.source).mkString(", ")} missing from write schema"))
+    GraftLakeWriterFactory(LakeWriteSpec(t.location, stagingRel, snap.seq + 1,
+      t.hadoopConfEntries, schema, parts, ColumnSums.recordSums(t.spark)))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val staged = messages.flatMap(_.asInstanceOf[GraftLakeCommitMessage].files)
-    val conf = t.spark.sparkContext.hadoopConfiguration
-    val root = new Path(t.location)
-    val fs = root.getFileSystem(conf)
-    // track published destinations so a failure anywhere before the
-    // snapshot commit can roll them back — without this, files already
-    // moved into data/ would leak unreferenced (abort only clears staging)
-    val moved = mutable.ListBuffer.empty[Path]
+    val staged = messages.toSeq.flatMap(_.asInstanceOf[GraftLakeCommitMessage].files)
+    // a failure anywhere before the snapshot commit rolls the published
+    // files back — abort only clears staging
+    val (entries, _) = t.publishStaged(staged, stagingRel)
     try {
-      val placed = staged.zipWithIndex.map { case (f, i) =>
-        val src = new Path(root, f.stagedRel)
-        val partDirs = f.partition.toSeq.sortBy(_._1)
-          // Hive-style escaping, matching the DataFrame-API writer's
-          // directory layout for the same value (URLEncoder's '+'-for-space
-          // diverges and corrupts round-trips)
-          .map { case (k, v) =>
-            s"$k=${org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)}"
-          }
-        // the staging dir's UUID rides into the published name: task ids
-        // restart per SparkContext, so two PROCESSES committing DSv2
-        // appends against the same observed seq would otherwise render
-        // identical destination paths (the same cross-JVM collision the
-        // imperative writer fixed — ProcessSafetySpec)
-        val commitTag = stagingRel.stripPrefix("_staging/")
-        val destRel =
-          (Seq("data") ++ partDirs :+ s"s${f.seq}-$commitTag-$i-${src.getName}").mkString("/")
-        val dest = new Path(root, destRel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(src, dest))
-          throw new IllegalStateException(s"DSv2 commit failed moving ${f.stagedRel}")
-        moved += dest
-        (f, destRel, dest)
-      }
-      fs.delete(new Path(root, stagingRel), true)
-      // one parallel pass for both stat + footer: no serial per-file RPCs
-      // inside the commit window. Sums arrived IN the commit messages —
-      // folded by the write tasks as rows passed, zero read-back I/O.
-      val metaByPath = LakeTable.fileMetaAll(placed.map(_._3).toSeq, conf,
-        spark = Some(t.spark))
-      val entries = placed.map { case (f, destRel, dest) =>
-        val fm = metaByPath(dest)
-        DataFile(destRel, f.seq, f.partition, fm.len, splits = fm.splits, bounds = fm.bounds,
-          rows = fm.rows, nonNull = fm.nonNull, sums = f.sums)
-      }
       LakeTable.failpoint("staged-dsv2") // crash-injection site (test-only)
       (replaceAll, replacedFiles) match {
         case (true, Some(planned)) =>
@@ -223,15 +160,15 @@ private[sources] class GraftLakeBatchWrite(
           // row the scan did not read" — fail loudly instead.
           val removed = planned().getOrElse(throw new IllegalStateException(
             s"${t.meta.name}: row-level write committed before its scan planned files"))
-          t.commitStagedReplaceFiles(removed, entries.toSeq, "rewrite-dsv2", expectedBase)
+          t.commitStagedReplaceFiles(removed, entries, "rewrite-dsv2", expectedBase)
         case (true, None) =>
-          t.commitStagedReplace(entries.toSeq, "overwrite-dsv2", expectedBase)
+          t.commitStagedReplace(entries, "overwrite-dsv2", expectedBase)
         case _ =>
-          t.commitStagedAppend(entries.toSeq, "append-dsv2")
+          t.commitStagedAppend(entries, "append-dsv2")
       }
     } catch {
       case e: Throwable =>
-        moved.foreach(p => try fs.delete(p, false) catch { case _: Exception => })
+        t.discardPublished(entries.map(_.path))
         throw e
     }
   }
@@ -241,108 +178,30 @@ private[sources] class GraftLakeBatchWrite(
     val fs = root.getFileSystem(t.spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(root, stagingRel), true)
   }
-
-  private implicit class ConfOps(c: Configuration) {
-    def asScala: Iterator[java.util.Map.Entry[String, String]] = {
-      val it = c.iterator()
-      new Iterator[java.util.Map.Entry[String, String]] {
-        def hasNext = it.hasNext
-        def next() = it.next()
-      }
-    }
-  }
 }
 
-private[sources] case class StagedFile(
-    stagedRel: String, seq: Long, partition: Map[String, String],
-    /** per-file exact column sums, folded in the write task as rows
-      * passed ([[graft.lake.RowParquet.FileSums]]) — the commit records
-      * them without any read-back job */
-    sums: Map[String, String] = Map.empty)
-
+/** The files one write task staged, with their footer stats and sums —
+  * the commit publishes them without reopening any of them. */
 private[sources] case class GraftLakeCommitMessage(files: Seq[StagedFile])
     extends WriterCommitMessage
 
-private[sources] case class GraftLakeWriterFactory(
-    location: String,
-    stagingRel: String,
-    schema: StructType,
-    writeSeq: Long,
-    partitionSpec: Seq[(Int, graft.lake.Transform, String)], // (source field idx, transform, partition name)
-    hadoopConf: Map[String, String],
-    recordSums: Boolean = true) extends DataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftLakeDataWriter(this, partitionId, taskId)
+/** Shared by the batch write and the merge-on-read delta write. */
+private[sources] case class GraftLakeWriterFactory(spec: LakeWriteSpec)
+    extends DeltaWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
+    new GraftLakeDataWriter(new LakeFileWriter(spec, s"p$partitionId-t$taskId"))
 }
 
-/** One writer per task: keeps one open parquet writer per partition value
-  * encountered, folds per-file column sums as rows pass, emits all staged
-  * files (with their sums) in its commit message. */
-private[sources] class GraftLakeDataWriter(
-    f: GraftLakeWriterFactory, partitionId: Int, taskId: Long)
-    extends DataWriter[InternalRow] {
-
-  private val conf = {
-    val c = new Configuration(false)
-    f.hadoopConf.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-  private val parquetSchema: MessageType = GraftLakeWrite.toParquetSchema(f.schema)
-  private val groupFactory = new SimpleGroupFactory(parquetSchema)
-  private val writers = mutable.LinkedHashMap.empty[Map[String, String],
-    (ParquetWriter[Group], String, graft.lake.RowParquet.FileSums)]
-
-  /** Leading fields to skip: Spark's GROUP-BASED row-level rewrites
-    * (UPDATE/MERGE → ReplaceData) PREPEND a `__row_operation` marker
-    * column to each row while the logical write schema stays the table
-    * schema — detected from the first row's arity. */
-  private var fieldOffset = -1
-
-  override def write(row: InternalRow): Unit = {
-    if (fieldOffset < 0) {
-      fieldOffset = row.numFields - f.schema.length
-      require(fieldOffset >= 0,
-        s"row has ${row.numFields} fields for schema ${f.schema.simpleString}")
-    }
-    val partition = f.partitionSpec.map { case (srcIdx, tr, name) =>
-      name -> GraftLakeWrite.renderPartition(
-        tr, row, srcIdx + fieldOffset, f.schema.fields(srcIdx).dataType)
-    }.toMap
-    val (w, _, sums) = writers.getOrElseUpdate(partition, {
-      val rel = s"${f.stagingRel}/p$partitionId-t$taskId-${writers.size}.parquet"
-      val path = new Path(new Path(f.location), rel)
-      val writer = graft.lake.RowParquet.openWriter(path, conf, parquetSchema)
-      (writer, rel, new graft.lake.RowParquet.FileSums(f.schema, fieldOffset))
-    })
-    w.write(GraftLakeWrite.toGroup(groupFactory, f.schema, row, f.writeSeq, fieldOffset))
-    if (f.recordSums) sums.add(row)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    writers.values.foreach(_._1.close())
-    GraftLakeCommitMessage(writers.map { case (partition, (_, rel, sums)) =>
-      StagedFile(rel, f.writeSeq, partition,
-        if (f.recordSums) sums.result else Map.empty)
-    }.toList)
-  }
-
-  override def abort(): Unit = writers.values.foreach(w => try w._1.close() catch { case _: Exception => })
+/** One writer per task over the lake's [[LakeFileWriter]]: appended or
+  * re-inserted rows become data files, deleted row identities delete-key
+  * files; the commit message carries every staged file's stats. */
+private[sources] class GraftLakeDataWriter(w: LakeFileWriter) extends DeltaWriter[InternalRow] {
+  override def insert(row: InternalRow): Unit = w.write(row)
+  override def delete(meta: InternalRow, id: InternalRow): Unit = w.delete(id)
+  override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit =
+    throw new IllegalStateException(
+      "updates are represented as delete + insert (representUpdateAsDeleteAndInsert)")
+  override def commit(): WriterCommitMessage = GraftLakeCommitMessage(w.close())
+  override def abort(): Unit = w.abort()
   override def close(): Unit = ()
-}
-
-private[sources] object GraftLakeWrite {
-
-  /** Shared task-side parquet machinery lives in [[graft.lake.RowParquet]]
-    * (the imperative staging path uses the same code); these aliases keep
-    * the DSv2 writers' call sites stable. */
-  def toParquetSchema(schema: StructType, seqCol: String = LakeTable.SeqCol): MessageType =
-    graft.lake.RowParquet.toParquetSchema(schema, seqCol)
-
-  def toGroup(factory: SimpleGroupFactory, schema: StructType, row: InternalRow, seq: Long,
-      offset: Int = 0, seqCol: String = LakeTable.SeqCol): Group =
-    graft.lake.RowParquet.toGroup(factory, schema, row, seq, offset, seqCol)
-
-  def renderPartition(tr: graft.lake.Transform, row: InternalRow, idx: Int, dt: DataType): String =
-    graft.lake.RowParquet.renderPartition(tr, row, idx, dt)
 }

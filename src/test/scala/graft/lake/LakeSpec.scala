@@ -114,33 +114,21 @@ class LakeSpec extends SparkSpec {
     assert(err.getMessage.contains("co-location"), err.getMessage)
   }
 
-  test("many-file appends collect footer stats as a distributed job, bounds intact") {
+  test("many-file appends record footer stats per file, bounds intact") {
     val dir = Files.createTempDirectory("graft-dststats-spec").toString
-    spark.conf.set("spark.graft.lake.statsDistributeMinFiles", "4")
     spark.conf.set("spark.graft.lake.writeSplits", "8")
     try {
       val df = spark.range(0, 800).select(col("id"), (col("id") % 100).as("v"))
       val t = LakeTable.create(spark, s"$dir/t", "t", df.schema, clusterBy = Seq("id"))
-      val before = LakeTable.distributedStatJobs.get()
       t.append(df)
-      assert(LakeTable.distributedStatJobs.get() > before,
-        "footer stats above the threshold must run as a Spark job, not a driver loop")
       val snap = t.currentSnapshot
       assert(snap.dataFiles.size >= 4, s"expected a fanned-out write, got ${snap.dataFiles.size}")
       assert(snap.dataFiles.forall(f =>
         f.rows >= 0 && f.splits.nonEmpty && f.bounds.contains("id")),
-        "distributed stat collection must record rows, splits and bounds per file")
+        "every fanned-out file must record rows, splits and bounds")
       assert(snap.dataFiles.map(_.rows).sum == 800)
       assert(t.scan().agg(sum("id")).head.getLong(0) == (0L until 800L).sum)
-      // below the threshold the driver pool still serves (no job counted)
-      spark.conf.set("spark.graft.lake.writeSplits", "1")
-      val mid = LakeTable.distributedStatJobs.get()
-      t.append(spark.range(800, 810).select(col("id"), (col("id") % 100).as("v")).coalesce(1))
-      assert(LakeTable.distributedStatJobs.get() == mid, "small append must stay on the driver")
-    } finally {
-      spark.conf.unset("spark.graft.lake.statsDistributeMinFiles")
-      spark.conf.unset("spark.graft.lake.writeSplits")
-    }
+    } finally spark.conf.unset("spark.graft.lake.writeSplits")
   }
 
   test("schema evolution: pre-ALTER rows null-fill the evolved column") {
@@ -709,13 +697,12 @@ class LakeSpec extends SparkSpec {
         s"final snapshot references a missing file: $p"))
   }
 
-  test("staging (incl. the ColumnSums fallback job) runs outside the commit lock") {
+  test("staging runs outside the commit lock") {
     val dir = Files.createTempDirectory("graft-stage-lock-spec").toString
     import spark.implicits._
     val df = (1L to 100L).map(k => (k, s"v$k")).toDF("id", "s")
-    // bucket[n] partitioning routes staging through the DataFrame writer +
-    // the ColumnSums read-back (RowParquet.renderSupported rejects bucket's
-    // Spark-internal murmur3) — the exact fallback path under test
+    // a partitioned write: the arrangement shuffle plus the staging job
+    // whose tasks write the files and record their stats and sums
     val t = LakeTable.create(spark, s"$dir/t", "t", df.schema,
       partitionSpec = Seq(PartitionField("id", Transform.Bucket(4), "p_b")))
     val jobCount = new java.util.concurrent.atomic.AtomicInteger
@@ -735,8 +722,8 @@ class LakeSpec extends SparkSpec {
       assert(t.scan().count() == 0L)
       val jobsBaseline = jobCount.get()
       // hold the TABLE LOCK across the whole staging phase: every Spark job
-      // the append needs (the partitioned write, the footer metadata read,
-      // the ColumnSums fallback) must run and COMPLETE while we hold it —
+      // the append needs (the arrangement and the staging write) must run
+      // and COMPLETE while we hold it —
       // the appender may only park on the lock for the final snapshot swap
       t.synchronized {
         appender.start()
@@ -771,7 +758,7 @@ class LakeSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(t.currentSeq == 1L)
     assert(t.scan().count() == 100L)
-    // per-file exact sums still recorded via the fallback read-back
+    // per-file exact sums recorded by the write tasks
     assert(t.currentSnapshot.dataFiles.forall(_.sums.contains("id")))
   }
 
@@ -1328,13 +1315,10 @@ class LakeSpec extends SparkSpec {
     assert(files.forall(f => !f.sums.contains("name")))
   }
 
-  test("unsupported-transform writes fall back to the read-back sums job, same stats shape") {
-    // r18: bucket renders engine-side now (Transform.bucketOf), so the
-    // fallback's trigger is an identity partition on a type the task
-    // writer does not render (DOUBLE) — the staging write then goes
-    // through Spark's DataFrame writer and sums come from the
-    // column-pruned ColumnSums fallback; the recorded strings must serve
-    // identically to task-side sums
+  test("identity(DOUBLE) writes task-side with exact sums") {
+    // an identity partition on a DOUBLE source renders per row through
+    // Catalyst's cast to string, like every other transform/type pair;
+    // sums are folded in the write tasks and serve like any other file's
     val dir = Files.createTempDirectory("graft-fallbacksums-spec").toString
     import spark.implicits._
     val df = (1L to 100L).map(i => (i, i * 3, (i % 4).toDouble)).toDF("id", "v", "g")
@@ -1343,7 +1327,7 @@ class LakeSpec extends SparkSpec {
       clusterBy = Seq("id"))
     t.append(df)
     val files = t.currentSnapshot.dataFiles
-    assert(files.size >= 2, "identity spec should split files")
+    assert(files.map(_.partition("p_g")).toSet == Set("0.0", "1.0", "2.0", "3.0"))
     assert(files.forall(f => f.sums.contains("id") && f.sums.contains("v")))
     assert(files.map(f => BigDecimal(f.sums("v"))).sum == BigDecimal(3L * (1L to 100L).sum))
     assert(ColumnSums.totals("v", files).contains((BigDecimal(3L * (1L to 100L).sum), 100L)))
