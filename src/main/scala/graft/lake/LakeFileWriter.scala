@@ -73,7 +73,10 @@ final case class LakeWriteSpec(
   * `UnsafeProjection` per file kind drops a leading `__row_operation`
   * marker (group-based row-level rewrites prepend it; detected from the
   * first row's arity) and appends the commit-seq column (`_graft_seq`, or
-  * `_graft_dseq` for delete keys).
+  * `_graft_dseq` for delete keys). The projection carries a placeholder
+  * there and the seq is written into the projected row after projection,
+  * not inlined as a literal: the generated class depends on the row schema
+  * only, so every commit of one shape reuses it instead of compiling anew.
   *
   * Metrics are a by-product of the write (the Iceberg writer discipline):
   * exact per-file sums fold as rows pass, and on close each file's
@@ -135,9 +138,10 @@ final class LakeFileWriter(spec: LakeWriteSpec, taskTag: String) {
         require(offset >= 0, s"row has ${row.numFields} fields for schema ${schema.simpleString}")
         project = UnsafeProjection.create(
           schema.fields.indices.map(i => BoundReference(offset + i, schema(i).dataType, nullable = true)) :+
-            Literal(spec.seq, LongType))
+            Literal(0L, LongType))
       }
       val r = project(row)
+      r.setLong(schema.length, spec.seq)
       val partition = renderers.map { case (name, render) => name -> render(r) }
       val (w, _, sums) = open.getOrElseUpdate(partition, {
         val rel = s"${spec.stagingRel}/$taskTag-$opened.parquet"

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.lake._
+import graft.streaming.CdcIngest
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -258,7 +259,6 @@ object LakePipelines {
     * after the replay. */
   def ordersCdc(spark: SparkSession, sfDir: String): LakeTable =
     cached(spark, sfDir, "orders_cdc") { cat =>
-      import graft.streaming.CdcIngest
       val o = Tables.load(spark, sfDir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val t = cat.createTable(
@@ -286,7 +286,6 @@ object LakePipelines {
     * key, so the end state is a pure SQL function of the fixture. */
   def customerCdc(spark: SparkSession, sfDir: String): LakeTable =
     cached(spark, sfDir, "customer_cdc") { cat =>
-      import graft.streaming.CdcIngest
       val c = Tables.load(spark, sfDir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_mktsegment"))
       val t = cat.createTable("customer_cdc", c.schema,
@@ -314,7 +313,6 @@ object LakePipelines {
     * replicated payload — the sync timestamp is the CDC ordering). */
   def eventsCdc(spark: SparkSession, sfDir: String): LakeTable =
     cached(spark, sfDir, "events_cdc") { cat =>
-      import graft.streaming.CdcIngest
       val e = Tables.load(spark, sfDir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       val t = cat.createTable("events_cdc", e.schema,
@@ -364,7 +362,7 @@ object LakePipelines {
           col("o_totalprice").as("total_amount"))
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          if (!batch.isEmpty) { t.append(batch); () }
+          CdcIngest.inTableSession(t, batch) { b => if (!b.isEmpty) { t.append(b); () } }
         }
         .option("checkpointLocation", s"${cat.location("silver_streamed")}/_ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -396,16 +394,18 @@ object LakePipelines {
           .option("path", src.location).option("changelog", "true").load()
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            if (!batch.isEmpty) {
-              val persisted = batch.persist()
-              try {
-                val dels = persisted.filter(col("_change_type") === "delete")
-                  .select(col("o_orderkey"))
-                val ups = persisted.filter(col("_change_type") =!= "delete")
-                  .drop("_change_type")
-                if (!ups.isEmpty) replica.upsert(ups)
-                if (!dels.isEmpty) replica.deleteKeys(dels)
-              } finally persisted.unpersist()
+            CdcIngest.inTableSession(replica, batch) { b =>
+              if (!b.isEmpty) {
+                val persisted = b.persist()
+                try {
+                  val dels = persisted.filter(col("_change_type") === "delete")
+                    .select(col("o_orderkey"))
+                  val ups = persisted.filter(col("_change_type") =!= "delete")
+                    .drop("_change_type")
+                  if (!ups.isEmpty) replica.upsert(ups)
+                  if (!dels.isEmpty) replica.deleteKeys(dels)
+                } finally persisted.unpersist()
+              }
             }
             ()
           }

@@ -386,29 +386,18 @@ object VectorOps {
       rerank: Int = 150, dim: Int = 64): DataFrame =
     pqTopKOn(s, emb(s, dir).select(col("vec_id"), col("embedding")), m, ksub, rerank, dim)
 
-  /** Diagnostic construct-phase timing (stderr), enabled by
-    * SPARK_GRAFT_PROBE_TIMING — never part of the driver contract. */
-  private def timed[A](label: String)(body: => A): A =
-    if (sys.env.contains("SPARK_GRAFT_PROBE_TIMING")) {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[vec-timing] $label ${(System.nanoTime() - t0) / 1e6}%.0f ms")
-      r
-    } else body
-
   /** [[pqTopK]] over any (vec_id, embedding) corpus — split out so the
     * planted-duplicate oracle query (q93) and specs can supply corpora. */
   def pqTopKOn(s: SparkSession, raw: DataFrame, m: Int = 8, ksub: Int = 32,
       rerank: Int = 150, dim: Int = 64): DataFrame = {
     // one fused collect for the bounded sample + probes (see
     // trainSampleAndProbes) — identical codebook, half the driver jobs
-    val (sample, probesLocal) = timed("collect")(trainSampleAndProbes(s, raw, 2048))
-    val cb = timed("lloyd")(pqCodebookFromSample(s, sample, m, ksub, dim = dim))
-    val encoded = timed("encode-plan")(pqEncode(raw, cb, m, dim))
-    val cands = timed("cands-plan")(
-      encoded.join(broadcast(adcProbes(s, probesLocal, cb, m, ksub, dim)))
-        .filter(col("vec_id") =!= col("probe_id")))
-    timed("rerank-plan")(adcRerankTopK(s, raw, cands, m, ksub, rerank, probesLocal))
+    val (sample, probesLocal) = trainSampleAndProbes(s, raw, 2048)
+    val cb = pqCodebookFromSample(s, sample, m, ksub, dim = dim)
+    val encoded = pqEncode(raw, cb, m, dim)
+    val cands = encoded.join(broadcast(adcProbes(s, probesLocal, cb, m, ksub, dim)))
+      .filter(col("vec_id") =!= col("probe_id"))
+    adcRerankTopK(s, raw, cands, m, ksub, rerank, probesLocal)
   }
 
   /** Per-probe ADC lookup tables computed ON THE DRIVER (the FAISS shape:

@@ -4,6 +4,7 @@ import graft.Tables
 import graft.lake.LakeTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlInternals
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
@@ -31,7 +32,11 @@ import org.apache.spark.sql.types.StructType
   * Scale notes: each micro-batch costs O(batch) — the merge-on-read lake
   * table never rewrites base data on ingest — and the batch dedupe is a
   * single hash shuffle on the primary key. Nothing here holds state on the
-  * driver; a 1000-executor cluster runs the same plan per batch.
+  * driver; a 1000-executor cluster runs the same plan per batch. Each
+  * micro-batch arrives in the streaming query's cloned session, which has
+  * its own executor-side class loader; the commit runs in the table's own
+  * session instead ([[inTableSession]]), so its generated code is compiled
+  * once per JVM (per executor on a cluster), not once per batch.
   */
 object CdcIngest {
 
@@ -113,7 +118,7 @@ object CdcIngest {
       .parquet(logDir)
     val q = src.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(table, batch)
+        inTableSession(table, batch)(applyBatch(table, _))
         // crash-injection site (test-only): fires AFTER the batch's lake
         // commit and BEFORE foreachBatch returns — i.e. before Structured
         // Streaming records the batch in the checkpoint. Killing here is
@@ -129,6 +134,19 @@ object CdcIngest {
     q.awaitTermination()
     batches
   }
+
+  /** Run a `foreachBatch` body against `table` in the table's session: the
+    * micro-batch is re-rooted on `table.spark` (its plan is the
+    * session-independent `LogicalRDD` the foreachBatch sink builds) and
+    * every job the body starts carries that session's artifact state.
+    * Structured Streaming runs each query's batches in a cloned session,
+    * and each session gets its own executor class loader and so its own
+    * generated-code cache entries; committing in the cloned session would
+    * recompile the whole commit for every new query. */
+  def inTableSession[A](table: LakeTable, batch: DataFrame)(body: DataFrame => A): A =
+    SqlInternals.withSessionResources(table.spark) {
+      body(SqlInternals.ofRows(table.spark, batch.queryExecution.logical))
+    }
 
   /** One micro-batch: widen the table for any new columns AND promote
     * column types the batch arrives wider than (C6 — the reference's

@@ -98,7 +98,7 @@ object EventStreams {
     val q = agg.writeStream
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) { table.upsert(batch); () }
+        CdcIngest.inTableSession(table, batch) { b => if (!b.isEmpty) { table.upsert(b); () } }
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -188,6 +189,26 @@ class LakeFileWriterSpec extends SparkSpec {
         .collect().map(r => (r._1, new String(r._2, "UTF-8"))).toSeq == Seq(("n577", "bin577")))
     } finally {
       if (oldBlock == null) conf.unset("parquet.block.size") else conf.set("parquet.block.size", oldBlock)
+    }
+  }
+
+  test("a second same-shaped append compiles no generated code and stamps its own commit seq") {
+    val dir = Files.createTempDirectory("graft-writer-codegen").toString
+    def rows(from: Long) = (from until from + 20L).map(i => (i, s"v$i")).toDF("id", "s")
+    val t = LakeTable.create(spark, s"$dir/t", "t", rows(0L).schema, primaryKey = Seq("id"))
+    t.append(rows(0L)) // warm: compiles this shape's write projection
+    val second = rows(100L) // built outside the measured region
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    t.append(second)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    // the commit seq is written after projection, so the generated class
+    // does not depend on it (inlined as a literal, every commit compiled one)
+    assert(compiled == 0L, s"second append compiled $compiled classes")
+    val files = t.currentSnapshot.dataFiles
+    assert(files.map(_.seq).toSet == Set(1L, 2L))
+    files.foreach { f =>
+      val seqs = spark.read.parquet(t.abs(f.path)).select(LakeTable.SeqCol).as[Long].collect().toSet
+      assert(seqs == Set(f.seq), s"${f.path} records seq ${f.seq}, holds $seqs")
     }
   }
 

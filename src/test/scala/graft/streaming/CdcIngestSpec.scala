@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.lake.LakeTable
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -123,5 +124,33 @@ class CdcIngestSpec extends SparkSpec {
     CdcIngest.applyBatch(t, batch)
     // latest op (00:03) is an update → the key survives with v2
     assert(t.scan().as[(Int, String)].collect().toSeq == Seq((1, "v2")))
+  }
+
+  test("a second same-shaped ingest compiles no generated code") {
+    val t = LakeTable.create(spark, freshLoc(), "t",
+      Seq((1, "a", 1.0)).toDF("id", "s", "v").schema, primaryKey = Seq("id"))
+    t.append((1 to 100).map(i => (i, s"s$i", i.toDouble)).toDF("id", "s", "v"))
+    val logDir = freshLoc() + "-log"
+    val ckpt = freshLoc() + "-ckpt"
+    // one segment = updates, deletes and inserts, so every ingest writes
+    // data files and delete files of the same shapes
+    def land(k: Int) = CdcIngest.writeLog((1 to 30).map { i =>
+      val id = k * 200 + i
+      val op = if (i % 3 == 0) "delete" else if (i % 3 == 1) "update" else "insert"
+      (if (op == "insert") id else i, s"s$id", id.toDouble, op,
+        new java.sql.Timestamp(1000L * (k * 100 + i)))
+    }.toDF("id", "s", "v", CdcIngest.OpCol, CdcIngest.TsCol), "id", logDir, nFiles = 1)
+    val schema = land(1)
+    CdcIngest.ingest(t, logDir, schema, ckpt) // warm
+    land(2)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(CdcIngest.ingest(t, logDir, schema, ckpt) == 1L)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    // each streaming query runs its batches in a fresh cloned session; a
+    // commit in that session recompiles everything on a new class loader
+    assert(compiled == 0L, s"second ingest compiled $compiled classes")
+    val state = t.scan().select("id").as[Int].collect().toSet
+    // 10 keys deleted (twice), 10 inserted per segment
+    assert(state.size == 110 && !state(3) && state(1) && state(202) && state(402), state)
   }
 }
