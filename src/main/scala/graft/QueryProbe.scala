@@ -69,14 +69,14 @@ object QueryProbe {
         val t0 = System.nanoTime()
         val df = q(spark, sfDir)
         val t1 = System.nanoTime()
-        // listener events are async — give the queue a beat before snapping
-        Thread.sleep(50)
+        // listener events are async — drain the bus before snapping
+        org.apache.spark.ListenerDrain(spark.sparkContext)
         val (j1, s1, m1) = snap()
         val rdd = df.queryExecution.toRdd
         val t2 = System.nanoTime()
         rdd.count()
         val t3 = System.nanoTime()
-        Thread.sleep(50)
+        org.apache.spark.ListenerDrain(spark.sparkContext)
         val (j2, s2, m2) = snap()
         println(f"[probe] $n run$i " +
           f"construct=${(t1 - t0) / 1e6}%.0fms (jobs=${j1 - j0} stages=${s1 - s0} task=${m1 - m0}ms) " +

@@ -774,19 +774,6 @@ object ScaleBench {
     java.nio.file.Files.writeString(done.toPath, marker)
   }
 
-  /** Cumulative hypervisor steal seconds (col 9 of /proc/stat, all cpus;
-    * -1 when unreadable) — the same contamination signal Bench records:
-    * this VM's host steals parallel capacity in minutes-long episodes,
-    * and a scale point measured inside one (q68's 100× swung 20–66 s
-    * between identical runs) must self-identify in the sidecar. */
-  private def stealSec(): Double =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try src.getLines().find(_.startsWith("cpu "))
-        .map(_.trim.split("\\s+")(8).toLong / 100.0).getOrElse(-1.0)
-      finally src.close()
-    } catch { case _: Exception => -1.0 }
-
   private def planNodes(df: DataFrame): Map[String, Int] =
     df.queryExecution.executedPlan.collect { case n => n.getClass.getSimpleName }
       .groupBy(identity).view.mapValues(_.size).toMap
@@ -858,7 +845,7 @@ object ScaleBench {
       try {
         def runOnce(): Unit = {
           reclaimShuffles()
-          val st0 = stealSec()
+          val st0 = Bench.stealSec()
           val t0 = System.nanoTime()
           // fn() stays INSIDE the window: eager operators do their real
           // work while building (q99 runs its CC rounds in fn), and lazy
@@ -867,7 +854,7 @@ object ScaleBench {
           rows = df.queryExecution.toRdd.count()
           lastDf = df
           val t = (System.nanoTime() - t0) / 1e9
-          val st1 = stealSec()
+          val st1 = Bench.stealSec()
           ran += 1
           if (t < minT) {
             minT = t

@@ -1,10 +1,13 @@
 package graft.lake
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, LessThan}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.{GraftLakeDeleteKeys, GraftLakeSource, GraftLakeV2Table}
+import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, In, LessThan, Literal, MetadataAttribute}
 import org.apache.spark.sql.catalyst.plans.LeftAnti
-import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graft.SqlInternals
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -269,9 +272,9 @@ final class LakeTable private (
     *    rendered from the primary key of the rows it suppresses, so any
     *    suppressed row renders the same tuple — if that tuple cannot
     *    satisfy `filters`, neither can the stale row, and every consumer
-    *    of a pruned snapshot re-applies `filters` at ROW level (the
-    *    imperative [[scan]] filters explicitly; the DSv2 scan returns all
-    *    pushed filters as residual). Global sidecars carry the empty
+    *    of a pruned snapshot re-applies `filters` at ROW level (the DSv2
+    *    scan every read plans returns all pushed prune filters as
+    *    residual). Global sidecars carry the empty
     *    tuple, which matches everything, so their manifests always load.
     *    A path that ever fully-handles filters without row re-application
     *    must plan its deletes from the UNPRUNED snapshot. */
@@ -616,31 +619,22 @@ final class LakeTable private (
 
   // ------------------------------------------------------------------ read
 
-  /** Snapshot-pinned, pruned, merge-on-read scan.
+  /** Snapshot-pinned, pruned, merge-on-read scan: a DSv2 relation of this
+    * table (the one SQL reads plan — packed splits, pushdown, vectorized
+    * reads), pinned to the snapshot. The `_graft_seq` and `_graft_file`
+    * metadata columns are available by name. Live delete files are folded
+    * by [[morFold]] here, so the scan also works in a session without
+    * `graft.plans.GraftExtensions`.
     *
     * @param asOf    time travel: read the table as of this snapshot seq
     *                (reference: `SETTINGS iceberg_snapshot_id = N`,
     *                BLOG_POST_COMPLETE_WALKTHROUGH.md:521-527)
-    * @param filters raw-column predicates; used to prune data files via the
-    *                partition spec, then re-applied as Catalyst filters (and
-    *                pushed into the parquet scan for row-group skipping)
-    *
-    * Files are read from their manifest entries without a filesystem
-    * stat, so the file-source metadata column
-    * `_metadata.file_modification_time` reads 0 (1970-01-01) on lake
-    * scans (the commit that added a file is its manifest entry's `seq`).
+    * @param filters raw-column predicates, applied as Catalyst filters:
+    *                pushdown turns them back into manifest, file and
+    *                row-group pruning, and Spark re-applies them per row
     */
-  def scan(asOf: Option[Long] = None, filters: Seq[PruneFilter] = Nil): DataFrame = {
-    // manifest-level pruning first: whole manifests whose partition
-    // summaries cannot match are never parsed, then file-level pruning
-    // below trims within the loaded ones
-    val snap = snapshotPruned(asOf.getOrElse(currentSeq), filters)
-    val userSchema = schema(snap.schemaVersion)
-    val (files, _) = planFiles(snap, filters)
-    val merged = morMerged(snap, files)
-    val filtered = filters.foldLeft(merged)((d, f) => d.filter(f.toColumn))
-    filtered.select(userSchema.fieldNames.map(col): _*)
-  }
+  def scan(asOf: Option[Long] = None, filters: Seq[PruneFilter] = Nil): DataFrame =
+    filters.foldLeft(read(asOf.getOrElse(currentSeq)))((d, f) => d.filter(f.toColumn))
 
   /** CHANGELOG between two committed snapshots (the `table_changes` /
     * CDC-out idiom): every NET row-level change in `(from, to]`, labelled
@@ -722,9 +716,10 @@ final class LakeTable private (
     val userSchema = schema(endSnap.schemaVersion)
     val userCols = userSchema.fieldNames.map(col).toSeq
     val TypeCol = "_change_type"
-    // rows ADDED in the range that are still live at `to`
-    val added = morMerged(endSnap,
-      endSnap.dataFiles.filter(f => f.seq > from && f.seq <= to))
+    // rows ADDED in the range that are still live at `to`, by FILE seq: a
+    // rebased append's rows keep their older staged row seq
+    val added = readGuarded(to, "end")(
+      read(to, files = Some(endSnap.dataFiles.filter(f => f.seq > from && f.seq <= to))))
     // APPEND-ONLY FAST PATH (VERDICT r11 #7): a range whose every commit is
     // an append (or schema DDL — metadata-only, no rows) adds rows but never
     // restates or tombstones a live pk: pk restatement travels only through
@@ -746,8 +741,7 @@ final class LakeTable private (
     // changelog is emitted in (null-fill added columns, widen promoted
     // ones, drop since-removed ones)
     val base = {
-      val fromSnap = readGuarded(from, "base")(snapshot(from))
-      val raw = morMerged(fromSnap, fromSnap.dataFiles)
+      val raw = readGuarded(from, "base")(read(from, withSeq = true))
       userSchema.fields.foldLeft(raw)((d, f) =>
         if (d.columns.contains(f.name)) d.withColumn(f.name, col(f.name).cast(f.dataType))
         else d.withColumn(f.name, lit(null).cast(f.dataType)))
@@ -760,12 +754,11 @@ final class LakeTable private (
       .select(userCols :+ col(TypeCol): _*)
     // rows DELETED in the range: base rows tombstoned by a range delete
     // whose pk is not live at `to` (live again = update, already emitted)
-    val rangeDels = endSnap.deleteFiles.filter(d => d.seq > from && d.seq <= to)
-    if (rangeDels.isEmpty) return upserted
-    // era-aware read: a pk-column type promotion inside the range leaves
-    // earlier delete files physically narrow — read each with its own
-    // era's pk types and widen to the `to` era explicitly
-    val delKeys = readDeleteKeys(rangeDels, endSnap.schemaVersion)
+    if (!endSnap.deleteFiles.exists(d => d.seq > from && d.seq <= to)) return upserted
+    // the range's keys (the key scan prunes whole delete files on dseq);
+    // keys written before a pk type promotion decode wide
+    val delKeys = deleteKeysOf(to)
+      .filter(col(DseqCol) > from && col(DseqCol) <= to)
     val delCond = pk.map(c => base(c) === delKeys(c)).reduce(_ && _) &&
       base(SeqCol) < delKeys(DseqCol)
     val endPk = added.select(pk.map(c => col(c).as(s"_e_$c")): _*).distinct()
@@ -798,7 +791,7 @@ final class LakeTable private (
     * it. `rows` must expose the pk columns and [[LakeTable.SeqCol]],
     * `keys` the pk columns and [[LakeTable.DseqCol]]. No join hint: AQE
     * picks a broadcast or a shuffled join from the real size of the key
-    * side. Built by [[morMerged]] (imperative scan, compaction) and by
+    * side. Built by [[read]] (scan, changes, compaction) and by
     * [[graft.plans.LakeMorRewrite]] (every DSv2 and SQL read). */
   private[graft] def morFold(rows: LogicalPlan, keys: LogicalPlan): LogicalPlan = {
     def attr(p: LogicalPlan, name: String) = p.output.find(_.name.equalsIgnoreCase(name))
@@ -808,101 +801,41 @@ final class LakeTable private (
     Join(rows, keys, LeftAnti, Some(cond), JoinHint.NONE)
   }
 
-  /** Merge-on-read content of a FILE SUBSET of `snap` (user columns +
-    * [[LakeTable.SeqCol]]): base rows folded by [[morFold]] against the
-    * delete keys whose partition scope can reach those files. Shared by
-    * [[scan]] and partition-scoped compaction. */
-  private[lake] def morMerged(snap: Snapshot, files: Seq[DataFile]): DataFrame = {
-    val userSchema = schema(snap.schemaVersion)
-    val storage = StructType(userSchema.fields :+ StructField(SeqCol, LongType, nullable = false))
-    val base =
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], storage)
-      else
-        readKnownFiles(storage, files.map(f => abs(f.path) -> f.bytes))
-    val delFiles = deleteFilesFor(snap, files)
-    if (delFiles.isEmpty) base
-    else org.apache.spark.sql.graft.SqlInternals.ofRows(spark, morFold(
-      base.queryExecution.analyzed,
-      readDeleteKeys(delFiles, snap.schemaVersion).queryExecution.analyzed))
-  }
-
-  /** Multi-path parquet read with ZERO listing or stat calls, driver or
-    * distributed: the imperative reader already knows every leaf file AND
-    * its exact byte length from its own manifests, so the relation is
-    * built directly over an in-memory [[FileIndex]] of those
-    * (path, length) entries (VERDICT r21 #6). The r21 shape merely scoped
-    * `parallelPartitionDiscovery.threshold` up, which avoided the listing
-    * Spark JOB but still stat()ed every file serially on the driver —
-    * fine at 240 local files, minutes at 10^5 object-store files at
-    * 10–100 ms per stat — and mutated the shared session conf
-    * (set/restore), which two concurrent relation builds could interleave
-    * (ADVICE r21). Split planning and footer reads use the manifest
-    * length, which is exact by construction (stat'ed by the write task
-    * right after [[LakeFileWriter]] closes the file; the spec suite reads
-    * through this path everywhere, so a drifting length fails loudly, not
-    * silently).
-    * Every file stat is synthesized with modification time 0, so
-    * `_metadata.file_modification_time` reads 1970-01-01 on lake scans. */
-  private def readKnownFiles(storage: StructType, files: Seq[(String, Long)]): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{
-      FileIndex, HadoopFsRelation, PartitionDirectory}
-    val statuses = files.map { case (p, len) =>
-      // blockSize/mtime 0: split planning uses maxPartitionBytes, not
-      // the block size; `_metadata.file_modification_time` reads 0
-      new org.apache.hadoop.fs.FileStatus(len, false, 1, 0L, 0L, new Path(p))
-    }.toArray
-    val index = new FileIndex {
-      override def rootPaths: Seq[Path] = statuses.map(_.getPath).toSeq
-      override def listFiles(
-          partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-          dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-          : Seq[PartitionDirectory] =
-        Seq(PartitionDirectory(
-          org.apache.spark.sql.catalyst.InternalRow.empty, statuses))
-      override def inputFiles: Array[String] = statuses.map(_.getPath.toString)
-      override def refresh(): Unit = ()
-      override def sizeInBytes: Long = files.iterator.map(_._2).sum
-      override def partitionSchema: StructType = new StructType()
+  /** The merge-on-read rows (user columns, plus [[LakeTable.SeqCol]] when
+    * `withSeq`) of snapshot `seq` over the DSv2 relation SQL reads use:
+    * live deletes fold by [[morFold]] against [[GraftLakeDeleteKeys]].
+    * `files` restricts the read by a planning-time `_graft_file IN (…)`
+    * filter, which the scan takes as its exact file set. */
+  private def read(
+      seq: Long, files: Option[Seq[DataFile]] = None, withSeq: Boolean = false): DataFrame = {
+    val tbl = new GraftLakeV2Table(this, Some(seq))
+    val rel = DataSourceV2Relation.create(
+      if (tbl.morPending || withSeq) tbl.rawTable else tbl, None, None)
+    val rows: LogicalPlan = files match {
+      case None => rel
+      case Some(fs) =>
+        val withFile = rel.withMetadataColumns()
+        val fileAttr = withFile.output.find(_.name == GraftLakeSource.FileCol).get
+        Project(rel.output,
+          Filter(In(fileAttr, fs.map(f => Literal(abs(f.path)))), withFile))
     }
-    spark.baseRelationToDataFrame(HadoopFsRelation(
-      location = index,
-      partitionSchema = new StructType(),
-      // spark.read forces a user-specified file-source schema NULLABLE;
-      // mirror that here so the relation schema (and every downstream
-      // plan and output schema) is identical to a plain
-      // `spark.read.schema(...).parquet(...)` of the same files — caught
-      // by LakeSpec's schema-equality assertion
-      dataSchema = nullableSchema(storage),
-      bucketSpec = None,
-      fileFormat =
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-      options = Map.empty)(spark))
+    val merged =
+      if (tbl.morPending) morFold(rows, DataSourceV2Relation.create(tbl.deleteKeys, None, None))
+      else rows
+    val out = merged.output.filter(a => withSeq || !a.name.equalsIgnoreCase(SeqCol))
+    if (out == merged.output) return SqlInternals.ofRows(spark, merged)
+    // the folded-away commit seq stays reachable by name, like the
+    // metadata column a plain relation offers
+    val top = Project(out, merged)
+    top.setTagValue(Project.hiddenOutputTag, merged.metadataOutput ++
+      merged.output.diff(out).map(a => a.withMetadata(MetadataAttribute.metadata(a.name))))
+    SqlInternals.ofRows(spark, top)
   }
 
-  /** Delete keys (pk columns + [[LakeTable.DseqCol]]) of the given delete
-    * files, grouped by the pk types of the schema era each was committed
-    * under, each group cast to the target era's pk types.
-    * A delete file whose snapshot header has been expired falls back to
-    * the target era (the pre-fix behavior — correct whenever no pk column
-    * was promoted in the expired range). */
-  private def readDeleteKeys(delFiles: Seq[DeleteFile], toVersion: Int): DataFrame = {
-    val target = schema(toVersion)
-    val pk = meta.primaryKey
-    val targetPk = StructType(
-      pk.map(k => target(k)) :+ StructField(DseqCol, LongType, nullable = false))
-    def eraVersion(d: DeleteFile): Int =
-      try snapshotFile(d.seq).schemaVersion
-      catch { case scala.util.control.NonFatal(_) => toVersion }
-    delFiles.groupBy(eraVersion).map { case (v, group) =>
-      val era = schema(v)
-      val eraPk = StructType(
-        pk.map(k => era(k)) :+ StructField(DseqCol, LongType, nullable = false))
-      val df = readKnownFiles(eraPk, group.map(d => abs(d.path) -> d.bytes))
-      if (eraPk == targetPk) df
-      else df.select(targetPk.fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-    }.reduce(_ unionByName _)
-  }
+  /** The live delete keys of snapshot `seq` (pk columns + [[DseqCol]]). */
+  private def deleteKeysOf(seq: Long): DataFrame =
+    SqlInternals.ofRows(spark, DataSourceV2Relation.create(
+      new GraftLakeDeleteKeys(this, seq, schema(snapshotFile(seq).schemaVersion)), None, None))
 
   /** Partition-scoped compaction: rewrites ONLY dirty partitions — those
     * owning more than `targetFilesPerPartition` data files (bin-packing)
@@ -927,11 +860,10 @@ final class LakeTable private (
     val (dirtyFiles, keepFiles) = cur.dataFiles.partition(f => dirtyPartitions(f.partition))
     if (dirtyFiles.isEmpty && cur.deleteFiles.isEmpty) return cur // nothing to do
     val seq = cur.seq + 1
-    val userSchema = schema(cur.schemaVersion)
     val newFiles =
       if (dirtyFiles.isEmpty) Nil // tombstones matched nothing: metadata-only fold
       else stageDataFiles(
-        morMerged(cur, dirtyFiles).select(userSchema.fieldNames.map(col): _*),
+        read(cur.seq, files = Some(dirtyFiles)),
         cur.schemaVersion, seq, cur.specVersion)
     commitRestateRaceChecked(seq, "compact")(commitSnapshot(Snapshot(
       seq = seq, parent = Some(cur.seq), timestampMs = System.currentTimeMillis(),
@@ -940,24 +872,20 @@ final class LakeTable private (
   }
 
   /** Data files containing at least one row version a live tombstone
-    * deletes — one distributed semi-join over (pk, seq, input_file_name)
-    * per compaction, reading only the pk + seq columns. */
+    * deletes — one distributed semi-join of the raw rows (pk, seq and the
+    * `_graft_file` metadata column) against the delete keys per
+    * compaction, reading only those columns. */
   private def dirtyDataFiles(snap: Snapshot): Seq[DataFile] = {
     if (snap.deleteFiles.isEmpty || snap.dataFiles.isEmpty) return Nil
-    val userSchema = schema(snap.schemaVersion)
-    val readSchema = StructType(
-      meta.primaryKey.map(k => userSchema(k)) :+ StructField(SeqCol, LongType, nullable = false))
-    val base = readKnownFiles(readSchema, snap.dataFiles.map(f => abs(f.path) -> f.bytes))
-      .withColumn("_graft_file", input_file_name())
-    val dels = readDeleteKeys(snap.deleteFiles, snap.schemaVersion)
-    val cond = meta.primaryKey.map(k => base(k) === dels(k)).reduce(_ && _) &&
-      base(SeqCol) < dels(DseqCol)
-    val dirtyNames: Set[String] = base.join(dels, cond, "left_semi")
-      .select(col("_graft_file")).distinct()
-      .collect().map(r => new Path(r.getString(0)).getName).toSet
-    // match by file NAME: staged names embed seq + index + writer uuid and
-    // are unique within a table
-    snap.dataFiles.filter(f => dirtyNames(new Path(f.path).getName))
+    val rows = SqlInternals.ofRows(spark, DataSourceV2Relation.create(
+      new GraftLakeV2Table(this, Some(snap.seq), raw = true), None, None).withMetadataColumns())
+    val dels = deleteKeysOf(snap.seq)
+    val cond = meta.primaryKey.map(k => rows(k) === dels(k)).reduce(_ && _) &&
+      rows(SeqCol) < dels(DseqCol)
+    val dirty: Set[String] = rows.join(dels, cond, "left_semi")
+      .select(col(GraftLakeSource.FileCol)).distinct()
+      .collect().map(_.getString(0)).toSet
+    snap.dataFiles.filter(f => dirty(abs(f.path)))
   }
 
   /** File pruning against the partition spec: returns (selected, total).

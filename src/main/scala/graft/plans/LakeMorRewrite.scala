@@ -45,7 +45,7 @@ class LakeMorRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
     // metadata-only DELETE FROM: its child IS the target relation, and the
-    // delete reads through the imperative scan (LakeTable.morMerged)
+    // delete reads through LakeTable.scan, which folds its own deletes
     case _: DeleteFromTable => plan
     case _ =>
       // operation scans already folded on an earlier pass (this rule runs

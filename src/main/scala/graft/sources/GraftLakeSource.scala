@@ -5,6 +5,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.graft.SqlInternals
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.read._
@@ -26,9 +28,9 @@ import scala.jdk.CollectionConverters._
   * Planner integration:
   *  - `SupportsPushDownFilters`: Eq/Ge/Lt/In filters on partition-source
   *    columns prune DATA FILES from the snapshot at planning time (the
-  *    same conservative `PruneFilter.mayMatch` the imperative scan uses).
-  *    All filters are also returned as post-scan filters, so pruning stays
-  *    a pure I/O optimization — Spark re-applies every predicate.
+  *    conservative `PruneFilter.mayMatch`); a `_graft_file` IN list is an
+  *    exact file set. Every other filter is also returned as a post-scan
+  *    filter, so pruning stays a pure I/O optimization.
   *  - `SupportsPushDownRequiredColumns`: readers decode only the projected
   *    parquet columns.
   *  - `SupportsReportStatistics`: post-pruning bytes/rows from snapshot
@@ -53,12 +55,15 @@ import scala.jdk.CollectionConverters._
   *    reach (no `graft.plans.GraftExtensions`) fails loudly.
   *  - time travel: `asOf` pins the snapshot like `scan(asOf = …)`.
   *
-  * One InputPartition per parquet ROW GROUP: split byte ranges come from
-  * the snapshot metadata (recorded at commit — Iceberg's `split_offsets`),
-  * so a 512 MB file fans out across tasks without the driver reopening
-  * footers. Every split decodes through Spark's VECTORIZED parquet
-  * reader into ColumnarBatches; `_graft_file` and synthesized changelog
-  * columns are per-split constant columns of the same batches.
+  * Input partitions are PACKED like Spark's file source packs them
+  * ([[GraftLakeSource.planFileSplits]]): a file no larger than the split
+  * target is one chunk, a larger one is cut at its recorded row groups
+  * (snapshot metadata captured at commit — Iceberg's `split_offsets` — so
+  * the driver never reopens footers), and many small chunks share one
+  * task under `spark.sql.files.maxPartitionBytes` / `openCostInBytes`.
+  * Every chunk decodes through Spark's VECTORIZED parquet reader into
+  * ColumnarBatches; `_graft_file` and synthesized changelog columns are
+  * per-chunk constant columns of the same batches.
   */
 class GraftLakeSource extends TableProvider with org.apache.spark.sql.sources.DataSourceRegister {
 
@@ -104,21 +109,57 @@ object GraftLakeSource {
   /** Changelog-read label column: insert | update | delete. */
   val ChangeTypeCol = "_change_type"
 
-  /** Data files → one InputPartition per row group, from the recorded
-    * split offsets alone (pure metadata). Shared by the batch and
-    * streaming planners. */
+  /** Data files → InputPartitions packed by Spark's file-source rule
+    * (`FilePartition.maxSplitBytes` + `getFilePartitions`, under
+    * `spark.sql.files.maxPartitionBytes` / `openCostInBytes` /
+    * `minPartitionNum`): a file up to the split target is one chunk, a
+    * larger one is cut at its recorded row groups. Keyed (SPJ) splits pack
+    * only within one key. Shared by the batch and streaming planners. */
   private[sources] def planFileSplits(
       t: LakeTable, files: Seq[graft.lake.DataFile],
-      keyOf: Option[graft.lake.DataFile => Array[Any]] = None): Array[InputPartition] =
-    files.flatMap { f =>
+      keyOf: Option[graft.lake.DataFile => Array[Any]] = None): Array[InputPartition] = {
+    val openCost = SqlInternals.conf(t.spark).filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(t.spark, files.map(_.bytes + openCost).sum)
+    def chunksOf(fs: Seq[graft.lake.DataFile]): Seq[GraftChunk] = fs.flatMap { f =>
       val abs = t.abs(f.path)
-      f.splits.map { case (st, len) =>
-        keyOf match {
-          case Some(k) => GraftLakeKeyedInputPartition(abs, st, len, k(f))
-          case None    => GraftLakeInputPartition(abs, st, len)
-        }
-      }
-    }.toArray
+      if (f.splits.isEmpty) Nil // no row groups: nothing to read
+      else if (f.bytes <= maxSplit) Seq(GraftChunk(abs, 0L, f.bytes))
+      else f.splits.map { case (st, len) => GraftChunk(abs, st, len) }
+    }
+    val parts: Seq[InputPartition] = keyOf match {
+      case None => pack(t.spark, chunksOf(files), maxSplit).map(GraftLakeInputPartition(_))
+      case Some(k) =>
+        val byKey = files.groupBy(f => k(f).toSeq)
+        files.map(f => k(f).toSeq).distinct.flatMap(key =>
+          pack(t.spark, chunksOf(byKey(key)), maxSplit)
+            .map(GraftLakeKeyedInputPartition(_, key.toArray)))
+    }
+    parts.toArray
+  }
+
+  /** Delete-key files → InputPartitions packed under the plain
+    * `maxPartitionBytes` target, not spread over cores: the key side of a
+    * fold is a small join build input, where extra tasks only add cost. */
+  private[sources] def planWholeFiles(
+      spark: SparkSession, files: Seq[(String, Long)]): Array[InputPartition] =
+    pack(spark, files.map { case (f, len) => GraftChunk(f, 0L, len) },
+      SqlInternals.conf(spark).filesMaxPartitionBytes)
+      .map(GraftLakeInputPartition(_): InputPartition).toArray
+
+  /** Spark's next-fit-decreasing packing (`FilePartition.getFilePartitions`,
+    * with the file source's largest-first order) of `chunks` into groups
+    * of at most `maxSplit` bytes, each chunk also costing the open cost. */
+  private def pack(spark: SparkSession, chunks: Seq[GraftChunk], maxSplit: Long)
+      : Seq[Seq[GraftChunk]] = {
+    val sorted = chunks.sortBy(-_.length).toIndexedSeq
+    // each PartitionedFile carries its chunk's index back out of the packer
+    val files = sorted.indices.map(i => PartitionedFile(InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromPathString(sorted(i).file),
+      sorted(i).start, sorted(i).length, otherConstantMetadataColumnValues = Map(ChunkIndex -> i)))
+    FilePartition.getFilePartitions(spark, files, maxSplit).map(_.files.toSeq.map(pf =>
+      sorted(pf.otherConstantMetadataColumnValues(ChunkIndex).asInstanceOf[Int])))
+  }
+  private val ChunkIndex = "graft_chunk"
 }
 
 /** Translates pushed v1 filters into a parquet [[FilterPredicate]] so the
@@ -575,6 +616,7 @@ private[sources] class GraftLakeScanBuilder(
   private var pruneFilters: Seq[PruneFilter] = Nil
   private var reported: Array[Filter] = Array.empty
   private var dataFilters: Seq[Filter] = Nil
+  private var files: Option[Set[String]] = None
   private var limit: Option[Int] = None
 
   /** LIMIT n over an unfiltered, tombstone-free snapshot: plan only enough
@@ -599,14 +641,18 @@ private[sources] class GraftLakeScanBuilder(
     // tuple when the column is a partition source, and against the
     // per-file column bounds for ANY column (clustering keeps those tight
     // on the cluster keys, so this is the scan path's zone-map skip)
-    dataFilters = filters.toSeq
+    // a `_graft_file` whitelist (IN or =) selects whole files exactly,
+    // like the runtime group filter: no post-scan re-check
+    val (byFile, rest) = filters.partition(f => GraftLakeScanBuilder.fileNames(f).isDefined)
+    files = byFile.flatMap(GraftLakeScanBuilder.fileNames).reduceOption(_ intersect _)
+    dataFilters = rest.toSeq
     // Catalyst splits top-level conjunctions before pushdown, so each
     // element here is one conjunct; any untranslated shape simply doesn't
     // prune (and is re-applied post-scan like everything else).
-    val translated = filters.flatMap(f => GraftLakeScanBuilder.toPruneFilter(f).map(_ -> f))
+    val translated = rest.flatMap(f => GraftLakeScanBuilder.toPruneFilter(f).map(_ -> f))
     pruneFilters = translated.map(_._1).toSeq
-    reported = translated.map(_._2)
-    filters // everything re-applied post-scan: pruning is conservative
+    reported = translated.map(_._2) ++ byFile
+    rest // everything else re-applied post-scan: pruning is conservative
   }
 
   override def pushedFilters(): Array[Filter] = reported
@@ -621,7 +667,7 @@ private[sources] class GraftLakeScanBuilder(
   override def build(): Scan = {
     val s = new GraftLakeScan(t, seq, tableSchema, required, pruneFilters, skipDeletes,
       dataFilters, limit, streamMaxSnapshots,
-      rowLevelScan = !acceptFilters)
+      rowLevelScan = !acceptFilters, files = files)
     builtScan = Some(s)
     s
   }
@@ -638,6 +684,13 @@ private[graft] object GraftLakeScanBuilder {
     case LessThan(c, v) => Some(PruneFilter.Lt(c, v))
     case LessThanOrEqual(c, v) => Some(PruneFilter.Le(c, v))
     case In(c, vs) => Some(PruneFilter.In(c, vs.toSeq))
+    case _ => None
+  }
+
+  /** The absolute data-file paths a `_graft_file` IN / = conjunct names. */
+  def fileNames(f: Filter): Option[Set[String]] = f match {
+    case In(GraftLakeSource.FileCol, vs) => Some(vs.map(String.valueOf).toSet)
+    case EqualTo(GraftLakeSource.FileCol, v) => Some(Set(String.valueOf(v)))
     case _ => None
   }
 }
@@ -679,7 +732,13 @@ private[sources] class GraftLakeDeleteKeysScan(
     extends Scan with Batch with SupportsReportStatistics {
   private lazy val deleteFiles: Seq[graft.lake.DeleteFile] = {
     val snap = t.snapshotPruned(seq, filters)
+    // every key of a delete file carries the file's commit seq as its
+    // `_graft_dseq`, so a pushed range on that column keeps or drops
+    // whole delete files (how `LakeTable.changes` reads its range's keys)
+    def dseq(d: graft.lake.DeleteFile) =
+      Map(LakeTable.DseqCol -> graft.lake.ColBound("n", d.seq.toString, d.seq.toString))
     t.deleteFilesFor(snap, t.planFiles(snap, filters)._1)
+      .filter(d => filters.forall(graft.lake.ColumnBounds.mayMatch(dseq(d), _)))
   }
 
   override def readSchema(): StructType = keySchema
@@ -696,8 +755,7 @@ private[sources] class GraftLakeDeleteKeysScan(
   }
 
   override def planInputPartitions(): Array[InputPartition] =
-    deleteFiles.map(d => GraftLakeInputPartition(t.abs(d.path), 0L, d.bytes): InputPartition)
-      .toArray
+    GraftLakeSource.planWholeFiles(t.spark, deleteFiles.map(d => t.abs(d.path) -> d.bytes))
 
   override def createReaderFactory(): PartitionReaderFactory =
     GraftLakeReaderFactory(keySchema, t.hadoopConfEntries)
@@ -713,7 +771,8 @@ private[sources] class GraftLakeScan(
     dataFilters: Seq[Filter] = Nil,
     limit: Option[Int] = None,
     streamMaxSnapshots: Option[Int] = None,
-    rowLevelScan: Boolean = false)
+    rowLevelScan: Boolean = false,
+    files: Option[Set[String]] = None)
     extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
 
@@ -725,13 +784,15 @@ private[sources] class GraftLakeScan(
   @volatile private var runtimeFilters: Seq[PruneFilter] = Nil
   private def allFilters: Seq[PruneFilter] = filters ++ runtimeFilters
 
-  /** Runtime whitelist on the `_graft_file` metadata column — the GROUP
-    * filter of Spark's row-level framework
+  /** Whitelist on the `_graft_file` metadata column: the pushed `files`
+    * set, or at runtime the GROUP filter of Spark's row-level framework
     * (`RowLevelOperationRuntimeGroupFiltering` computes the distinct files
     * holding rows the UPDATE/MERGE/DELETE condition matches and ships them
     * as an IN filter): only those files are read AND therefore only those
     * files are replaced by the copy-on-write commit. */
-  @volatile private var fileWhitelist: Option[Set[String]] = None
+  @volatile private var fileWhitelist: Option[Set[String]] = files
+  private def whitelisted(fs: Seq[graft.lake.DataFile]): Seq[graft.lake.DataFile] =
+    fileWhitelist.fold(fs)(w => fs.filter(f => w(t.abs(f.path))))
 
   /** Relative paths of the data files the LAST `planInputPartitions` call
     * planned — the group set a row-level REPLACE commit must swap out. */
@@ -865,13 +926,9 @@ private[sources] class GraftLakeScan(
   }
 
   override def filter(runtime: Array[Filter]): Unit = {
-    val (fileFilters, rest) = runtime.toSeq.partition {
-      case In(c, _) => c == GraftLakeSource.FileCol
-      case _ => false
-    }
-    fileFilters.foreach { case In(_, vs) =>
-      fileWhitelist = Some(vs.map(String.valueOf).toSet)
-    }
+    val (fileFilters, rest) =
+      runtime.toSeq.partition(GraftLakeScanBuilder.fileNames(_).isDefined)
+    fileFilters.flatMap(GraftLakeScanBuilder.fileNames).foreach(n => fileWhitelist = Some(n))
     runtimeFilters = rest.flatMap(GraftLakeScanBuilder.toPruneFilter)
   }
 
@@ -884,7 +941,7 @@ private[sources] class GraftLakeScan(
     * overestimate). */
   override def estimateStatistics(): Statistics = {
     val snap = t.snapshotPruned(seq, allFilters)
-    val (files, _) = t.planFiles(snap, allFilters)
+    val files = whitelisted(t.planFiles(snap, allFilters)._1)
     val bytes = files.map(_.bytes).sum
     // partition-scoped tombstones: a pruned scan whose planned files no
     // delete sidecar can reach still reports exact rows (better broadcast
@@ -905,28 +962,25 @@ private[sources] class GraftLakeScan(
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GraftLakeMicroBatchStream(t, required, filters, streamMaxSnapshots)
   override def description(): String = {
-    val (kept, total) = t.planFiles(t.snapshot(seq), filters)
+    val (pruned, total) = t.planFiles(t.snapshot(seq), filters)
+    val kept = whitelisted(pruned)
     val mor = if (skipDeletes) " mor=deferred" else ""
     val lim = limit.map(n => s" limitFiles=$n").getOrElse("")
     s"GraftLakeScan ${t.meta.name}$mor snapshot=$seq files=${kept.size}/$total$lim " +
       s"PrunedBy: ${filters.mkString(", ")}"
   }
 
-  /** One InputPartition per parquet ROW GROUP, so a 512 MB file with 4 row
-    * groups fans out to 4 readers instead of serializing in one. Split
-    * byte ranges come from the SNAPSHOT metadata (recorded at commit —
-    * Iceberg's `split_offsets`), so planning is pure metadata. */
+  /** Packed splits of the planned files ([[GraftLakeSource.planFileSplits]]):
+    * small files share a task, a file larger than the split target fans
+    * out per row group. Planning is pure metadata. */
   override def planInputPartitions(): Array[InputPartition] = {
     // manifest-level pruning first (skips whole metadata files via their
     // partition summaries), then file-level pruning within what loaded
     val snap = t.snapshotPruned(seq, allFilters)
     val (pruned, _) = t.planFiles(snap, allFilters)
-    // row-level group filter: only files the runtime subquery named (they
-    // arrive as the absolute paths the readers stamp into _graft_file)
-    val files = fileWhitelist match {
-      case Some(names) => pruned.filter(f => names.contains(t.abs(f.path)))
-      case None => pruned
-    }
+    // `_graft_file` whitelist (planning-time, or the row-level runtime
+    // group filter): absolute paths, as the readers stamp them
+    val files = whitelisted(pruned)
     // pushed LIMIT (only granted unfiltered + tombstone-free): keep just
     // enough files to cover it — recorded row counts make this metadata
     val kept = limit match {
@@ -1074,14 +1128,10 @@ private[sources] class GraftLakeMicroBatchStream(
       require(t.snapshot(s).deleteFiles.isEmpty,
         s"streaming bootstrap snapshot $s carries merge-on-read deletes; " +
           "compact the table before streaming it")
-    val spec = t.specFieldsThrough(snap.specVersion)
-    val newFiles = snap.dataFiles
-      // bootstrap batch = the WHOLE earliest snapshot, then strict increments
+    // bootstrap batch = the WHOLE earliest snapshot, then strict increments
+    val inRange = snap.dataFiles
       .filter(f => (if (s0 == Bootstrap) f.seq <= s else false) || (f.seq > s && f.seq <= e))
-      .filter(f => filters.forall(fl =>
-        PruneFilter.mayMatch(spec, f.partition, fl) &&
-          graft.lake.ColumnBounds.mayMatch(f.bounds, fl)))
-    GraftLakeSource.planFileSplits(t, newFiles)
+    GraftLakeSource.planFileSplits(t, t.planFiles(snap.copy(dataFiles = inRange), filters)._1)
   }
 
   // append-only ranges carry no delete files by construction
@@ -1207,10 +1257,9 @@ private[sources] class GraftLakeChangelogMicroBatchStream(
     if (direct) {
       val newFiles = t.snapshot(e).dataFiles
         .filter(f => (s0 == Bootstrap || f.seq > s0) && f.seq <= e)
-      // direct-ness rides on each split — see GraftLakeDirectChangeSplit
+      // direct-ness rides on each partition — see GraftPacked.direct
       return GraftLakeSource.planFileSplits(t, newFiles).map {
-        case p: GraftLakeInputPartition =>
-          GraftLakeDirectChangeSplit(p.file, p.start, p.length): InputPartition
+        case p: GraftLakeInputPartition => p.copy(direct = true): InputPartition
         case other => other
       }
     }
@@ -1239,10 +1288,10 @@ private[sources] class GraftLakeChangelogMicroBatchStream(
     GraftLakeSource.planFileSplits(t, files)
   }
 
-  // direct (append fast path) splits read RAW data files, which lack the
-  // _change_type column — the reader serves the constant for exactly
-  // those splits (the split type carries the decision); staged splits
-  // carry the real column
+  // direct (append fast path) partitions read RAW data files, which lack
+  // the _change_type column — the reader serves the constant for exactly
+  // those partitions (the partition carries the decision); staged
+  // partitions carry the real column
   override def createReaderFactory(): PartitionReaderFactory =
     GraftLakeReaderFactory(outSchema, t.hadoopConfEntries,
       missingDefaults = Map(GraftLakeSource.ChangeTypeCol -> UTF8String.fromString("insert")))
@@ -1266,33 +1315,35 @@ private[sources] class GraftLakeChangelogMicroBatchStream(
   }
 }
 
-/** One parquet row group: byte range [start, start+length) of `file` (the
-  * standard parquet split contract — a row group belongs to the split
-  * containing its midpoint). */
-private[sources] sealed trait GraftSplit extends InputPartition {
-  def file: String; def start: Long; def length: Long
+/** One byte range [start, start+length) of a data file: the whole file,
+  * or one of its row groups (the standard parquet split contract — a row
+  * group belongs to the range containing its midpoint). */
+private[sources] final case class GraftChunk(file: String, start: Long, length: Long)
+
+/** One task's chunks, read in order by one reader. */
+private[sources] sealed trait GraftPacked extends InputPartition {
+  def chunks: Seq[GraftChunk]
+  /** A changelog batch over RAW data files (append fast path): the files
+    * lack `_change_type`, so the reader synthesizes the factory's
+    * missing-column defaults for them. Making direct-ness a property of
+    * the PARTITION (not shared stream state) keeps re-plans, plan reuse,
+    * and any plan/execute interleaving correct by construction — each
+    * partition carries its own decision to the executor. */
+  def direct: Boolean = false
 }
 
-private[sources] case class GraftLakeInputPartition(file: String, start: Long, length: Long)
-    extends GraftSplit
+private[sources] case class GraftLakeInputPartition(
+    chunks: Seq[GraftChunk], override val direct: Boolean = false)
+    extends GraftPacked
 
-/** A changelog batch split over a RAW data file (append fast path): the
-  * file lacks `_change_type`, so the reader synthesizes the factory's
-  * missing-column defaults for exactly this split. Making direct-ness a
-  * property of the SPLIT (not shared stream state) keeps re-plans, plan
-  * reuse, and any plan/execute interleaving correct by construction —
-  * each split carries its own decision to the executor. */
-private[sources] case class GraftLakeDirectChangeSplit(file: String, start: Long, length: Long)
-    extends GraftSplit
-
-/** A split that also carries its partition KEY (catalyst values of the
+/** A partition that also carries its partition KEY (catalyst values of the
   * identity-partition source columns) — the storage-partitioned-join
   * contract: when every split of a scan exposes `partitionKey`, Spark can
   * group splits by key and join two co-partitioned tables WITHOUT any
   * shuffle (`spark.sql.sources.v2.bucketing.enabled`). */
 private[sources] case class GraftLakeKeyedInputPartition(
-    file: String, start: Long, length: Long, keyValues: Array[Any])
-    extends GraftSplit with org.apache.spark.sql.connector.read.HasPartitionKey {
+    chunks: Seq[GraftChunk], keyValues: Array[Any])
+    extends GraftPacked with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(keyValues)
 }
@@ -1301,21 +1352,21 @@ private[sources] case class GraftLakeReaderFactory(
     required: StructType,
     hadoopConf: Map[String, String],
     filter: Option[org.apache.parquet.filter2.predicate.FilterPredicate] = None,
-    /** Values of columns a [[GraftLakeDirectChangeSplit]]'s file does not
-      * carry — the changelog stream's append fast path reads raw data
-      * files and serves `_change_type = insert` this way. Other splits in
-      * the same scan read the real column. */
+    /** Values of columns a direct partition's files do not carry — the
+      * changelog stream's append fast path reads raw data files and
+      * serves `_change_type = insert` this way. Other partitions of the
+      * same scan read the real column. */
     missingDefaults: Map[String, Any] = Map.empty)
     extends PartitionReaderFactory {
 
-  /** Per-split constant columns: the serving file's path as `_graft_file`,
-    * plus the synthesized defaults of a direct changelog split. */
-  private def constantsFor(p: GraftSplit): Map[String, Any] = {
+  /** Per-chunk constant columns: the serving file's path as `_graft_file`,
+    * plus the synthesized defaults of a direct changelog partition. */
+  private def constantsFor(p: GraftPacked, c: GraftChunk): Map[String, Any] = {
     val file: Map[String, Any] =
       if (required.fieldNames.contains(GraftLakeSource.FileCol))
-        Map(GraftLakeSource.FileCol -> UTF8String.fromString(p.file))
+        Map(GraftLakeSource.FileCol -> UTF8String.fromString(c.file))
       else Map.empty
-    if (p.isInstanceOf[GraftLakeDirectChangeSplit]) missingDefaults ++ file else file
+    if (p.direct) missingDefaults ++ file else file
   }
 
   private def confOf(): Configuration = {
@@ -1332,30 +1383,30 @@ private[sources] case class GraftLakeReaderFactory(
   /** Every split decodes columnar; there is no row-at-a-time reader. */
   override def supportColumnarReads(p: InputPartition): Boolean = true
 
+  /** The Hadoop `Configuration` is built once per partition and shared by
+    * its chunks. */
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val gp = p.asInstanceOf[GraftSplit]
-    new GraftLakeVectorizedReader(gp.file, gp.start, gp.length, required, constantsFor(gp),
-      confOf())
+    val gp = p.asInstanceOf[GraftPacked]
+    new GraftLakeVectorizedReader(gp.chunks, required, constantsFor(gp, _), confOf())
   }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     throw new UnsupportedOperationException("graft lake splits are read columnar only")
 }
 
-/** Columnar decode of one row group via Spark's vectorized parquet reader —
-  * the same machinery `spark.read.parquet` uses, so the DSv2 path gets
-  * dictionary decoding, batch null-filling of evolved columns, INT32/FLOAT
-  * pages widened to promoted LONG/DOUBLE columns, and ColumnarToRow codegen
-  * for free. `constants` columns are not decoded: the reader serves them as
-  * Spark serves partition values (`initBatch`), and each batch's vectors
-  * are reordered to match `required`. */
+/** Columnar decode of one partition's chunks, one at a time, via Spark's
+  * vectorized parquet reader — the same machinery `spark.read.parquet`
+  * uses, so the DSv2 path gets dictionary decoding, batch null-filling of
+  * evolved columns, INT32/FLOAT pages widened to promoted LONG/DOUBLE
+  * columns, and ColumnarToRow codegen for free. `constants` columns (the
+  * same names for every chunk of a partition) are not decoded: the reader
+  * serves them as Spark serves partition values (`initBatch`), and each
+  * batch's vectors are reordered to match `required`. */
 private[sources] class GraftLakeVectorizedReader(
-    file: String,
-    start: Long,
-    length: Long,
+    chunks: Seq[GraftChunk],
     required: StructType,
-    constants: Map[String, Any],
+    constants: GraftChunk => Map[String, Any],
     conf: Configuration)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   // the old mapred FileSplit extends the mapreduce one AND is what
@@ -1366,31 +1417,37 @@ private[sources] class GraftLakeVectorizedReader(
   import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
   import org.apache.spark.sql.vectorized.ColumnarBatch
 
-  private val (constFields, dataFields) = required.fields.partition(f => constants.contains(f.name))
+  private val constNames = chunks.headOption.fold(Set.empty[String])(constants(_).keySet)
+  private val (constFields, dataFields) = required.fields.partition(f => constNames(f.name))
 
-  private val reader = {
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, StructType(dataFields).json)
-    conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
-      classOf[ParquetReadSupport].getName)
-    // the conf keys ParquetFileFormat/ParquetToSparkSchemaConverter expect
-    // to find pre-populated (reading them raw, no defaults)
-    conf.setBoolean("spark.sql.parquet.binaryAsString", false)
-    conf.setBoolean("spark.sql.parquet.int96AsTimestamp", false)
-    conf.setBoolean("spark.sql.caseSensitive", false)
-    conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
-    conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
-    conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
+  conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, StructType(dataFields).json)
+  conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+    classOf[ParquetReadSupport].getName)
+  // the conf keys ParquetFileFormat/ParquetToSparkSchemaConverter expect
+  // to find pre-populated (reading them raw, no defaults)
+  conf.setBoolean("spark.sql.parquet.binaryAsString", false)
+  conf.setBoolean("spark.sql.parquet.int96AsTimestamp", false)
+  conf.setBoolean("spark.sql.caseSensitive", false)
+  conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
+  conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
+  conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
+  private val attempt = new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)
+
+  private def open(c: GraftChunk): VectorizedParquetRecordReader = {
     // lake files carry micros timestamps written proleptic: no rebase
     val r = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, 4096)
-    val split = new FileSplit(new Path(file), start, length, Array.empty[String])
-    val attempt = new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)
-    r.initialize(split, new TaskAttemptContextImpl(conf, attempt))
+    r.initialize(new FileSplit(new Path(c.file), c.start, c.length, Array.empty[String]),
+      new TaskAttemptContextImpl(conf, attempt))
+    val values = constants(c)
     r.initBatch(StructType(constFields),
-      InternalRow.fromSeq(constFields.map(f => constants(f.name)).toSeq))
+      InternalRow.fromSeq(constFields.map(f => values(f.name)).toSeq))
     r.enableReturningBatches()
     r
   }
+
+  private val pending = chunks.iterator
+  private var reader: VectorizedParquetRecordReader = null
 
   /** Batch column i = reader vector order(i); the reader lays out the
     * decoded columns first, then the constants. None = already in order. */
@@ -1400,10 +1457,17 @@ private[sources] class GraftLakeVectorizedReader(
     if (o.sameElements(o.indices)) None else Some(o)
   }
 
-  override def next(): Boolean = reader.nextBatch()
+  override def next(): Boolean = {
+    while (reader == null || !reader.nextBatch()) {
+      close()
+      if (!pending.hasNext) return false
+      reader = open(pending.next())
+    }
+    true
+  }
   override def get(): ColumnarBatch = {
     val b = reader.resultBatch()
     order.fold(b)(o => new ColumnarBatch(o.map(b.column), b.numRows()))
   }
-  override def close(): Unit = reader.close()
+  override def close(): Unit = if (reader != null) { reader.close(); reader = null }
 }

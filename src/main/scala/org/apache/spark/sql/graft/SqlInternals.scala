@@ -8,8 +8,9 @@ import org.apache.spark.sql.connector.write.{RowLevelOperation, RowLevelOperatio
 /** The package-private Spark SQL pieces the lake needs: a DataFrame over a
   * hand-built logical plan (the merge-on-read fold is built once, as a
   * plan, and the imperative route reads it as a DataFrame), the
-  * table/operation pair behind a row-level command's read relation, and a
-  * session's artifact scope for jobs started on another session's thread. */
+  * table/operation pair behind a row-level command's read relation, a
+  * session's artifact scope for jobs started on another session's thread,
+  * and the session's typed SQL conf. */
 object SqlInternals {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(classic(spark), plan)
@@ -20,6 +21,11 @@ object SqlInternals {
     * entries, as every other job of that session. */
   def withSessionResources[T](spark: SparkSession)(body: => T): T =
     classic(spark).artifactManager.withResources(body)
+
+  /** The session's SQL conf: typed accessors for the file-source split
+    * confs the lake's split packing follows. */
+  def conf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
+    classic(spark).sessionState.conf
 
   private def classic(spark: SparkSession) =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

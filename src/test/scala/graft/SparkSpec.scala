@@ -25,8 +25,10 @@ object TestSpark {
   // VERDICT r16 #3: the suite wall-time question (342 s vs 494 s between
   // judge runs) was unanswerable because the suite recorded no window
   // quality. Stamp wall + /proc/stat hypervisor-steal delta across the
-  // whole forked test JVM into SUITE_WINDOW.json at exit, so a slow run
-  // is attributable to the host vs the code from artifacts. The parser
+  // whole forked test JVM into target/SUITE_WINDOW.json at exit, so a
+  // slow run is attributable to the host vs the code from artifacts. The
+  // stamp is a build output: it lives under target/ (git-ignored), so a
+  // test run never dirties the tree. The parser
   // is Bench's — the stamp and the bench artifact must measure steal
   // identically to stay cross-adjudicable.
   private def stealSec(): Double = Bench.stealSec()
@@ -51,8 +53,9 @@ object TestSpark {
           if (windowStartSteal < 0 || endSteal < 0) -1.0
           else endSteal - windowStartSteal
         try {
-          val w = new java.io.PrintWriter(
-            new java.io.File(sys.props("user.dir"), "SUITE_WINDOW.json"), "UTF-8")
+          val dir = new java.io.File(sys.props("user.dir"), "target")
+          dir.mkdirs()
+          val w = new java.io.PrintWriter(new java.io.File(dir, "SUITE_WINDOW.json"), "UTF-8")
           try w.println(
             f"""{"wall_sec":$wall%.1f,"steal_sec":$steal%.2f,""" +
               s""""suites":${suitesSeen.get()},""" +

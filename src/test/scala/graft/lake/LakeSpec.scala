@@ -1572,7 +1572,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("scan construction runs ZERO Spark jobs and zero listing at high file counts " +
-      "(manifest-driven FileIndex, VERDICT r21 #6)") {
+      "(DSv2 relation planned from manifest splits)") {
     val dir = Files.createTempDirectory("graft-manyfiles-fileindex").toString
     val n = 2048L // far above the 32-file threshold where the listing job used to fire
     val t = ManyFilesFixture.build(spark, s"$dir/t", "many", n)
@@ -1591,15 +1591,14 @@ class LakeSpec extends SparkSpec {
       org.apache.spark.ListenerDrain(spark.sparkContext)
       assert(jobCount.get() == 0,
         s"relation construction launched ${jobCount.get()} Spark job(s); " +
-          "the manifest FileIndex must launch none at any file count")
+          "planning from manifest splits must launch none at any file count")
       // the relation serves real reads from manifest (path, length) entries:
       // every linked file holds the template's one pk=0 row
-      assert(df.count() == n, "manifest-FileIndex scan returned the wrong row count")
+      assert(df.count() == n, "manifest-planned scan returned the wrong row count")
     } finally spark.sparkContext.removeSparkListener(listener)
-    // the relation schema equals a plain file-source read of the same files
-    val plain = spark.read.schema(t.currentSchema)
-      .parquet(t.currentSnapshot.dataFiles.map(f => t.abs(f.path)): _*)
-    assert(t.scan().schema == plain.schema,
-      "manifest FileIndex must produce the same relation schema as spark.read")
+    // the relation schema equals the SQL route's read of the same table
+    val sql = spark.read.format("graftlake").option("path", t.location).load()
+    assert(t.scan().schema == sql.schema,
+      "LakeTable.scan must produce the same relation schema as the DSv2 source")
   }
 }

@@ -213,12 +213,18 @@ class GraftLakeSourceSpec extends SparkSpec {
       t.append(df)
       val v2 = readLake(t.location)
       val nFiles = t.currentSnapshot.dataFiles.size
-      assert(v2.rdd.getNumPartitions > nFiles,
-        s"row groups did not split: ${v2.rdd.getNumPartitions} partitions for $nFiles files")
+      // files below the split target pack whole, like spark.read.parquet
+      assert(v2.rdd.getNumPartitions <= nFiles,
+        s"small files did not pack: ${v2.rdd.getNumPartitions} partitions for $nFiles files")
+      // a file above the split target fans out one partition per row group
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+      val split = try readLake(t.location).rdd.getNumPartitions
+        finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      assert(split > nFiles, s"row groups did not split: $split partitions for $nFiles files")
       // split offsets are recorded in the snapshot at commit time and fully
       // determine the plan (no footer reads at planning)
       assert(t.currentSnapshot.dataFiles.forall(_.splits.nonEmpty), "no split offsets in metadata")
-      assert(t.currentSnapshot.dataFiles.map(_.splits.size).sum == v2.rdd.getNumPartitions)
+      assert(t.currentSnapshot.dataFiles.map(_.splits.size).sum == split)
       assert(v2.count() == n)
       assert(v2.agg(sum("v")).head.getLong(0) == t.scan().agg(sum("v")).head.getLong(0))
       // vectorized: the columnar scan surfaces as ColumnarToRow in the plan
@@ -256,7 +262,7 @@ class GraftLakeSourceSpec extends SparkSpec {
       def readerFor(filter: Option[org.apache.parquet.filter2.predicate.FilterPredicate]) =
         GraftLakeReaderFactory(required, hcMap, filter)
           .createColumnarReader(
-            GraftLakeInputPartition(t.abs(file.path), lastSplit._1, lastSplit._2))
+            GraftLakeInputPartition(Seq(GraftChunk(t.abs(file.path), lastSplit._1, lastSplit._2))))
 
       // without a predicate the row group decodes batches...
       val open = readerFor(None)
@@ -308,7 +314,7 @@ class GraftLakeSourceSpec extends SparkSpec {
       def readerFor(filter: Option[org.apache.parquet.filter2.predicate.FilterPredicate]) =
         GraftLakeReaderFactory(required, hcMap, filter)
           .createColumnarReader(
-            GraftLakeInputPartition(t.abs(file.path), lastSplit._1, lastSplit._2))
+            GraftLakeInputPartition(Seq(GraftChunk(t.abs(file.path), lastSplit._1, lastSplit._2))))
 
       // m = 1.50 lives in the FIRST row group: the unscaled-int64 predicate
       // (150) must refute the last row group's stats without decoding it.
@@ -1338,5 +1344,98 @@ class GraftLakeSourceSpec extends SparkSpec {
 
     // valve restored: the zero-job driver serve comes back
     assert(grouped.queryExecution.executedPlan.toString.contains("LocalTableScan"))
+  }
+
+  /** Planned input partitions of every lake scan of `t` in `df`'s plan. */
+  private def scanParts[S: scala.reflect.ClassTag](df: DataFrame): Seq[Seq[GraftPacked]] =
+    df.queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if implicitly[scala.reflect.ClassTag[S]].runtimeClass.isInstance(b.scan) =>
+        b.batch.planInputPartitions().toSeq.map(_.asInstanceOf[GraftPacked])
+    }
+
+  test("a 72-small-file DSv2 scan packs exactly as many partitions as spark.read.parquet") {
+    import graft.lake.{LakeTable, PartitionField, Transform}
+    val dir = java.nio.file.Files.createTempDirectory("graft-pack-spec").toString
+    val df = spark.range(7200).select(col("id"), (col("id") % 72).as("p"))
+    val t = LakeTable.create(spark, s"$dir/t", "t", df.schema,
+      partitionSpec = Seq(PartitionField("p", Transform.Identity, "p_p")))
+    t.append(df)
+    val files = t.currentSnapshot.dataFiles
+    assert(files.size == 72, s"fixture wrote ${files.size} files")
+    val avg = files.map(_.bytes).sum / files.size
+    // Spark's defaults, then a small open cost and a ~3-file split target;
+    // storage-partitioned grouping off (keyed splits pack per key only)
+    val noSpj = Map("spark.sql.sources.v2.bucketing.enabled" -> "false")
+    Seq(noSpj, noSpj ++ Map("spark.sql.files.openCostInBytes" -> "1024",
+        "spark.sql.files.maxPartitionBytes" -> (3 * avg).toString)).foreach { confs =>
+      val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val lake = scanParts[GraftLakeScan](readLake(t.location)).flatten
+        val plain = spark.read.parquet(files.map(f => t.abs(f.path)): _*).rdd.getNumPartitions
+        assert(lake.size == plain, s"$confs: lake scan planned ${lake.size}, file source $plain")
+        assert(lake.size < files.size, s"$confs: no packing")
+        assert(lake.flatMap(_.chunks.map(_.file)).sorted == files.map(f => t.abs(f.path)).sorted,
+          s"$confs: packed partitions must cover every file exactly once")
+      } finally prev.foreach { case (k, v) =>
+        v match { case Some(x) => spark.conf.set(k, x); case None => spark.conf.unset(k) }
+      }
+    }
+    assert(readLake(t.location).count() == 7200)
+  }
+
+  test("LakeTable.scan(filters) plans the files snapshotPruned + planFiles keep") {
+    import graft.lake.PruneFilter.{Eq, Ge, In, Lt}
+    def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
+    val orders = LakePipelines.ordersLake(spark, sfDir)
+    val evolved = LakePipelines.ordersSpecEvolved(spark, sfDir)
+    val shapes = Seq(
+      // q24's month range
+      orders -> Seq(Ge("o_orderdate", LakePipelines.PruneLo), Lt("o_orderdate", LakePipelines.PruneHi)),
+      // serve's scan_api: month range + status
+      orders -> Seq(Ge("o_orderdate", ts("1995-03-01T00:00:00Z")),
+        Lt("o_orderdate", ts("1995-06-01T00:00:00Z")), Eq("o_orderstatus", "F")),
+      orders -> Seq(In("o_orderstatus", Seq("F", "P")), Ge("o_orderdate", LakePipelines.PruneHi)),
+      // q74's range + status across a partition-spec evolution
+      evolved -> Seq(Ge("o_orderdate", ts("1998-07-01T00:00:00Z")),
+        Lt("o_orderdate", ts("1999-07-01T00:00:00Z")), Eq("o_orderstatus", "F")))
+    shapes.foreach { case (t, fs) =>
+      val seq = t.currentSeq
+      val want = t.planFiles(t.snapshotPruned(seq, fs), fs)._1.map(f => t.abs(f.path)).toSet
+      val got = scanParts[GraftLakeScan](t.scan(filters = fs)).flatten
+        .flatMap(_.chunks.map(_.file)).toSet
+      assert(want.nonEmpty && want.size < t.snapshot(seq).dataFiles.size, s"$fs: prunes nothing")
+      assert(got == want, s"$fs: scan planned ${got.size} files, planFiles keeps ${want.size}")
+    }
+  }
+
+  test("a merge-on-read scan over 4 delete files reads its key side in one task") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-keyside-spec").toString
+    val base = (1L to 100L).map(i => (i, i * 1.0)).toDF("k", "v")
+    val t = graft.lake.LakeTable.create(spark, s"$dir/t", "t", base.schema,
+      primaryKey = Seq("k"))
+    t.append(base)
+    (0 until 4).foreach(i => t.upsert(Seq((i * 10L + 1, -1.0)).toDF("k", "v")))
+    assert(t.currentSnapshot.deleteFiles.size == 4)
+    Seq(t.scan(), readLake(t.location)).foreach { df =>
+      assert(scanParts[GraftLakeDeleteKeysScan](df).map(_.size) == Seq(1),
+        s"key side not packed into one task:\n${df.queryExecution.sparkPlan}")
+      assert(df.count() == 100 && df.filter(col("v") === -1.0).count() == 4)
+    }
+    // the scan's metadata columns: the serving file and the writing commit
+    val meta = t.scan().filter(col("v") === -1.0)
+      .select(col(GraftLakeSource.FileCol), col(graft.lake.LakeTable.SeqCol)).collect()
+    assert(meta.map(_.getLong(1)).sorted.toSeq == (2L to 5L),
+      s"upserted rows must carry their commits' seqs: ${meta.toSeq}")
+    assert(meta.map(_.getString(0)).toSet.subsetOf(
+      t.currentSnapshot.dataFiles.map(f => t.abs(f.path)).toSet))
+    // compaction reads through the same route; a plain relation offers both too
+    val compacted = graft.lake.Maintenance.compact(t)
+    assert(t.scan().select(col(graft.lake.LakeTable.SeqCol)).distinct().collect()
+      .map(_.getLong(0)).toSeq == Seq(compacted.seq))
+    assert(t.scan().select(col(GraftLakeSource.FileCol)).distinct().count() ==
+      t.currentSnapshot.dataFiles.size)
   }
 }
