@@ -166,21 +166,36 @@ final class LakeFileWriter(spec: LakeWriteSpec, taskTag: String) {
 
 object LakeFileWriter {
 
-  /** One staging job: every task streams its rows (delete keys when
-    * `deletes`) through its own writer; returns the staged files of the
-    * successful attempts. The attempt id rides into each staged name, so a
-    * lost speculative attempt's files are never referenced. */
-  def stage(rows: RDD[InternalRow], spec: LakeWriteSpec, deletes: Boolean = false): Seq[StagedFile] =
+  /** One staging job: every task streams its rows through its own writer;
+    * returns the staged files of the successful attempts. The attempt id
+    * rides into each staged name, so a lost speculative attempt's files
+    * are never referenced. A spec with a key schema stages a merge-on-read
+    * commit: each row leads with a boolean upsert flag before the data
+    * columns, and the task writes the data columns of every flagged row
+    * and the key (found by name in the data columns) of every row — the
+    * per-task shape of the DSv2 delta writer. */
+  def stage(rows: RDD[InternalRow], spec: LakeWriteSpec): Seq[StagedFile] = {
+    val keyAt = spec.keySchema.fields.map(k => 1 + spec.dataSchema.fieldIndex(k.name))
     rows.mapPartitions { it =>
       val ctx = TaskContext.get()
       val w = new LakeFileWriter(spec, s"p${ctx.partitionId()}-a${ctx.taskAttemptId()}")
       try {
-        it.foreach(r => if (deletes) w.delete(r) else w.write(r))
+        if (keyAt.isEmpty) it.foreach(w.write)
+        else {
+          val key = UnsafeProjection.create(spec.keySchema.fields.toSeq.zip(keyAt).map {
+            case (f, i) => BoundReference(i, f.dataType, nullable = true)
+          })
+          it.foreach { r =>
+            if (r.getBoolean(0)) w.write(r)
+            w.delete(key(r))
+          }
+        }
         w.close().iterator
       } catch {
         case e: Throwable => w.abort(); throw e
       }
     }.collect().toSeq
+  }
 
   /** Bind a partition spec to a row schema — sources matched
     * case-insensitively, like Spark's resolution; None when a source is

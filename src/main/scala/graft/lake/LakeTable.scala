@@ -51,8 +51,9 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Merge-on-read (reference: `write.delete/update/merge.mode =
   * merge-on-read`, destination.json:89-91): an upsert commit writes the
-  * batch as new data files at sequence N plus one small parquet of the
-  * batch's primary keys stamped `_dseq = N`; a read anti-joins data rows
+  * batch as new data files at sequence N and, in the same staging job,
+  * small parquet files of the batch's primary keys stamped `_dseq = N`
+  * ([[LakeTable.commitStagedDelta]]); a read anti-joins data rows
   * against delete keys with `row._seq < key._dseq`. Nothing ever rewrites
   * the base table on ingest — at 100 TB an upsert batch costs
   * O(batch + keys), not O(table) (VERDICT r1 flagged the copy-on-write
@@ -353,12 +354,12 @@ final class LakeTable private (
       case Some(ts) => latestPerKey(batch, meta.primaryKey, ts)
       case None     => batch
     }
-    commitUpsert(upserts = Some(deduped), deleteKeys = deduped.select(meta.primaryKey.map(col): _*), op = "upsert")
+    commitRowLevel(deduped.withColumn(UpsertCol, lit(true)), "upsert")
   }
 
   /** Merge-on-read delete of the given keys (DataFrame of pk columns). */
   def deleteKeys(keys: DataFrame): Snapshot =
-    commitUpsert(upserts = None, deleteKeys = keys.select(meta.primaryKey.map(col): _*), op = "delete")
+    commitRowLevel(keys.select(meta.primaryKey.map(col): _*).withColumn(UpsertCol, lit(false)), "delete")
 
   /** CDC batch with per-row operation + sync timestamp metadata (SURVEY
     * §2.9 C3/C4; reference columns `_olake_operation`,
@@ -369,9 +370,9 @@ final class LakeTable private (
     * is safe (C5). */
   def applyCdcBatch(batch: DataFrame, opCol: String, tsCol: String): Snapshot = {
     require(meta.primaryKey.nonEmpty, s"${meta.name}: CDC needs a primary key")
-    val latest  = latestPerKey(batch, meta.primaryKey, tsCol)
-    val upserts = latest.filter(lower(col(opCol)) =!= "delete").drop(opCol, tsCol)
-    commitUpsert(Some(upserts), latest.select(meta.primaryKey.map(col): _*), op = "cdc")
+    val upsert = coalesce(lower(col(opCol)) =!= "delete", lit(false))
+    commitRowLevel(latestPerKey(batch, meta.primaryKey, tsCol)
+      .withColumn(UpsertCol, upsert).drop(opCol, tsCol), "cdc")
   }
 
   /** Schema evolution: add a nullable column (metadata-only commit; old
@@ -1008,40 +1009,52 @@ final class LakeTable private (
         specVersion = cur.specVersion)))
     }
 
-  /** MERGE-ON-READ row-level commit (the DSv2 delta write: SQL UPDATE /
-    * MERGE INTO / unpushable DELETE under `write.update/merge.mode =
-    * merge-on-read`): append the restated rows as new data files and the
-    * displaced row identities as delete-key sidecars — one snapshot, NO
+  /** THE merge-on-read row-level commit, shared by the imperative upsert /
+    * deleteKeys / CDC route ([[commitRowLevel]]) and the DSv2 delta write
+    * (SQL UPDATE / MERGE INTO / unpushable DELETE under
+    * `write.*.mode = merge-on-read`): publish one staging job's data files
+    * and delete-key files and commit them as one snapshot — NO
     * pre-existing data file rewritten, O(changed rows) not O(affected
-    * files). Like [[commitUpsert]], the staged files embed `expectedBase+1`
-    * as their sequence, so a lost race cannot be rebased — it surfaces
-    * with the retry recipe instead. */
+    * files). The staged files embed `expectedBase + 1` as their sequence,
+    * so the commit cannot be rebased: rebasing without re-stamping could
+    * let its own tombstones swallow its rows. A stale base or a lost
+    * snapshot race therefore surfaces as a
+    * [[java.util.ConcurrentModificationException]] carrying the retry
+    * recipe (the operation is a pure function of its input, so re-running
+    * it re-stages with the right sequence), and any failure discards this
+    * attempt's files. */
   def commitStagedDelta(
-      dataFiles: Seq[DataFile], deleteFiles: Seq[DeleteFile], op: String,
-      expectedBase: Long): Snapshot =
+      staged: Seq[StagedFile], stagingRel: String, op: String, expectedBase: Long): Snapshot =
     synchronized {
       val cur = currentSnapshot
-      // CME, not require/IllegalArgument: this is the conflict the retry
-      // contract exists for (r20 SQL-route soak finding — see
-      // commitStagedReplace's twin check)
-      if (cur.seq != expectedBase)
+      if (cur.seq != expectedBase) {
+        fs.delete(new Path(root, stagingRel), true)
         throw new java.util.ConcurrentModificationException(
           s"${meta.name}: concurrent commit detected (snapshot $expectedBase read, " +
-            s"${cur.seq} current) — retry the statement")
+            s"${cur.seq} current) — $op cannot be rebased; retry: re-run the operation " +
+            "against the current snapshot")
+      }
       val seq = cur.seq + 1
-      try commitSnapshot(Snapshot(
-        seq = seq, parent = Some(cur.seq), timestampMs = System.currentTimeMillis(),
-        operation = op, schemaVersion = cur.schemaVersion,
-        dataFiles = cur.dataFiles ++ dataFiles,
-        deleteFiles = cur.deleteFiles ++ deleteFiles, specVersion = cur.specVersion))
-      catch {
-        case e: java.io.IOException if fs.exists(snapPath(seq)) =>
-          throw new java.util.ConcurrentModificationException(
-            s"${meta.name}: $op lost the race for snapshot $seq — another writer committed " +
-              "first. Delta commits embed their sequence in staged files and cannot be " +
-              "rebased; re-run the statement against the current snapshot. This attempt's " +
-              "staged files are unreferenced and will be removed by " +
-              "Maintenance.removeOrphans.", e)
+      val (dataFiles, deleteFiles) = publishStaged(staged, stagingRel)
+      try {
+        LakeTable.failpoint("staged-delta") // crash-injection site (test-only)
+        commitSnapshot(Snapshot(
+          seq = seq, parent = Some(cur.seq), timestampMs = System.currentTimeMillis(),
+          operation = op, schemaVersion = cur.schemaVersion,
+          dataFiles = cur.dataFiles ++ dataFiles,
+          deleteFiles = cur.deleteFiles ++ deleteFiles, specVersion = cur.specVersion))
+      } catch {
+        case e: Throwable =>
+          discardPublished(dataFiles.map(_.path) ++ deleteFiles.map(_.path))
+          e match {
+            case io: java.io.IOException if fs.exists(snapPath(seq)) =>
+              throw new java.util.ConcurrentModificationException(
+                s"${meta.name}: $op lost the race for snapshot $seq — another writer " +
+                  "committed first. Merge-on-read commits embed their sequence in staged " +
+                  "files and cannot be rebased; re-run the operation against the current " +
+                  "snapshot. This attempt's files were discarded.", io)
+            case _ => throw e
+          }
       }
     }
 
@@ -1088,47 +1101,53 @@ final class LakeTable private (
     throw new IllegalStateException("unreachable")
   }
 
-  /** Upsert/delete commits are NOT blind-rebase-safe (unlike appends): the
-    * staged data and delete files embed the commit seq, and rebasing onto
-    * a racing winner without re-stamping could let this commit's own
-    * tombstones swallow its rows. A lost race therefore surfaces as a
-    * [[java.util.ConcurrentModificationException]] telling the caller the
-    * retry recipe: re-run the SAME upsert/delete against the new current
-    * snapshot (the operation is a pure function of its batch, so re-running
-    * re-stages with the right seq); the loser's staged files are
-    * unreferenced by any snapshot and age-swept by
-    * [[Maintenance.removeOrphans]]. */
-  private def commitUpsert(upserts: Option[DataFrame], deleteKeys: DataFrame, op: String): Snapshot =
+  /** The imperative merge-on-read commit (upsert, deleteKeys, CDC): `rows`
+    * carry the table's columns (missing ones null) and a boolean
+    * [[UpsertCol]]. ONE staging job writes every row flagged true and the
+    * key of every row, arranged like any write ([[stage]]), and
+    * [[commitStagedDelta]] commits both file sets. Staging runs under the
+    * table lock: the staged files embed the commit seq, so in-JVM writers
+    * serialize here rather than lose the race. */
+  private def commitRowLevel(rows: DataFrame, op: String): Snapshot =
     synchronized {
       val cur = currentSnapshot
-      val seq = cur.seq + 1
-      val newData = upserts.map(stageDataFiles(_, cur.schemaVersion, seq, cur.specVersion)).getOrElse(Nil)
-      val delFiles = writeDeleteFiles(deleteKeys, seq, cur.specVersion)
-      LakeTable.failpoint("staged-delta") // crash-injection site (test-only)
-      try commitSnapshot(Snapshot(
-        seq = seq, parent = Some(cur.seq), timestampMs = System.currentTimeMillis(), operation = op,
-        schemaVersion = cur.schemaVersion,
-        dataFiles = cur.dataFiles ++ newData,
-        deleteFiles = cur.deleteFiles ++ delFiles, specVersion = cur.specVersion))
-      catch {
-        case e: java.io.IOException if fs.exists(snapPath(seq)) =>
-          throw new java.util.ConcurrentModificationException(
-            s"${meta.name}: $op lost the race for snapshot $seq — another writer committed " +
-              "first. Upsert/delete commits embed their sequence in staged files and cannot " +
-              "be rebased; re-run the operation against the current snapshot (it will " +
-              "re-stage with the right sequence). This attempt's staged files are " +
-              "unreferenced and will be removed by Maintenance.removeOrphans.", e)
-      }
+      val userSchema = schema(cur.schemaVersion)
+      val keySchema = StructType(meta.primaryKey.map(k =>
+        userSchema.fields.find(_.name.equalsIgnoreCase(k)).getOrElse(throw new IllegalStateException(
+          s"${meta.name}: primary-key column $k missing from schema v${cur.schemaVersion}"))))
+      val stagingRel = s"_staging/${UUID.randomUUID()}"
+      val staged = stage(rows, cur.schemaVersion, cur.seq + 1, cur.specVersion, stagingRel,
+        keySchema = Some(keySchema))
+      commitStagedDelta(staged, stagingRel, op, expectedBase = cur.seq)
     }
 
   /** Write `df` as partitioned + clustered parquet through
     * [[LakeFileWriter]] tasks under a staging dir, then publish the files
-    * into `data/` and return their entries.
-    * Partitioning/clustering per the reference's per-table specs
-    * (destination.json:37-73 transforms, :115-118 clustering). */
+    * into `data/` and return their entries. */
   private def stageDataFiles(
       df: DataFrame, schemaVersion: Int, seq: Long, specVersion: Int = 0): Seq[DataFile] = {
+    val stagingRel = s"_staging/${UUID.randomUUID()}"
+    publishStaged(stage(df, schemaVersion, seq, specVersion, stagingRel), stagingRel)._1
+  }
+
+  /** Align `df` to schema version `schemaVersion`, arrange it for the
+    * write and run ONE [[LakeFileWriter.stage]] job under `stagingRel`.
+    * Partitioning/clustering per the reference's per-table specs
+    * (destination.json:37-73 transforms, :115-118 clustering). With
+    * `keySchema` (the primary key's columns) this stages a merge-on-read
+    * commit: `df` also carries [[UpsertCol]], and each task writes the
+    * flagged rows and the key of every row. Delete keys then fan out
+    * exactly as the rows do. They are PARTITION-SCOPED (Iceberg's
+    * partition-scoped delete files: one file per task and tuple, which a
+    * pruned scan can skip) when every partition source is a key column,
+    * because the key then determines the partition of every row it can
+    * tombstone; otherwise the old row's partition is unknowable without
+    * reading the table, and each task writes one global delete file. */
+  private def stage(
+      df: DataFrame, schemaVersion: Int, seq: Long, specVersion: Int, stagingRel: String,
+      keySchema: Option[StructType] = None): Seq[StagedFile] = {
     val userSchema = schema(schemaVersion)
+    val columns = (keySchema.map(_ => UpsertCol).toSeq ++ userSchema.fieldNames).map(col)
     // align to the table schema: add nulls for missing evolved columns and
     // up-cast narrower incoming types (a CDC batch written before a type
     // promotion landed still carries e.g. INT where the table says BIGINT).
@@ -1146,7 +1165,7 @@ final class LakeTable private (
           d.withColumn(f.name, col(f.name).cast(f.dataType))
         }
       }
-    }.select(userSchema.fieldNames.map(col): _*)
+    }.select(columns: _*)
 
     val spec = partitionSpec(specVersion)
     val partCols = spec.map(_.name)
@@ -1161,7 +1180,9 @@ final class LakeTable private (
     // one file (small tables, tidy layout); at cluster scale a partition
     // value can hold terabytes, so a single task per value would serialize
     // the write — salting fans each value out to N tasks / N files, which
-    // the snapshot format tracks per-file anyway.
+    // the snapshot format tracks per-file anyway. An unpartitioned
+    // merge-on-read commit runs in one task at 1, so its keys land in one
+    // delete file.
     var unpersistAfterWrite: Option[DataFrame] = None
     val arranged = if (meta.clusterStrategy == "zorder" && meta.clusterBy.nonEmpty) {
       // Z-ORDER clustering: range-partition + sort the write on the Morton
@@ -1209,6 +1230,7 @@ final class LakeTable private (
           derived.repartition(n, partCols.map(col) :+ salt: _*)
         else if (partCols.nonEmpty) derived.repartition(partCols.map(col): _*)
         else if (splits > 1) derived.repartition(splits, salt)
+        else if (keySchema.isDefined) derived.coalesce(1)
         else derived
       val sortCols = partCols ++ meta.clusterBy
       if (sortCols.nonEmpty) repart.sortWithinPartitions(sortCols.map(col): _*) else repart
@@ -1216,50 +1238,14 @@ final class LakeTable private (
 
     // partition columns were only needed to ARRANGE the rows; the writer
     // renders them per row from the sources
-    val rows = arranged.select(userSchema.fieldNames.map(col).toIndexedSeq: _*).queryExecution.toRdd
-    val stagingRel = s"_staging/${UUID.randomUUID()}"
+    val rows = arranged.select(columns: _*).queryExecution.toRdd
     val writeSpec = LakeWriteSpec(location, stagingRel, seq, hadoopConfEntries, userSchema,
       dataParts = spec.map(pf => (userSchema.fieldIndex(pf.source), pf.transform, pf.name)),
-      recordSums = ColumnSums.recordSums(spark))
-    val staged =
-      try LakeFileWriter.stage(rows, writeSpec)
-      finally unpersistAfterWrite.foreach(_.unpersist(false))
-    publishStaged(staged, stagingRel)._1
-  }
-
-  /** Stage + publish a commit's delete-key files. Typical CDC batches are
-    * small, so the default is ONE file per partition tuple (smallest
-    * read-side plan). A bulk delete (GDPR purge, retention sweep) can set
-    * `spark.graft.lake.deleteSplits` = N to fan the write out across N
-    * tasks hashed on the primary key — a 10⁸-key batch should not funnel
-    * through a single writer. Readers take the union of all delete files,
-    * so the split count is invisible to the merge.
-    *
-    * PARTITION SCOPING (Iceberg's partition-scoped delete files): when
-    * every partition source of the commit's spec is a primary-key column,
-    * the partition of every row a key could tombstone is computable FROM
-    * THE KEY (old row and new row alike — the pk determines the value), so
-    * the keys are written partitioned and each delete file records its
-    * tuple. A partition-pruned scan then loads only the matching delete
-    * files instead of the table's whole tombstone set. Specs with
-    * non-key sources (e.g. time-partitioned tables with a surrogate pk)
-    * keep writing one global file — the old row's partition is unknowable
-    * without reading the table. */
-  private def writeDeleteFiles(keys: DataFrame, seq: Long, specVersion: Int): Seq[DeleteFile] = {
-    val splits = spark.conf.getOption("spark.graft.lake.deleteSplits")
-      .map(_.toInt).getOrElse(1).max(1)
-    val deduped = keys.distinct()
-    val arranged =
-      if (splits == 1) deduped.coalesce(1)
-      else deduped.repartition(splits, meta.primaryKey.map(col): _*)
-    val spec = partitionSpec(specVersion)
-    val scoped = spec.nonEmpty && spec.forall(pf => meta.primaryKey.contains(pf.source))
-    val stagingRel = s"_staging/${UUID.randomUUID()}"
-    val writeSpec = LakeWriteSpec(location, stagingRel, seq, hadoopConfEntries, new StructType(),
-      keySchema = arranged.schema,
-      keyParts = if (scoped) LakeFileWriter.bind(spec, arranged.schema).getOrElse(Nil) else Nil)
-    publishStaged(LakeFileWriter.stage(arranged.queryExecution.toRdd, writeSpec, deletes = true),
-      stagingRel)._2
+      recordSums = ColumnSums.recordSums(spark),
+      keySchema = keySchema.getOrElse(new StructType()),
+      keyParts = keySchema.flatMap(LakeFileWriter.bind(spec, _)).getOrElse(Nil))
+    try LakeFileWriter.stage(rows, writeSpec)
+    finally unpersistAfterWrite.foreach(_.unpersist(false))
   }
 
   /** Publish one staging job's files: move each into `data/` (under its
@@ -1660,6 +1646,9 @@ object LakeTable extends org.apache.spark.internal.Logging {
   private[graft] def isReservedName(lower: String): Boolean = lower.startsWith("_graft")
   /** Column in delete files carrying the delete's commit sequence. */
   val DseqCol = "_graft_dseq"
+  /** Transient flag of a merge-on-read commit's rows: true = write the
+    * row; the key of every row is deleted either way. */
+  private val UpsertCol = "_graft_upsert"
   private val RnCol = "_graft_rn"
   private val RowIdCol = "_graft_rowid"
 

@@ -67,20 +67,17 @@ object DedupOps {
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("group_size"))
       .select(col("doc_id"), col("group_size"))
 
-  /** doc_id × distinct bigram shingles — shared by the LSH pipeline.
-    * Native codegen'd shingling when the session has GraftExtensions (the
-    * expression is re-evaluated on every DAG arm that references it —
-    * three times in the exact-Jaccard join — so its per-row cost triples);
-    * bit-identical pure-functions fallback otherwise. */
-  private[operators] def shingled(s: SparkSession, dir: String): DataFrame =
-    shingledOf(s, docs(s, dir))
-
-  private def shingledOf(s: SparkSession, d: DataFrame): DataFrame = {
+  /** doc_id × distinct bigram shingles, recomputed by every plan arm that
+    * references it — the unshared form the LSH q-paths read once per query
+    * ([[shingledShared]] materializes it for the paths that read it several
+    * times). Native codegen'd shingling when the session has
+    * GraftExtensions; bit-identical pure-functions fallback otherwise. */
+  private[operators] def shingled(s: SparkSession, dir: String): DataFrame = {
     val sh =
       if (s.catalog.functionExists(graft.plans.GraftExtensions.ShinglesName))
         call_function(graft.plans.GraftExtensions.ShinglesName, col("text"))
       else TextSig.shingles(col("text"))
-    d.select(col("doc_id"), sh.as("sh"))
+    docs(s, dir).select(col("doc_id"), sh.as("sh"))
   }
 
   /** The shingle table materialized ONCE per query run (r21): q38/q68
@@ -103,17 +100,13 @@ object DedupOps {
     * twice what the serial stages did at this corpus size. At a corpus
     * size where those passes genuinely dominate, the input scans wide on
     * its own and no fanOut is needed.
-    * `spark.graft.dedup.shareShingles=false` restores the recompute shape
-    * for A/B comparability. */
+    *
+    * The checkpoint is LAZY: every first consumer here is a full pass (the
+    * q38 band groupBy's map stage / the q68 dict aggregate), so it
+    * materializes every partition as a side effect and the dedicated
+    * eager-checkpoint job + its stage barrier disappear from the run. */
   private[operators] def shingledShared(s: SparkSession, dir: String): DataFrame =
-    s.conf.getOption("spark.graft.dedup.shareShingles") match {
-      case Some(v) if v.equalsIgnoreCase("false") => shingled(s, dir) // A/B knob
-      // LAZY checkpoint: every first consumer here is a full pass (the q38
-      // band groupBy's map stage / the q68 dict aggregate), so it
-      // materializes every partition as a side effect and the dedicated
-      // eager-checkpoint job + its stage barrier disappear from the run
-      case _ => Tables.shared(shingledOf(s, docs(s, dir)), eager = false)
-    }
+    Tables.shared(shingled(s, dir), eager = false)
 
   /** Ordered pairs (i < j) from a bucket's sorted member array, as an
     * array expression (the members column is a materialized attribute, so

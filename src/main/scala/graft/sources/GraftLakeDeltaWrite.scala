@@ -22,15 +22,15 @@ import java.util.UUID
   *  - every matched row becomes a DELETE of its primary-key identity
   *    (`rowId`), and updates are represented as delete + re-insert
   *    ([[SupportsDelta.representUpdateAsDeleteAndInsert]]);
-  *  - writers stage the re-inserted rows as ordinary data files and the
-  *    displaced identities as delete-key sidecars stamped with the commit
-  *    sequence — the SAME shape the CDC upsert path commits, so the MoR
-  *    read path (the planned anti-join, or compaction) applies
-  *    unchanged;
-  *  - the driver commits both file sets in one snapshot
-  *    ([[LakeTable.commitStagedDelta]]); NO pre-existing data file is
-  *    rewritten. A sparse UPDATE on a 100 TB table costs O(changed rows),
-  *    not O(files holding them).
+  *  - each writer task stages its re-inserted rows as ordinary data
+  *    files and its displaced identities as delete-key sidecars stamped
+  *    with the commit sequence — the per-task shape of the imperative
+  *    upsert / deleteKeys / CDC staging job, so the MoR read path (the
+  *    planned anti-join, or compaction) applies unchanged;
+  *  - the driver commits both file sets in one snapshot through the
+  *    commit both routes share ([[LakeTable.commitStagedDelta]]); NO
+  *    pre-existing data file is rewritten. A sparse UPDATE on a 100 TB
+  *    table costs O(changed rows), not O(files holding them).
   *
   * Delete-key sidecars are PARTITION-SCOPED when every partition source of
   * the current spec is a primary-key column: every transform renders
@@ -168,13 +168,7 @@ private[sources] class GraftLakeDeltaBatchWrite(
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val staged = messages.toSeq.flatMap(_.asInstanceOf[GraftLakeCommitMessage].files)
     if (staged.isEmpty) return // matched nothing: no-op
-    val (dataEntries, delEntries) = t.publishStaged(staged, stagingRel)
-    try t.commitStagedDelta(dataEntries, delEntries, opName, expectedBase = snap.seq)
-    catch {
-      case e: Throwable =>
-        t.discardPublished(dataEntries.map(_.path) ++ delEntries.map(_.path))
-        throw e
-    }
+    t.commitStagedDelta(staged, stagingRel, opName, expectedBase = snap.seq)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

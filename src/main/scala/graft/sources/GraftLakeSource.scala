@@ -823,7 +823,10 @@ private[sources] class GraftLakeScan(
     * files carrying extra retired spec fields don't overcount groups).
     * Eligible when the user opted in (`spark.sql.sources.v2.bucketing
     * .enabled` — checked FIRST: the default path must not pay any
-    * metadata reads for this), every CURRENT-spec field is either
+    * metadata reads for this). Lake SPJ is opt-in: an unset conf reads as
+    * "false" here, whatever Spark's own default for it is (true in Spark
+    * 4.1), so only an explicitly set "true" groups a scan. Also required:
+    * every CURRENT-spec field is either
     * identity over a string/integral source or `bucket(n, source)` (the
     * standard 100 TB fact-fact layout — the key is the bucket id, the
     * reported expression `bucket(n, col)` resolves through the catalog's

@@ -30,8 +30,10 @@ import org.apache.spark.sql.types.StructType
   *    widens the table schema before the write (BLOG:538-553).
   *
   * Scale notes: each micro-batch costs O(batch) — the merge-on-read lake
-  * table never rewrites base data on ingest — and the batch dedupe is a
-  * single hash shuffle on the primary key. Nothing here holds state on the
+  * table never rewrites base data on ingest — and its commit is one
+  * staging job that reads the batch once: the dedupe is a single hash
+  * shuffle on the primary key, and each write task stages its rows and
+  * its delete keys together. Nothing here holds state on the
   * driver; a 1000-executor cluster runs the same plan per batch. Each
   * micro-batch arrives in the streaming query's cloned session, which has
   * its own executor-side class loader; the commit runs in the table's own

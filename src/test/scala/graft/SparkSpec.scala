@@ -70,4 +70,19 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   TestSpark.armWindowStamp()
   lazy val spark: SparkSession = TestSpark.spark
   def sfDir: String = TestSpark.sfDir
+
+  /** Run `body` with `confs` set, then put each key back as it was: a key
+    * the session had explicitly set gets its value again, any other is
+    * unset. `spark.conf.getOption` cannot tell the two apart (it returns a
+    * registered conf's default), so restoring from it would leave the
+    * default explicitly set for the rest of the test JVM. */
+  def withConfs[A](confs: Map[String, String])(body: => A): A = {
+    val set = spark.conf.getAll
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally confs.keys.foreach(k => set.get(k) match {
+      case Some(v) => spark.conf.set(k, v)
+      case None => spark.conf.unset(k)
+    })
+  }
 }

@@ -228,9 +228,9 @@ class LakeSpec extends SparkSpec {
     val df = (1L to 1000L).map(i => (i, i * 1.0)).toDF("id", "v")
     val t = LakeTable.create(spark, s"$dir/t", "t", df.schema, primaryKey = Seq("id"))
     t.append(df)
-    spark.conf.set("spark.graft.lake.deleteSplits", "3")
+    spark.conf.set("spark.graft.lake.writeSplits", "3")
     try t.deleteKeys((1L to 500L).map(Tuple1(_)).toDF("id"))
-    finally spark.conf.unset("spark.graft.lake.deleteSplits")
+    finally spark.conf.unset("spark.graft.lake.writeSplits")
     assert(t.currentSnapshot.deleteFiles.size > 1,
       s"delete batch did not split: ${t.currentSnapshot.deleteFiles.size} file(s)")
     assert(t.scan().count() == 500)
@@ -1073,11 +1073,11 @@ class LakeSpec extends SparkSpec {
     // CME since r20 (SQL-route soak finding): the refusal is a genuine
     // concurrency loss and must follow the documented retry contract
     val err = intercept[java.util.ConcurrentModificationException](
-      t.commitStagedDelta(Nil, Nil, "update-mor", expectedBase = base))
+      t.commitStagedDelta(Nil, "_staging/none", "update-mor", expectedBase = base))
     assert(err.getMessage.contains("concurrent commit") &&
       err.getMessage.contains("retry"), s"unhelpful race error: ${err.getMessage}")
     // the current base still commits
-    t.commitStagedDelta(Nil, Nil, "update-mor", expectedBase = t.currentSeq)
+    t.commitStagedDelta(Nil, "_staging/none", "update-mor", expectedBase = t.currentSeq)
   }
 
   test("empty-string partition values: sentinel files keep for string predicates, rows survive") {
@@ -1449,7 +1449,7 @@ class LakeSpec extends SparkSpec {
     intercept[java.util.ConcurrentModificationException](
       t.commitStagedReplaceFiles(Set.empty, Nil, "update-cow", expectedBase = Some(0L)))
     intercept[java.util.ConcurrentModificationException](
-      t.commitStagedDelta(Nil, Nil, "update-mor", expectedBase = 0L))
+      t.commitStagedDelta(Nil, "_staging/none", "update-mor", expectedBase = 0L))
     // and the state is untouched — a refused commit must not publish
     assert(t.currentSeq == 1L)
   }

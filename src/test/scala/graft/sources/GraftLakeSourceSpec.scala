@@ -429,17 +429,13 @@ class GraftLakeSourceSpec extends SparkSpec {
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force a non-broadcast join
       "spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    withConfs(confs) {
       val df = joined
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange hashpartitioning"),
         s"co-partitioned join still shuffled:\n$plan")
       assert(df.as[(String, Long, Long)].collect().toSet ==
         Set(("A", 1L, 10L), ("B", 2L, 20L), ("C", 3L, 30L)))
-    } finally prev.foreach { case (k, v) =>
-      v match { case Some(s) => spark.conf.set(k, s); case None => spark.conf.unset(k) }
     }
     // with bucketing off (the default), the same join still answers
     assert(joined.count() == 3)
@@ -455,8 +451,7 @@ class GraftLakeSourceSpec extends SparkSpec {
     }
     val na = buildN("na", Seq((1L, 10L), (2L, 20L), (10L, 100L)))
     val nb = buildN("nb", Seq((1L, 11L), (2L, 22L), (10L, 110L)))
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    withConfs(confs) {
       val dn = spark.read.format("graftlake").option("path", na.location).load()
         .join(spark.read.format("graftlake").option("path", nb.location).load()
           .withColumnRenamed("v", "v2"), "k")
@@ -465,8 +460,6 @@ class GraftLakeSourceSpec extends SparkSpec {
         s"numeric-keyed co-partitioned join shuffled:\n$plan")
       assert(dn.as[(Long, Long, Long)].collect().toSet ==
         Set((1L, 10L, 11L), (2L, 20L, 22L), (10L, 100L, 110L)))
-    } finally prev.foreach { case (k, v) =>
-      v match { case Some(s) => spark.conf.set(k, s); case None => spark.conf.unset(k) }
     }
   }
 
@@ -494,10 +487,8 @@ class GraftLakeSourceSpec extends SparkSpec {
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
     val shuffled = joined.as[(Long, Long, Long)].collect().toSet // baseline: shuffle plan
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    withConfs(confs) {
       val df = joined
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
@@ -505,8 +496,6 @@ class GraftLakeSourceSpec extends SparkSpec {
       assert(df.as[(Long, Long, Long)].collect().toSet == shuffled,
         "zero-shuffle bucket join disagrees with the shuffle plan")
       assert(shuffled.size == 200 && shuffled.contains((7L, 70L, 700L)))
-    } finally prev.foreach { case (k, v) =>
-      v match { case Some(s) => spark.conf.set(k, s); case None => spark.conf.unset(k) }
     }
     // the r5 guard still holds: promoting a bucket-source type would
     // re-bucket the same value differently in old vs new files
@@ -1369,17 +1358,13 @@ class GraftLakeSourceSpec extends SparkSpec {
     val noSpj = Map("spark.sql.sources.v2.bucketing.enabled" -> "false")
     Seq(noSpj, noSpj ++ Map("spark.sql.files.openCostInBytes" -> "1024",
         "spark.sql.files.maxPartitionBytes" -> (3 * avg).toString)).foreach { confs =>
-      val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
+      withConfs(confs) {
         val lake = scanParts[GraftLakeScan](readLake(t.location)).flatten
         val plain = spark.read.parquet(files.map(f => t.abs(f.path)): _*).rdd.getNumPartitions
         assert(lake.size == plain, s"$confs: lake scan planned ${lake.size}, file source $plain")
         assert(lake.size < files.size, s"$confs: no packing")
         assert(lake.flatMap(_.chunks.map(_.file)).sorted == files.map(f => t.abs(f.path)).sorted,
           s"$confs: packed partitions must cover every file exactly once")
-      } finally prev.foreach { case (k, v) =>
-        v match { case Some(x) => spark.conf.set(k, x); case None => spark.conf.unset(k) }
       }
     }
     assert(readLake(t.location).count() == 7200)
