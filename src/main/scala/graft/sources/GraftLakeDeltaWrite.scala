@@ -28,9 +28,12 @@ import java.util.UUID
   *    upsert / deleteKeys / CDC staging job, so the MoR read path (the
   *    planned anti-join, or compaction) applies unchanged;
   *  - the driver commits both file sets in one snapshot through the
-  *    commit both routes share ([[LakeTable.commitStagedDelta]]); NO
-  *    pre-existing data file is rewritten. A sparse UPDATE on a 100 TB
-  *    table costs O(changed rows), not O(files holding them).
+  *    row-level commit both routes share ([[LakeTable.commitStagedDelta]],
+  *    a use of the lake's one commit primitive that never rebases: a
+  *    commit landing since the operation's scan snapshot fails it with the
+  *    CME retry recipe and discards its files); NO pre-existing data file
+  *    is rewritten. A sparse UPDATE on a 100 TB table costs O(changed
+  *    rows), not O(files holding them).
   *
   * Delete-key sidecars are PARTITION-SCOPED when every partition source of
   * the current spec is a primary-key column: every transform renders
@@ -168,7 +171,7 @@ private[sources] class GraftLakeDeltaBatchWrite(
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val staged = messages.toSeq.flatMap(_.asInstanceOf[GraftLakeCommitMessage].files)
     if (staged.isEmpty) return // matched nothing: no-op
-    t.commitStagedDelta(staged, stagingRel, opName, expectedBase = snap.seq)
+    t.commitStagedDelta(stagingRel, opName, expectedBase = Some(snap.seq))(_ => staged)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

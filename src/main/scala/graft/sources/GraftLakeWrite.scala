@@ -13,11 +13,14 @@ import java.util.UUID
   * parquet files through the lake's one [[graft.lake.LakeFileWriter]] (one
   * file per partition tuple it sees, stats from the writer's own footer),
   * reports them in its commit message, and the driver publishes them
-  * ([[LakeTable.publishStaged]]) and commits one snapshot through the same
-  * optimistic-retry protocol the imperative writer uses. Rows embed the
-  * planning-time `currentSeq + 1` as their commit seq — a rebase can only
-  * RAISE the final seq, which keeps appended rows conservatively old
-  * relative to tombstones (see `LakeTable.commitAppendWithRetry`).
+  * ([[LakeTable.publishStaged]]) and commits one snapshot through the
+  * lake's one commit primitive ([[LakeTable.commit]]), the same one the
+  * imperative writer uses: an append rebases on a lost race, a replace
+  * surfaces it as the CME retry contract, and either discards its
+  * published files on failure. Rows embed the planning-time
+  * `currentSeq + 1` as their commit seq — a rebase can only RAISE the
+  * final seq, which keeps appended rows conservatively old relative to
+  * tombstones (see `LakeTable.appending`).
   *
   * Partition transforms are rendered per row on the executor by the
   * writer (identity through Catalyst's cast to string, month/day/year
@@ -148,28 +151,34 @@ private[sources] class GraftLakeBatchWrite(
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val staged = messages.toSeq.flatMap(_.asInstanceOf[GraftLakeCommitMessage].files)
-    // a failure anywhere before the snapshot commit rolls the published
-    // files back — abort only clears staging
+    // a failed commit discards the published files — abort only clears staging
     val (entries, _) = t.publishStaged(staged, stagingRel)
-    try {
-      LakeTable.failpoint("staged-dsv2") // crash-injection site (test-only)
-      (replaceAll, replacedFiles) match {
-        case (true, Some(planned)) =>
-          // group replace: swap exactly the files the row-level scan read.
-          // A missing planned set would make "replace" mean "drop every
-          // row the scan did not read" — fail loudly instead.
+    val published = entries.map(_.path)
+    LakeTable.failpoint("staged-dsv2") // crash-injection site (test-only)
+    (replaceAll, replacedFiles) match {
+      case (true, Some(planned)) =>
+        // GROUP replace (the row-level UPDATE/MERGE/DELETE commit): swap
+        // exactly the files the row-level scan read, carrying every other
+        // entry over verbatim — O(affected files), not O(table). A missing
+        // planned set would make "replace" mean "drop every row the scan
+        // did not read" — fail loudly instead. Delete files are retained:
+        // they still tombstone rows in carried-over files, and rows of the
+        // replacement files embed a commit seq newer than any live
+        // tombstone. When the group is the whole table this folds them
+        // away like a full replace.
+        t.commit("rewrite-dsv2", expectedBase, published = published) { head =>
           val removed = planned().getOrElse(throw new IllegalStateException(
             s"${t.meta.name}: row-level write committed before its scan planned files"))
-          t.commitStagedReplaceFiles(removed, entries, "rewrite-dsv2", expectedBase)
-        case (true, None) =>
-          t.commitStagedReplace(entries, "overwrite-dsv2", expectedBase)
-        case _ =>
-          t.commitStagedAppend(entries, "append-dsv2")
-      }
-    } catch {
-      case e: Throwable =>
-        t.discardPublished(entries.map(_.path))
-        throw e
+          val keep = head.dataFiles.filterNot(f => removed.contains(f.path))
+          head.copy(dataFiles = keep ++ entries,
+            deleteFiles = if (keep.isEmpty) Nil else head.deleteFiles)
+        }
+      case (true, None) =>
+        // full replace (INSERT OVERWRITE / truncate)
+        t.commit("overwrite-dsv2", expectedBase, published = published)(
+          _.copy(dataFiles = entries, deleteFiles = Nil))
+      case _ =>
+        t.commit("append-dsv2", rebase = true, published = published)(t.appending(entries))
     }
   }
 

@@ -410,11 +410,13 @@ class LakeSpec extends SparkSpec {
     t.append(Seq((2L, "y")).toDF("id", "s")) // the racing commit
     // CME since r20 (SQL-route soak finding): the refusal is a genuine
     // concurrency loss and must follow the documented retry contract
-    val err = intercept[java.util.ConcurrentModificationException](
-      t.commitStagedReplace(Nil, "overwrite-dsv2", expectedBase = Some(base)))
+    // the DSv2 INSERT OVERWRITE / COW replace commit: swap in no files
+    def replace(expectedBase: Option[Long]) =
+      t.commit("overwrite-dsv2", expectedBase)(_.copy(dataFiles = Nil, deleteFiles = Nil))
+    val err = intercept[java.util.ConcurrentModificationException](replace(Some(base)))
     assert(err.getMessage.contains("concurrent commit"))
     // without an expected base (plain INSERT OVERWRITE) the replace lands
-    assert(t.commitStagedReplace(Nil, "overwrite-dsv2").operation == "overwrite-dsv2")
+    assert(replace(None).operation == "overwrite-dsv2")
   }
 
   test("racing writers: second commit of the same seq fails loudly") {
@@ -587,9 +589,9 @@ class LakeSpec extends SparkSpec {
     // deterministic), (3) no dangling metadata (every file referenced by
     // the final snapshot exists on disk), and (4) every commit that
     // REPORTED success owning exactly one distinct snapshot. Losers of
-    // non-rebaseable commits surface ConcurrentModificationException /
-    // IOException with the retry recipe — the test retries like a real
-    // writer would.
+    // non-rebaseable commits, and appends out of rebases, surface
+    // ConcurrentModificationException with the retry recipe — the test
+    // retries like a real writer would.
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-stress-spec").toString
     val schema0 = Seq((0L, "init")).toDF("id", "s").schema
@@ -607,7 +609,6 @@ class LakeSpec extends SparkSpec {
         try return f
         catch {
           case e: java.util.ConcurrentModificationException => last = e; Thread.sleep(5)
-          case e: java.io.IOException => last = e; Thread.sleep(5)
         }
       }
       throw new AssertionError(s"$label exhausted retries", last)
@@ -645,7 +646,7 @@ class LakeSpec extends SparkSpec {
             (1000L to 1049L).map(k => (base + k, s"a-$i-3")).toDF("id", "s"))))
           // round 6 (writers 2/3): MIXED-PROTOCOL race — the same table
           // written through the SQL catalog route (DSv2 batch write →
-          // commitStagedAppend), racing the Scala-API writers above. The
+          // the commit primitive), racing the Scala-API writers above. The
           // DSv2 append commit carries its own rebase-retry; each
           // successful INSERT mints exactly one snapshot (counted, not
           // seq-recorded — the racing winner's seq isn't observable).
@@ -715,6 +716,10 @@ class LakeSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       val appender = new Thread(() => { t.append(df); () }, "stage-lock-appender")
+      // the staged-data failpoint fires once staging has finished and
+      // before the commit takes the lock
+      val staged = new java.util.concurrent.CountDownLatch(1)
+      LakeTable.failpoint = site => if (site == "staged-data") staged.countDown()
       var jobsDuring = 0
       // warm the instance's lazy vals (meta, fs — lazy-val init synchronizes
       // on `this`) so the appender doesn't trip over initialization monitors
@@ -727,19 +732,8 @@ class LakeSpec extends SparkSpec {
       // the appender may only park on the lock for the final snapshot swap
       t.synchronized {
         appender.start()
-        val deadline = System.currentTimeMillis() + 120000
-        // top frame must be commitWrite itself: the monitorenter for the
-        // commit block lives in that method, while transient internal
-        // monitors during staging park with deeper top frames
-        def parkedOnCommitLock: Boolean =
-          appender.getState == Thread.State.BLOCKED &&
-            appender.getStackTrace.headOption.exists(f =>
-              f.getClassName.contains("LakeTable") && f.getMethodName.contains("commitWrite"))
-        while (!parkedOnCommitLock && appender.isAlive &&
-            System.currentTimeMillis() < deadline)
-          Thread.sleep(10)
-        assert(parkedOnCommitLock,
-          s"appender never parked on the commit lock (state=${appender.getState})\n" +
+        assert(staged.await(120, java.util.concurrent.TimeUnit.SECONDS),
+          s"staging did not finish while the lock was held (state=${appender.getState})\n" +
             appender.getStackTrace.take(12).mkString("\n"))
         assert(t.currentSeq == 0L, "commit must not publish while the lock is held")
         // deliver every job-start event posted so far
@@ -755,7 +749,10 @@ class LakeSpec extends SparkSpec {
       // lock-held tail is a pure metadata swap
       assert(jobCount.get() == jobsDuring,
         s"Spark job ran inside the commit critical section ($jobsDuring -> ${jobCount.get()})")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally {
+      LakeTable.failpoint = _ => ()
+      spark.sparkContext.removeSparkListener(listener)
+    }
     assert(t.currentSeq == 1L)
     assert(t.scan().count() == 100L)
     // per-file exact sums recorded by the write tasks
@@ -1073,11 +1070,11 @@ class LakeSpec extends SparkSpec {
     // CME since r20 (SQL-route soak finding): the refusal is a genuine
     // concurrency loss and must follow the documented retry contract
     val err = intercept[java.util.ConcurrentModificationException](
-      t.commitStagedDelta(Nil, "_staging/none", "update-mor", expectedBase = base))
+      t.commitStagedDelta("_staging/none", "update-mor", expectedBase = Some(base))(_ => Nil))
     assert(err.getMessage.contains("concurrent commit") &&
       err.getMessage.contains("retry"), s"unhelpful race error: ${err.getMessage}")
     // the current base still commits
-    t.commitStagedDelta(Nil, "_staging/none", "update-mor", expectedBase = t.currentSeq)
+    t.commitStagedDelta("_staging/none", "update-mor", expectedBase = Some(t.currentSeq))(_ => Nil)
   }
 
   test("empty-string partition values: sentinel files keep for string predicates, rows survive") {
@@ -1432,8 +1429,8 @@ class LakeSpec extends SparkSpec {
   }
 
   test("staged replace/delta commits losing a race throw ConcurrentModificationException") {
-    // r20 SQL-route soak finding (its first seed): commitStagedReplace /
-    // commitStagedReplaceFiles / commitStagedDelta validated expectedBase
+    // r20 SQL-route soak finding (its first seed): the DSv2 replace,
+    // group-replace and delta commits validated expectedBase
     // with a bare `require`, so a genuine concurrency LOSS — the exact
     // condition the documented CME retry contract exists for — leaked as
     // IllegalArgumentException and crashed a caller's retry loop (the
@@ -1444,12 +1441,14 @@ class LakeSpec extends SparkSpec {
     val df = Seq((1L, "a")).toDF("id", "s")
     val t = LakeTable.create(spark, dir, "staleb", df.schema, primaryKey = Seq("id"))
     t.append(df) // seq 1: expectedBase 0 is now stale for every staged commit
+    // the three commits the DSv2 writes make: full replace, group replace
+    // (swap no files for no files), merge-on-read delta
     intercept[java.util.ConcurrentModificationException](
-      t.commitStagedReplace(Nil, "overwrite-dsv2", expectedBase = Some(0L)))
+      t.commit("overwrite-dsv2", expectedBase = Some(0L))(_.copy(dataFiles = Nil, deleteFiles = Nil)))
     intercept[java.util.ConcurrentModificationException](
-      t.commitStagedReplaceFiles(Set.empty, Nil, "update-cow", expectedBase = Some(0L)))
+      t.commit("update-cow", expectedBase = Some(0L))(h => h.copy(dataFiles = h.dataFiles)))
     intercept[java.util.ConcurrentModificationException](
-      t.commitStagedDelta(Nil, "_staging/none", "update-mor", expectedBase = 0L))
+      t.commitStagedDelta("_staging/none", "update-mor", expectedBase = Some(0L))(_ => Nil))
     // and the state is untouched — a refused commit must not publish
     assert(t.currentSeq == 1L)
   }
