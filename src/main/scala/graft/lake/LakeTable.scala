@@ -72,8 +72,6 @@ final class LakeTable private (
   private val root = new Path(location)
   private[lake] val fs: FileSystem = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def metaDir  = new Path(root, "meta")
-  private def dataDir  = new Path(root, "data")
-  private def delDir   = new Path(root, "deletes")
 
   // ------------------------------------------------------------------ meta
 
@@ -148,11 +146,6 @@ final class LakeTable private (
     * snapshot, so skipping is safe) reads as absent, but a transient I/O
     * failure PROPAGATES — a guard silently weakened by a store blip would
     * admit the corruption it refuses. */
-  private def schemaIfParseable(v: Int): Option[StructType] =
-    try Some(schema(v)) catch {
-      case e: java.io.IOException => throw e
-      case scala.util.control.NonFatal(_) => None
-    }
   private def specIfParseable(v: Int): Seq[PartitionField] =
     try partitionSpec(v) catch {
       case e: java.io.IOException => throw e
@@ -1206,12 +1199,13 @@ final class LakeTable private (
     spark.sparkContext.hadoopConfiguration.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
   }
 
-  /** Persist `s`: write manifests for what changed vs the parent, reuse
-    * parent manifests whose every entry survives verbatim, then publish
-    * the snapshot header. An append touches O(new files) metadata; a
-    * partition-scoped compaction rewrites only manifests that LOST a file,
-    * so clean partitions' manifests carry over by reference. */
-  private def planManifests(s: Snapshot): Seq[ManifestRef] = {
+  /** Persist `s`'s manifests: write manifests for what changed vs the
+    * parent, reuse parent manifests whose every entry survives verbatim.
+    * An append touches O(new files) metadata; a partition-scoped
+    * compaction rewrites only manifests that LOST a file, so clean
+    * partitions' manifests carry over by reference. Returns every ref of
+    * `s` and the ones written here. */
+  private def planManifests(s: Snapshot): (Seq[ManifestRef], Seq[ManifestRef]) = {
     val parentRefs: Seq[ManifestRef] = s.parent
       .filter(p => fs.exists(snapPath(p)))
       .map(p => snapshotFile(p).manifests)
@@ -1250,8 +1244,8 @@ final class LakeTable private (
       Some(ref)
     }
 
-    (dataReused ++ writeNew("data", dataNew, Nil) ++
-      delReused ++ writeNew("delete", Nil, delNew)).toSeq
+    val (data, dels) = (writeNew("data", dataNew, Nil).toSeq, writeNew("delete", Nil, delNew).toSeq)
+    (dataReused ++ data ++ delReused ++ dels, data ++ dels)
   }
 
   /** Exclusive AND atomic publish of an immutable metadata file: a racing
@@ -1342,12 +1336,22 @@ final class LakeTable private (
     }
 
   /** Publish snapshot `s` — only [[commit]], [[LakeTable.create]] and
-    * [[ManyFilesFixture]] call this. Exclusive create: a racing writer loses here, loudly. Manifests
-    * written by a LOSING racer are unreferenced by any snapshot and
-    * age-swept by [[Maintenance.removeOrphans]]. */
+    * [[ManyFilesFixture]] call this. Exclusive create: a racing writer
+    * loses here, loudly, and deletes the manifests it wrote for `s` (the
+    * parent manifests it reused stay: the winner's snapshot shares them). */
   private[lake] def commitSnapshot(s: Snapshot): Snapshot = {
     val p = snapPath(s.seq)
-    createExclusive(p, MetaJson.writeSnapshotFile(s, planManifests(s)).getBytes(StandardCharsets.UTF_8))
+    val (refs, written) = planManifests(s)
+    try createExclusive(p, MetaJson.writeSnapshotFile(s, refs).getBytes(StandardCharsets.UTF_8))
+    catch {
+      case e @ (_: java.nio.file.FileAlreadyExistsException |
+                _: org.apache.hadoop.fs.FileAlreadyExistsException) =>
+        written.foreach { m =>
+          LakeTable.manifestCache.remove(abs(m.path))
+          fs.delete(new Path(root, m.path), false)
+        }
+        throw e
+    }
     // the hint is ADVISORY (readers list meta/ when it lies) — it must not
     // be able to fail a commit whose snapshot file already exists: a caller
     // seeing an exception here would roll back files a durable snapshot
@@ -1515,6 +1519,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
       }
     def put(key: String, v: (Seq[DataFile], Seq[DeleteFile])): Unit =
       synchronized { m.put(key, v) }
+    def remove(key: String): Unit = synchronized { m.remove(key) }
     /** Test hook: drop all entries so load counts start from zero. */
     private[lake] def clear(): Unit = synchronized { m.clear() }
   }
@@ -1554,7 +1559,6 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * row; the key of every row is deleted either way. */
   private val UpsertCol = "_graft_upsert"
   private val RnCol = "_graft_rn"
-  private val RowIdCol = "_graft_rowid"
 
   /** Refuse transform/source-type pairs outside the Iceberg transform
     * table ([[Transform.accepts]]): year/month/day need a date/timestamp

@@ -3,7 +3,6 @@ package graft.operators
 import graft.{NamedQuery, Tables}
 import graft.streaming.EventStreams
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import java.util.concurrent.atomic.AtomicLong
 

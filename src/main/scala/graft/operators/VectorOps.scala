@@ -431,12 +431,6 @@ object VectorOps {
     }.toDF("probe_id", "pnq", "tbl")
   }
 
-  private def collectProbes(s: SparkSession, raw: DataFrame): Array[(Long, Seq[Float])] = {
-    import s.implicits._
-    raw.filter(col("vec_id").isin(ProbeIds: _*))
-      .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])].collect()
-  }
-
   /** ADC-score joined candidates, cut the per-probe top-`rerank`
     * shortlist, exactly re-rank it — the shared tail of [[pqTopKOn]] and
     * [[ivfPqTopKOn]]. `cands` carries (vec_id, codes, anq, probe_id, pnq,

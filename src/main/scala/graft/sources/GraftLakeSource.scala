@@ -1,8 +1,8 @@
 package graft.sources
 
 import graft.lake.{LakeTable, PruneFilter}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapred.JobConf
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
@@ -10,13 +10,12 @@ import org.apache.spark.sql.graft.SqlInternals
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.util
-import scala.jdk.CollectionConverters._
 
 /** DataSourceV2 read path for graft lake tables — the "cleaner end-state"
   * SURVEY §4 sketches for transform-aware pruning: lake tables become
@@ -162,189 +161,48 @@ object GraftLakeSource {
   private val ChunkIndex = "graft_chunk"
 }
 
-/** Translates pushed v1 filters into a parquet [[FilterPredicate]] so the
-  * readers skip whole ROW GROUPS from footer statistics (and pages, via
-  * column indexes) — the same machinery `spark.read.parquet` engages with
-  * `spark.sql.parquet.filterPushdown`. File-level skipping already
-  * happened at planning (partition pruning + column bounds); this layer
-  * catches the remaining selectivity INSIDE multi-row-group files, where
-  * clustering keeps per-row-group ranges tight.
-  *
-  * Only flat scalar shapes are translated (the whole lake data model,
-  * SURVEY §1.3); anything else is simply not pushed — Spark re-applies
-  * every predicate post-scan either way, so this is a pure I/O
-  * optimization. A filter on a column a file predates evaluates against
-  * an all-null chunk and correctly drops the row group (null never
-  * satisfies a comparison). */
-private[sources] object ParquetPushdown {
-  import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-  import org.apache.parquet.io.api.Binary
+/** Row-group skipping inside a chunk: the scan's pushed filters and the
+  * session's `spark.sql.parquet.filterPushdown*` and
+  * `spark.sql.caseSensitive` settings, read once on the driver. Each chunk
+  * builds its predicate with Spark's own `ParquetFilters` against ITS OWN
+  * footer schema, as Spark's parquet reader factory does, so a file that
+  * predates a column gets no predicate on it. Spark re-applies every filter
+  * post-scan, so this is pure I/O. TimestampNTZ columns are not row-group
+  * filtered (`ParquetFilters` matches only UTC-adjusted timestamps). */
+private[sources] case class RowGroupFilter(
+    filters: Seq[Filter], date: Boolean, timestamp: Boolean, decimal: Boolean,
+    stringPredicate: Boolean, inThreshold: Int, caseSensitive: Boolean) {
+  import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, ParquetToSparkSchemaConverter}
+  import org.apache.spark.sql.internal.LegacyBehaviorPolicy
 
-  /** `pushable` gates columns whose PHYSICAL parquet type is not invariant
-    * across the table's schema-version history: parquet's
-    * SchemaCompatibilityValidator throws (failing the whole read, not just
-    * the optimization) when a predicate's declared type meets a file
-    * written before a type promotion — e.g. a long predicate over an INT32
-    * file from before an int → bigint promotion. The scan builder proves
-    * invariance from the schema history ([[physicalKey]]); a promoted
-    * column simply isn't row-group-filtered (file-level bounds pruning
-    * still applies — it compares in the value domain, not the physical). */
-  def build(schema: StructType, filters: Seq[Filter],
-      pushable: String => Boolean = _ => true): Option[FilterPredicate] =
-    filters.flatMap(translate(schema, pushable, _)).reduceOption(FilterApi.and)
+  /** The predicate for a file stored as `file` and read as `read`; None =
+    * nothing to push. A column the file stores as another type than `read`
+    * (written before an int → bigint or float → double promotion) gets
+    * none: `ParquetFilters` type-checks only an IN list's FIRST value, so
+    * under NOT a later value outside int range would truncate and drop
+    * live rows. Lake files are written proleptic: no datetime rebase. */
+  def predicate(file: org.apache.parquet.schema.MessageType, read: StructType)
+      : Option[org.apache.parquet.filter2.predicate.FilterPredicate] = {
+    val stored = new ParquetToSparkSchemaConverter().convert(file)
+    def sameType(c: String) = stored.find(_.name.equalsIgnoreCase(c))
+      .forall(f => read.find(_.name.equalsIgnoreCase(c)).exists(_.dataType == f.dataType))
+    filters.filter(_.references.forall(sameType)).reduceOption(And).flatMap(
+      new ParquetFilters(file, date, timestamp, decimal, stringPredicate, inThreshold,
+        caseSensitive, RebaseSpec(LegacyBehaviorPolicy.CORRECTED)).createFilter)
+  }
+}
 
-  /** The physical parquet column type a lake writer produces for a Spark
-    * type — the identity that must hold across all schema versions for a
-    * predicate built from the CURRENT schema to be valid on EVERY file.
-    * Decimals carry their scale (same physical width at a different scale
-    * stores different unscaled integers) and split at the INT32/INT64/
-    * FIXED_LEN_BYTE_ARRAY precision boundaries the parquet spec fixes. */
-  def physicalKey(dt: DataType): String = dt match {
-    case IntegerType | DateType => "i32"
-    case LongType | TimestampType | TimestampNTZType => "i64"
-    case FloatType => "f32"
-    case DoubleType => "f64"
-    case StringType => "bin"
-    case BooleanType => "bool"
-    case d: DecimalType if d.precision <= 9 => s"i32:d${d.scale}"
-    case d: DecimalType if d.precision <= 18 => s"i64:d${d.scale}"
-    case d: DecimalType => s"flba:p${d.precision}:d${d.scale}" // width follows precision
-    case other => s"other:${other.catalogString}"
-  }
-
-  private val MaxInValues = 20
-
-  private def translate(schema: StructType, pushable: String => Boolean,
-      f: Filter): Option[FilterPredicate] = f match {
-    case EqualTo(c, v) => pred(schema, pushable, c, v, "eq")
-    case GreaterThan(c, v) => pred(schema, pushable, c, v, "gt")
-    case GreaterThanOrEqual(c, v) => pred(schema, pushable, c, v, "gtEq")
-    case LessThan(c, v) => pred(schema, pushable, c, v, "lt")
-    case LessThanOrEqual(c, v) => pred(schema, pushable, c, v, "ltEq")
-    case In(c, vs) if vs.nonEmpty && vs.length <= MaxInValues && !vs.contains(null) =>
-      val eqs = vs.toSeq.map(v => pred(schema, pushable, c, v, "eq"))
-      if (eqs.forall(_.isDefined)) eqs.flatten.reduceOption(FilterApi.or) else None
-    case _ => None
-  }
-
-  private def pred(schema: StructType, pushable: String => Boolean,
-      name: String, v: Any, op: String): Option[FilterPredicate] = {
-    if (v == null || !schema.fieldNames.contains(name) || !pushable(name)) return None
-    schema(name).dataType match {
-      case LongType | TimestampType | TimestampNTZType =>
-        asLong(v).map(l => longPred(name, l, op))
-      case IntegerType => v match {
-        case i: Int => Some(intPred(name, i, op))
-        case _ => None
-      }
-      case DateType => asDays(v).map(d => intPred(name, d, op))
-      case DoubleType => v match {
-        case d: Double if !d.isNaN => Some(doublePred(name, d, op))
-        case _ => None
-      }
-      case FloatType => v match {
-        case f: Float if !f.isNaN => Some(floatPred(name, f, op))
-        case _ => None
-      }
-      case StringType => v match {
-        case s: String => Some(binaryPred(name, Binary.fromString(s), op))
-        case _ => None
-      }
-      case BooleanType => v match {
-        case b: Boolean if op == "eq" =>
-          Some(FilterApi.eq(FilterApi.booleanColumn(name), java.lang.Boolean.valueOf(b)))
-        case _ => None
-      }
-      // INT32/INT64-backed decimals (precision <= 18, the parquet spec's
-      // boundaries — matching Spark's writer): compare in the UNSCALED
-      // integer domain the footer statistics live in. Pushed only when the
-      // literal is exactly representable at the column's scale (Catalyst
-      // casts comparison literals to the column type, so this is the
-      // normal case); anything else declines — Spark re-applies the
-      // predicate post-scan either way. FLBA-backed decimals (> 18) have
-      // unsigned-lexicographic Binary stats; not worth the subtlety here.
-      case dt: DecimalType if dt.precision <= 18 =>
-        asUnscaled(v, dt.scale).flatMap { u =>
-          if (dt.precision <= 9) {
-            if (u >= Int.MinValue && u <= Int.MaxValue) Some(intPred(name, u.toInt, op))
-            else None
-          } else Some(longPred(name, u, op))
-        }
-      case _ => None
-    }
-  }
-
-  /** Literal → unscaled long at `scale`, None when not exactly
-    * representable (rescale would round) or beyond long range. */
-  private def asUnscaled(v: Any, scale: Int): Option[Long] = {
-    val bd = v match {
-      case d: java.math.BigDecimal => Some(d)
-      case d: BigDecimal => Some(d.underlying)
-      case d: Decimal => Some(d.toJavaBigDecimal)
-      case _ => None
-    }
-    bd.flatMap { d =>
-      try Some(d.setScale(scale).unscaledValue.longValueExact)
-      catch { case _: ArithmeticException => None }
-    }
-  }
-
-  private def asLong(v: Any): Option[java.lang.Long] = v match {
-    case l: Long => Some(l)
-    case i: Int => Some(i.toLong)
-    case t: java.sql.Timestamp =>
-      Some(t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L)
-    case i: java.time.Instant => Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    case d: java.time.LocalDateTime =>
-      Some(d.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + d.getNano / 1000L)
-    case _ => None
-  }
-
-  private def asDays(v: Any): Option[java.lang.Integer] = v match {
-    case d: java.sql.Date => Some(d.toLocalDate.toEpochDay.toInt)
-    case d: java.time.LocalDate => Some(d.toEpochDay.toInt)
-    case _ => None
-  }
-
-  private def longPred(c: String, v: java.lang.Long, op: String): FilterPredicate = {
-    val col = FilterApi.longColumn(c)
-    op match {
-      case "eq" => FilterApi.eq(col, v); case "gt" => FilterApi.gt(col, v)
-      case "gtEq" => FilterApi.gtEq(col, v); case "lt" => FilterApi.lt(col, v)
-      case "ltEq" => FilterApi.ltEq(col, v)
-    }
-  }
-  private def intPred(c: String, v: java.lang.Integer, op: String): FilterPredicate = {
-    val col = FilterApi.intColumn(c)
-    op match {
-      case "eq" => FilterApi.eq(col, v); case "gt" => FilterApi.gt(col, v)
-      case "gtEq" => FilterApi.gtEq(col, v); case "lt" => FilterApi.lt(col, v)
-      case "ltEq" => FilterApi.ltEq(col, v)
-    }
-  }
-  private def doublePred(c: String, v: java.lang.Double, op: String): FilterPredicate = {
-    val col = FilterApi.doubleColumn(c)
-    op match {
-      case "eq" => FilterApi.eq(col, v); case "gt" => FilterApi.gt(col, v)
-      case "gtEq" => FilterApi.gtEq(col, v); case "lt" => FilterApi.lt(col, v)
-      case "ltEq" => FilterApi.ltEq(col, v)
-    }
-  }
-  private def floatPred(c: String, v: java.lang.Float, op: String): FilterPredicate = {
-    val col = FilterApi.floatColumn(c)
-    op match {
-      case "eq" => FilterApi.eq(col, v); case "gt" => FilterApi.gt(col, v)
-      case "gtEq" => FilterApi.gtEq(col, v); case "lt" => FilterApi.lt(col, v)
-      case "ltEq" => FilterApi.ltEq(col, v)
-    }
-  }
-  private def binaryPred(c: String, v: Binary, op: String): FilterPredicate = {
-    val col = FilterApi.binaryColumn(c)
-    op match {
-      case "eq" => FilterApi.eq(col, v); case "gt" => FilterApi.gt(col, v)
-      case "gtEq" => FilterApi.gtEq(col, v); case "lt" => FilterApi.lt(col, v)
-      case "ltEq" => FilterApi.ltEq(col, v)
-    }
+private[sources] object RowGroupFilter {
+  /** None when nothing was pushed or `spark.sql.parquet.filterPushdown` is
+    * off: chunks then build no predicate. */
+  def of(spark: SparkSession, filters: Seq[Filter]): Option[RowGroupFilter] = {
+    val c = SqlInternals.conf(spark)
+    if (filters.isEmpty || !c.parquetFilterPushDown) None
+    else Some(RowGroupFilter(filters, c.parquetFilterPushDownDate,
+      c.parquetFilterPushDownTimestamp, c.parquetFilterPushDownDecimal,
+      c.parquetFilterPushDownStringPredicate, c.parquetFilterPushDownInFilterThreshold,
+      c.caseSensitiveAnalysis))
   }
 }
 
@@ -1014,25 +872,8 @@ private[sources] class GraftLakeScan(
           "delete fold was planned over this scan. Start the session with " +
           "spark.sql.extensions=graft.plans.GraftExtensions (and keep " +
           "graft.plans.LakeMorRewrite out of spark.sql.optimizer.excludedRules).")
-    // a column is row-group-filterable only if its physical parquet type
-    // is the same in EVERY schema version up to this snapshot's — a file
-    // written before a type promotion would otherwise fail the whole read
-    // (parquet validates the predicate's declared type against each file's
-    // footer schema). Versions that don't carry the column don't
-    // constrain it: the predicate evaluates those files' chunks as
-    // all-null and correctly drops them.
-    val history = (1 to snap.schemaVersion).map(t.schema) // versions start at 1
-    def physicallyStable(name: String): Boolean = {
-      // resolve case-INsensitively, like every other name lookup in this
-      // source — a pushed filter may carry the analyzer's casing while the
-      // schema history holds the writer's
-      val keys = history.flatMap(s =>
-        s.fields.find(_.name.equalsIgnoreCase(name))
-          .map(f => ParquetPushdown.physicalKey(f.dataType)))
-      keys.distinct.size <= 1
-    }
-    GraftLakeReaderFactory(required, t.hadoopConfEntries,
-      ParquetPushdown.build(tableSchema, dataFilters, physicallyStable))
+    // each chunk types the pushed filters against its own footer schema
+    GraftLakeReaderFactory(required, t.hadoopConfEntries, RowGroupFilter.of(t.spark, dataFilters))
   }
 }
 
@@ -1266,7 +1107,6 @@ private[sources] class GraftLakeChangelogMicroBatchStream(
         case other => other
       }
     }
-    val userCols = outSchema.fieldNames.filterNot(_ == GraftLakeSource.ChangeTypeCol).toSeq
     val delta =
       if (s0 == Bootstrap)
         // baseline: the converged state AS OF the pinned end, all inserts
@@ -1351,10 +1191,12 @@ private[sources] case class GraftLakeKeyedInputPartition(
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(keyValues)
 }
 
+/** Reads a scan's packed chunks; each chunk turns `rowGroups` (None:
+  * nothing pushed, or pushdown off) into its own row-group predicate. */
 private[sources] case class GraftLakeReaderFactory(
     required: StructType,
     hadoopConf: Map[String, String],
-    filter: Option[org.apache.parquet.filter2.predicate.FilterPredicate] = None,
+    rowGroups: Option[RowGroupFilter] = None,
     /** Values of columns a direct partition's files do not carry — the
       * changelog stream's append fast path reads raw data files and
       * serves `_change_type = insert` this way. Other partitions of the
@@ -1372,17 +1214,6 @@ private[sources] case class GraftLakeReaderFactory(
     if (p.direct) missingDefaults ++ file else file
   }
 
-  private def confOf(): Configuration = {
-    val conf = new Configuration(false)
-    hadoopConf.foreach { case (k, v) => conf.set(k, v) }
-    // row-group statistics skipping: HadoopReadOptions picks this up in
-    // the vectorized reader (via SpecificParquetRecordReaderBase) — a row
-    // group whose stats refute the predicate is never decoded
-    filter.foreach(p =>
-      org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(conf, p))
-    conf
-  }
-
   /** Every split decodes columnar; there is no row-at-a-time reader. */
   override def supportColumnarReads(p: InputPartition): Boolean = true
 
@@ -1391,7 +1222,9 @@ private[sources] case class GraftLakeReaderFactory(
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val gp = p.asInstanceOf[GraftPacked]
-    new GraftLakeVectorizedReader(gp.chunks, required, constantsFor(gp, _), confOf())
+    val conf = new JobConf(false)
+    hadoopConf.foreach { case (k, v) => conf.set(k, v) }
+    new GraftLakeVectorizedReader(gp.chunks, required, constantsFor(gp, _), conf, rowGroups)
   }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
@@ -1405,27 +1238,32 @@ private[sources] case class GraftLakeReaderFactory(
   * columns, and ColumnarToRow codegen for free. `constants` columns (the
   * same names for every chunk of a partition) are not decoded: the reader
   * serves them as Spark serves partition values (`initBatch`), and each
-  * batch's vectors are reordered to match `required`. */
+  * batch's vectors are reordered to match `required`. Each chunk opens its
+  * file once and reads its footer once, range-filtered to the chunk's row
+  * groups; with `rowGroups`, that footer's schema types the chunk's
+  * predicate, set on (or cleared from) the partition's one `conf`, so a
+  * row group whose statistics refute it is never decoded. */
 private[sources] class GraftLakeVectorizedReader(
     chunks: Seq[GraftChunk],
     required: StructType,
     constants: GraftChunk => Map[String, Any],
-    conf: Configuration)
+    conf: JobConf,
+    rowGroups: Option[RowGroupFilter])
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   // the old mapred FileSplit extends the mapreduce one AND is what
   // SpecificParquetRecordReaderBase casts to internally
   import org.apache.hadoop.mapred.FileSplit
   import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
   import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
-  import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
+  import org.apache.parquet.hadoop.ParquetInputFormat
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader, ParquetReadSupport, VectorizedParquetRecordReader}
   import org.apache.spark.sql.vectorized.ColumnarBatch
 
   private val constNames = chunks.headOption.fold(Set.empty[String])(constants(_).keySet)
   private val (constFields, dataFields) = required.fields.partition(f => constNames(f.name))
 
   conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, StructType(dataFields).json)
-  conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
-    classOf[ParquetReadSupport].getName)
+  conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
   // the conf keys ParquetFileFormat/ParquetToSparkSchemaConverter expect
   // to find pre-populated (reading them raw, no defaults)
   conf.setBoolean("spark.sql.parquet.binaryAsString", false)
@@ -1434,14 +1272,29 @@ private[sources] class GraftLakeVectorizedReader(
   conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
   conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
   conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
-  private val attempt = new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)
+  // a JobConf is shared by the context, not copied: one conf for every chunk
+  private val ctx = new TaskAttemptContextImpl(conf,
+    new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
 
   private def open(c: GraftChunk): VectorizedParquetRecordReader = {
     // lake files carry micros timestamps written proleptic: no rebase
     val r = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, 4096)
-    r.initialize(new FileSplit(new Path(c.file), c.start, c.length, Array.empty[String]),
-      new TaskAttemptContextImpl(conf, attempt))
+    // the previous chunk's predicate is typed against ITS file; the footer
+    // read below would filter row groups with it
+    conf.unset(ParquetInputFormat.FILTER_PREDICATE)
+    // `true`: the footer keeps only the chunk's row groups (a whole-file
+    // footer would read every row group once per chunk) and the stream
+    // stays open for the reader
+    val opened = ParquetFooterReader.openFileAndReadFooter(conf, PartitionedFile(
+      InternalRow.empty, org.apache.spark.paths.SparkPath.fromPathString(c.file),
+      c.start, c.length), true)
+    try {
+      rowGroups.flatMap(_.predicate(opened.footer.getFileMetaData.getSchema, required))
+        .foreach(ParquetInputFormat.setFilterPredicate(conf, _))
+      r.initialize(new FileSplit(new Path(c.file), c.start, c.length, Array.empty[String]),
+        ctx, Some(opened.inputFile), Some(opened.inputStream), Some(opened.footer))
+    } catch { case e: Throwable => opened.inputStream.close(); throw e }
     val values = constants(c)
     r.initBatch(StructType(constFields),
       InternalRow.fromSeq(constFields.map(f => values(f.name)).toSeq))

@@ -23,7 +23,8 @@ object SqlInternals {
     classic(spark).artifactManager.withResources(body)
 
   /** The session's SQL conf: typed accessors for the file-source split
-    * confs the lake's split packing follows. */
+    * confs the lake's split packing follows and the parquet pushdown confs
+    * its row-group filter follows. */
   def conf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
     classic(spark).sessionState.conf
 

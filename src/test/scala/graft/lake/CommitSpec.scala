@@ -33,6 +33,14 @@ class CommitSpec extends SparkSpec {
   private def referenced(t: LakeTable): Set[String] =
     t.snapshots.flatMap(s => s.dataFiles.map(_.path) ++ s.deleteFiles.map(_.path)).toSet
 
+  /** Manifests under `meta/` that no snapshot references. */
+  private def strayManifests(t: LakeTable): Set[String] = {
+    val onDisk = t.fs.listStatus(new org.apache.hadoop.fs.Path(t.location, "meta"))
+      .map(_.getPath.getName).filter(n => n.startsWith("man-") && n.endsWith(".json"))
+      .map("meta/" + _).toSet
+    onDisk -- t.snapshots.flatMap(s => t.snapshotFile(s.seq).manifests.map(_.path))
+  }
+
   private val raceKey = new java.util.concurrent.atomic.AtomicLong(1000L)
 
   /** Run `body` while `other` wins each of the first `races` commit
@@ -74,6 +82,9 @@ class CommitSpec extends SparkSpec {
     assert(t.currentSeq == 7L)
     val leaked = filesOnDisk(t) -- referenced(t)
     assert(leaked.isEmpty, s"lost append left published files: $leaked")
+    // ...and no manifest in meta/: each lost attempt deleted the ones it wrote
+    val stray = strayManifests(t)
+    assert(stray.isEmpty, s"lost append left manifests: $stray")
     assert(!t.scan().as[(Long, String)].collect().exists(_._1 == 7L))
     // the recipe works: the re-run lands
     assert(t.append(Seq((7L, "lost")).toDF("id", "s")).seq == 8L)

@@ -159,7 +159,7 @@ object ConcurrencySoak {
     *
     * `mode = "copy-on-write"` routes UPDATE/MERGE through the GROUP
     * REPLACE commit instead (op "rewrite-dsv2" via
-    * commitStagedReplaceFiles + runtime group filtering — the row-level
+    * LakeTable.commit + runtime group filtering — the row-level
     * surface the MoR soak never drives). Rewrites are content-changing
     * restatements, so the replay re-baselines at them exactly like at
     * overwrites, and the fresh-append exactness check doubles as the

@@ -1482,7 +1482,7 @@ class LakeSpec extends SparkSpec {
         }
     }
     try {
-      // all FIVE metadata-only commit sites share commitMetaRaceChecked;
+      // all FIVE metadata-only commit sites share commitMeta;
       // prove the contract at each entry point, not just the helper
       armRace(99L)
       val e = intercept[java.util.ConcurrentModificationException](t.rollbackTo(1L))

@@ -125,7 +125,7 @@ object ProcessHelper {
         // re-plans against the fresh snapshot, which is exactly the
         // documented recovery. Optional 6th arg: the row-level mode —
         // "copy-on-write" routes UPDATE/MERGE/DELETE through the GROUP
-        // REPLACE commit (commitStagedReplaceFiles + runtime group
+        // REPLACE commit (LakeTable.commit + runtime group
         // filtering), the one row-level surface the MoR soak never
         // exercises.
         val writer = args(2); val n = args(3).toInt; val seed = args(4).toLong

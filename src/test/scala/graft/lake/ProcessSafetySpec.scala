@@ -112,7 +112,7 @@ class ProcessSafetySpec extends SparkSpec {
 
   test("randomized SQL-route soak under copy-on-write: group-replace restatements race") {
     // the COW half of the row-level surface: UPDATE/MERGE/DELETE route
-    // through commitStagedReplaceFiles (runtime group filtering, swap
+    // through LakeTable.commit (runtime group filtering, swap
     // exactly the matched files) — the commit class whose stale-base
     // check the MoR soak never drives. The replay re-baselines at each
     // rewrite-dsv2 like at an overwrite; the fresh-append exactness

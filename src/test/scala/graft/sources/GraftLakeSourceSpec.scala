@@ -2,8 +2,12 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.operators.LakePipelines
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, In, IsNull, StringStartsWith}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 class GraftLakeSourceSpec extends SparkSpec {
 
@@ -236,112 +240,140 @@ class GraftLakeSourceSpec extends SparkSpec {
     }
   }
 
-  test("pushed predicates skip whole row groups from parquet stats") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rgskip-spec").toString
+  private val RowGroupRows = 200000L
+
+  /** One lake file of [[RowGroupRows]] ascending ids (plus `cols` derived
+    * from `id`) in many 64 KiB row groups, so per-row-group statistics are
+    * monotone and disjoint. `body` gets the table and a reader over the
+    * file's LAST chunk (largest ids) for a set of pushed filters, built
+    * with the session's pushdown settings as a scan builds it. */
+  private def rowGroupFixture(name: String)(cols: Column*)(
+      body: (graft.lake.LakeTable, Seq[Filter] => PartitionReader[ColumnarBatch]) => Unit)
+      : Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(name).toString
     val hc = spark.sparkContext.hadoopConfiguration
     hc.setInt("parquet.block.size", 65536)
     hc.setInt("parquet.page.size", 8192)
     try {
-      val n = 200000L
-      // repartition(1) + ascending sort: one file, many row groups, id
-      // ranges monotone across them — stats refute a point predicate for
-      // every row group but one
-      val df = spark.range(n).repartition(1).sortWithinPartitions("id")
-        .select(col("id"), (col("id") * 31 % 1000).as("v"))
+      // repartition(1) + ascending sort: one file, many row groups
+      val df = spark.range(RowGroupRows).repartition(1).sortWithinPartitions("id")
+        .select(col("id") +: cols: _*)
       val t = graft.lake.LakeTable.create(spark, s"$dir/t", "t", df.schema)
       t.append(df)
       val file = t.currentSnapshot.dataFiles.maxBy(_.splits.size)
       assert(file.splits.size > 2, s"fixture produced ${file.splits.size} row groups")
-
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      import scala.jdk.CollectionConverters._
-      val required = StructType(Seq(StructField("id", LongType)))
-      val hcMap = hc.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
-      val lastSplit = file.splits.last // holds only the largest ids
-
-      def readerFor(filter: Option[org.apache.parquet.filter2.predicate.FilterPredicate]) =
-        GraftLakeReaderFactory(required, hcMap, filter)
-          .createColumnarReader(
-            GraftLakeInputPartition(Seq(GraftChunk(t.abs(file.path), lastSplit._1, lastSplit._2))))
-
-      // without a predicate the row group decodes batches...
-      val open = readerFor(None)
-      assert(open.next(), "unfiltered row group returned no batch")
-      open.close()
-      // ...with a refuted predicate (id = 5 lives in the FIRST row group)
-      // the reader skips the entire row group without decoding anything
-      val pred = ParquetPushdown.build(required,
-        Seq(org.apache.spark.sql.sources.EqualTo("id", 5L)))
-      assert(pred.isDefined)
-      val skipped = readerFor(pred)
-      assert(!skipped.next(), "stats-refuted row group was decoded")
-      skipped.close()
-
-      // end to end: the SQL-visible result is exact with pushdown active
-      val v2 = readLake(t.location)
-      assert(v2.filter(col("id") === 5L).count() == 1)
-      assert(v2.filter(col("id") < 100L).agg(sum("id")).head.getLong(0) == 4950L)
+      val (start, length) = file.splits.last
+      body(t, filters =>
+        readerOver(t, df.schema, Seq(GraftChunk(t.abs(file.path), start, length)), filters))
     } finally {
       hc.unset("parquet.block.size")
       hc.unset("parquet.page.size")
     }
   }
 
+  private def readerOver(t: graft.lake.LakeTable, required: StructType,
+      chunks: Seq[GraftChunk], filters: Seq[Filter]): PartitionReader[ColumnarBatch] =
+    GraftLakeReaderFactory(required, t.hadoopConfEntries, RowGroupFilter.of(spark, filters))
+      .createColumnarReader(GraftLakeInputPartition(chunks))
+
+  /** Whether `r` decodes any batch; closes it. */
+  private def decodes(r: PartitionReader[ColumnarBatch]): Boolean = try r.next() finally r.close()
+
+  test("pushed predicates skip whole row groups from parquet stats") {
+    rowGroupFixture("graft-rgskip-spec")((col("id") * 31 % 1000).as("v")) { (t, lastChunk) =>
+      // without a predicate the row group decodes batches...
+      assert(decodes(lastChunk(Nil)), "unfiltered row group returned no batch")
+      // ...with a refuted predicate (id = 5 lives in the FIRST row group)
+      // the reader skips the entire row group without decoding anything
+      assert(!decodes(lastChunk(Seq(EqualTo("id", 5L)))), "stats-refuted row group was decoded")
+
+      // end to end: the SQL-visible result is exact with pushdown active
+      val v2 = readLake(t.location)
+      assert(v2.filter(col("id") === 5L).count() == 1)
+      assert(v2.filter(col("id") < 100L).agg(sum("id")).head.getLong(0) == 4950L)
+      // one chunk per row group: each chunk's footer keeps only its own row
+      // group, so every row is read exactly once
+      withConfs(Map("spark.sql.files.maxPartitionBytes" -> "1")) {
+        val perRowGroup = readLake(t.location).filter(col("v") >= 0L)
+        assert(perRowGroup.rdd.getNumPartitions > 2)
+        assert(perRowGroup.count() == RowGroupRows)
+      }
+    }
+  }
+
+  test("row-group skipping follows spark.sql.parquet.filterPushdown") {
+    rowGroupFixture("graft-rgswitch-spec")() { (t, lastChunk) =>
+      val refuted = Seq(EqualTo("id", 5L))
+      // rows the SQL scan decodes: its one chunk is the whole file
+      def scanned(): Long = {
+        val df = readLake(t.location).filter(col("id") === 5L)
+        assert(df.collect().map(_.getLong(0)).toSeq == Seq(5L))
+        df.queryExecution.executedPlan.collectFirst {
+          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+            b.metrics("numOutputRows").value
+        }.get
+      }
+      withConfs(Map("spark.sql.parquet.filterPushdown" -> "false",
+          "spark.sql.adaptive.enabled" -> "false")) {
+        assert(decodes(lastChunk(refuted)), "pushdown off, yet the row group was skipped")
+        assert(scanned() == RowGroupRows)
+      }
+      withConfs(Map("spark.sql.parquet.filterPushdown" -> "true",
+          "spark.sql.adaptive.enabled" -> "false")) {
+        assert(!decodes(lastChunk(refuted)), "stats-refuted row group was decoded")
+        val rows = scanned()
+        assert(rows < RowGroupRows / 2, s"pushdown on, yet the scan decoded $rows rows")
+      }
+    }
+  }
+
+  test("row groups skip on IS NULL, prefix, long IN lists and FLBA decimals") {
+    val early = (0L until 25L).toArray[Any] // more values than the old 20-value cap
+    val cents = new java.math.BigDecimal("1.50")
+    rowGroupFixture("graft-rgshapes-spec")(
+      when(col("id") >= 1000L, col("id")).as("late"), // null only in the first row groups
+      format_string("k%06d", col("id")).as("s"),
+      (col("id").cast("decimal(20,0)") * lit(new java.math.BigDecimal("0.01")))
+        .cast("decimal(20,2)").as("w") // precision > 18: FIXED_LEN_BYTE_ARRAY
+    ) { (t, lastChunk) =>
+      // every shape's match lives in the FIRST row groups
+      Seq(IsNull("late"), StringStartsWith("s", "k00001"), In("id", early), EqualTo("w", cents))
+        .foreach(f => assert(!decodes(lastChunk(Seq(f))), s"$f: refuted row group was decoded"))
+
+      val v2 = readLake(t.location)
+      assert(v2.filter(col("late").isNull).count() == 1000)
+      assert(v2.filter(col("s").startsWith("k00001")).count() == 10)
+      assert(v2.filter(col("id").isin(early.toIndexedSeq: _*)).count() == 25)
+      assert(v2.filter(col("w") === lit(cents)).collect().map(_.getLong(0)).toSeq == Seq(150L))
+    }
+  }
+
   test("decimal predicates row-group-skip in the unscaled domain; boundaries exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-decrg-spec").toString
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.setInt("parquet.block.size", 65536)
-    hc.setInt("parquet.page.size", 8192)
-    try {
-      val n = 200000L
-      // ascending money in one file: many row groups, disjoint ranges
-      val df = spark.range(n).repartition(1).sortWithinPartitions("id")
-        .select(col("id"),
-          (col("id").cast("decimal(14,0)") * lit(new java.math.BigDecimal("0.01")))
-            .cast("decimal(12,2)").as("m"))
-      val t = graft.lake.LakeTable.create(spark, s"$dir/t", "t", df.schema)
-      t.append(df)
-      val file = t.currentSnapshot.dataFiles.maxBy(_.splits.size)
-      assert(file.splits.size > 2, s"fixture produced ${file.splits.size} row groups")
-
-      import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
-      import scala.jdk.CollectionConverters._
-      val required = StructType(Seq(
-        StructField("id", LongType), StructField("m", DecimalType(12, 2))))
-      val hcMap = hc.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
-      val lastSplit = file.splits.last // holds only the largest amounts
-
-      def readerFor(filter: Option[org.apache.parquet.filter2.predicate.FilterPredicate]) =
-        GraftLakeReaderFactory(required, hcMap, filter)
-          .createColumnarReader(
-            GraftLakeInputPartition(Seq(GraftChunk(t.abs(file.path), lastSplit._1, lastSplit._2))))
-
+    // ascending money in one file: many row groups, disjoint ranges
+    rowGroupFixture("graft-decrg-spec")(
+      (col("id").cast("decimal(14,0)") * lit(new java.math.BigDecimal("0.01")))
+        .cast("decimal(12,2)").as("m")
+    ) { (t, lastChunk) =>
       // m = 1.50 lives in the FIRST row group: the unscaled-int64 predicate
-      // (150) must refute the last row group's stats without decoding it.
-      // Round 7's unscaled-vs-scaled confusion was exactly this boundary —
-      // a predicate carrying the SCALED 1.50 would never refute anything.
-      val pred = ParquetPushdown.build(required,
-        Seq(org.apache.spark.sql.sources.EqualTo("m", new java.math.BigDecimal("1.50"))))
-      assert(pred.isDefined, "decimal predicate did not translate")
-      val skipped = readerFor(pred)
-      assert(!skipped.next(), "stats-refuted row group was decoded")
-      skipped.close()
+      // (150) must refute the last row group's stats without decoding it —
+      // a predicate carrying the SCALED 1.50 would never refute anything
+      assert(!decodes(lastChunk(Seq(EqualTo("m", new java.math.BigDecimal("1.50"))))),
+        "stats-refuted row group was decoded")
 
-      // a literal not representable at the column scale declines (never
-      // rounds: rounding would change comparison semantics)
-      assert(ParquetPushdown.build(required, Seq(
-        org.apache.spark.sql.sources.EqualTo("m", new java.math.BigDecimal("1.505")))).isEmpty)
+      // a literal not representable at the column scale builds no predicate
+      // (never rounds: rounding would change comparison semantics), so it
+      // skips nothing
+      val offScale = new java.math.BigDecimal("1.505")
+      assert(decodes(lastChunk(Seq(EqualTo("m", offScale)))), "off-scale literal skipped")
 
       // end to end across < / = / >= at a value that sits on a row-group
       // boundary's neighborhood
       val v2 = readLake(t.location)
+      assert(v2.filter(col("m") === lit(offScale)).count() == 0)
       val cut = new java.math.BigDecimal("150.00")
       assert(v2.filter(col("m") === lit(cut)).count() == 1)
       assert(v2.filter(col("m") < lit(cut)).count() == 15000)
-      assert(v2.filter(col("m") >= lit(cut)).count() == n - 15000)
-    } finally {
-      hc.unset("parquet.block.size")
-      hc.unset("parquet.page.size")
+      assert(v2.filter(col("m") >= lit(cut)).count() == RowGroupRows - 15000)
     }
   }
 
@@ -350,28 +382,57 @@ class GraftLakeSourceSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-promote-filter").toString
     val t = graft.lake.LakeTable.create(spark, s"$dir/t", "t",
       Seq((1L, 10)).toDF("id", "qty").schema)
-    t.append(Seq((1L, 10), (2L, 20)).toDF("id", "qty"))
+    t.append(Seq((1L, 10), (2L, 20)).toDF("id", "qty").coalesce(1)) // one INT32-era file
     t.promoteColumn("qty", "bigint")
     t.append(Seq((3L, 30L), (4L, 40L)).toDF("id", "qty"))
 
-    // the long predicate would fail parquet's schema validation on the
-    // INT32-era file — the schema-history check must decline it...
-    val hist = (1 to t.currentSnapshot.schemaVersion).map(t.schema)
-    def stable(c: String) = hist.flatMap(_.fields.find(_.name == c))
-      .map(f => ParquetPushdown.physicalKey(f.dataType)).distinct.size <= 1
-    assert(!stable("qty") && stable("id"))
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // the INT32-era file: each chunk builds its predicate against its own
+    // footer, and leaves out the columns that footer stores narrower than
+    // the scan reads them...
+    def chunkOf(f: graft.lake.DataFile) = GraftChunk(t.abs(f.path), 0L, f.bytes)
+    val narrow = t.currentSnapshot.dataFiles.minBy(_.seq)
+    assert(narrow.rows == 2)
+    val chunk = chunkOf(narrow)
     val sch = StructType(Seq(StructField("id", LongType), StructField("qty", LongType)))
-    assert(ParquetPushdown.build(sch,
-      Seq(org.apache.spark.sql.sources.GreaterThan("qty", 15L)), stable).isEmpty)
-    // ...while an unpromoted column in the same scan still translates
-    assert(ParquetPushdown.build(sch,
-      Seq(org.apache.spark.sql.sources.GreaterThan("id", 2L)), stable).isDefined)
+    // one partition, the INT32-era chunk opening after a chunk whose INT64
+    // footer gave it a long predicate on qty
+    val wide = chunkOf(t.currentSnapshot.dataFiles.maxBy(_.seq))
+    val r = readerOver(t, sch, Seq(wide, chunk), Seq(GreaterThan("qty", 15L)))
+    val ids = try Iterator.continually(r.next()).takeWhile(identity).flatMap { _ =>
+      val b = r.get(); (0 until b.numRows).map(b.column(0).getLong)
+    }.toList finally r.close()
+    assert(ids.drop(1) == List(1L, 2L), s"qty > 15 on the INT32 chunk read $ids")
+    // ...so a literal outside int range builds no predicate for that file...
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(chunk.file), spark.sparkContext.hadoopConfiguration))
+    val schema = try footer.getFileMetaData.getSchema finally footer.close()
+    assert(RowGroupFilter.of(spark, Seq(GreaterThan("qty", Int.MaxValue + 1L))).get
+      .predicate(schema, sch).isEmpty)
+    // an unpromoted column in the same file still skips
+    assert(!decodes(readerOver(t, sch, Seq(chunk), Seq(GreaterThan("id", 2L)))))
 
     // end to end: filtered scan spans both eras without throwing
     val got = readLake(t.location).filter(col("qty") > 15L)
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(got == Seq(2L, 3L, 4L), s"got $got")
+  }
+
+  test("NOT IN on a type-promoted column keeps the rows of pre-promotion files") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-promote-notin").toString
+    val t = graft.lake.LakeTable.create(spark, s"$dir/t", "t",
+      Seq((1L, 20)).toDF("id", "qty").schema)
+    t.append(Seq((1L, 20), (2L, 20)).toDF("id", "qty").coalesce(1)) // INT32, qty = 20 only
+    t.promoteColumn("qty", "bigint")
+    t.append(Seq((3L, 30L)).toDF("id", "qty"))
+    // 2^32 + 20 is 20 once truncated to an int: ParquetFilters type-checks
+    // only an IN list's first value, so on the INT32 file this NOT IN would
+    // refute the qty = 20 row group — no file gets a predicate on a column
+    // it stores narrower than the scan reads it
+    val notIn = !col("qty").isin(5L, (1L << 32) + 20)
+    assert(readLake(t.location).filter(notIn).collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(1L, 2L, 3L))
   }
 
   test("streaming read: appends stream incrementally through a checkpoint, non-append fails") {
