@@ -60,7 +60,6 @@ final case class LakeWriteSpec(
     hadoopConf: Map[String, String],
     dataSchema: StructType,
     dataParts: Seq[(Int, Transform, String)] = Nil,
-    recordSums: Boolean = true,
     keySchema: StructType = new StructType(),
     keyParts: Seq[(Int, Transform, String)] = Nil)
 
@@ -97,9 +96,9 @@ final class LakeFileWriter(spec: LakeWriteSpec, taskTag: String) {
   }
   private var opened = 0
   private val data = new FileSet(
-    spec.dataSchema, spec.dataParts, LakeTable.SeqCol, spec.recordSums, isDelete = false)
+    spec.dataSchema, spec.dataParts, LakeTable.SeqCol, isDelete = false)
   private val keys = new FileSet(
-    spec.keySchema, spec.keyParts, LakeTable.DseqCol, recordSums = false, isDelete = true)
+    spec.keySchema, spec.keyParts, LakeTable.DseqCol, isDelete = true)
 
   def write(row: InternalRow): Unit = data.add(row)
   def delete(key: InternalRow): Unit = keys.add(key)
@@ -111,7 +110,7 @@ final class LakeFileWriter(spec: LakeWriteSpec, taskTag: String) {
 
   private final class FileSet(
       schema: StructType, parts: Seq[(Int, Transform, String)], seqCol: String,
-      recordSums: Boolean, isDelete: Boolean) {
+      isDelete: Boolean) {
     private val fileConf = {
       val c = new Configuration(conf)
       // the keys ParquetWriteSupport.init asserts on, pinned so the
@@ -149,7 +148,7 @@ final class LakeFileWriter(spec: LakeWriteSpec, taskTag: String) {
         (openWriter(new Path(new Path(spec.location), rel), fileConf), rel, new FileSums(schema))
       })
       w.write(r)
-      if (recordSums) sums.add(r)
+      if (!isDelete) sums.add(r) // delete keys carry no sums
     }
 
     def close(): Seq[StagedFile] = open.toSeq.map { case (partition, (w, rel, sums)) =>
@@ -157,7 +156,7 @@ final class LakeFileWriter(spec: LakeWriteSpec, taskTag: String) {
       val path = new Path(new Path(spec.location), rel)
       val len = path.getFileSystem(conf).getFileStatus(path).getLen
       StagedFile(rel, spec.seq, partition, FileMeta.of(w.getFooter, len),
-        if (recordSums) sums.result else Map.empty, isDelete)
+        if (isDelete) Map.empty else sums.result, isDelete)
     }
 
     def abort(): Unit = open.values.foreach(w => try w._1.close() catch { case _: Exception => })

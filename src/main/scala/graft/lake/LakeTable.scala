@@ -1134,7 +1134,6 @@ final class LakeTable private (
     val rows = arranged.select(columns: _*).queryExecution.toRdd
     val writeSpec = LakeWriteSpec(location, stagingRel, seq, hadoopConfEntries, userSchema,
       dataParts = spec.map(pf => (userSchema.fieldIndex(pf.source), pf.transform, pf.name)),
-      recordSums = ColumnSums.recordSums(spark),
       keySchema = keySchema.getOrElse(new StructType()),
       keyParts = keySchema.flatMap(LakeFileWriter.bind(spec, _)).getOrElse(Nil))
     try LakeFileWriter.stage(rows, writeSpec)

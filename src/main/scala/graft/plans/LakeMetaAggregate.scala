@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.lake.{ColBound, PartitionValues, Transform}
+import graft.lake.{ColBound, ColumnSums, DataFile, PartitionValues, Transform}
 import graft.sources.GraftLakeV2Table
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** THE metadata-aggregate path: answers aggregates over lake tables from
   * SNAPSHOT METADATA — ungrouped, or grouped by keys derivable from
   * recorded partition tuples — so the query plans as a driver
-  * LocalRelation: zero tasks, zero data I/O at any table size (Iceberg's
+  * LocalRelation: zero data I/O at any table size (Iceberg's
   * metadata-count idea, extended to grouped aggregates over partition
   * TRANSFORMS). The reference's `COUNT(*)` after every pipeline stage and
   * the gold rollups are served here; the DSv2 scan implements no
@@ -44,8 +44,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * served LocalRelation.
   *
   * A WHERE clause is admitted when every conjunct classifies every file
-  * as wholly-in or wholly-out (per-file tri-state; any undecidable file
-  * declines the whole rewrite):
+  * as wholly-in or wholly-out:
   *  - `=` / `IN` on an identity partition source (the tuple determines
   *    the value; sentinel files are wholly-out for non-null, non-empty
   *    literals — an empty-string literal declines, the sentinel conflates
@@ -57,35 +56,38 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `IS [NOT] NULL` on a source with any null-preserving recorded
   *    transform (identity/year/month/day/truncate — null rows land in
   *    the sentinel tuple; bucket does not witness null-ness, and a
-  *    string sentinel file declines: it conflates null with "").
+  *    string sentinel file is undecidable: it conflates null with "").
+  *
+  * Three steps:
+  *  1. RESOLVE the shape from the plan and the partition spec alone — no
+  *     file is read. Every grouping key, conjunct and distinct count gets
+  *     the spec fields (in spec order) whose transform can answer it; a
+  *     shape with no candidate field declines here.
+  *  2. FOLD the live file entries in one loop ([[LakeMetaAggregate.Fold]]):
+  *     each file reads the first candidate field it records, is checked
+  *     (tuple coverage, string-sentinel keys, decidable conjuncts),
+  *     classified wholly-in or wholly-out, and merged into its group's
+  *     [[LakeMetaAggregate.GroupPartial]]. A file that fails a check
+  *     POISONS the fold and the query falls through to the real scan. The
+  *     loop runs on the driver up to `spark.graft.lake.metaAggMaxFiles`
+  *     entries and in executor tasks above it (merged by one skinny
+  *     `reduceByKey`), so a 10⁵-10⁶-file neglected table stays
+  *     metadata-only without stalling the planner.
+  *  3. RENDER one row per merged partial. A column some folded file could
+  *     not answer (missing bounds, sums or counts; an inexact AVG; a type
+  *     the aggregate's result type does not match) declines.
   *
   * Declines conservatively — merge-on-read tombstones, missing row
-  * counts, files whose spec predates a grouping/filter field, non-UTC
-  * embedded time zones (rendered tuples are UTC), and string groupings
-  * whose files carry the Hive directory sentinel (it conflates null with
-  * "") all fall through to the real scan. Null temporal partition values
-  * group as NULL keys, matching `month(null)`.
-  *
-  * ABOVE `spark.graft.lake.metaAggMaxFiles` the fold itself moves to
-  * EXECUTORS ([[LakeMetaAggregate.distributedServe]]): the snapshot's
-  * per-file entries are parallelized and each task classifies filters,
-  * derives group keys, and merges exact partials (row counts, kind-aware
-  * bound extremes, sums, non-null counts, distinct partition values); the
-  * driver touches only the group-count-sized result. Per-file validation
-  * the driver fold did at resolve time (tuple-field coverage, string
-  * sentinel presence, undecidable filter files) runs task-side and
-  * POISONS the fold — a poisoned or shape-unanswerable query still falls
-  * through to the real distributed scan, so the valve bounds PLANNER
-  * work without ever turning a metadata-answerable rollup into a
-  * 10⁵-file data scan (VERDICT r18 #1: 87 s → sub-second at 100k files). */
+  * counts, non-UTC embedded time zones (rendered tuples are UTC), and
+  * string groupings whose files carry the Hive directory sentinel (it
+  * conflates null with "") all fall through to the real scan. Null
+  * temporal partition values group as NULL keys, matching `month(null)`. */
 class LakeMetaAggregate(spark: SparkSession) extends Rule[LogicalPlan]
     with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case agg: Aggregate => answer(agg).getOrElse(agg)
   }
-
-  private type FileKey = graft.lake.DataFile => Any
 
   private def answer(agg: Aggregate): Option[LogicalPlan] = {
     // peel alias-only Projects and at most one Filter layer between the
@@ -118,33 +120,15 @@ class LakeMetaAggregate(spark: SparkSession) extends Rule[LogicalPlan]
     val t = tbl.t
     val snap = tbl.snap
     if (snap.deleteFiles.nonEmpty) return None // MoR merge could drop rows
-    // 100-TB safety valve (VERDICT r15 #6): the fold below is a DRIVER
-    // loop over kept files × result columns, fine at the 10²-10⁴ files a
-    // maintained table holds but a planner-latency cliff on a NEGLECTED
-    // table (10⁵-10⁶ pre-compaction files). Above the threshold the fold
-    // moves to EXECUTORS (VERDICT r18 #1, [[distributedServe]]): the
-    // manifest entries — already snapshot-resident — are parallelized and
-    // merged task-side, so the serve stays metadata-only at any file
-    // count instead of declining into a 10⁵-file data scan. The decision
-    // uses the RAW entry count so no O(files) driver pass precedes it.
-    val maxFiles = spark.conf.getOption("spark.graft.lake.metaAggMaxFiles")
-      .map(_.toInt).getOrElse(LakeMetaAggregate.DefaultMaxFiles)
-    val distributed = snap.dataFiles.size > maxFiles
-    // memoized decline (ADVICE r19): a poisoned/declined DISTRIBUTED fold
-    // launches a real Spark job — without this tag the fixed-point
-    // optimizer re-runs that job on every iteration of every batch the
-    // rule sits in, multiplying planner-side jobs on exactly the
-    // 10⁵-10⁶-file regime the valve exists to bound. Keyed on (table
-    // location, snapshot seq): within one compilation the node's child
-    // relation is pinned, and `makeCopy`/`withNewChildren` carry tags, so
-    // the memo survives neighboring rewrites of the same query.
-    if (distributed && agg.getTagValue(LakeMetaAggregate.DeclinedTag)
-        .contains((t.location, snap.seq))) return None
-    // zero-row committed files (legal, e.g. an overwrite that emptied a
-    // partition) contribute NOTHING a real scan would produce — keeping
-    // them would surface phantom group tuples / distinct values. In the
-    // distributed regime the check runs task-side instead.
-    val files = if (distributed) Nil else snap.dataFiles.filter(_.rows > 0)
+    // memoized decline: the fixed-point optimizer re-applies this rule on
+    // every iteration of every batch it sits in, and a fold that already
+    // declined against this snapshot would decline again — on a 10⁵-file
+    // table that is a planner-side job per re-application. Keyed on
+    // (table location, snapshot seq): within one compilation the node's
+    // child relation is pinned, and `makeCopy`/`withNewChildren` carry
+    // tags, so the memo survives neighboring rewrites of the same query.
+    if (agg.getTagValue(LakeMetaAggregate.DeclinedTag).contains((t.location, snap.seq)))
+      return None
     val spec = t.specFieldsThrough(snap.specVersion)
     val schema = t.schema(snap.schemaVersion)
 
@@ -171,65 +155,41 @@ class LakeMetaAggregate(spark: SparkSession) extends Rule[LogicalPlan]
         })
       case _ => relAttr(e).filter(_.dataType == DateType)
     }
-    // DISTRIBUTED-regime constraint ledgers: per-file checks the driver
-    // fold does eagerly below move into the executor tasks, which POISON
-    // the fold (→ decline to the real scan) on any violation
-    var needPnames = Set.empty[String]       // tuple field absent in a live file → poison
-    var sentinelPnames = Set.empty[String]   // string sentinel in ANY live file → poison
-    // a partition field of `source` whose transform is in `allowed` and
-    // whose tuple value EVERY file records. Distributed: optimistic —
-    // spec shape only, coverage re-checked per file in the tasks.
-    // Candidate selection is first-spec-match there: a post-evolution
-    // table whose first matching spec field lost coverage declines where
-    // the driver fold might have served via a later candidate
-    // (perf-conservative, never wrong).
-    def recordedField(source: String, allowed: Transform => Boolean): Option[String] =
-      if (distributed)
-        spec.find(pf => pf.source.equalsIgnoreCase(source) && allowed(pf.transform))
-          .map { pf => needPnames += pf.name; pf.name }
-      else
-        spec.find(pf => pf.source.equalsIgnoreCase(source) && allowed(pf.transform) &&
-          files.forall(_.partition.contains(pf.name))).map(_.name)
+    // the partition fields of `source` whose transform `allowed` admits,
+    // in spec order; each file reads the first one it records
+    // ([[LakeMetaAggregate.recordedField]]). None = no field can answer.
+    def candidates(source: String, allowed: Transform => Boolean): Option[Seq[String]] =
+      Some(spec.filter(pf => pf.source.equalsIgnoreCase(source) && allowed(pf.transform))
+        .map(_.name)).filter(_.nonEmpty)
+    import LakeMetaAggregate.{Poisoned, recordedField, tupleKey}
     val S = PartitionValues.NullSentinel
 
-    // resolve one grouping expression to (output type, per-file key value);
-    // the DataFrame API (`groupBy(year(c).as("y"))`) aliases the grouping
-    // expression in place rather than through a child Project
-    def resolveGroup(g: Expression): Option[(DataType, FileKey)] = g match {
+    // resolve one grouping expression to its per-file key; the DataFrame
+    // API (`groupBy(year(c).as("y"))`) aliases the grouping expression in
+    // place rather than through a child Project
+    def resolveGroup(g: Expression): Option[DataFile => Any] = g match {
       case al: Alias => resolveGroup(al.child)
       case a: AttributeReference if rel.outputSet.contains(a) => // identity source
         val field = schema.fields.find(_.name.equalsIgnoreCase(a.name)).getOrElse(return None)
-        val pname = recordedField(a.name, _ == Transform.Identity).getOrElse(return None)
+        val cands = candidates(a.name, _ == Transform.Identity).getOrElse(return None)
         val parse = LakeMetaAggregate.identityValueParser(field.dataType).getOrElse(return None)
-        if (field.dataType == StringType) {
-          if (distributed) sentinelPnames += pname // task-side check
-          else if (files.exists(_.partition(pname) == S))
-            return None // sentinel conflates null with ""
-        }
-        Some((field.dataType, f => f.partition(pname) match {
-          case S => null; case s => parse(s)
-        }))
+        // a string sentinel conflates null with "": such a file poisons
+        Some(tupleKey(cands, nullOk = field.dataType != StringType)(parse))
       case Year(e) =>
         val a = temporalSource(e).getOrElse(return None)
-        val pname = recordedField(a.name,
+        val cands = candidates(a.name,
           tr => tr == Transform.Year || tr == Transform.Month || tr == Transform.Day)
           .getOrElse(return None)
-        Some((IntegerType, f => f.partition(pname) match {
-          case S => null; case s => s.substring(0, 4).toInt
-        }))
+        Some(tupleKey(cands, nullOk = true)(_.substring(0, 4).toInt))
       case Month(e) =>
         val a = temporalSource(e).getOrElse(return None)
-        val pname = recordedField(a.name,
+        val cands = candidates(a.name,
           tr => tr == Transform.Month || tr == Transform.Day).getOrElse(return None)
-        Some((IntegerType, f => f.partition(pname) match {
-          case S => null; case s => s.substring(5, 7).toInt
-        }))
+        Some(tupleKey(cands, nullOk = true)(_.substring(5, 7).toInt))
       case DayOfMonth(e) =>
         val a = temporalSource(e).getOrElse(return None)
-        val pname = recordedField(a.name, _ == Transform.Day).getOrElse(return None)
-        Some((IntegerType, f => f.partition(pname) match {
-          case S => null; case s => s.substring(8, 10).toInt
-        }))
+        val cands = candidates(a.name, _ == Transform.Day).getOrElse(return None)
+        Some(tupleKey(cands, nullOk = true)(_.substring(8, 10).toInt))
       case df: DateFormatClass =>
         val a = (df.left match {
           case c: Cast => relAttr(c.child) // date source cast up to timestamp
@@ -249,22 +209,19 @@ class LakeMetaAggregate(spark: SparkSession) extends Rule[LogicalPlan]
           case "yyyy-MM-dd" => tr => tr == Transform.Day
           case _ => return None
         }
-        val pname = recordedField(a.name, allowed).getOrElse(return None)
-        Some((StringType, f => f.partition(pname) match {
-          case S => null
-          case s => UTF8String.fromString(s.substring(0, pattern.length))
-        }))
+        val cands = candidates(a.name, allowed).getOrElse(return None)
+        val width = pattern.length
+        Some(tupleKey(cands, nullOk = true)(s => UTF8String.fromString(s.substring(0, width))))
       case Substring(strE, Literal(1, IntegerType), Literal(w: Int, IntegerType)) =>
         val a = relAttr(strE).filter(_.dataType == StringType).getOrElse(return None)
-        val pname = recordedField(a.name, _ == Transform.Truncate(w)).getOrElse(return None)
-        if (distributed) sentinelPnames += pname // task-side check
-        else if (files.exists(_.partition(pname) == S)) return None // null/"" conflation
-        Some((StringType, f => UTF8String.fromString(f.partition(pname))))
+        val cands = candidates(a.name, _ == Transform.Truncate(w)).getOrElse(return None)
+        Some(tupleKey(cands, nullOk = false)(UTF8String.fromString)) // null/"" conflation
       case _ => None
     }
 
     // ---- WHERE conjuncts: per-file wholly-in/wholly-out classification.
-    // Any conjunct (or file) that cannot be decided exactly declines.
+    // A conjunct no spec field can decide declines; a FILE it cannot
+    // decide poisons the fold.
     def renderIdentity(dt: DataType, v: Any): Option[String] = (dt, v) match {
       case (_, null) => None
       case (StringType, s: UTF8String) =>
@@ -299,50 +256,59 @@ class LakeMetaAggregate(spark: SparkSession) extends Rule[LogicalPlan]
         case _ => None
       }
     }
-    // per-file keep/drop decision for one conjunct; None = undecidable
-    def resolveFilter(c: Expression): Option[graft.lake.DataFile => Option[Boolean]] = {
-      def identityEq(a: AttributeReference, values: Seq[Any]): Option[graft.lake.DataFile => Option[Boolean]] = {
-        val pname = recordedField(a.name, _ == Transform.Identity).getOrElse(return None)
+    // per-file keep/drop decision for one conjunct; None = no field decides it
+    def resolveFilter(c: Expression): Option[DataFile => Boolean] = {
+      def identityEq(a: AttributeReference, values: Seq[Any]): Option[DataFile => Boolean] = {
+        val cands = candidates(a.name, _ == Transform.Identity).getOrElse(return None)
         val rendered = values.map(v => renderIdentity(a.dataType, v))
         if (rendered.exists(_.isEmpty)) return None // null/""/unrenderable literal
         val set = rendered.flatten.toSet
-        Some(f => f.partition(pname) match {
-          case S => Some(false) // sentinel rows are null (or ""): no non-empty literal matches
-          case v => Some(set.contains(v))
+        Some(f => f.partition(recordedField(f, cands)) match {
+          case S => false // sentinel rows are null (or ""): no non-empty literal matches
+          case v => set.contains(v)
         })
       }
-      def temporalRange(a: AttributeReference, lit: Any, ge: Boolean): Option[graft.lake.DataFile => Option[Boolean]] = {
+      // each candidate compares against the literal rendered at its own
+      // granularity, so only transforms the literal is aligned to qualify
+      def temporalRange(a: AttributeReference, lit: Any, ge: Boolean): Option[DataFile => Boolean] = {
         if (lit == null) return None
-        val trs: Seq[Transform] = Seq(Transform.Year, Transform.Month, Transform.Day)
-        trs.view.flatMap { tr =>
-          recordedField(a.name, _ == tr).flatMap { pname =>
-            alignedPeriod(tr, a.dataType, lit).map { p0 =>
-              (f: graft.lake.DataFile) => f.partition(pname) match {
-                case S => Some(false) // null fails any comparison
-                // fixed-width renderings: lexicographic == chronological
-                case p => Some(if (ge) p >= p0 else p < p0)
-              }
-            }
+        val p0s = spec.flatMap { pf =>
+          if (!pf.source.equalsIgnoreCase(a.name)) None
+          else pf.transform match {
+            case tr @ (Transform.Year | Transform.Month | Transform.Day) =>
+              alignedPeriod(tr, a.dataType, lit).map(pf.name -> _)
+            case _ => None
           }
-        }.headOption
+        }
+        if (p0s.isEmpty) return None
+        val cands = p0s.map(_._1)
+        val p0Of = p0s.toMap
+        Some { f =>
+          val pname = recordedField(f, cands)
+          f.partition(pname) match {
+            case S => false // null fails any comparison
+            // fixed-width renderings: lexicographic == chronological
+            case p => if (ge) p >= p0Of(pname) else p < p0Of(pname)
+          }
+        }
       }
       // null-ness per file from ANY null-preserving recorded transform of
       // the source (identity/year/month/day/truncate map null -> the
       // sentinel; bucket does NOT — Spark's hash(null) is the seed, so a
       // bucket tuple never witnesses null-ness). A STRING source's
       // sentinel conflates null with "" (an IS NOT NULL keeps the ""
-      // rows), so a string sentinel file is undecidable and declines.
-      def nullness(a: AttributeReference, wantNull: Boolean): Option[graft.lake.DataFile => Option[Boolean]] = {
+      // rows), so a string sentinel file is undecidable and poisons.
+      def nullness(a: AttributeReference, wantNull: Boolean): Option[DataFile => Boolean] = {
         val nullPreserving: Transform => Boolean = {
           case Transform.Identity | Transform.Year | Transform.Month | Transform.Day => true
           case Transform.Truncate(_) => true
           case _ => false
         }
-        val pname = recordedField(a.name, nullPreserving).getOrElse(return None)
+        val cands = candidates(a.name, nullPreserving).getOrElse(return None)
         val stringy = a.dataType == StringType
-        Some(f => f.partition(pname) match {
-          case S => if (stringy) None else Some(wantNull)
-          case _ => Some(!wantNull)
+        Some(f => f.partition(recordedField(f, cands)) match {
+          case S => if (stringy) throw Poisoned else wantNull
+          case _ => !wantNull
         })
       }
       c match {
@@ -368,21 +334,9 @@ class LakeMetaAggregate(spark: SparkSession) extends Rule[LogicalPlan]
         case _ => None
       }
     }
-    val filterFns = conjuncts.map(c => resolveFilter(inline(c)))
-    if (filterFns.exists(_.isEmpty)) return None
-    val keptFiles = if (distributed) Nil else {
-      val decided = files.map { f =>
-        val ds = filterFns.map(_.get(f))
-        if (ds.exists(_.isEmpty)) None else Some(ds.forall(_.get))
-      }
-      if (decided.exists(_.isEmpty)) return None // an undecidable file
-      files.zip(decided).collect { case (f, Some(true)) => f }
-    }
-
+    val filters = conjuncts.map(c => resolveFilter(inline(c)).getOrElse(return None))
     val groupIn = agg.groupingExpressions.map(inline)
-    val resolved = groupIn.map(resolveGroup)
-    if (resolved.exists(_.isEmpty)) return None
-    val keyFns = resolved.map(_.get._2)
+    val keys = groupIn.map(g => resolveGroup(g).getOrElse(return None)).toList
 
     import LakeMetaAggregate.{Out, Key, CountStar, Bound, SumCol, CountCol, AvgCol, DistinctKey}
     def fieldOf(a: AttributeReference): Option[StructField] =
@@ -409,11 +363,8 @@ class LakeMetaAggregate(spark: SparkSession) extends Rule[LogicalPlan]
             if rel.outputSet.contains(a) =>
           for {
             field <- fieldOf(a)
-            pname <- recordedField(a.name, _ == Transform.Identity)
-            // distributed: the kept-file sentinel check runs task-side
-            if distributed ||
-              !(field.dataType == StringType && keptFiles.exists(_.partition(pname) == S))
-          } yield DistinctKey(field, pname)
+            cands <- candidates(a.name, _ == Transform.Identity)
+          } yield DistinctKey(field, cands)
         case AggregateExpression(Min(a: AttributeReference), _, false, None, _)
             if rel.outputSet.contains(a) =>
           fieldOf(a).map(Bound(_, isMin = true))
@@ -453,61 +404,30 @@ class LakeMetaAggregate(spark: SparkSession) extends Rule[LogicalPlan]
         Alias(computed, al.name)(al.exprId, al.qualifier, al.explicitMetadata)
       }
     }
-    val outs = leaves.map(_._1).toSeq
     val leafAttrs = leaves.map(_._2).toSeq
-    // served value types must equal the Aggregate's own result types (a
-    // precision/type mismatch would corrupt the LocalRelation) — decline
-    // on any divergence
-    val outTypes = leafAttrs.map(_.dataType)
-    def project(served: LogicalPlan): LogicalPlan =
-      if (projectList.forall(_.isInstanceOf[Attribute])) served
-      else Project(projectList, served)
 
-    if (distributed) {
-      val served = LakeMetaAggregate.distributedServe(spark, snap.dataFiles,
-        filterFns.map(_.get), keyFns, needPnames, sentinelPnames,
-        outs, outTypes, leafAttrs)
-      if (served.isEmpty) // the fold job runs at most once per compilation
-        agg.setTagValue(LakeMetaAggregate.DeclinedTag, (t.location, snap.seq))
-      return served.map(project)
+    val maxFiles = spark.conf.getOption("spark.graft.lake.metaAggMaxFiles")
+      .map(_.toInt).getOrElse(LakeMetaAggregate.DefaultMaxFiles)
+    val rows = LakeMetaAggregate.foldAndRender(spark, snap.dataFiles,
+      distributed = snap.dataFiles.size > maxFiles,
+      LakeMetaAggregate.Fold(filters, keys, leaves.map(_._1).toSeq),
+      leafAttrs.map(_.dataType))
+    if (rows.isEmpty) { // the fold runs at most once per compilation
+      agg.setTagValue(LakeMetaAggregate.DeclinedTag, (t.location, snap.seq))
+      return None
     }
-
-    // ungrouped: exactly ONE row, even over zero kept files
-    // (count = 0, bounds = NULL), matching a global Aggregate's semantics
-    val grouped =
-      if (groupIn.isEmpty) Seq(Seq.empty[Any] -> keptFiles)
-      else keptFiles.groupBy(f => keyFns.map(_(f))).toSeq
-    val rows = grouped.map { case (keys, fs) =>
-      val values = outs.zip(outTypes).map {
-        case (Key(i), _) => keys(i)
-        case (CountStar, _) => fs.map(_.rows).sum: Any
-        case (Bound(field, isMin), _) =>
-          LakeMetaAggregate.boundValue(field, fs, isMin).getOrElse(return None)
-        case (SumCol(field), rt) =>
-          val (dt, v) = graft.lake.ColumnSums.serveSum(field, fs).getOrElse(return None)
-          if (dt != rt) return None
-          v
-        case (CountCol(field), _) =>
-          graft.lake.ColumnSums.serveCount(field, fs).getOrElse(return None): Any
-        case (AvgCol(field), rt) =>
-          val (dt, v) = graft.lake.ColumnSums.serveAvg(field, fs).getOrElse(return None)
-          if (dt != rt) return None
-          v
-        case (DistinctKey(_, pname), _) =>
-          fs.iterator.map(_.partition(pname)).filter(_ != S).toSet.size.toLong: Any
-      }
-      InternalRow.fromSeq(values)
-    }
-    Some(project(LocalRelation(leafAttrs, rows)))
+    val served = LocalRelation(leafAttrs, rows.get)
+    Some(if (projectList.forall(_.isInstanceOf[Attribute])) served
+      else Project(projectList, served))
   }
 }
 
 object LakeMetaAggregate {
-  /** Default `spark.graft.lake.metaAggMaxFiles`: the driver fold hands
-    * off to [[distributedServe]] above this many data-file entries, for
-    * every served shape. 200k entries fold in ~10² ms on the driver; a
-    * 10⁶-file neglected table folds its manifest entries in executors
-    * instead of stalling the planner. */
+  /** Default `spark.graft.lake.metaAggMaxFiles`: above this many data-file
+    * entries the fold runs in executor tasks instead of on the driver.
+    * 200k entries fold in ~10² ms on the driver; a 10⁶-file neglected
+    * table folds its manifest entries in executors instead of stalling
+    * the planner. */
   val DefaultMaxFiles = 200000
 
   /** Directory-rendered identity partition value → catalyst internal
@@ -537,39 +457,99 @@ object LakeMetaAggregate {
   /** COUNT(DISTINCT <identity source>): the partition tuples ENUMERATE
     * the distinct values — every row of a file carries exactly the
     * file's recorded value, so the distinct set of a group is the
-    * distinct set of its files' tuples (nulls excluded, like SQL).
-    * String sources decline when a kept file carries the sentinel (it
+    * distinct set of its files' tuples (nulls excluded, like SQL). A
+    * kept file of a string source carrying the sentinel poisons (it
     * conflates null — excluded — with "" — counted). */
-  private[plans] case class DistinctKey(field: StructField, pname: String) extends Out
+  private[plans] case class DistinctKey(field: StructField, cands: Seq[String]) extends Out
 
-  /** Count of distributed (above-valve) serves this JVM has run — a test
-    * hook proving the executor-fold path was taken (the resulting plan is
-    * the same LocalRelation either way). */
+  /** Count of executor-side (above-valve) folds this JVM has run — a test
+    * hook proving the executor path was taken (the resulting plan is the
+    * same LocalRelation either way). */
   val distributedServes = new java.util.concurrent.atomic.AtomicLong
 
-  /** Decline memo for the distributed fold (ADVICE r19): after a poisoned
-    * or shape-declined executor fold, the Aggregate node is tagged with
-    * the (table location, snapshot seq) it declined against so fixed-point
-    * re-applications of the rule skip straight to the real scan instead of
-    * re-launching the metadata job each iteration. */
+  /** Decline memo: after a poisoned or unrenderable fold, the Aggregate
+    * node is tagged with the (table location, snapshot seq) it declined
+    * against so fixed-point re-applications of the rule skip straight to
+    * the real scan instead of folding the snapshot again. */
   private[plans] val DeclinedTag =
     org.apache.spark.sql.catalyst.trees.TreeNodeTag[(String, Long)](
-      "graft.lake.metaAgg.declinedDistributedServe")
+      "graft.lake.metaAgg.declinedFold")
 
-  /** Poison marker: a task that finds a file violating a per-file
-    * precondition (missing tuple field, string sentinel, undecidable
-    * filter, unparseable value) emits this key instead of group rows; any
-    * occurrence declines the whole rewrite, mirroring the driver fold's
-    * `return None`. Never collides with real keys (group key values are
-    * Catalyst primitives / UTF8String, never this object). */
+  /** Thrown by a per-file key, conjunct or distinct read when the file
+    * violates a precondition (records no candidate field, carries a string
+    * sentinel where it conflates null with "", is undecidable); the fold
+    * catches it — and any other non-fatal per-file failure, e.g. an
+    * unparseable tuple value — as POISON: the whole rewrite declines. */
+  private[plans] object Poisoned extends RuntimeException with scala.util.control.NoStackTrace
+
+  /** The executor fold's poison marker: a poisoned task emits this key
+    * instead of group rows. Never collides with real keys (group key
+    * values are Catalyst primitives / UTF8String, never this object). */
   private case object Poison
   private val PoisonKey: List[Any] = List(Poison)
 
-  /** Exact per-group partial folded in executor tasks. Absence of a map
-    * entry means "some folded file could not answer this column" and the
-    * final render DECLINES — the same conservative semantics the driver
-    * fold gets from its per-file `return None`s. `files` distinguishes a
-    * real (≥1 file) group from the synthesized ungrouped-empty row. */
+  /** The first of `cands` (spec order) that `f` records; poisons when it
+    * records none — a file written under a spec without any of them. */
+  private[plans] def recordedField(f: DataFile, cands: Seq[String]): String =
+    cands.find(f.partition.contains).getOrElse(throw Poisoned)
+
+  /** A per-file group key parsed from the file's tuple; the sentinel keys
+    * NULL where it means null only (`nullOk`), and poisons otherwise. */
+  private[plans] def tupleKey(cands: Seq[String], nullOk: Boolean)(
+      parse: String => Any): DataFile => Any = { f =>
+    f.partition(recordedField(f, cands)) match {
+      case PartitionValues.NullSentinel => if (nullOk) null else throw Poisoned
+      case s => parse(s)
+    }
+  }
+
+  /** THE fold: live file entries → per-group merged [[GroupPartial]]s, or
+    * None when a file poisons it. Zero-row files (legal, e.g. an overwrite
+    * that emptied a partition) contribute nothing a real scan would
+    * produce. Every other file is checked — its group key and distinct
+    * tuples read (tuple coverage, string sentinels) and EVERY conjunct
+    * evaluated, so an undecidable file poisons even when another conjunct
+    * drops it — then classified, and a kept file merges into its group.
+    * The same function runs over `snapshot.dataFiles` on the driver and
+    * over each partition of them in executor tasks. */
+  private[plans] final case class Fold(
+      filters: Seq[DataFile => Boolean], keys: List[DataFile => Any], outs: Seq[Out]) {
+    private val boundCols = outs.collect { case Bound(f, _) => f.name }.toSet
+    private val statCols = outs.collect {
+      case SumCol(f) => f.name; case CountCol(f) => f.name; case AvgCol(f) => f.name
+    }.toSet
+    private val sumCols = outs.collect { case SumCol(f) => f.name; case AvgCol(f) => f.name }.toSet
+    private val avgCols = outs.collect { case AvgCol(f) => f.name }.toSet
+    private val distinct = outs.collect { case d: DistinctKey => d }.distinctBy(_.field.name)
+
+    def apply(files: Iterator[DataFile]): Option[Seq[(List[Any], GroupPartial)]] = {
+      val acc = scala.collection.mutable.HashMap.empty[List[Any], GroupPartial]
+      try {
+        files.foreach { f =>
+          if (f.rows > 0L) {
+            val key = keys.map(_(f))
+            val tuples = distinct.map(d => f.partition(recordedField(f, d.cands)))
+            if (filters.map(_(f)).forall(identity)) {
+              val values = distinct.zip(tuples).map {
+                case (d, PartitionValues.NullSentinel) =>
+                  if (d.field.dataType == StringType) throw Poisoned
+                  d.field.name -> Set.empty[String] // null: excluded, like SQL
+                case (d, v) => d.field.name -> Set(v)
+              }.toMap
+              val part = GroupPartial.ofFile(f, boundCols, statCols, sumCols, avgCols, values)
+              acc.update(key, acc.get(key).fold(part)(GroupPartial.merge(_, part)))
+            }
+          }
+        }
+        Some(acc.toSeq)
+      } catch { case scala.util.control.NonFatal(_) => None }
+    }
+  }
+
+  /** Exact per-group partial. Absence of a map entry means "some folded
+    * file could not answer this column" and the render DECLINES. `files`
+    * distinguishes a real (≥1 file) group from the synthesized
+    * ungrouped-empty row. */
   private[plans] final case class GroupPartial(
       files: Long,
       rows: Long,
@@ -585,67 +565,49 @@ object LakeMetaAggregate {
     /** One file's partial, restricted to the columns the query needs.
       * `sums`/`maxAbs` entries exist for zero-non-null files as identity
       * elements (a file with no values contributes 0 to a sum and does
-      * not constrain the AVG exact-regime bound — matching
-      * [[ColumnSums.totals]]/[[ColumnSums.serveAvg]], which skip such
-      * files), and are ABSENT when a contributing file lacks the recorded
-      * stat — absence poisons the column, not the whole fold. */
+      * not constrain the AVG exact-regime bound), and are ABSENT when a
+      * contributing file lacks the recorded stat — absence declines the
+      * column, not the whole fold. */
     def ofFile(
-        f: graft.lake.DataFile,
+        f: DataFile,
         boundCols: Set[String], statCols: Set[String],
         sumCols: Set[String], avgCols: Set[String],
-        distinctPnames: Seq[String], sentinel: String): GroupPartial = {
-      val bounds = boundCols.iterator.flatMap(c => f.bounds.get(c).map(c -> _)).toMap
-      val nonNull = statCols.iterator.flatMap(c => f.nonNull.get(c).map(c -> _)).toMap
-      val sums = sumCols.iterator.flatMap { c =>
-        f.nonNull.get(c) match {
-          case Some(0L) => Some(c -> BigDecimal(0))
-          case Some(_) => f.sums.get(c).flatMap(s =>
-            try Some(c -> BigDecimal(s)) catch { case _: NumberFormatException => None })
-          case None => None
+        distinct: Map[String, Set[String]]): GroupPartial = {
+      def per[V](cols: Set[String])(stat: String => Option[V]): Map[String, V] =
+        if (cols.isEmpty) Map.empty else cols.iterator.flatMap(c => stat(c).map(c -> _)).toMap
+      def additive(c: String)(stat: => Option[BigDecimal]): Option[BigDecimal] =
+        f.nonNull.get(c).flatMap { n =>
+          if (n == 0L) Some(BigDecimal(0))
+          else try stat catch { case _: NumberFormatException => None }
         }
-      }.toMap
-      val maxAbs = avgCols.iterator.flatMap { c =>
-        f.nonNull.get(c) match {
-          case Some(0L) => Some(c -> BigDecimal(0))
-          case Some(_) => f.bounds.get(c) match {
-            case Some(b) if b.kind == "n" =>
-              try Some(c -> BigDecimal(b.min).abs.max(BigDecimal(b.max).abs))
-              catch { case _: NumberFormatException => None }
-            case _ => None
-          }
-          case None => None
-        }
-      }.toMap
-      val distinct = distinctPnames.iterator.map { p =>
-        p -> (f.partition(p) match {
-          case `sentinel` => Set.empty[String] // null: excluded, like SQL
-          case v => Set(v)
-        })
-      }.toMap
-      GroupPartial(1L, f.rows, bounds, nonNull, sums, maxAbs, distinct)
+      GroupPartial(1L, f.rows,
+        bounds = per(boundCols)(f.bounds.get),
+        nonNull = per(statCols)(f.nonNull.get),
+        sums = per(sumCols)(c => additive(c)(f.sums.get(c).map(BigDecimal(_)))),
+        maxAbs = per(avgCols)(c => additive(c)(f.bounds.get(c).collect {
+          case b if b.kind == "n" => BigDecimal(b.min).abs.max(BigDecimal(b.max).abs)
+        })),
+        distinct = distinct)
     }
 
     /** Associative, commutative merge. Bounds merge kind-aware in the
       * bound's own comparison domain (numeric for "n"/"d", unsigned UTF-8
-      * bytes for "s" — the same ordering [[boundValue]] reduces with), and
-      * the ORIGINAL rendered strings are kept so no re-rendering can
-      * perturb a value. A kind mismatch or parse failure drops the column
-      * (→ final decline). */
-    def merge(a: GroupPartial, b: GroupPartial): GroupPartial = GroupPartial(
-      files = a.files + b.files,
-      rows = a.rows + b.rows,
-      bounds = (a.bounds.keySet & b.bounds.keySet).iterator
-        .flatMap(c => mergeBound(a.bounds(c), b.bounds(c)).map(c -> _)).toMap,
-      nonNull = (a.nonNull.keySet & b.nonNull.keySet).iterator
-        .map(c => c -> (a.nonNull(c) + b.nonNull(c))).toMap,
-      sums = (a.sums.keySet & b.sums.keySet).iterator
-        .map(c => c -> (a.sums(c) + b.sums(c))).toMap,
-      maxAbs = (a.maxAbs.keySet & b.maxAbs.keySet).iterator
-        .map(c => c -> a.maxAbs(c).max(b.maxAbs(c))).toMap,
-      distinct = (a.distinct.keySet | b.distinct.keySet).iterator
-        .map(c => c -> (a.distinct.getOrElse(c, Set.empty[String]) |
-          b.distinct.getOrElse(c, Set.empty[String]))).toMap,
-    )
+      * bytes for "s" — Catalyst's string ordering), and the ORIGINAL
+      * rendered strings are kept so no re-rendering can perturb a value.
+      * A kind mismatch or parse failure drops the column (→ decline). */
+    def merge(a: GroupPartial, b: GroupPartial): GroupPartial = {
+      def both[V](x: Map[String, V], y: Map[String, V])(f: (V, V) => Option[V]): Map[String, V] =
+        if (x.isEmpty || y.isEmpty) Map.empty
+        else x.flatMap { case (c, v) => y.get(c).flatMap(f(v, _)).map(c -> _) }
+      GroupPartial(
+        files = a.files + b.files,
+        rows = a.rows + b.rows,
+        bounds = both(a.bounds, b.bounds)(mergeBound),
+        nonNull = both(a.nonNull, b.nonNull)((x, y) => Some(x + y)),
+        sums = both(a.sums, b.sums)((x, y) => Some(x + y)),
+        maxAbs = both(a.maxAbs, b.maxAbs)((x, y) => Some(x.max(y))),
+        distinct = both(a.distinct, b.distinct)((x, y) => Some(x | y)))
+    }
 
     private def mergeBound(x: ColBound, y: ColBound): Option[ColBound] = {
       if (x.kind != y.kind) return None
@@ -668,185 +630,91 @@ object LakeMetaAggregate {
     }
   }
 
-  /** The ABOVE-VALVE serve: fold the snapshot's file entries in EXECUTORS
-    * and return the same LocalRelation the driver fold would have built.
-    * Tasks classify filters, derive group keys, and merge [[GroupPartial]]s
-    * per group (map-side combine in the per-partition hash map, then one
-    * skinny reduceByKey over group-count-sized partials); the driver sees
-    * only merged groups. All per-file preconditions the driver fold checks
-    * at resolve time run task-side and POISON the fold — any poison, or
-    * any column a partial could not answer, declines the whole rewrite and
-    * the query falls back to the real distributed scan (exactly the
-    * driver fold's `return None` semantics, one small metadata job
-    * later). Exceptions in per-file evaluation (malformed tuple values)
-    * poison rather than fail the query. */
-  private[plans] def distributedServe(
+  /** Run `fold` over `files` — on the driver, or (`distributed`) in
+    * executor tasks with map-side merging in each task's hash map and one
+    * skinny reduceByKey over group-count-sized partials, so the driver
+    * sees only merged groups — and render one row per group. None = the
+    * fold was poisoned or some group could not render a column. */
+  private[plans] def foldAndRender(
       spark: SparkSession,
-      allFiles: Seq[graft.lake.DataFile],
-      filterFns: Seq[graft.lake.DataFile => Option[Boolean]],
-      keyFns: Seq[graft.lake.DataFile => Any],
-      needPnames: Set[String],
-      sentinelPnames: Set[String],
-      outs: Seq[Out],
-      outTypes: Seq[DataType],
-      output: Seq[Attribute]): Option[LogicalPlan] = {
-    val boundCols = outs.collect { case Bound(f, _) => f.name }.toSet
-    val statCols = outs.collect {
-      case SumCol(f) => f.name; case CountCol(f) => f.name; case AvgCol(f) => f.name
-    }.toSet
-    val sumCols = outs.collect { case SumCol(f) => f.name; case AvgCol(f) => f.name }.toSet
-    val avgCols = outs.collect { case AvgCol(f) => f.name }.toSet
-    // per distinct pname: does a string source make the sentinel a poison?
-    val distinctStr: Map[String, Boolean] = outs.collect {
-      case DistinctKey(f, pname) => pname -> (f.dataType == StringType)
-    }.groupMapReduce(_._1)(_._2)(_ || _)
-    val distinctPnames = distinctStr.keys.toSeq.sorted
-    val S = PartitionValues.NullSentinel
-    val sc = spark.sparkContext
-    val slices = math.max(1, math.min(allFiles.size / 4096 + 1, sc.defaultParallelism * 2))
-    distributedServes.incrementAndGet()
-    val folded = sc.parallelize(allFiles, slices).mapPartitions { it =>
-      val acc = scala.collection.mutable.HashMap.empty[List[Any], GroupPartial]
-      var poisoned = false
-      while (it.hasNext && !poisoned) {
-        val f = it.next()
-        try {
-          if (f.rows > 0L) { // zero-row committed files contribute nothing
-            if (needPnames.exists(p => !f.partition.contains(p))) poisoned = true
-            else if (sentinelPnames.exists(p => f.partition(p) == S)) poisoned = true
-            else {
-              // every conjunct must classify the file wholly-in/wholly-out;
-              // an undecidable file poisons EVEN IF another conjunct drops
-              // it — same as the driver fold's pre-filter decidability pass
-              val decisions = filterFns.map(_(f))
-              if (decisions.exists(_.isEmpty)) poisoned = true
-              else if (decisions.forall(_.get)) {
-                if (distinctPnames.exists(p => distinctStr(p) && f.partition(p) == S))
-                  poisoned = true // sentinel conflates null with "" in the distinct set
-                else {
-                  val key = keyFns.map(_(f)).toList
-                  val part = GroupPartial.ofFile(
-                    f, boundCols, statCols, sumCols, avgCols, distinctPnames, S)
-                  acc.get(key) match {
-                    case Some(p) => acc.update(key, GroupPartial.merge(p, part))
-                    case None => acc.update(key, part)
-                  }
-                }
-              }
-            }
-          }
-        } catch { case scala.util.control.NonFatal(_) => poisoned = true }
-      }
-      if (poisoned) Iterator.single(PoisonKey -> GroupPartial.Empty) else acc.iterator
-    }.reduceByKey(GroupPartial.merge _).collect()
-    if (folded.exists(_._1 == PoisonKey)) return None
-
-    // ungrouped over zero kept files: exactly ONE row (count = 0, bounds
+      files: Seq[DataFile],
+      distributed: Boolean,
+      fold: Fold,
+      outTypes: Seq[DataType]): Option[Seq[InternalRow]] = {
+    val folded: Option[Seq[(List[Any], GroupPartial)]] =
+      if (distributed) {
+        val sc = spark.sparkContext
+        val slices = math.max(1, math.min(files.size / 4096 + 1, sc.defaultParallelism * 2))
+        distributedServes.incrementAndGet()
+        val merged = sc.parallelize(files, slices)
+          .mapPartitions(it => fold(it).fold(Iterator(PoisonKey -> GroupPartial.Empty))(_.iterator))
+          .reduceByKey(GroupPartial.merge _).collect()
+        if (merged.exists(_._1 == PoisonKey)) None else Some(merged.toSeq)
+      } else fold(files.iterator)
+    // ungrouped over zero kept files: exactly ONE row (count = 0, values
     // NULL), matching a global Aggregate's semantics
-    val groups: Seq[(List[Any], GroupPartial)] =
-      if (keyFns.isEmpty && folded.isEmpty) Seq(Nil -> GroupPartial.Empty)
-      else folded.toSeq
-
-    val rows = groups.map { case (keys, p) =>
-      // render through the SAME serving functions as the driver fold, on a
-      // single synthetic entry holding the merged stats — the type checks
-      // and decline conditions are shared by construction
-      def statFile(field: StructField, needSum: Boolean,
-          withMaxAbs: Boolean): Option[Seq[graft.lake.DataFile]] =
-        if (p.files == 0L) Some(Nil)
-        else for {
-          nn <- p.nonNull.get(field.name)
-          sums <-
-            if (needSum && nn > 0L)
-              p.sums.get(field.name).map(s =>
-                Map(field.name -> s.underlying.toPlainString))
-            else Some(Map.empty[String, String])
-          bnds <-
-            if (withMaxAbs && nn > 0L)
-              p.maxAbs.get(field.name).map { m =>
-                val s = m.underlying.toPlainString
-                Map(field.name -> ColBound("n", s, s))
-              }
-            else Some(Map.empty[String, ColBound])
-        } yield Seq(graft.lake.DataFile("", 0L, Map.empty, 0L,
-          bounds = bnds, rows = p.rows, nonNull = Map(field.name -> nn), sums = sums))
-      val values = outs.zip(outTypes).map {
-        case (Key(i), _) => keys(i)
-        case (CountStar, _) => p.rows: Any
-        case (Bound(field, isMin), _) =>
-          if (p.files == 0L) null
-          else {
-            val b = p.bounds.getOrElse(field.name, return None)
-            val probe = graft.lake.DataFile("", 0L, Map.empty, 0L,
-              bounds = Map(field.name -> b), rows = p.rows)
-            boundValue(field, Seq(probe), isMin).getOrElse(return None)
-          }
-        case (SumCol(field), rt) =>
-          val fs = statFile(field, needSum = true, withMaxAbs = false).getOrElse(return None)
-          val (dt, v) = graft.lake.ColumnSums.serveSum(field, fs).getOrElse(return None)
-          if (dt != rt) return None
-          v
-        case (CountCol(field), _) =>
-          val fs = statFile(field, needSum = false, withMaxAbs = false).getOrElse(return None)
-          graft.lake.ColumnSums.serveCount(field, fs).getOrElse(return None): Any
-        case (AvgCol(field), rt) =>
-          val fs = statFile(field, needSum = true, withMaxAbs = true).getOrElse(return None)
-          val (dt, v) = graft.lake.ColumnSums.serveAvg(field, fs).getOrElse(return None)
-          if (dt != rt) return None
-          v
-        case (DistinctKey(_, pname), _) =>
-          p.distinct.getOrElse(pname, Set.empty[String]).size.toLong: Any
-      }
-      InternalRow.fromSeq(values)
+    val groups = folded.getOrElse(return None) match {
+      case Seq() if fold.keys.isEmpty => Seq(Nil -> GroupPartial.Empty)
+      case gs => gs
     }
-    Some(LocalRelation(output, rows))
+    Some(groups.map { case (keys, p) => render(keys, p, fold.outs, outTypes).getOrElse(return None) })
   }
 
-  /** Exact min/max of `field` across `files` from recorded bounds, as a
-    * Catalyst value (None = not answerable — missing bounds, rounded
-    * float bounds, unbounded types). */
-  private[plans] def boundValue(
-      field: StructField, files: Seq[graft.lake.DataFile], isMin: Boolean): Option[Any] = {
-    if (files.isEmpty) return Some(null)
-    val bounds: Seq[Option[ColBound]] = files.map(_.bounds.get(field.name))
-    if (bounds.exists(_.isEmpty)) return None
-    val bs = bounds.flatten
-    def pick(vals: Seq[BigDecimal]): BigDecimal = if (isMin) vals.min else vals.max
+  /** One group's row from its merged partial; None = some column cannot
+    * be served exactly or its type is not the aggregate's result type. */
+  private def render(
+      keys: List[Any], p: GroupPartial, outs: Seq[Out], outTypes: Seq[DataType]): Option[InternalRow] = {
+    // the empty partial answers every stat as zero
+    def stat[V](m: Map[String, V], c: String, zero: V): Option[V] =
+      if (p.files == 0L) Some(zero) else m.get(c)
+    def typed(rt: DataType, served: Option[(DataType, Any)]): Option[Any] =
+      served.collect { case (dt, v) if dt == rt => v }
+    val values = outs.zip(outTypes).map {
+      case (Key(i), _) => keys(i)
+      case (CountStar, _) => p.rows
+      case (Bound(field, isMin), _) =>
+        if (p.files == 0L) null
+        else boundValue(field, p.bounds.getOrElse(field.name, return None), isMin)
+          .getOrElse(return None)
+      case (SumCol(field), rt) =>
+        typed(rt, ColumnSums.serveSum(field.dataType,
+          stat(p.sums, field.name, BigDecimal(0)).getOrElse(return None),
+          stat(p.nonNull, field.name, 0L).getOrElse(return None))).getOrElse(return None)
+      case (CountCol(field), _) => stat(p.nonNull, field.name, 0L).getOrElse(return None)
+      case (AvgCol(field), rt) =>
+        typed(rt, ColumnSums.serveAvg(field.dataType,
+          stat(p.sums, field.name, BigDecimal(0)).getOrElse(return None),
+          stat(p.nonNull, field.name, 0L).getOrElse(return None),
+          stat(p.maxAbs, field.name, BigDecimal(0)).getOrElse(return None))).getOrElse(return None)
+      case (DistinctKey(field, _), _) =>
+        p.distinct.getOrElse(field.name, Set.empty[String]).size.toLong
+    }
+    Some(InternalRow.fromSeq(values))
+  }
+
+  /** Exact min/max of `field` from its merged bound, as a Catalyst value
+    * (None = not answerable — rounded float bounds, unbounded types, a
+    * bound of another column kind). */
+  private[plans] def boundValue(field: StructField, b: ColBound, isMin: Boolean): Option[Any] = {
+    val v = if (isMin) b.min else b.max
     field.dataType match {
-      case LongType | TimestampType | TimestampNTZType =>
-        if (bs.exists(_.kind != "n")) None
-        else {
-          val vs = bs.map(b => BigDecimal(if (isMin) b.min else b.max))
-          if (vs.exists(!_.isValidLong)) None else Some(pick(vs).toLong)
-        }
-      case IntegerType | DateType =>
-        if (bs.exists(_.kind != "n")) None
-        else {
-          val vs = bs.map(b => BigDecimal(if (isMin) b.min else b.max))
-          if (vs.exists(!_.isValidInt)) None else Some(pick(vs).toInt)
-        }
-      case StringType =>
-        if (bs.exists(_.kind != "s")) None
-        else {
-          val vs = bs.map(b => UTF8String.fromString(if (isMin) b.min else b.max))
-          Some(vs.reduce((a, b) => if ((a.compareTo(b) <= 0) == isMin) a else b))
-        }
+      case LongType | TimestampType | TimestampNTZType if b.kind == "n" =>
+        Some(BigDecimal(v)).filter(_.isValidLong).map(_.toLong)
+      case IntegerType | DateType if b.kind == "n" =>
+        Some(BigDecimal(v)).filter(_.isValidInt).map(_.toInt)
+      case StringType if b.kind == "s" => Some(UTF8String.fromString(v))
       // decimals below the 30-significant-digit bound rounding are recorded
       // EXACT (scaled by the parquet decimal annotation, under kind "d" —
       // INT32/INT64-backed for precision <= 18, two's-complement
       // FIXED_LEN_BYTE_ARRAY beyond); precision > 30 could have been
       // floor/ceil-rounded, decline. Any other kind is not a decimal
       // column's bound: decline, like every type above.
-      case dt: DecimalType if dt.precision <= 30 =>
-        if (bs.exists(_.kind != "d")) None
+      case dt: DecimalType if dt.precision <= 30 && b.kind == "d" =>
+        val x = BigDecimal(v)
+        if (x.scale > dt.scale) None
         else {
-          val vs = bs.map(b => BigDecimal(if (isMin) b.min else b.max))
-          val v = pick(vs)
-          if (v.scale > dt.scale) None
-          else {
-            val d = Decimal(v)
-            if (d.changePrecision(dt.precision, dt.scale)) Some(d) else None
-          }
+          val d = Decimal(x)
+          if (d.changePrecision(dt.precision, dt.scale)) Some(d) else None
         }
       case _ => None
     }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.lake.{ColumnSums, LakeFileWriter, LakeTable, LakeWriteSpec, Snapshot}
+import graft.lake.{LakeFileWriter, LakeTable, LakeWriteSpec, Snapshot}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.read.ScanBuilder
@@ -164,7 +164,7 @@ private[sources] class GraftLakeDeltaBatchWrite(
     // else one global delete file per task
     val keyParts = LakeFileWriter.bind(spec, rowIdSchema).getOrElse(Nil)
     GraftLakeWriterFactory(LakeWriteSpec(t.location, stagingRel, snap.seq + 1,
-      t.hadoopConfEntries, rowSchema, dataParts, ColumnSums.recordSums(t.spark),
+      t.hadoopConfEntries, rowSchema, dataParts,
       keySchema = rowIdSchema, keyParts = keyParts))
   }
 

@@ -1122,7 +1122,7 @@ private[sources] class GraftLakeChangelogMicroBatchStream(
       val out = delta.select(outSchema.fieldNames.map(col).toIndexedSeq: _*)
       val stagingRel = s"$rel/${java.util.UUID.randomUUID()}"
       val spec = graft.lake.LakeWriteSpec(t.location, stagingRel, e, t.hadoopConfEntries,
-        out.schema, recordSums = false)
+        out.schema)
       // staged files are planned like committed ones, from the split
       // offsets and row counts their writer recorded
       (rel, t.publishStaged(graft.lake.LakeFileWriter.stage(out.queryExecution.toRdd, spec),

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.lake.{ColumnSums, LakeFileWriter, LakeTable, LakeWriteSpec, StagedFile}
+import graft.lake.{LakeFileWriter, LakeTable, LakeWriteSpec, StagedFile}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
@@ -146,7 +146,7 @@ private[sources] class GraftLakeBatchWrite(
     val parts = LakeFileWriter.bind(spec, schema).getOrElse(throw new IllegalArgumentException(
       s"partition sources ${spec.map(_.source).mkString(", ")} missing from write schema"))
     GraftLakeWriterFactory(LakeWriteSpec(t.location, stagingRel, snap.seq + 1,
-      t.hadoopConfEntries, schema, parts, ColumnSums.recordSums(t.spark)))
+      t.hadoopConfEntries, schema, parts))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
