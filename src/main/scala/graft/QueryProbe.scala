@@ -33,12 +33,6 @@ object QueryProbe {
     // extra session confs for A/B probing: "k1=v1,k2=v2"
     sys.env.get("SPARK_GRAFT_PROBE_CONFS").foreach(_.split(",").filter(_.contains("="))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
-    // hadoop-level confs for A/B probing (e.g. fs.file.impl)
-    sys.env.get("SPARK_GRAFT_PROBE_HADOOP").foreach(_.split(",").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.sparkContext.hadoopConfiguration.set(k, v)
-      })
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   */
 final class LakeCatalog(spark: SparkSession, rootDir: String) {
   private val root = new Path(rootDir)
-  private val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val fs = LakeFs.forPath(root, spark.sparkContext.hadoopConfiguration)
 
   def location(name: String): String = new Path(root, name).toString
 

@@ -1,12 +1,12 @@
 package graft.lake
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.io.OutputFile
+import org.apache.parquet.hadoop.util.{HadoopOutputFile, HadoopStreams}
+import org.apache.parquet.io.{OutputFile, PositionOutputStream}
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
@@ -80,7 +80,9 @@ final case class LakeWriteSpec(
   * Metrics are a by-product of the write (the Iceberg writer discipline):
   * exact per-file sums fold as rows pass, and on close each file's
   * [[FileMeta]] is built from `ParquetWriter.getFooter()` plus one
-  * task-side length stat — no read-back job, no footer re-read.
+  * task-side length stat — no read-back job, no footer re-read. Each
+  * writer holds one [[LakeFs]] file system for its creates and stats, so
+  * local staging spawns no process.
   *
   * Physical types are pinned (non-legacy decimals: INT32 ≤ 9 digits,
   * INT64 ≤ 18, else FIXED_LEN_BYTE_ARRAY; TIMESTAMP as INT64 micros, which
@@ -94,6 +96,7 @@ final class LakeFileWriter(spec: LakeWriteSpec, taskTag: String) {
     spec.hadoopConf.foreach { case (k, v) => c.set(k, v) }
     c
   }
+  private val fs = LakeFs.forPath(new Path(spec.location), conf)
   private var opened = 0
   private val data = new FileSet(
     spec.dataSchema, spec.dataParts, LakeTable.SeqCol, isDelete = false)
@@ -145,7 +148,8 @@ final class LakeFileWriter(spec: LakeWriteSpec, taskTag: String) {
       val (w, _, sums) = open.getOrElseUpdate(partition, {
         val rel = s"${spec.stagingRel}/$taskTag-$opened.parquet"
         opened += 1
-        (openWriter(new Path(new Path(spec.location), rel), fileConf), rel, new FileSums(schema))
+        (openWriter(fs, new Path(new Path(spec.location), rel), fileConf), rel,
+          new FileSums(schema))
       })
       w.write(r)
       if (!isDelete) sums.add(r) // delete keys carry no sums
@@ -154,7 +158,7 @@ final class LakeFileWriter(spec: LakeWriteSpec, taskTag: String) {
     def close(): Seq[StagedFile] = open.toSeq.map { case (partition, (w, rel, sums)) =>
       w.close()
       val path = new Path(new Path(spec.location), rel)
-      val len = path.getFileSystem(conf).getFileStatus(path).getLen
+      val len = fs.getFileStatus(path).getLen
       StagedFile(rel, spec.seq, partition, FileMeta.of(w.getFooter, len),
         if (isDelete) Map.empty else sums.result, isDelete)
     }
@@ -212,12 +216,32 @@ object LakeFileWriter {
       new ParquetWriteSupport()
   }
 
+  /** A parquet [[OutputFile]] over the writer's own [[LakeFs.Local]]: what
+    * `HadoopOutputFile` does for a `file` path (same create arguments, no
+    * block-size alignment), minus its `FileSystem.get` lookup, which would
+    * return the stock file system. */
+  private final class LocalOutputFile(fs: FileSystem, path: Path) extends OutputFile {
+    private def open(overwrite: Boolean, blockSizeHint: Long): PositionOutputStream =
+      HadoopStreams.wrap(fs.create(path, overwrite, 4096, fs.getDefaultReplication(path),
+        math.max(fs.getDefaultBlockSize(path), blockSizeHint)))
+    override def create(blockSizeHint: Long): PositionOutputStream = open(false, blockSizeHint)
+    override def createOrOverwrite(blockSizeHint: Long): PositionOutputStream =
+      open(true, blockSizeHint)
+    override def supportsBlockSize(): Boolean = false
+    override def defaultBlockSize(): Long = fs.getDefaultBlockSize(path)
+    override def getPath: String = path.toString
+  }
+
   /** Honors the SAME size knobs Spark's own writer reads from the Hadoop
     * conf (`parquet.block.size` / `parquet.page.size`) — the direct
     * builder otherwise silently pins its 128 MB default and multi-row-group
     * splitting never happens. */
-  private def openWriter(path: Path, conf: Configuration): ParquetWriter[InternalRow] =
-    new RowWriterBuilder(HadoopOutputFile.fromPath(path, conf))
+  private def openWriter(fs: FileSystem, path: Path, conf: Configuration)
+      : ParquetWriter[InternalRow] =
+    new RowWriterBuilder(fs match {
+      case local: LakeFs.Local => new LocalOutputFile(local, local.makeQualified(path))
+      case _ => HadoopOutputFile.fromPath(path, conf)
+    })
       .withConf(conf)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withRowGroupSize(conf.getLong("parquet.block.size", ParquetWriter.DEFAULT_BLOCK_SIZE.toLong))

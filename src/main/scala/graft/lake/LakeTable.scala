@@ -70,7 +70,7 @@ final class LakeTable private (
   import LakeTable._
 
   private val root = new Path(location)
-  private[lake] val fs: FileSystem = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private[graft] val fs: FileSystem = LakeFs.forPath(root, spark.sparkContext.hadoopConfiguration)
   private def metaDir  = new Path(root, "meta")
 
   // ------------------------------------------------------------------ meta
@@ -1654,7 +1654,6 @@ object LakeTable extends org.apache.spark.internal.Logging {
 
   def exists(spark: SparkSession, location: String): Boolean = {
     val p = new Path(location)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(new Path(p, "meta/table.json"))
+    LakeFs.forPath(p, spark.sparkContext.hadoopConfiguration).exists(new Path(p, "meta/table.json"))
   }
 }

@@ -545,7 +545,7 @@ object LakePipelines {
     built.getOrElseUpdate((sfDir, name), {
       val cat = catalog(spark, sfDir)
       val loc = new Path(cat.location(name))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = LakeFs.forPath(loc, spark.sparkContext.hadoopConfiguration)
       val marker = new Path(loc, "_GRAFT_BUILD_OK")
       if (fs.exists(marker)) {
         LakeTable.load(spark, cat.location(name))

@@ -175,8 +175,6 @@ private[sources] class GraftLakeDeltaBatchWrite(
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(t.location)
-    val fs = root.getFileSystem(t.spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(root, stagingRel), true)
+    t.fs.delete(new Path(t.abs(stagingRel)), true)
   }
 }

@@ -1141,19 +1141,17 @@ private[sources] class GraftLakeChangelogMicroBatchStream(
 
   override def commit(end: Offset): Unit = {
     val e = end.asInstanceOf[GraftLakeOffset].seq
-    val fs = new Path(t.location).getFileSystem(t.spark.sparkContext.hadoopConfiguration)
     staged.forEach { (k, v) =>
       if (k._2 <= e) {
         val rel = v._1
-        try fs.delete(new Path(t.abs(rel)), true) catch { case _: Exception => () }
+        try t.fs.delete(new Path(t.abs(rel)), true) catch { case _: Exception => () }
         staged.remove(k)
       }
     }
   }
 
   override def stop(): Unit = {
-    val fs = new Path(t.location).getFileSystem(t.spark.sparkContext.hadoopConfiguration)
-    try fs.delete(new Path(t.abs(streamStagingRel)), true) catch { case _: Exception => () }
+    try t.fs.delete(new Path(t.abs(streamStagingRel)), true) catch { case _: Exception => () }
     staged.clear()
   }
 }

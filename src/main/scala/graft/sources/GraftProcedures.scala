@@ -140,12 +140,11 @@ private[sources] object GraftProcedures {
         val t = table(input)
         def fileCount: Int = {
           val root = new org.apache.hadoop.fs.Path(t.location)
-          val fs = root.getFileSystem(t.spark.sparkContext.hadoopConfiguration)
           Seq("data", "deletes", "_staging", "meta").map { sub =>
             val d = new org.apache.hadoop.fs.Path(root, sub)
-            if (!fs.exists(d)) 0
+            if (!t.fs.exists(d)) 0
             else {
-              val it = fs.listFiles(d, true); var n = 0
+              val it = t.fs.listFiles(d, true); var n = 0
               while (it.hasNext) { it.next(); n += 1 }
               n
             }
