@@ -395,8 +395,9 @@ object ScaleBench {
   }
 
   /** Compaction probe table: the skewed-burst layout — 50 identity
-    * partition values x 4*K files each (the writeSplits salt fans one
-    * append out), 200*K files total. */
+    * partition values x 4*K files each (`ManyFilesFixture.buildBursty`
+    * links one real append's per-partition file 4*K times and commits the
+    * links in one metadata commit), 200*K files total. */
   private def filesCompactTable(s: SparkSession, k: Int): graft.lake.LakeTable = {
     val root = lakeDirs.getOrElseUpdate(s"graft-scale-filesc-x$k",
       TempDirs.scoped(s"graft-scale-filesc-x$k")).toString
@@ -628,7 +629,8 @@ object ScaleBench {
     }
     case "lake_files_compact" => (s, dir) => {
       // bin-pack compaction of a skewed-burst layout (50 partition
-      // values x 4*K files each, via the writeSplits salt): compactDirty
+      // values x 4*K files each, hard links ManyFilesFixture.buildBursty
+      // commits in one metadata commit): compactDirty
       // folds 200*K tiny files back to 50, then rollback restores the
       // pre-compaction content (O(1) metadata) so every invocation
       // measures the same rewrite

@@ -3,6 +3,7 @@ package graft.diff
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.operators.LakePipelines.withConfs
 import scala.util.Random
 
 /** Randomized differential-testing query generator (VERDICT r11 #2).
@@ -1281,14 +1282,15 @@ object QueryGen {
         // content restatement must replay unchanged, while a range
         // CROSSING one refuses (spec-pinned contract, not drawn here)
         val maint = maintDraw(rng)
-        // trailing draw (r19, VERDICT r18 #4): a FILES-HEAVY layout — the
-        // writeSplits salt fans every commit out to N files per partition
-        // value, so the drawn changelog range replays against many-file
-        // commits with REAL content (the 10⁵-link ManyFilesFixture is
-        // metadata-consistent only and stays a ScaleBench-only probe).
-        // Pure layout knob: the SQL dual is untouched by construction.
-        val splitsDraw = rng.nextInt(3) // 0 → default single-file layout
-        val writeSplits = if (splitsDraw == 0) 1 else 4 * splitsDraw
+        // trailing draw (r19, VERDICT r18 #4): a FILES-HEAVY layout — a
+        // small advisory partition size lets AQE split each commit's
+        // partition values over several files (the input spread over
+        // several partitions gives it map-side blocks to split by), so the
+        // changelog range replays against many-file commits with REAL
+        // content. Pure layout knob: the SQL dual is untouched.
+        val splitsDraw = rng.nextInt(3) // 0 → default AQE-sized layout
+        val spread = 4 * splitsDraw
+        val advisory = if (splitsDraw == 0) None else Some(s"${2 / splitsDraw}k")
         // prefix-state inner selects (the arm-12 rewrites): 1 = as
         // appended, 2 = + upsert restatement, 3 = + tombstones
         def innerSel(state: Int): String = {
@@ -1322,7 +1324,7 @@ object QueryGen {
         val outCols = projCols :+ "_change_type"
         val sql = s"SELECT ${outCols.mkString(", ")} FROM ($union) h" +
           pred.map(p => s" WHERE ${p._2}").getOrElse("")
-        val notes13 = s"range=($cFrom,$cTo) maint=$maint splits=$writeSplits"
+        val notes13 = s"range=($cFrom,$cTo) maint=$maint advisory=${advisory.getOrElse("default")}"
         Gen(name, sql, (s, dir) => {
           val base = lakeBase(load(s, dir, t), lt, lakeCap)
           val pf = pfDraw match {
@@ -1332,24 +1334,21 @@ object QueryGen {
             case _ => PartitionField(lt.pk, Transform.Bucket(bucketN), "gp")
           }
           val loc = freshLakeLoc(name)
-          val prevSplits = s.conf.getOption("spark.graft.lake.writeSplits")
-          try {
-            if (writeSplits > 1)
-              s.conf.set("spark.graft.lake.writeSplits", writeSplits.toString)
+          withConfs(s, advisory.toSeq.flatMap(a => Seq(
+              "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> a,
+              "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b"))) {
+            val input = if (spread > 0) base.repartition(spread) else base
             val lake = LakeTable.create(s, loc, s"diff_lake_$seed", base.schema,
               partitionSpec = Seq(pf), primaryKey = Seq(lt.pk))
-            lake.append(base)                                         // seq 1
-            lake.upsert(base.filter(col(lt.pk) % u === ru)
+            lake.append(input)                                        // seq 1
+            lake.upsert(input.filter(col(lt.pk) % u === ru)
               .withColumn(lt.moneyCol, col(lt.moneyCol) * 2))         // seq 2
-            lake.deleteKeys(base.filter(col(lt.pk) % d === rd)
+            lake.deleteKeys(input.filter(col(lt.pk) % d === rd)
               .select(col(lt.pk)))                                    // seq 3
             applyMaintenance(lake, maint)                             // seq 4+
             var df = lake.changes(cFrom.toLong, cTo.toLong)
             pred.foreach(p => df = df.filter(p._1))
             df.select(outCols.map(col): _*)
-          } finally prevSplits match {
-            case Some(v) => s.conf.set("spark.graft.lake.writeSplits", v)
-            case None => s.conf.unset("spark.graft.lake.writeSplits")
           }
         }, notes13)
 
@@ -1632,9 +1631,7 @@ object QueryGen {
             "spark.graft.catalog.warehouse" -> wh,
             "spark.graft.lake.rowLevelMode" ->
               (if (morMode) "merge-on-read" else "copy-on-write"))
-          val prev = scoped.keys.map(k => k -> s.conf.getOption(k)).toMap
-          try {
-            scoped.foreach { case (k, v) => s.conf.set(k, v) }
+          try withConfs(s, scoped.toSeq) {
             base.createOrReplaceTempView(baseView)
             val partSql = pfDraw match {
               case 0 => s"PARTITIONED BY (identity(${lt.identityCol}))"
@@ -1704,9 +1701,6 @@ object QueryGen {
             pred.foreach(p => df = df.filter(p._1))
             df.select(projCols.map(col): _*)
           } finally {
-            prev.foreach { case (k, v) =>
-              v match { case Some(x) => s.conf.set(k, x); case None => s.conf.unset(k) }
-            }
             s.catalog.dropTempView(baseView)
             s.catalog.dropTempView(srcView)
           }

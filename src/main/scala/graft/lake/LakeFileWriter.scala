@@ -68,14 +68,12 @@ final case class LakeWriteSpec(
   * and delta writes, the changelog stream's staging): a write task streams
   * its rows — and, for merge-on-read commits, its delete keys — straight
   * into staged parquet through Spark's own `ParquetWriteSupport`, one file
-  * per partition tuple per task. Rows stay `InternalRow`s end to end; one
-  * `UnsafeProjection` per file kind drops a leading `__row_operation`
-  * marker (group-based row-level rewrites prepend it; detected from the
-  * first row's arity) and appends the commit-seq column (`_graft_seq`, or
-  * `_graft_dseq` for delete keys). The projection carries a placeholder
-  * there and the seq is written into the projected row after projection,
-  * not inlined as a literal: the generated class depends on the row schema
-  * only, so every commit of one shape reuses it instead of compiling anew.
+  * per partition tuple per task; rows arrive arranged by the table's
+  * [[LakeTable.writeArrangement]]. One `UnsafeProjection` per file kind
+  * drops a leading `__row_operation` marker (detected from the first
+  * row's arity) and appends the commit-seq column, written after
+  * projection, not inlined: the generated class depends on the row schema
+  * only, so every commit of one shape reuses it.
   *
   * Metrics are a by-product of the write (the Iceberg writer discipline):
   * exact per-file sums fold as rows pass, and on close each file's
@@ -248,10 +246,6 @@ object LakeFileWriter {
       .withPageSize(conf.getInt("parquet.page.size", ParquetWriter.DEFAULT_PAGE_SIZE))
       .build()
 
-  private val Y = DateTimeFormatter.ofPattern("yyyy")
-  private val YM = DateTimeFormatter.ofPattern("yyyy-MM")
-  private val YMD = DateTimeFormatter.ofPattern("yyyy-MM-dd")
-
   /** Row-level partition-value rendering, one function per spec field.
     * `identity` renders any atomic type through Catalyst's cast to string
     * in UTC — the directory value Spark's own writer produces under the
@@ -271,10 +265,9 @@ object LakeFileWriter {
           ZoneOffset.UTC).format(fmt)
     }
     tr match {
-      // bucket has no null short-circuit: the engine-side derivation
-      // ([[Transform.Bucket.apply]]) hashes a null key to the seed —
-      // bucket pmod(42, n), never a null partition — and every write
-      // route and SPJ key-grouping must agree
+      // bucket has no null short-circuit: Spark's hash leaves a null key
+      // at the seed — bucket pmod(42, n), never a null partition — and
+      // the writer, the `bucket` function and SPJ key grouping must agree
       case Transform.Bucket(n) =>
         row => Transform.bucketOf(n, if (row.isNullAt(idx)) null else row.get(idx, dt), dt).toString
       case _ =>
@@ -282,9 +275,9 @@ object LakeFileWriter {
           case Transform.Identity =>
             val cast = Cast(BoundReference(idx, dt, nullable = true), StringType, Some("UTC"))
             row => hive(cast.eval(row).toString)
-          case Transform.Year => temporal(Y)
-          case Transform.Month => temporal(YM)
-          case Transform.Day => temporal(YMD)
+          case Transform.Year => temporal(Transform.Y)
+          case Transform.Month => temporal(Transform.YM)
+          case Transform.Day => temporal(Transform.YMD)
           case Transform.Truncate(w) => row =>
             // code points, like Spark's substring and Transform.valueOf —
             // String.take counts UTF-16 units and would render a different

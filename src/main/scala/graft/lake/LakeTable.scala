@@ -339,9 +339,6 @@ final class LakeTable private (
     * compaction — never by ingest). */
   def overwrite(df: DataFrame): Snapshot = commitWrite(df, "overwrite", keepExisting = false)
 
-  private[lake] def overwriteAs(df: DataFrame, op: String): Snapshot =
-    commitWrite(df, op, keepExisting = false)
-
   /** Merge-on-read upsert: last-writer-wins on `meta.primaryKey`.
     * If `tsCol` is given the batch is first deduped per key by the latest
     * `tsCol` (the reference's `_olake_sync_timestamp` rule, C3). */
@@ -1014,9 +1011,7 @@ final class LakeTable private (
     }
   }
 
-  /** Write `df` as partitioned + clustered parquet through
-    * [[LakeFileWriter]] tasks under a staging dir, then publish the files
-    * into `data/` and return their entries. */
+  /** [[stage]] `df` and publish its data files. */
   private def stageDataFiles(
       df: DataFrame, schemaVersion: Int, seq: Long, specVersion: Int = 0): Seq[DataFile] = {
     val stagingRel = s"_staging/${UUID.randomUUID()}"
@@ -1024,18 +1019,17 @@ final class LakeTable private (
   }
 
   /** Align `df` to schema version `schemaVersion`, arrange it for the
-    * write and run ONE [[LakeFileWriter.stage]] job under `stagingRel`.
-    * Partitioning/clustering per the reference's per-table specs
-    * (destination.json:37-73 transforms, :115-118 clustering). With
-    * `keySchema` (the primary key's columns) this stages a merge-on-read
-    * commit: `df` also carries [[UpsertCol]], and each task writes the
-    * flagged rows and the key of every row. Delete keys then fan out
-    * exactly as the rows do. They are PARTITION-SCOPED (Iceberg's
-    * partition-scoped delete files: one file per task and tuple, which a
-    * pruned scan can skip) when every partition source is a key column,
-    * because the key then determines the partition of every row it can
-    * tombstone; otherwise the old row's partition is unknowable without
-    * reading the table, and each task writes one global delete file. */
+    * write ([[writeArrangement]]) and run ONE [[LakeFileWriter.stage]] job
+    * under `stagingRel`. With `keySchema` (the primary key's columns) this
+    * stages a merge-on-read commit: `df` also carries [[UpsertCol]], and
+    * each task writes the flagged rows and the key of every row. Delete
+    * keys then fan out exactly as the rows do. They are PARTITION-SCOPED
+    * (Iceberg's partition-scoped delete files: one file per task and
+    * tuple, which a pruned scan can skip) when every partition source is a
+    * key column, because the key then determines the partition of every
+    * row it can tombstone; otherwise the old row's partition is unknowable
+    * without reading the table, and each task writes one global delete
+    * file. */
   private def stage(
       df: DataFrame, schemaVersion: Int, seq: Long, specVersion: Int, stagingRel: String,
       keySchema: Option[StructType] = None): Seq[StagedFile] = {
@@ -1060,84 +1054,50 @@ final class LakeTable private (
       }
     }.select(columns: _*)
 
+    // Spark arranges the rows as it does for the DSv2 routes
+    val arrangement = writeArrangement(specVersion, aligned.columns.toSeq, keySchema.isDefined)
+    val rows = SqlInternals.ofRows(spark, SqlInternals.arrange(
+      arrangement, aligned.queryExecution.analyzed, LakeFunctions)).queryExecution.toRdd
     val spec = partitionSpec(specVersion)
-    val partCols = spec.map(_.name)
-    val derived = spec.foldLeft(aligned)(
-      (d, pf) => d.withColumn(pf.name, pf.transform(col(pf.source))))
-
-    // one shuffle: co-locate rows of a partition value, clustering sort
-    // inside each task so parquet row-group stats are tight on the cluster
-    // keys (≈ MergeTree ORDER BY, scripts/iceberg-setup.sql:90).
-    // `spark.graft.lake.writeSplits` (default 1) adds a hash salt to the
-    // write distribution: with 1, each partition value lands in one task /
-    // one file (small tables, tidy layout); at cluster scale a partition
-    // value can hold terabytes, so a single task per value would serialize
-    // the write — salting fans each value out to N tasks / N files, which
-    // the snapshot format tracks per-file anyway. An unpartitioned
-    // merge-on-read commit runs in one task at 1, so its keys land in one
-    // delete file.
-    var unpersistAfterWrite: Option[DataFrame] = None
-    val arranged = if (meta.clusterStrategy == "zorder" && meta.clusterBy.nonEmpty) {
-      // Z-ORDER clustering: range-partition + sort the write on the Morton
-      // z-value of the cluster keys (partition values lead, so files stay
-      // partition-major). Each file then covers a small hyper-cube of the
-      // key space and its commit-time bounds are tight in EVERY clustered
-      // dimension — multi-column file skipping, where lexicographic
-      // clustering only ever serves the first key.
-      // persist first: the arrangement reads the input THREE times
-      // (quantile aggregation, range-boundary sampling, the write itself)
-      // and an expensive upstream plan must not run three times. persist
-      // (not localCheckpoint) keeps the lineage recomputable on executor
-      // loss and spills to disk; unpersisted after the staging write below.
-      val src = derived.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      unpersistAfterWrite = Some(src)
-      val z = ZOrder.zvalue(src, meta.clusterBy)
-      val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      val keys = partCols.map(col) :+ col(ZOrderCol)
-      src.withColumn(ZOrderCol, z)
-        .repartitionByRange(n, keys: _*)
-        .sortWithinPartitions(keys: _*)
-        .drop(ZOrderCol) // projection only: in-partition order survives
-    } else if (meta.clusterStrategy == "range" && meta.clusterBy.nonEmpty) {
-      // RANGE clustering (Iceberg's write.distribution-mode=range): the
-      // write is range-partitioned on (partition cols, cluster keys), so
-      // each task owns a contiguous lexicographic band and every staged
-      // file's commit-time bounds are a DISJOINT range of the cluster
-      // keys — a pushed comparison on the lead cluster key then prunes
-      // whole files from the manifest. Unlike the hash arrangement below,
-      // a hot partition value also fans out across tasks by key range
-      // (parallel writes without the salt that would destroy the bounds).
-      val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      val keys = (partCols ++ meta.clusterBy).map(col)
-      derived.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*)
-    } else {
-      val splits = spark.conf.getOption("spark.graft.lake.writeSplits")
-        .map(_.toInt).getOrElse(1).max(1)
-      val spreadCols = if (meta.clusterBy.nonEmpty) meta.clusterBy else userSchema.fieldNames.toSeq
-      val salt = pmod(xxhash64(spreadCols.map(col): _*), lit(splits))
-      // explicit partition count: an expression-only repartition is
-      // AQE-coalesced on small inputs, which would undo the fan-out
-      val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      val repart =
-        if (partCols.nonEmpty && splits > 1)
-          derived.repartition(n, partCols.map(col) :+ salt: _*)
-        else if (partCols.nonEmpty) derived.repartition(partCols.map(col): _*)
-        else if (splits > 1) derived.repartition(splits, salt)
-        else if (keySchema.isDefined) derived.coalesce(1)
-        else derived
-      val sortCols = partCols ++ meta.clusterBy
-      if (sortCols.nonEmpty) repart.sortWithinPartitions(sortCols.map(col): _*) else repart
-    }
-
-    // partition columns were only needed to ARRANGE the rows; the writer
-    // renders them per row from the sources
-    val rows = arranged.select(columns: _*).queryExecution.toRdd
     val writeSpec = LakeWriteSpec(location, stagingRel, seq, hadoopConfEntries, userSchema,
       dataParts = spec.map(pf => (userSchema.fieldIndex(pf.source), pf.transform, pf.name)),
       keySchema = keySchema.getOrElse(new StructType()),
       keyParts = keySchema.flatMap(LakeFileWriter.bind(spec, _)).getOrElse(Nil))
-    try LakeFileWriter.stage(rows, writeSpec)
-    finally unpersistAfterWrite.foreach(_.unpersist(false))
+    LakeFileWriter.stage(rows, writeSpec)
+  }
+
+  /** THE write arrangement: how rows reach [[LakeFileWriter]] tasks, from
+    * spec `specVersion`, the cluster strategy and keys (destination.json:
+    * 37-73, :115-118); [[stage]] and the DSv2 writes all take it. linear
+    * clusters on the partition tuple and sorts by (tuple, keys); range
+    * range-partitions on (tuple, keys), so files hold disjoint key bands;
+    * zorder on (tuple, [[ZOrder]] z-value); an unpartitioned row-level
+    * commit clusters on the primary key. Only `columns` are referenced.
+    * Spark plans it as `RebalancePartitions`: AQE splits a hot value by
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, folds tiny ones. */
+  private[graft] def writeArrangement(
+      specVersion: Int, columns: Seq[String], rowLevel: Boolean): ArrangedWrite = {
+    import org.apache.spark.sql.connector.distributions.Distributions
+    import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, SortDirection}
+    val present = columns.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    def has(c: String): Boolean = present.contains(c.toLowerCase(java.util.Locale.ROOT))
+    def refs(cs: Seq[String]): Seq[VExpression] =
+      cs.map(c => Expressions.column(LakeFunctions.quoted(c)))
+    val tuple: Seq[VExpression] =
+      partitionSpec(specVersion).filter(pf => has(pf.source)).map(LakeFunctions.expression)
+    val keys = meta.clusterBy.filter(has)
+    val order =
+      if (meta.clusterStrategy == "zorder" && keys.nonEmpty) tuple :+ LakeFunctions.zorder(keys)
+      else tuple ++ refs(keys)
+    val sorts = order.map(Expressions.sort(_, SortDirection.ASCENDING)).toArray
+    val distribution =
+      if (meta.clusterStrategy != "linear" && keys.nonEmpty) Distributions.ordered(sorts)
+      else if (tuple.nonEmpty) Distributions.clustered(tuple.toArray)
+      else if (rowLevel && meta.primaryKey.nonEmpty && meta.primaryKey.forall(has))
+        Distributions.clustered(refs(meta.primaryKey).toArray)
+      else Distributions.unspecified()
+    val required = (distribution, sorts)
+    new ArrangedWrite { def arrangement = required }
   }
 
   /** Publish one staging job's files: move each into `data/` (under its
@@ -1543,11 +1503,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
 
   /** Storage column carrying the commit sequence of each data row. */
   val SeqCol = "_graft_seq"
-  /** Transient write-arrangement column for z-order clustering. */
-  private val ZOrderCol = "_graft_z"
-
   /** The `_graft` prefix is reserved for storage/arrangement columns the
-    * write path derives (`_graft_seq`, `_graft_z`, `_graft_file`, …) — a
+    * write path derives (`_graft_seq`, `_graft_dseq`, `_graft_file`, …) — a
     * user column or partition field in that namespace would be silently
     * overwritten by `withColumn` at the next write. `lower` must already
     * be lowercase. */
@@ -1656,4 +1613,16 @@ object LakeTable extends org.apache.spark.internal.Logging {
     val p = new Path(location)
     LakeFs.forPath(p, spark.sparkContext.hadoopConfiguration).exists(new Path(p, "meta/table.json"))
   }
+}
+
+/** A write that takes its table's [[LakeTable.writeArrangement]] as its
+  * DSv2 requirement, never strict: Spark may rebalance it. */
+trait ArrangedWrite extends org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+  def arrangement: (org.apache.spark.sql.connector.distributions.Distribution,
+    Array[org.apache.spark.sql.connector.expressions.SortOrder])
+  override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
+    arrangement._1
+  override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+    arrangement._2
+  override def distributionStrictlyRequired(): Boolean = false
 }

@@ -153,9 +153,8 @@ final case class TableMeta(
     partitionSpec: Seq[PartitionField],
     clusterBy: Seq[String],
     primaryKey: Seq[String],
-    /** "linear" = lexicographic sortWithinPartitions on clusterBy;
-      * "zorder" = Morton-curve range clustering ([[ZOrder]]) so per-file
-      * bounds stay tight in EVERY clustered dimension. */
+    /** "linear", "range" or "zorder" ([[ZOrder]]): how every write route
+      * arranges rows ([[LakeTable.writeArrangement]]). */
     clusterStrategy: String = "linear",
 )
 

@@ -1,7 +1,6 @@
 package graft.lake
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
@@ -9,10 +8,11 @@ import java.time.format.DateTimeFormatter
 
 /** Iceberg-style hidden-partition transforms (reference:
   * olake-config/destination.json:37-73 declares identity/month/day specs;
-  * OLAKE_UI_PIPELINE.md:43-48), re-expressed as derived Spark columns.
+  * OLAKE_UI_PIPELINE.md:43-48). The writer renders each row's partition
+  * value ([[LakeFileWriter]]), and write arrangements cluster on the
+  * transform's V2 function ([[LakeFunctions]]).
   *
-  * A transform does three jobs:
-  *   - `apply`: derive the partition column from the source column at write;
+  * A transform does two jobs:
   *   - `valueOf`: render a predicate literal into the same partition-value
   *     string the writer produced (directory encoding), so the reader can
   *     prune data files from snapshot metadata before Spark ever lists them
@@ -25,9 +25,6 @@ import java.time.format.DateTimeFormatter
   */
 sealed trait Transform {
   def name: String
-
-  /** Derive the partition column from the source column. */
-  def apply(source: Column): Column
 
   /** Whether this transform applies to a source column of type `dt` — the
     * Iceberg transform table (https://iceberg.apache.org/spec/#partition-transforms)
@@ -68,7 +65,6 @@ sealed trait Transform {
 object Transform {
   case object Identity extends Transform {
     val name = "identity"
-    def apply(source: Column): Column = source
     def accepts(dt: DataType): Boolean = dt match {
       case BooleanType | ByteType | ShortType | IntegerType | LongType | FloatType |
            DoubleType | _: DecimalType | _: StringType | BinaryType | DateType |
@@ -124,7 +120,6 @@ object Transform {
   /** yyyy partition key. */
   case object Year extends Transform {
     val name = "year"
-    def apply(source: Column): Column = date_format(source, "yyyy")
     def accepts(dt: DataType): Boolean = temporalType(dt)
     def valueOf(literal: Any): Option[String] = temporal(literal).map(_.format(Y))
     val orderPreserving = true
@@ -134,7 +129,6 @@ object Transform {
     * destination.json:170-179 `month(order_date)`). */
   case object Month extends Transform {
     val name = "month"
-    def apply(source: Column): Column = date_format(source, "yyyy-MM")
     def accepts(dt: DataType): Boolean = temporalType(dt)
     def valueOf(literal: Any): Option[String] = temporal(literal).map(_.format(YM))
     val orderPreserving = true
@@ -143,7 +137,6 @@ object Transform {
   /** yyyy-MM-dd partition key (destination.json:207-212 `day(login_time)`). */
   case object Day extends Transform {
     val name = "day"
-    def apply(source: Column): Column = date_format(source, "yyyy-MM-dd")
     def accepts(dt: DataType): Boolean = temporalType(dt)
     def valueOf(literal: Any): Option[String] = temporal(literal).map(_.format(YMD))
     val orderPreserving = true
@@ -153,7 +146,6 @@ object Transform {
     * (`valueOf` is None — see the note inside), co-location only. */
   final case class Bucket(n: Int) extends Transform {
     val name = s"bucket[$n]"
-    def apply(source: Column): Column = pmod(hash(source), lit(n)).cast("string")
     def accepts(dt: DataType): Boolean = true
     // Literal bucketing needs the source column's exact Catalyst TYPE to
     // hash (Murmur3 is type-dependent) and PruneFilter literals arrive
@@ -164,14 +156,13 @@ object Transform {
     val orderPreserving = false
   }
 
-  /** JVM-side bucket derivation — bit-identical to [[Bucket.apply]]'s
-    * `pmod(hash(col), n)` (Spark's Murmur3, seed 42; Spark's hash
-    * EXPRESSION skips null children, leaving the hash at the seed, so a
-    * null key lands in `pmod(42, n)`, never a null partition). Shared by
-    * the DSv2 writers' per-row partition rendering and the SQL catalog's
-    * `bucket` V2 function so every write route and the storage-
-    * partitioned-join key-grouping derive the same bucket for the same
-    * key. `value` is the Catalyst-internal representation (UTF8String for
+  /** The bucket derivation — Spark's `pmod(hash(col), n)` (Murmur3, seed
+    * 42; Spark's hash EXPRESSION skips null children, leaving the hash at
+    * the seed, so a null key lands in `pmod(42, n)`, never a null
+    * partition). Shared by the writer's per-row partition rendering and
+    * the `bucket` V2 function ([[LakeFunctions]]) so every write route,
+    * its clustering and the storage-partitioned-join key grouping derive
+    * the same bucket for the same key. `value` is the Catalyst-internal representation (UTF8String for
     * strings, micros for timestamps). */
   def bucketOf(n: Int, value: Any, dt: DataType): Int = {
     val h: Long =
@@ -183,7 +174,6 @@ object Transform {
   /** String prefix truncation (Iceberg `truncate[w]`). */
   final case class Truncate(w: Int) extends Transform {
     val name = s"truncate[$w]"
-    def apply(source: Column): Column = substring(source, 1, w)
     def accepts(dt: DataType): Boolean =
       dt.isInstanceOf[StringType]
     // truncate by CODE POINTS, matching Spark's substring (UTF8String
@@ -213,9 +203,9 @@ object Transform {
   private def temporalType(dt: DataType): Boolean =
     dt == DateType || dt == TimestampType || dt == TimestampNTZType
 
-  private val Y   = DateTimeFormatter.ofPattern("yyyy")
-  private val YM  = DateTimeFormatter.ofPattern("yyyy-MM")
-  private val YMD = DateTimeFormatter.ofPattern("yyyy-MM-dd")
+  private[lake] val Y   = DateTimeFormatter.ofPattern("yyyy")
+  private[lake] val YM  = DateTimeFormatter.ofPattern("yyyy-MM")
+  private[lake] val YMD = DateTimeFormatter.ofPattern("yyyy-MM-dd")
 
   /** Literal → UTC LocalDateTime, matching Spark's UTC session timezone. */
   private def temporal(v: Any): Option[LocalDateTime] = v match {

@@ -46,13 +46,16 @@ object LakePipelines {
   /** Bump whenever any fixture BUILD logic in this file (or the lake write
     * path) changes semantics: the completion markers under the warehouse
     * would otherwise let a later run silently reuse a stale build.
+    * v9: every write route takes the spec-derived write arrangement
+    * (clusters on transformed partition values, byte-interleaved z-order,
+    * AQE-sized range tasks), so files split differently;
     * v8: tables record format version 2 ([[graft.lake.MetaJson.FormatVersion]])
     * and a v7 warehouse's tables are refused on load;
     * v7: decimal footer bounds (including FIXED_LEN_BYTE_ARRAY) recorded
     * under the scaled kind-"d" format;
     * v6: orders_decimal gains an identity status partition (q90 groups by
     * it from metadata); v5: decimal footer bounds recorded scaled. */
-  val LayoutVersion = 8
+  val LayoutVersion = 9
 
   def warehouse(sfDir: String): String = {
     val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
@@ -137,13 +140,15 @@ object LakePipelines {
         partitionSpec = Seq(PartitionField("status", Transform.Identity, "p_status")),
         clusterBy = Seq("total_amount"),
         primaryKey = Seq("order_id"),
-        // range clustering: the write itself arranges each append into
-        // disjoint total_amount bands per status, so a pushed money
-        // comparison prunes whole files from manifest bounds (the layout
-        // a money-clustered fact table has at scale)
+        // range clustering: each append lands in disjoint total_amount
+        // bands per status, so a money comparison prunes whole files (the
+        // layout at scale, where AQE would not fold a small append into
+        // one band as it does at fixture scale)
         clusterStrategy = "range")
-      t.append(o.filter(col("order_date") < lit(TtPivot)))
-      t.append(o.filter(col("order_date") >= lit(TtPivot)))
+      withConfs(spark, Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "false")) {
+        t.append(o.filter(col("order_date") < lit(TtPivot)))
+        t.append(o.filter(col("order_date") >= lit(TtPivot)))
+      }
       t
     }
 
@@ -539,6 +544,16 @@ object LakePipelines {
       t.rollbackTo(1L)
       t
     }
+
+  /** Run `body` with `confs` set on `s`, then restore each key. */
+  private[graft] def withConfs[A](s: SparkSession, confs: Seq[(String, String)])(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 
   private[operators] def cached(spark: SparkSession, sfDir: String, name: String)(
       build: LakeCatalog => LakeTable): LakeTable = synchronized {

@@ -1,12 +1,12 @@
 package graft.sources
 
-import graft.lake.{LakeCatalog, PartitionField, Transform => LTransform}
+import graft.lake.{LakeCatalog, LakeFunctions, PartitionField, Transform => LTransform}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
+import org.apache.spark.sql.connector.catalog.functions.UnboundFunction
 import org.apache.spark.sql.connector.expressions.{FieldReference, Literal => VLiteral, Transform => VTransform}
-import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+import org.apache.spark.sql.types.{IntegerType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.util
@@ -80,7 +80,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     lakeCatalog.listTables().map(n => Identifier.of(namespace, n)).toArray
   }
 
-  override def loadTable(ident: Identifier): Table = {
+  /** A name in this catalog's warehouse, or a path-addressed table
+    * (`format("graftlake")`, [[GraftLakeSource.extractIdentifier]]). */
+  override def loadTable(ident: Identifier): Table =
+    GraftLakeSource.openPath(ident, None).getOrElse(loadNamed(ident))
+
+  private def loadNamed(ident: Identifier): Table = {
     val cat = lakeCatalog
     val n = tableName(ident)
     // Iceberg-style metadata tables: `graft.`t$snapshots`` / `$files` /
@@ -96,12 +101,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
   }
 
   /** `SELECT ... FROM graft.t VERSION AS OF <seq>` — snapshot-pinned read. */
-  override def loadTable(ident: Identifier, version: String): Table = {
-    val cat = lakeCatalog
-    val n = tableName(ident)
-    if (!cat.tableExists(n)) throw new NoSuchTableException(ident)
-    new GraftLakeV2Table(cat.table(n), Some(version.toLong))
-  }
+  override def loadTable(ident: Identifier, version: String): Table =
+    GraftLakeSource.openPath(ident, Some(version.toLong)).getOrElse {
+      val cat = lakeCatalog
+      val n = tableName(ident)
+      if (!cat.tableExists(n)) throw new NoSuchTableException(ident)
+      new GraftLakeV2Table(cat.table(n), Some(version.toLong))
+    }
 
   // ------------------------------------------------------------------- DDL
 
@@ -210,20 +216,18 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
 
   // ------------------------------------------------------------- functions
 
-  /** [[FunctionCatalog]] serving the `bucket` partition-transform function —
-    * what lets Catalyst RESOLVE a scan-reported `bucket(n, col)` key for
-    * storage-partitioned joins (`V2ExpressionUtils.toCatalystTransformOpt`
-    * loads the transform's function from the relation's catalog; without
-    * it the reported KeyGroupedPartitioning silently degrades to unknown
-    * and the join shuffles). Both sides of a join resolve through the same
-    * catalog class, so the bound functions' `canonicalName`s agree and
-    * `KeyGroupedShuffleSpec` deems the partitionings compatible. */
+  /** The lake's transforms and z-value ([[graft.lake.LakeFunctions]]):
+    * `SELECT graft.months(d)`, the transforms a write arrangement clusters
+    * on, and a scan-reported `bucket(n, col)` key of a storage-partitioned
+    * join (unresolved, it degrades to unknown partitioning and the join
+    * shuffles) all resolve here, with `canonicalName`s equal across
+    * catalogs. */
   override def loadFunction(ident: Identifier): UnboundFunction =
-    if (ident.name().equalsIgnoreCase("bucket")) GraftCatalog.BucketFunction
+    if (isRoot(ident.namespace())) LakeFunctions.loadFunction(ident)
     else throw new NoSuchFunctionException(ident)
 
   override def listFunctions(namespace: Array[String]): Array[Identifier] =
-    if (isRoot(namespace)) Array(Identifier.of(namespace, "bucket")) else Array.empty
+    if (isRoot(namespace)) LakeFunctions.listFunctions(namespace) else Array.empty
 
   // ------------------------------------------------------------ namespaces
 
@@ -246,44 +250,4 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     throw new UnsupportedOperationException("graft catalog namespace is fixed")
   override def dropNamespace(ns: Array[String], cascade: Boolean): Boolean =
     throw new UnsupportedOperationException("graft catalog namespace is fixed")
-}
-
-object GraftCatalog {
-
-  /** `bucket(n, col)` — the SAME hash the write path derives partitions
-    * with ([[graft.lake.Transform.Bucket]]: `pmod(hash(col), n)`, Spark's
-    * Murmur3 with seed 42, where a NULL input leaves the hash at the seed).
-    * Spark only needs the BINDING for storage-partitioned-join planning
-    * (canonical-name compatibility); `produceResult` matters if one side
-    * is re-shuffled onto the bucket function
-    * (`spark.sql.sources.v2.bucketing.shuffle.enabled`), so it must agree
-    * with the write-side derivation bit for bit. */
-  private[sources] object BucketFunction extends UnboundFunction {
-    override def name(): String = "bucket"
-    override def description(): String =
-      "bucket(n, col): pmod(murmur3(col, seed=42), n) — the graft lake write transform"
-    override def bind(inputType: StructType): BoundFunction = {
-      require(inputType.fields.length == 2,
-        s"bucket takes (numBuckets INT, col), got ${inputType.simpleString}")
-      require(inputType.fields(0).dataType == IntegerType,
-        s"bucket numBuckets must be INT, got ${inputType.fields(0).dataType.sql}")
-      BoundBucket(inputType.fields(1).dataType)
-    }
-  }
-
-  private[sources] final case class BoundBucket(sourceType: DataType)
-      extends ScalarFunction[Integer] {
-    override def inputTypes(): Array[DataType] = Array(IntegerType, sourceType)
-    override def resultType(): DataType = IntegerType
-    override def name(): String = "bucket"
-    override def canonicalName(): String = s"graft.bucket(${sourceType.simpleString})"
-    override def isResultNullable: Boolean = false
-    override def produceResult(input: org.apache.spark.sql.catalyst.InternalRow): Integer = {
-      // the shared derivation (Transform.bucketOf): Murmur3 seed 42,
-      // null input leaves the hash at the seed — same bucket the writers
-      // (imperative and DSv2) put the row in
-      val v = if (input.isNullAt(1)) null else input.get(1, sourceType)
-      graft.lake.Transform.bucketOf(input.getInt(0), v, sourceType)
-    }
-  }
 }

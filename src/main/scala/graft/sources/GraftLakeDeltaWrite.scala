@@ -36,16 +36,12 @@ import java.util.UUID
   *    rows), not O(files holding them).
   *
   * Delete-key sidecars are PARTITION-SCOPED when every partition source of
-  * the current spec is a primary-key column: every transform renders
-  * engine-side (identity/year/month/day/truncate from the value, bucket
-  * via the shared [[graft.lake.Transform.bucketOf]] Murmur3 since r18),
-  * so the rowId values determine the partition of every row they
-  * tombstone, and a pruned scan later loads only the matching sidecars.
-  * Otherwise one global sidecar per task. Scoping stays sound across
-  * partition-spec evolution because a field name can never be redefined
-  * with a different derivation ([[LakeTable.evolvePartitionSpec]]'s
-  * history guard) and files lacking a scoped field keep the sidecar
-  * conservatively ([[LakeTable.deleteFilesFor]]).
+  * the current spec is a primary-key column (the writer renders every
+  * transform from the value, so the rowId determines the partition of
+  * every row it tombstones); otherwise one global sidecar per task.
+  * Scoping stays sound across spec evolution: a field name is never
+  * redefined ([[LakeTable.evolvePartitionSpec]]) and files lacking a
+  * scoped field keep the sidecar ([[LakeTable.deleteFilesFor]]).
   */
 private[sources] class GraftLakeDeltaOperation(
     t: LakeTable,
@@ -89,43 +85,16 @@ private[sources] class GraftLakeDeltaOperation(
 
 private[sources] class GraftLakeDeltaWrite(
     t: LakeTable, snap: Snapshot, winfo: LogicalWriteInfo, opName: String)
-    extends DeltaWrite with RequiresDistributionAndOrdering {
+    extends DeltaWrite with graft.lake.ArrangedWrite {
   override def toBatch(): DeltaBatchWrite = new GraftLakeDeltaBatchWrite(t, snap, winfo, opName)
 
-  /** Same sink contract as the append path (GraftLakeWriteBuilder): ask
-    * Spark to CLUSTER the delta stream on the partition source columns and
-    * sort by (sources, cluster keys) before the writers see it — without
-    * it a wide MoR MERGE opens one data file per task × partition touched
-    * (fanout-writer shape: O(tasks·partitions) small files that only
-    * compaction folds later); clustered, re-inserted rows for one
-    * partition land in one-ish task and the commit stays O(partitions).
-    * DELETE records carry NULL row columns and hash to a single cluster —
-    * harmless: delete-key sidecars are tiny and their fanout is bounded
-    * by touched tuples, not data volume. A pure DELETE command has an
-    * EMPTY row schema → no requirement at all. Advisory (non-strict): a
-    * 3-row point MERGE need not shuffle. */
-  private lazy val specSources: Seq[String] = {
-    val schemaNames = winfo.schema().fieldNames
-      .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    (t.partitionSpec(snap.specVersion).map(_.source) ++ t.meta.clusterBy)
-      .distinct.filter(c => schemaNames.contains(c.toLowerCase(java.util.Locale.ROOT)))
-  }
-
-  override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution = {
-    import org.apache.spark.sql.connector.expressions.Expressions
-    val parts = t.partitionSpec(snap.specVersion).map(_.source)
-      .filter(specSources.contains)
-    if (parts.isEmpty) org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-    else org.apache.spark.sql.connector.distributions.Distributions.clustered(
-      parts.map(Expressions.column).toArray)
-  }
-
-  override def distributionStrictlyRequired(): Boolean = false
-
-  override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-    import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
-    specSources.map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
-  }
+  /** The table's write arrangement over the delta stream (without it a
+    * wide MoR MERGE opens a data file per task × partition touched); a
+    * pure DELETE's rows carry only the key, DELETE records of a MERGE
+    * carry NULL row columns and cluster together. */
+  lazy val arrangement = t.writeArrangement(snap.specVersion,
+    (winfo.schema().fieldNames ++ winfo.rowIdSchema().map[Array[String]](_.fieldNames)
+      .orElse(Array.empty[String])).toSeq, rowLevel = true).arrangement
 }
 
 private[sources] class GraftLakeDeltaBatchWrite(

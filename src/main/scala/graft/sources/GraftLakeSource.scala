@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.graft.SqlInternals
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
@@ -17,12 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import java.util
 
-/** DataSourceV2 read path for graft lake tables — the "cleaner end-state"
-  * SURVEY §4 sketches for transform-aware pruning: lake tables become
-  * first-class Spark tables, readable as
-  * `spark.read.format("graft.sources.GraftLakeSource").option("path", loc)
-  * [.option("asOf", seq)].load()` and therefore from plain SQL via temp
-  * views.
+/** DataSourceV2 read path for graft lake tables, readable as
+  * `spark.read.format("graftlake").option("path", loc)[.option("asOf",
+  * seq)].load()` (resolved through a graft catalog, like a SQL table).
   *
   * Planner integration:
   *  - `SupportsPushDownFilters`: Eq/Ge/Lt/In filters on partition-source
@@ -36,12 +33,9 @@ import java.util
   *    metadata, so Catalyst auto-broadcasts small lake tables.
   *  - `SupportsRuntimeFiltering`: join-driven IN filters re-prune data
   *    files at runtime (dynamic partition pruning for star joins).
-  *  - metadata-answerable aggregates (COUNT(*), exact MIN/MAX, recorded
-  *    SUM/COUNT/AVG, ungrouped or grouped by partition-derived keys) never
-  *    reach this scan: the [[graft.plans.LakeMetaAggregate]] optimizer
-  *    rule answers them from snapshot metadata as a LocalRelation before
-  *    V2 pushdown runs. Without `graft.plans.GraftExtensions` they run
-  *    this scan — same answer, more I/O.
+  *  - metadata-answerable aggregates never reach this scan: the
+  *    [[graft.plans.LakeMetaAggregate]] rule answers them from snapshot
+  *    metadata before V2 pushdown runs.
   *  - `SupportsPushDownLimit`: unfiltered LIMIT plans only enough files to
   *    cover it (partial pushdown; Spark re-applies the limit).
   *  - merge-on-read: a read of a snapshot with live delete files is
@@ -64,44 +58,69 @@ import java.util
   * ColumnarBatches; `_graft_file` and synthesized changelog columns are
   * per-chunk constant columns of the same batches.
   */
-class GraftLakeSource extends TableProvider with org.apache.spark.sql.sources.DataSourceRegister {
+class GraftLakeSource extends TableProvider
+    with org.apache.spark.sql.connector.catalog.SupportsCatalogOptions
+    with org.apache.spark.sql.sources.DataSourceRegister {
 
   override def shortName(): String = "graftlake"
 
   override def supportsExternalMetadata(): Boolean = false
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    loadTable(options) match { case (t, asOf, changelog) =>
-      val user = t.schema(t.snapshot(asOf.getOrElse(t.currentSeq)).schemaVersion)
-      if (changelog)
-        StructType(user.fields :+ StructField(GraftLakeSource.ChangeTypeCol, StringType, nullable = false))
-      else user
-    }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = table(options).schema()
 
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val (t, asOf, changelog) = loadTable(new CaseInsensitiveStringMap(properties))
-    new GraftLakeV2Table(t, asOf, changelog = changelog)
+  /** Streaming reads resolve through the provider, not a catalog. */
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+      properties: util.Map[String, String]): Table = table(new CaseInsensitiveStringMap(properties))
+
+  /** Batch reads and writes of a path resolve through a graft catalog
+    * (registered as [[GraftLakeSource.PathCatalog]] on first use), as
+    * Iceberg's source does, so a path write resolves the transforms too. */
+  override def extractIdentifier(options: CaseInsensitiveStringMap): Identifier =
+    Identifier.of(
+      if (changelog(options)) Array(GraftLakeSource.PathNamespace, "changelog")
+      else Array(GraftLakeSource.PathNamespace),
+      path(options))
+
+  override def extractCatalog(options: CaseInsensitiveStringMap): String = {
+    val key = s"spark.sql.catalog.${GraftLakeSource.PathCatalog}"
+    val spark = SparkSession.active
+    if (spark.conf.getOption(key).isEmpty) spark.conf.set(key, classOf[GraftCatalog].getName)
+    GraftLakeSource.PathCatalog
   }
 
-  private def loadTable(options: CaseInsensitiveStringMap): (LakeTable, Option[Long], Boolean) = {
-    val path = Option(options.get("path"))
-      .getOrElse(throw new IllegalArgumentException("graft lake source requires option 'path'"))
-    val asOf = Option(options.get("asOf")).map(_.toLong)
-    val changelog = Option(options.get("changelog")).exists(_.toBoolean)
-    require(!(changelog && asOf.nonEmpty), "changelog reads cannot pin asOf")
-    val t = LakeTable.load(SparkSession.active, path)
-    if (changelog)
-      require(!t.currentSchema.fieldNames.exists(_.equalsIgnoreCase(GraftLakeSource.ChangeTypeCol)),
-        s"changelog read appends ${GraftLakeSource.ChangeTypeCol} — the table already has " +
-          "a column of that name")
-    (t, asOf, changelog)
-  }
+  override def extractTimeTravelVersion(options: CaseInsensitiveStringMap): java.util.Optional[String] =
+    java.util.Optional.ofNullable(options.get("asOf"))
+
+  private def table(o: CaseInsensitiveStringMap) =
+    GraftLakeSource.open(path(o), Option(o.get("asOf")).map(_.toLong), changelog(o))
+  private def path(o: CaseInsensitiveStringMap): String = Option(o.get("path"))
+    .getOrElse(throw new IllegalArgumentException("graft lake source requires option 'path'"))
+  private def changelog(o: CaseInsensitiveStringMap): Boolean =
+    Option(o.get("changelog")).exists(_.toBoolean)
 }
 
 object GraftLakeSource {
+  /** Catalog name and identifier namespace of path-addressed tables. */
+  val PathCatalog = "graftlake"
+  val PathNamespace = "graftlake-path"
+
+  /** The table at `path`, time-travelled to `asOf` or as its changelog. */
+  private[sources] def open(path: String, asOf: Option[Long], changelog: Boolean): GraftLakeV2Table = {
+    require(!(changelog && asOf.nonEmpty), "changelog reads cannot pin asOf")
+    val t = LakeTable.load(SparkSession.active, path)
+    if (changelog)
+      require(!t.currentSchema.fieldNames.exists(_.equalsIgnoreCase(ChangeTypeCol)),
+        s"changelog read appends $ChangeTypeCol — the table already has a column of that name")
+    new GraftLakeV2Table(t, asOf, changelog = changelog)
+  }
+
+  /** A path identifier ([[GraftLakeSource.extractIdentifier]]) opened. */
+  private[sources] def openPath(ident: Identifier, asOf: Option[Long]): Option[GraftLakeV2Table] =
+    ident.namespace().toSeq match {
+      case Seq(PathNamespace) => Some(open(ident.name(), asOf, changelog = false))
+      case Seq(PathNamespace, "changelog") => Some(open(ident.name(), asOf, changelog = true))
+      case _ => None
+    }
   /** Metadata column: absolute path of the data file serving a row. */
   val FileCol = "_graft_file"
 
@@ -274,20 +293,8 @@ private[graft] class GraftLakeV2Table(
         override def comment(): String = "data file serving the row"
       })
 
-  override def partitioning(): Array[Transform] = {
-    import org.apache.spark.sql.connector.expressions.Expressions
-    t.partitionSpec(snap.specVersion).map { pf =>
-      pf.transform match {
-        case graft.lake.Transform.Identity    => Expressions.identity(pf.source)
-        case graft.lake.Transform.Year        => Expressions.years(pf.source)
-        case graft.lake.Transform.Month       => Expressions.months(pf.source)
-        case graft.lake.Transform.Day         => Expressions.days(pf.source)
-        case graft.lake.Transform.Bucket(n)   => Expressions.bucket(n, pf.source)
-        case graft.lake.Transform.Truncate(w) =>
-          Expressions.apply("truncate", Expressions.column(pf.source), Expressions.literal(w))
-      }
-    }.toArray
-  }
+  override def partitioning(): Array[Transform] =
+    t.partitionSpec(snap.specVersion).map(graft.lake.LakeFunctions.expression).toArray
 
   override def properties(): util.Map[String, String] = {
     val m = new util.HashMap[String, String]()
@@ -688,7 +695,7 @@ private[sources] class GraftLakeScan(
     * identity over a string/integral source or `bucket(n, source)` (the
     * standard 100 TB fact-fact layout — the key is the bucket id, the
     * reported expression `bucket(n, col)` resolves through the catalog's
-    * [[GraftCatalog.BucketFunction]]), each source survives column pruning
+    * [[graft.lake.BucketFunction]]), each source survives column pruning
     * (Spark resolves the reported key expressions against the scan
     * output — an absent source would throw, the round-4 DPP lesson), and
     * every planned file records every key field (pre-evolution files

@@ -20,14 +20,10 @@ import java.util.UUID
   * published files on failure. Rows embed the planning-time
   * `currentSeq + 1` as their commit seq — a rebase can only RAISE the
   * final seq, which keeps appended rows conservatively old relative to
-  * tombstones (see `LakeTable.appending`).
+  * tombstones (see `LakeTable.appending`). Rows arrive arranged by the
+  * table's write arrangement; the writer renders their partition values.
   *
-  * Partition transforms are rendered per row on the executor by the
-  * writer (identity through Catalyst's cast to string, month/day/year
-  * from the raw value, `bucket[n]` via the shared Murmur3 derivation
-  * [[graft.lake.Transform.bucketOf]]), identically on every write route.
-  */
-/** Append by default; `INSERT OVERWRITE` / truncate arrive through
+  * Append by default; `INSERT OVERWRITE` / truncate arrive through
   * SupportsOverwrite with the always-true filter and commit a full
   * REPLACE snapshot instead (the reference's silver/gold rebuild shape —
   * scripts/iceberg-setup.sql re-runs the INSERT over the curated tier).
@@ -48,64 +44,19 @@ private[sources] class GraftLakeWriteBuilder(
     this
   }
 
-  override def build(): Write = new Write
-      with RequiresDistributionAndOrdering {
+  override def build(): Write = new Write with graft.lake.ArrangedWrite {
+    // ONE snapshot per write plan, pinned in build(): the writers render
+    // partitions by the spec the rows were arranged by (r20 SQL-route
+    // soak: a lazy load let a concurrent ALTER slip in between)
+    private val planSnap = t.currentSnapshot
+
     override def toBatch: BatchWrite =
       new GraftLakeBatchWrite(t, replaceAll, writeSchema, expectedBase, replacedFiles,
-        // pin the PLANNING snapshot: a concurrent spec evolution between
-        // planning and execution would otherwise cluster rows by one spec
-        // while the writers render partitions from another
         plannedSnap = Some(() => planSnap))
 
-    /** Ask Spark to arrange rows BEFORE they reach the writers (the
-      * standard DSv2 sink contract): cluster on the partition SOURCE
-      * columns so one task owns one-ish partition value (instead of every
-      * task opening a writer per value it happens to see — at cluster
-      * scale that is writers × partitions small files), and sort by
-      * (sources, cluster keys) so parquet row-group stats are tight on
-      * the cluster keys, same as the DataFrame-API writer's arrangement.
-      * Plain column references only — named transforms (months etc.)
-      * would need a FunctionCatalog to resolve; clustering on the raw
-      * source is finer-grained and always correct. Advisory
-      * (non-strict): a tiny CDC batch need not shuffle. */
-    // ONE snapshot load per write plan: requiredDistribution and
-    // requiredOrdering may each be called several times during planning,
-    // and two loads racing a concurrent commit could even disagree on the
-    // spec version. STRICT val, pinned when build() materializes the
-    // Write (r20 SQL-route soak: as a lazy val whose first touch could
-    // slip to writer-factory creation, a concurrent ALTER landing before
-    // that touch made "the planning snapshot" a post-ALTER one)
-    private val planSnap = t.currentSnapshot
-    private lazy val specSources: Seq[String] = {
-      val schemaNames = writeSchema.getOrElse(t.schema(planSnap.schemaVersion)).fieldNames
-        .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-      (t.partitionSpec(planSnap.specVersion).map(_.source) ++ t.meta.clusterBy)
-        .distinct.filter(c => schemaNames.contains(c.toLowerCase(java.util.Locale.ROOT)))
-    }
-
-    override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution = {
-      import org.apache.spark.sql.connector.expressions.Expressions
-      // range-clustered tables ask for an ORDERED distribution (Iceberg's
-      // write.distribution-mode=range): Spark range-partitions on
-      // (partition sources, cluster keys), so each task writes files
-      // whose cluster-key bounds are disjoint bands — manifest pruning
-      // on the lead cluster key stays effective through DSv2 writes too
-      if (t.meta.clusterStrategy == "range" && specSources.nonEmpty)
-        return org.apache.spark.sql.connector.distributions.Distributions.ordered(
-          requiredOrdering())
-      val parts = t.partitionSpec(planSnap.specVersion).map(_.source)
-        .filter(specSources.contains)
-      if (parts.isEmpty) org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-      else org.apache.spark.sql.connector.distributions.Distributions.clustered(
-        parts.map(Expressions.column).toArray)
-    }
-
-    override def distributionStrictlyRequired(): Boolean = false
-
-    override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-      import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
-      specSources.map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
-    }
+    lazy val arrangement = t.writeArrangement(planSnap.specVersion,
+      writeSchema.getOrElse(t.schema(planSnap.schemaVersion)).fieldNames.toSeq, rowLevel = false)
+      .arrangement
   }
 }
 

@@ -2,15 +2,15 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.connector.catalog.Table
-import org.apache.spark.sql.connector.write.{RowLevelOperation, RowLevelOperationTable}
+import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Table}
+import org.apache.spark.sql.connector.write.{RowLevelOperation, RowLevelOperationTable, Write}
 
 /** The package-private Spark SQL pieces the lake needs: a DataFrame over a
   * hand-built logical plan (the merge-on-read fold is built once, as a
   * plan, and the imperative route reads it as a DataFrame), the
   * table/operation pair behind a row-level command's read relation, a
   * session's artifact scope for jobs started on another session's thread,
-  * and the session's typed SQL conf. */
+  * the session's typed SQL conf, and the DSv2 write arrangement step. */
 object SqlInternals {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(classic(spark), plan)
@@ -27,6 +27,13 @@ object SqlInternals {
     * its row-group filter follows. */
   def conf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
     classic(spark).sessionState.conf
+
+  /** `plan` arranged as `write` requires — Spark's own
+    * `DistributionAndOrderingUtils`, the step its DSv2 write planning
+    * takes, with transforms resolved through `functions`. */
+  def arrange(write: Write, plan: LogicalPlan, functions: FunctionCatalog): LogicalPlan =
+    org.apache.spark.sql.execution.datasources.v2.DistributionAndOrderingUtils
+      .prepareQuery(write, plan, Some(functions))
 
   private def classic(spark: SparkSession) =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

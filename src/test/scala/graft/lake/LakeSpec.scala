@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 class LakeSpec extends SparkSpec {
+  import LakeSpec._
 
   private def contentEqual(a: DataFrame, b: DataFrame): Boolean =
     a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
@@ -116,19 +117,18 @@ class LakeSpec extends SparkSpec {
 
   test("many-file appends record footer stats per file, bounds intact") {
     val dir = Files.createTempDirectory("graft-dststats-spec").toString
-    spark.conf.set("spark.graft.lake.writeSplits", "8")
-    try {
-      val df = spark.range(0, 800).select(col("id"), (col("id") % 100).as("v"))
-      val t = LakeTable.create(spark, s"$dir/t", "t", df.schema, clusterBy = Seq("id"))
-      t.append(df)
-      val snap = t.currentSnapshot
-      assert(snap.dataFiles.size >= 4, s"expected a fanned-out write, got ${snap.dataFiles.size}")
-      assert(snap.dataFiles.forall(f =>
-        f.rows >= 0 && f.splits.nonEmpty && f.bounds.contains("id")),
-        "every fanned-out file must record rows, splits and bounds")
-      assert(snap.dataFiles.map(_.rows).sum == 800)
-      assert(t.scan().agg(sum("id")).head.getLong(0) == (0L until 800L).sum)
-    } finally spark.conf.unset("spark.graft.lake.writeSplits")
+    // an unpartitioned linear table requires no distribution: each of the
+    // input's 8 partitions is one write task and one file
+    val df = spark.range(0, 800, 1, 8).select(col("id"), (col("id") % 100).as("v"))
+    val t = LakeTable.create(spark, s"$dir/t", "t", df.schema, clusterBy = Seq("id"))
+    t.append(df)
+    val snap = t.currentSnapshot
+    assert(snap.dataFiles.size >= 4, s"expected a fanned-out write, got ${snap.dataFiles.size}")
+    assert(snap.dataFiles.forall(f =>
+      f.rows >= 0 && f.splits.nonEmpty && f.bounds.contains("id")),
+      "every fanned-out file must record rows, splits and bounds")
+    assert(snap.dataFiles.map(_.rows).sum == 800)
+    assert(t.scan().agg(sum("id")).head.getLong(0) == (0L until 800L).sum)
   }
 
   test("schema evolution: pre-ALTER rows null-fill the evolved column") {
@@ -228,9 +228,9 @@ class LakeSpec extends SparkSpec {
     val df = (1L to 1000L).map(i => (i, i * 1.0)).toDF("id", "v")
     val t = LakeTable.create(spark, s"$dir/t", "t", df.schema, primaryKey = Seq("id"))
     t.append(df)
-    spark.conf.set("spark.graft.lake.writeSplits", "3")
-    try t.deleteKeys((1L to 500L).map(Tuple1(_)).toDF("id"))
-    finally spark.conf.unset("spark.graft.lake.writeSplits")
+    // a small advisory partition size keeps AQE from folding the batch's
+    // key clusters into one task
+    withConfs(SmallWriteTasks)(t.deleteKeys((1L to 500L).map(Tuple1(_)).toDF("id")))
     assert(t.currentSnapshot.deleteFiles.size > 1,
       s"delete batch did not split: ${t.currentSnapshot.deleteFiles.size} file(s)")
     assert(t.scan().count() == 500)
@@ -846,17 +846,15 @@ class LakeSpec extends SparkSpec {
       (i.toLong, rng.nextInt(100000), rng.nextInt(100000))).toDF("id", "x", "y")
 
     // 16 write tasks → 16 z-range files (the test session default of 4
-    // would leave too few files to demonstrate skipping)
+    // would leave too few files to demonstrate skipping, and AQE would
+    // fold this small write into one task)
     val dir = Files.createTempDirectory("graft-zorder-spec").toString
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    val z =
-      try {
-        val t = LakeTable.create(spark, s"$dir/t", "t", df.schema,
-          clusterBy = Seq("x", "y"), clusterStrategy = "zorder")
-        t.append(df)
-        t
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val z = withConfs(SixteenWriteTasks) {
+      val t = LakeTable.create(spark, s"$dir/t", "t", df.schema,
+        clusterBy = Seq("x", "y"), clusterStrategy = "zorder")
+      t.append(df)
+      t
+    }
     val total = z.currentSnapshot.dataFiles.size
     assert(total > 4, s"need several files to show skipping, got $total")
 
@@ -1254,13 +1252,14 @@ class LakeSpec extends SparkSpec {
     }
   }
 
-  test("writeSplits salts a hot partition value across multiple files, content preserved") {
+  test("AQE splits a hot partition value across multiple files by advisory size, content preserved") {
     val dir = Files.createTempDirectory("graft-splits-spec").toString
     import spark.implicits._
-    // one partition value ("hot") holds all the rows — the 100 TB skew shape
-    val df = (1L to 1000L).map(i => (i, "hot", i * 1.5)).toDF("id", "s", "v")
-    spark.conf.set("spark.graft.lake.writeSplits", "4")
-    try {
+    // one partition value ("hot") holds all the rows — the 100 TB skew
+    // shape; its rows arrive from several input partitions, which AQE's
+    // rebalance splits the value's shuffle partition by
+    val df = (1L to 1000L).map(i => (i, "hot", i * 1.5)).toDF("id", "s", "v").repartition(4)
+    withConfs(SmallWriteTasks) {
       val t = LakeTable.create(spark, s"$dir/t", "t", df.schema,
         partitionSpec = Seq(PartitionField("s", Transform.Identity, "p_s")),
         clusterBy = Seq("id"))
@@ -1270,7 +1269,7 @@ class LakeSpec extends SparkSpec {
       assert(files.size >= 2, s"expected the hot partition fanned out, got ${files.size} file(s)")
       assert(t.scan().as[(Long, String, Double)].collect().toSet ==
         df.as[(Long, String, Double)].collect().toSet)
-    } finally spark.conf.unset("spark.graft.lake.writeSplits")
+    }
   }
 
   /** Spark jobs launched by `body` (attributed via a job group; the status
@@ -1602,4 +1601,19 @@ class LakeSpec extends SparkSpec {
     assert(t.scan().schema == sql.schema,
       "LakeTable.scan must produce the same relation schema as the DSv2 source")
   }
+}
+
+object LakeSpec {
+  /** AQE sizes write tasks by the advisory partition size, and at most
+    * down to the coalescing floor: both small, a small write spreads over
+    * several tasks and a hot partition value splits. */
+  val SmallWriteTasks: Map[String, String] = Map(
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b")
+
+  /** 16 write tasks, kept apart: a range or zorder write then stages 16
+    * disjoint bands. */
+  val SixteenWriteTasks: Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> "16",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 }

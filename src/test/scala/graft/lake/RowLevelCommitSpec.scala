@@ -19,12 +19,16 @@ class RowLevelCommitSpec extends SparkSpec {
   /** Jobs started and, per submitted stage, its RDD names, while `body`
     * runs (the listener bus is drained before and after, no sleeps). */
   private def observed[A](body: => A): (A, Int, Seq[Seq[String]]) = {
+    val (out, jobs, stages) = observedStages(body)
+    (out, jobs, stages.map(_.rddInfos.map(_.name)))
+  }
+
+  private def observedStages[A](body: => A): (A, Int, Seq[org.apache.spark.scheduler.StageInfo]) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stages = new ConcurrentLinkedQueue[Seq[String]]()
+    val stages = new ConcurrentLinkedQueue[org.apache.spark.scheduler.StageInfo]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        stages.add(e.stageInfo.rddInfos.map(_.name))
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.add(e.stageInfo)
     }
     org.apache.spark.ListenerDrain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
@@ -93,5 +97,26 @@ class RowLevelCommitSpec extends SparkSpec {
     assert(t.deleteKeys(dels).deleteFiles.size == 2)
     assert(t.scan().as[(Long, Double)].collect().toMap ==
       ((1L to 4L).map(i => i -> -i * 1.0) ++ (13L to 20L).map(i => i -> i * 1.0)).toMap)
+  }
+
+  test("a range-clustered table's row-level commit writes no more delete files than write tasks") {
+    // partition source not a key column: the commit's delete keys are
+    // global, one delete file per write task that saw a key
+    val dir = Files.createTempDirectory("graft-rowlevel-range").toString
+    val base = (1L to 200L).map(i => (i, s"s${i % 3}", (i * 37) % 101)).toDF("id", "s", "v")
+    val t = LakeTable.create(spark, s"$dir/t", "t", base.schema,
+      partitionSpec = Seq(PartitionField("s", Transform.Identity, "p_s")),
+      clusterBy = Seq("v"), primaryKey = Seq("id"), clusterStrategy = "range")
+    t.append(base)
+    val up = (1L to 58L).map(i => (i, s"s${i % 3}", (i * 53) % 101)).toDF("id", "s", "v").repartition(4)
+    val (snap, _, stages) = observedStages(t.upsert(up))
+    // the staging job's result stage: one task per arranged write task
+    val writeTasks = stages.last.numTasks
+    assert(snap.deleteFiles.nonEmpty && snap.deleteFiles.size <= writeTasks,
+      s"${snap.deleteFiles.size} delete files from $writeTasks write tasks")
+    info(s"delete files ${snap.deleteFiles.size}, write tasks $writeTasks")
+    assert(t.scan().count() == 200L)
+    assert(t.scan().filter($"id" <= 58L).as[(Long, String, Long)].collect().toSet ==
+      up.as[(Long, String, Long)].collect().toSet)
   }
 }

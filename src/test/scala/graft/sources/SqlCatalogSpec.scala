@@ -568,20 +568,32 @@ class SqlCatalogSpec extends SparkSpec {
       """CREATE TABLE graft.zt (id BIGINT, x INT, y INT)
         |TBLPROPERTIES ('cluster_by'='x,y', 'cluster_strategy'='zorder')""".stripMargin)
     assert(graft.lake.LakeTable.load(spark, s"$wh/zt").meta.clusterStrategy == "zorder")
-    // SQL INSERT lands linear (the DSv2 row-push sink cannot z-arrange);
-    // rewrite_data_files is the OPTIMIZE ZORDER equivalent that restores
-    // the multi-dimensional layout
+    // SQL INSERT is z-arranged like every write route (the table's write
+    // arrangement sorts by the `zorder` V2 function); rewrite_data_files
+    // is the OPTIMIZE ZORDER equivalent that re-clusters across commits.
+    // 16 write tasks kept apart: each write stages 16 z-range files
     val rng = new scala.util.Random(11)
     (1 to 20000).map(i => (i.toLong, rng.nextInt(100000), rng.nextInt(100000)))
       .toDF("id", "x", "y").createOrReplaceTempView("zt_src")
+    val sixteenTasks = Map(
+      "spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
     // two commits → the (single, unpartitioned) bin is over-full at
     // target 1, so rewrite_data_files really rewrites
-    spark.sql("INSERT INTO graft.zt SELECT * FROM zt_src WHERE id % 2 = 0")
-    spark.sql("INSERT INTO graft.zt SELECT * FROM zt_src WHERE id % 2 = 1")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try spark.sql("CALL graft.system.rewrite_data_files('zt')").collect()
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    withConfs(sixteenTasks) {
+      spark.sql("INSERT INTO graft.zt SELECT * FROM zt_src WHERE id % 2 = 0")
+      spark.sql("INSERT INTO graft.zt SELECT * FROM zt_src WHERE id % 2 = 1")
+    }
+    val inserted = graft.lake.LakeTable.load(spark, s"$wh/zt")
+    val totalIns = inserted.currentSnapshot.dataFiles.size
+    assert(totalIns > 4, s"the SQL inserts staged too few files to check skipping: $totalIns")
+    for (k <- Seq("x", "y")) {
+      val kept = inserted.planFiles(inserted.currentSnapshot,
+        Seq(graft.lake.PruneFilter.Lt(k, 5000)))._1.size
+      assert(kept <= totalIns / 2,
+        s"SQL INSERT did not z-arrange: $kept/$totalIns files on a $k filter")
+    }
+    withConfs(sixteenTasks)(spark.sql("CALL graft.system.rewrite_data_files('zt')").collect())
     val zt = graft.lake.LakeTable.load(spark, s"$wh/zt")
     val totalZ = zt.currentSnapshot.dataFiles.size
     assert(totalZ > 4, s"compaction produced too few files to check skipping: $totalZ")
