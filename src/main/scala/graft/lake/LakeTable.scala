@@ -6,6 +6,8 @@ import graft.sources.{GraftLakeDeleteKeys, GraftLakeSource, GraftLakeV2Table}
 import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, In, LessThan, Literal, MetadataAttribute}
 import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LogicalPlan, Project}
+import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graft.SqlInternals
 import org.apache.spark.sql.expressions.Window
@@ -1055,9 +1057,10 @@ final class LakeTable private (
     }.select(columns: _*)
 
     // Spark arranges the rows as it does for the DSv2 routes
-    val arrangement = writeArrangement(specVersion, aligned.columns.toSeq, keySchema.isDefined)
+    val write = new ArrangedWrite(
+      writeArrangement(specVersion, aligned.columns.toSeq, keySchema.isDefined))
     val rows = SqlInternals.ofRows(spark, SqlInternals.arrange(
-      arrangement, aligned.queryExecution.analyzed, LakeFunctions)).queryExecution.toRdd
+      write, aligned.queryExecution.analyzed, LakeFunctions)).queryExecution.toRdd
     val spec = partitionSpec(specVersion)
     val writeSpec = LakeWriteSpec(location, stagingRel, seq, hadoopConfEntries, userSchema,
       dataParts = spec.map(pf => (userSchema.fieldIndex(pf.source), pf.transform, pf.name)),
@@ -1075,10 +1078,8 @@ final class LakeTable private (
     * commit clusters on the primary key. Only `columns` are referenced.
     * Spark plans it as `RebalancePartitions`: AQE splits a hot value by
     * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, folds tiny ones. */
-  private[graft] def writeArrangement(
-      specVersion: Int, columns: Seq[String], rowLevel: Boolean): ArrangedWrite = {
-    import org.apache.spark.sql.connector.distributions.Distributions
-    import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, SortDirection}
+  private[graft] def writeArrangement(specVersion: Int, columns: Seq[String], rowLevel: Boolean)
+      : (Distribution, Array[SortOrder]) = {
     val present = columns.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     def has(c: String): Boolean = present.contains(c.toLowerCase(java.util.Locale.ROOT))
     def refs(cs: Seq[String]): Seq[VExpression] =
@@ -1096,8 +1097,7 @@ final class LakeTable private (
       else if (rowLevel && meta.primaryKey.nonEmpty && meta.primaryKey.forall(has))
         Distributions.clustered(refs(meta.primaryKey).toArray)
       else Distributions.unspecified()
-    val required = (distribution, sorts)
-    new ArrangedWrite { def arrangement = required }
+    (distribution, sorts)
   }
 
   /** Publish one staging job's files: move each into `data/` (under its
@@ -1617,12 +1617,9 @@ object LakeTable extends org.apache.spark.internal.Logging {
 
 /** A write that takes its table's [[LakeTable.writeArrangement]] as its
   * DSv2 requirement, never strict: Spark may rebalance it. */
-trait ArrangedWrite extends org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-  def arrangement: (org.apache.spark.sql.connector.distributions.Distribution,
-    Array[org.apache.spark.sql.connector.expressions.SortOrder])
-  override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
-    arrangement._1
-  override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    arrangement._2
+class ArrangedWrite(arrangement: (Distribution, Array[SortOrder]))
+    extends org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+  override def requiredDistribution(): Distribution = arrangement._1
+  override def requiredOrdering(): Array[SortOrder] = arrangement._2
   override def distributionStrictlyRequired(): Boolean = false
 }

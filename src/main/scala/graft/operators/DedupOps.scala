@@ -875,17 +875,11 @@ object DedupOps {
       // warehouse, which would hijack this catalog's resolution; pin it
       // to ours for the scope (restored with the rest)
       "spark.graft.catalog.warehouse" -> warehouse)
-    val prev = scoped.keys.map(k => k -> s.conf.getOption(k)).toMap
-    try {
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      // a THUNK, not a DataFrame: the resolved V2 table pins its snapshot
-      // at construction, so each step must re-resolve to see the previous
-      // step's append
-      body(() => s.table(s"$cat.survivors"))
-    } finally {
-      prev.foreach { case (k, v) =>
-        v match { case Some(x) => s.conf.set(k, x); case None => s.conf.unset(k) }
-      }
+    // a THUNK, not a DataFrame: the resolved V2 table pins its snapshot
+    // at construction, so each step must re-resolve to see the previous
+    // step's append
+    try LakePipelines.withConfs(s, scoped.toSeq)(body(() => s.table(s"$cat.survivors")))
+    finally {
       // the per-invocation catalog registration must not outlive the scope:
       // a bench pass calls this hundreds of times and leaked conf pairs
       // (plus their CatalogManager-cached instances, which unsetting makes

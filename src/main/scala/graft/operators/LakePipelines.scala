@@ -545,14 +545,18 @@ object LakePipelines {
       t
     }
 
-  /** Run `body` with `confs` set on `s`, then restore each key. */
+  /** Run `body` with `confs` set on `s`, then put each key back as it
+    * was: a key the session had explicitly set gets its value again, any
+    * other is unset. `getOption` cannot tell the two apart (it returns a
+    * registered conf's default), so restoring from it would leave the
+    * default explicitly set for the rest of the session. */
   private[graft] def withConfs[A](s: SparkSession, confs: Seq[(String, String)])(body: => A): A = {
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    val set = s.conf.getAll
     confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
+    try body finally confs.foreach { case (k, _) => set.get(k) match {
+      case Some(v) => s.conf.set(k, v)
+      case None => s.conf.unset(k)
+    }}
   }
 
   private[operators] def cached(spark: SparkSession, sfDir: String, name: String)(

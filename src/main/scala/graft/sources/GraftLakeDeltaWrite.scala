@@ -83,18 +83,17 @@ private[sources] class GraftLakeDeltaOperation(
     }
 }
 
+/** Arranged by the table's write arrangement over the delta stream
+  * (without it a wide MoR MERGE opens a data file per task × partition
+  * touched); a pure DELETE's rows carry only the key, DELETE records of a
+  * MERGE carry NULL row columns and cluster together. */
 private[sources] class GraftLakeDeltaWrite(
     t: LakeTable, snap: Snapshot, winfo: LogicalWriteInfo, opName: String)
-    extends DeltaWrite with graft.lake.ArrangedWrite {
+    extends graft.lake.ArrangedWrite(t.writeArrangement(snap.specVersion,
+      (winfo.schema().fieldNames ++ winfo.rowIdSchema().map[Array[String]](_.fieldNames)
+        .orElse(Array.empty[String])).toSeq, rowLevel = true))
+    with DeltaWrite {
   override def toBatch(): DeltaBatchWrite = new GraftLakeDeltaBatchWrite(t, snap, winfo, opName)
-
-  /** The table's write arrangement over the delta stream (without it a
-    * wide MoR MERGE opens a data file per task × partition touched); a
-    * pure DELETE's rows carry only the key, DELETE records of a MERGE
-    * carry NULL row columns and cluster together. */
-  lazy val arrangement = t.writeArrangement(snap.specVersion,
-    (winfo.schema().fieldNames ++ winfo.rowIdSchema().map[Array[String]](_.fieldNames)
-      .orElse(Array.empty[String])).toSeq, rowLevel = true).arrangement
 }
 
 private[sources] class GraftLakeDeltaBatchWrite(

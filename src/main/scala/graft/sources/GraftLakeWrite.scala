@@ -44,19 +44,17 @@ private[sources] class GraftLakeWriteBuilder(
     this
   }
 
-  override def build(): Write = new Write with graft.lake.ArrangedWrite {
+  override def build(): Write = {
     // ONE snapshot per write plan, pinned in build(): the writers render
     // partitions by the spec the rows were arranged by (r20 SQL-route
     // soak: a lazy load let a concurrent ALTER slip in between)
-    private val planSnap = t.currentSnapshot
-
-    override def toBatch: BatchWrite =
-      new GraftLakeBatchWrite(t, replaceAll, writeSchema, expectedBase, replacedFiles,
-        plannedSnap = Some(() => planSnap))
-
-    lazy val arrangement = t.writeArrangement(planSnap.specVersion,
-      writeSchema.getOrElse(t.schema(planSnap.schemaVersion)).fieldNames.toSeq, rowLevel = false)
-      .arrangement
+    val planSnap = t.currentSnapshot
+    new graft.lake.ArrangedWrite(t.writeArrangement(planSnap.specVersion,
+        writeSchema.getOrElse(t.schema(planSnap.schemaVersion)).fieldNames.toSeq, rowLevel = false)) {
+      override def toBatch: BatchWrite =
+        new GraftLakeBatchWrite(t, replaceAll, writeSchema, expectedBase, replacedFiles,
+          plannedSnap = Some(() => planSnap))
+    }
   }
 }
 

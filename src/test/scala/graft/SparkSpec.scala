@@ -71,18 +71,20 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   def sfDir: String = TestSpark.sfDir
 
-  /** Run `body` with `confs` set, then put each key back as it was: a key
-    * the session had explicitly set gets its value again, any other is
-    * unset. `spark.conf.getOption` cannot tell the two apart (it returns a
-    * registered conf's default), so restoring from it would leave the
-    * default explicitly set for the rest of the test JVM. */
-  def withConfs[A](confs: Map[String, String])(body: => A): A = {
-    val set = spark.conf.getAll
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally confs.keys.foreach(k => set.get(k) match {
-      case Some(v) => spark.conf.set(k, v)
-      case None => spark.conf.unset(k)
-    })
-  }
+  /** Run `body` with `confs` set, then put each key back as it was. */
+  def withConfs[A](confs: Map[String, String])(body: => A): A =
+    graft.operators.LakePipelines.withConfs(spark, confs.toSeq)(body)
+
+  /** AQE sizes write tasks by the advisory partition size, and at most
+    * down to the coalescing floor: both small, a small write spreads over
+    * several tasks and a hot partition value splits. */
+  val SmallWriteTasks: Map[String, String] = Map(
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b")
+
+  /** 16 write tasks, kept apart: a range or zorder write then stages 16
+    * disjoint bands, and a clustered write spreads over 16 tasks. */
+  val SixteenWriteTasks: Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> "16",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 }

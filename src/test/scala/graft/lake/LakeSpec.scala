@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 class LakeSpec extends SparkSpec {
-  import LakeSpec._
 
   private def contentEqual(a: DataFrame, b: DataFrame): Boolean =
     a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
@@ -1601,19 +1600,4 @@ class LakeSpec extends SparkSpec {
     assert(t.scan().schema == sql.schema,
       "LakeTable.scan must produce the same relation schema as the DSv2 source")
   }
-}
-
-object LakeSpec {
-  /** AQE sizes write tasks by the advisory partition size, and at most
-    * down to the coalescing floor: both small, a small write spreads over
-    * several tasks and a hot partition value splits. */
-  val SmallWriteTasks: Map[String, String] = Map(
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k",
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b")
-
-  /** 16 write tasks, kept apart: a range or zorder write then stages 16
-    * disjoint bands. */
-  val SixteenWriteTasks: Map[String, String] = Map(
-    "spark.sql.shuffle.partitions" -> "16",
-    "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 }

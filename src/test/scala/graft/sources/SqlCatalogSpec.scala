@@ -575,12 +575,9 @@ class SqlCatalogSpec extends SparkSpec {
     val rng = new scala.util.Random(11)
     (1 to 20000).map(i => (i.toLong, rng.nextInt(100000), rng.nextInt(100000)))
       .toDF("id", "x", "y").createOrReplaceTempView("zt_src")
-    val sixteenTasks = Map(
-      "spark.sql.shuffle.partitions" -> "16",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
     // two commits → the (single, unpartitioned) bin is over-full at
     // target 1, so rewrite_data_files really rewrites
-    withConfs(sixteenTasks) {
+    withConfs(SixteenWriteTasks) {
       spark.sql("INSERT INTO graft.zt SELECT * FROM zt_src WHERE id % 2 = 0")
       spark.sql("INSERT INTO graft.zt SELECT * FROM zt_src WHERE id % 2 = 1")
     }
@@ -593,7 +590,7 @@ class SqlCatalogSpec extends SparkSpec {
       assert(kept <= totalIns / 2,
         s"SQL INSERT did not z-arrange: $kept/$totalIns files on a $k filter")
     }
-    withConfs(sixteenTasks)(spark.sql("CALL graft.system.rewrite_data_files('zt')").collect())
+    withConfs(SixteenWriteTasks)(spark.sql("CALL graft.system.rewrite_data_files('zt')").collect())
     val zt = graft.lake.LakeTable.load(spark, s"$wh/zt")
     val totalZ = zt.currentSnapshot.dataFiles.size
     assert(totalZ > 4, s"compaction produced too few files to check skipping: $totalZ")

@@ -22,12 +22,6 @@ class WriteArrangementSpec extends SparkSpec {
       rng.nextInt(100000), rng.nextInt(100000)))
   private def src: DataFrame = rows.toDF("id", "d", "x", "y").repartition(4)
 
-  /** 16 write tasks kept apart, so a range or zorder write stages 16 bands
-    * and a clustered write spreads its months over 16 tasks. */
-  private val sixteenTasks = Map(
-    "spark.sql.shuffle.partitions" -> "16",
-    "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-
   private val routes: Seq[(String, LakeTable => Unit)] = Seq(
     "append" -> (t => t.append(src)),
     "path" -> (t => src.write.format("graftlake").option("path", t.location).mode("append").save()),
@@ -52,7 +46,7 @@ class WriteArrangementSpec extends SparkSpec {
         partitionSpec =
           if (partitioned) Seq(PartitionField("d", Transform.Month, "p_month")) else Nil,
         clusterBy = clusterBy, primaryKey = Seq("id"), clusterStrategy = strategy)
-      withConfs(sixteenTasks)(write(t))
+      withConfs(SixteenWriteTasks)(write(t))
       val live = LakeTable.load(spark, t.location)
       assert(live.scan().count() == rows.size, s"$route lost rows")
       route -> live
